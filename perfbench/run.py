@@ -19,6 +19,14 @@ import time
 BENCH = os.path.dirname(os.path.abspath(__file__))
 WORK = os.path.join(BENCH, ".work")
 WORKLOADS = ("backfill", "tail")
+# per-layer metrics of a layer that does no work on a workload: the
+# traced run reports them as 0. Any other missing or null metric fails.
+NOT_APPLICABLE = {
+    "backfill": {"setup.archive_ingest_s", "streaming.backlog_records_max",
+                 "streaming.generator_late_p99_ms"},
+    "tail": {"setup.warmup_s", "backfill.unattributed_s", "backfill.records_per_s",
+             "backfill.mb_per_s"},
+}
 # fixed heap: GC behaviour must not depend on the host's free memory
 HEAP = "3g"
 RUN_LIMIT_S = 170
@@ -143,10 +151,12 @@ def main():
     metrics = {}
     for m in wanted:
         v = res["metrics"].get(m["name"], {}).get("value")
-        if v is None and a.trace:
-            v = 0.0  # a layer that does no work on this workload
+        if a.trace and m["name"] in NOT_APPLICABLE[a.workload]:
+            if v is not None:
+                fail(f"{a.workload} reported {m['name']}, which does not apply to it")
+            v = 0.0
         if v is None:
-            fail(f"{a.workload} did not report {m['name']}")
+            fail(f"{a.workload} did not report {m['name']} (missing or not a number)")
         metrics[m["name"]] = {"value": v, "unit": m["unit"]}
     print(f"perfbench: {a.workload} seed={a.seed} run {time.time() - t0:.1f} s", file=sys.stderr)
     print(json.dumps({"correct": failed == 0 and res["attempted"] > 0,

@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 
 import graft.config.PumpConfig
 
@@ -25,8 +25,7 @@ object Backfill {
   val BadHourRecords = 100
   /** PumpMain's cap: the backlog's 193 files drain in two batches. */
   val MaxFilesPerTrigger = 100
-  val WarmUps = 3
-  val TimedDrains = 3
+  val TimedDrains = 4
 
   /** Writes the backlog under `dir` and returns its expectation. */
   def generate(seed: Long, dir: Path, cores: Int): Expect = {
@@ -70,43 +69,46 @@ object Backfill {
     (dir.resolve("logs"), Expect.load(expectFile))
   }
 
-  /** One drain into a fresh sink and checkpoint: (seconds, seconds from
-    * the drain's start to each batch's sink commit).
+  /** One drain into a fresh sink and checkpoint: seconds, seconds from
+    * the drain's start to each batch's sink commit, and the query's
+    * progress reports.
     */
-  def drain(spark: SparkSession, cfg: PumpConfig, out: Path, ckpt: Path): (Double, Map[Int, Double]) = {
+  def drain(spark: SparkSession, cfg: PumpConfig, out: Path,
+      ckpt: Path): (Double, Map[Int, Double], Seq[StreamingQueryProgress]) = {
     Main.fresh(out)
     Main.deleteTree(ckpt)
     val commits = new ConcurrentHashMap[Long, Long]()
     val t0 = System.nanoTime()
-    Tracer.span("backfill.drain") {
+    val q = Tracer.span("backfill.drain") {
       val q = Pump.start(spark, cfg, out, ckpt, Trigger.AvailableNow(), Some(MaxFilesPerTrigger),
         id => commits.put(id, System.nanoTime()))
       q.awaitTermination()
       q.exception.foreach(e => throw e)
+      q
     }
-    (Main.seconds(t0), commits.asScala.map { case (b, c) => b.toInt -> (c - t0) / 1e9 }.toMap)
+    (Main.seconds(t0), commits.asScala.map { case (b, c) => b.toInt -> (c - t0) / 1e9 }.toMap,
+      q.recentProgress.toSeq)
   }
 
   def run(o: Main.Opts, r: Main.Report): Unit = {
-    val (logs, exp) = inputs(o)
+    val ((logs, exp), inputsS) = Main.timed(inputs(o))
     Main.log("inputs ready")
-    val tSession = System.nanoTime()
-    val spark = Main.session(o)
-    val sessionS = Main.seconds(tSession)
+    val (spark, sessionS) = Main.timed(Main.session(o))
     val cfg = Pump.config(o, logs)
     val out = o.run.resolve("sink")
     val ckpt = o.run.resolve("ckpt")
-    // set-up repetitions are whole drains: the first pays JIT and
-    // codegen, the median is the warm set-up cost, and the timed drains
-    // start on warmer code than drains of a subset would leave
-    val warm = (1 to WarmUps).map(_ => drain(spark, cfg, out, ckpt)._1)
-    r.put("setup_s", sessionS + Main.median(warm), "s")
-    Main.log(f"set-up done, session $sessionS%.2f s")
+    // one warm-up drain of the whole backlog pays JIT and codegen
+    val warmS = drain(spark, cfg, out, ckpt)._1
+    // set-up runs from the main entry to the first timed drain; the
+    // seed-keyed inputs are cached on disk and left out
+    r.put("setup_s", Main.seconds(o.startNs) - inputsS, "s")
+    Main.log(f"set-up done, session $sessionS%.2f s, warm-up $warmS%.2f s")
 
     val probe = new Probe
     def traceOn(on: Boolean): Unit = if (o.trace) probe.trace(spark, on)
     val untraced = ArrayBuffer.empty[Double]
     val traced = ArrayBuffer.empty[Double]
+    val progress = ArrayBuffer.empty[StreamingQueryProgress]
     // per-record latency: each landed row waits from the drain's start
     // to the commit of its batch; (p50, p99) per drain
     val latency = ArrayBuffer.empty[(Double, Double)]
@@ -116,8 +118,8 @@ object Backfill {
       // order, so the JIT's warm-up trend cancels out of the overhead
       traceOn(k == 1 || k == 2)
       if (probe.tracing && traced.isEmpty) mark0 = probe.mark()
-      val (s, commits) = drain(spark, cfg, out, ckpt)
-      if (probe.tracing) traced += s else untraced += s
+      val (s, commits, ps) = drain(spark, cfg, out, ckpt)
+      if (probe.tracing) { traced += s; progress ++= ps } else untraced += s
       val got = Pump.sinkBatches(spark, out)
       r.check(Pump.byTable(got) == exp.tables, s"backfill sink ${Pump.byTable(got)} != ${exp.tables}")
       val perBatch = got.groupBy(_._1._2).toSeq.map { case (b, ts) => (commits(b), ts.values.map(_._1).sum) }
@@ -142,14 +144,14 @@ object Backfill {
     r.put("read_pass_s", Main.median(rb.times.toSeq), "s")
     System.err.println(f"backfill: records=${exp.records} rows=${exp.rows} " +
       f"logMB=${exp.logBytes / 1e6}%.1f MB/s=${exp.logBytes / 1e6 / medDrain}%.1f " +
-      s"warm=${warm.map(x => f"$x%.2f")} drains=${(untraced ++ traced).map(x => f"$x%.2f")} " +
+      f"warm=$warmS%.2f " + s"drains=${(untraced ++ traced).map(x => f"$x%.2f")} " +
       s"readback=${rb.times.map(x => f"$x%.2f")}")
 
     if (o.trace) {
       r.put("setup.session_s", sessionS, "s")
-      r.put("setup.warmup_s", Main.median(warm), "s")
+      r.put("setup.warmup_s", warmS, "s")
       r.put("trace.overhead_pct", (medDrain / Main.median(untraced.toSeq) - 1) * 100, "%")
-      Pump.progressMetrics(probe.progressSince(mark0), r)
+      Pump.progressMetrics(progress.toSeq, r)
       r.put("sources.offset_bytes", Pump.offsetBytes(ckpt), "bytes")
       Pump.sinkSpanMetrics(probe, mark0, r)
       rb.report(probe, r)

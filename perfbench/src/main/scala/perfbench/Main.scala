@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
+  /** `startNs` is the main entry: set-up time runs from there. */
   final case class Opts(workload: String, seed: Long, seconds: Int,
-      trace: Boolean, work: Path) {
+      trace: Boolean, work: Path, startNs: Long) {
     val cores: Int = Runtime.getRuntime.availableProcessors()
     def inputs: Path = work.resolve("inputs")
     def run: Path = work.resolve("run").resolve(workload)
@@ -114,9 +115,10 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
+    val startNs = System.nanoTime()
     val Array(workload, seed, secs, trace, work) = args
     val o = Opts(workload, seed.toLong, secs.toInt, trace == "1",
-      Paths.get(work).toAbsolutePath)
+      Paths.get(work).toAbsolutePath, startNs)
     Files.createDirectories(o.run)
     val r = new Report
     Tracer.enabled = false

@@ -4,39 +4,37 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
-import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** Traced-run instrumentation, read from outside the engine through
-  * Spark's public listener APIs plus the benchmark's own spans. Nothing
-  * here is attached in an untraced run.
+  * Spark's public listener API plus the benchmark's own spans. Nothing
+  * here is attached in an untraced run. Streaming progress is read from
+  * each query's `recentProgress` after it ran, so it needs no listener.
   */
 final class Probe extends SparkListener {
-  private var attached = false
+  @volatile private var attached = false
   def tracing: Boolean = attached
 
-  /** Attach (or detach) both listeners and turn spans on (or off). */
+  /** Attach (or detach) the listener and turn spans on (or off). */
   def trace(spark: SparkSession, on: Boolean): Unit = if (on != attached) {
     attached = on
     Tracer.enabled = on
-    if (on) { spark.sparkContext.addSparkListener(this); spark.streams.addListener(streaming) }
-    else { spark.sparkContext.removeSparkListener(this); spark.streams.removeListener(streaming) }
+    if (on) spark.sparkContext.addSparkListener(this)
+    else spark.sparkContext.removeSparkListener(this)
   }
 
-  private val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+  private val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
   /** (start ms, end ms) of every finished job. */
   val jobs = ArrayBuffer.empty[(Long, Long)]
   @volatile var tasks = 0L
   @volatile var taskCpuNs = 0L
   @volatile var taskGcMs = 0L
-  val progress = ArrayBuffer.empty[StreamingQueryProgress]
 
   override def onJobStart(e: SparkListenerJobStart): Unit = jobStarts.put(e.jobId, e.time)
-  override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-    val s = jobStarts.remove(e.jobId)
-    synchronized { jobs += ((s, e.time)) }
-  }
+  override def onJobEnd(e: SparkListenerJobEnd): Unit =
+    Option(jobStarts.remove(e.jobId)).foreach { s =>
+      // a job that started before the listener was attached is skipped
+      synchronized { jobs += ((s.longValue, e.time)) }
+    }
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     tasks += 1
     if (e.taskMetrics != null) {
@@ -45,17 +43,8 @@ final class Probe extends SparkListener {
     }
   }
 
-  val streaming: StreamingQueryListener = new StreamingQueryListener {
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit =
-      Probe.this.synchronized { progress += e.progress }
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-  }
-
   import Probe.Mark
-  def mark(): Mark = synchronized { Mark(jobs.length, tasks, taskCpuNs, taskGcMs, progress.length) }
-  def progressSince(m: Mark): Seq[StreamingQueryProgress] =
-    synchronized { progress.drop(m.progress).toVector }
+  def mark(): Mark = synchronized { Mark(jobs.length, tasks, taskCpuNs, taskGcMs) }
 
   def jobsBetween(a: Mark, b: Mark): Seq[(Long, Long)] =
     synchronized { jobs.slice(a.jobs, b.jobs).toVector }
@@ -63,7 +52,7 @@ final class Probe extends SparkListener {
 
 object Probe {
   /** Counters at one instant, to difference over a phase. */
-  final case class Mark(jobs: Int, tasks: Long, cpuNs: Long, gcMs: Long, progress: Int)
+  final case class Mark(jobs: Int, tasks: Long, cpuNs: Long, gcMs: Long)
 
   /** Length of the union of [start, end) intervals. */
   def covered(intervals: Seq[(Long, Long)]): Long = {

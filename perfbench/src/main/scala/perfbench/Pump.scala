@@ -24,7 +24,7 @@ import graft.pipeline.LogPump
 object Pump {
 
   /** Writes a config.yaml for one log directory and loads it back. */
-  def config(o: Main.Opts, logDir: Path, file: String = "config.yaml"): PumpConfig = {
+  def config(o: Main.Opts, logDir: Path): PumpConfig = {
     val tables = TechLogGen.TableMap.toSeq.sorted
       .map { case (c, t) => s"    $c: $t" }.mkString("\n")
     val yaml =
@@ -41,7 +41,7 @@ object Pump {
          |  TableMap:
          |$tables
          |""".stripMargin
-    val path = o.run.resolve(file)
+    val path = o.run.resolve("config.yaml")
     Files.write(path, yaml.getBytes(UTF_8))
     PumpConfig.load(path.toString).fold(e => throw new IllegalStateException(e), identity)
   }

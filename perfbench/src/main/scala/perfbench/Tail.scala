@@ -106,11 +106,9 @@ object Tail {
       .map(j => graft.sources.TechLogOffset.parse(j, Map.empty).files).getOrElse(Map.empty)
 
   def run(o: Main.Opts, r: Main.Report): Unit = {
-    val (archive, archiveExp) = inputs(o)
+    val ((archive, archiveExp), inputsS) = Main.timed(inputs(o))
     Main.log("inputs ready")
-    val tSession = System.nanoTime()
-    val spark = Main.session(o)
-    val sessionS = Main.seconds(tSession)
+    val (spark, sessionS) = Main.timed(Main.session(o))
     val logs = Main.fresh(o.run.resolve("logs"))
     Pump.logFiles(archive).foreach { p =>
       val link = logs.resolve(archive.relativize(p))
@@ -128,29 +126,34 @@ object Tail {
       q.awaitTermination()
       q.exception.foreach(e => throw e)
     }
-    r.put("setup_s", sessionS + ingestS, "s")
-    Main.log(f"set-up done, session $sessionS%.2f s")
+    // set-up runs from the main entry to the start of the live query;
+    // the seed-keyed archive is cached on disk and left out
+    r.put("setup_s", Main.seconds(o.startNs) - inputsS, "s")
+    Main.log(f"set-up done, session $sessionS%.2f s, archive ingest $ingestS%.2f s")
 
     val probe = new Probe
-    val commitNs = new ConcurrentHashMap[Long, Long]()
-    val q = Pump.start(spark, cfg, out, ckpt, Trigger.ProcessingTime(0L),
-      Some(Backfill.MaxFilesPerTrigger), id => commitNs.put(id, System.nanoTime()))
-    Thread.sleep(1000) // the query's first listing, before load starts
+    val mark0 = probe.mark()
     val n = Rate * o.seconds
     val writer = new Writer(o.seed, logs, n)
+    // the first quarter of the writer's run warms the live path
+    val warmNs = o.seconds * 250000000L
+    def warm(ns: Long) = writer.startNs == 0L || ns < writer.startNs + warmNs
+    val commitNs = new ConcurrentHashMap[Long, Long]()
+    // a traced run switches tracing at batch boundaries after the warm-up:
+    // every other batch runs traced, so each batch is wholly one or the other
+    val tracedBatch = new ConcurrentHashMap[Long, Boolean]()
+    val q = Pump.start(spark, cfg, out, ckpt, Trigger.ProcessingTime(0L),
+      Some(Backfill.MaxFilesPerTrigger), { id =>
+        val now = System.nanoTime()
+        commitNs.put(id, now)
+        if (o.trace && !warm(now)) {
+          val next = !probe.tracing
+          probe.trace(spark, next)
+          tracedBatch.put(id + 1, next)
+        }
+      })
+    Thread.sleep(1000) // the query's first listing, before load starts
     writer.start()
-    var mark0 = probe.mark()
-    // a traced run traces the middle two of four equal segments (ABBA),
-    // so the JIT's warm-up trend cancels out of the overhead
-    def tracedSegment(i: Int): Boolean = o.trace && Set(1, 2).contains(i * 4 / n)
-    if (o.trace) {
-      for (k <- 0 until 4) {
-        probe.trace(spark, k == 1 || k == 2)
-        if (k == 1) mark0 = probe.mark()
-        Thread.sleep(o.seconds * 250L)
-      }
-      probe.trace(spark, on = true)
-    }
     writer.join()
     // grace: every appended byte committed, bounded by the envelope
     val liveFiles = Pump.logFiles(logs).filterNot(p => Files.exists(archive.resolve(logs.relativize(p))))
@@ -163,6 +166,7 @@ object Tail {
     Main.log("writer done, all landed: " + landed)
     q.stop()
     q.exception.foreach(e => throw e)
+    if (o.trace) probe.trace(spark, on = true)
 
     // archive rows come back as one row with batch_id -1 and their count
     val sink = Pump.readSink(spark, out)
@@ -176,15 +180,12 @@ object Tail {
     val batches = Array.fill(n)(List.empty[Int])
     got.foreach { case (i, b) => batches(i) = b :: batches(i) }
     val latencies = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    val traced = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val untraced = scala.collection.mutable.ArrayBuffer.empty[Double]
     for (i <- 0 until n if writer.records(i).row.isDefined) {
       batches(i) match {
         case List(b) =>
           val lat = commitNs.get(b.toLong) - writer.dueNs(i)
           r.check(lat <= LimitNs, s"record $i landed after ${lat / 1e9} s")
           latencies += ((i, lat / 1e9))
-          (if (tracedSegment(i)) traced else untraced) += lat / 1e9
         case bs => r.check(ok = false, s"record $i landed ${bs.length} times")
       }
     }
@@ -203,14 +204,28 @@ object Tail {
     System.err.println(f"tail: appended=$n landed=${got.length} " +
       f"ingest=$ingestS%.2f batches=${commitNs.size} " +
       f"p50=${Main.median(latencies.map(_._2).toSeq)}%.3f p99=${Main.quantile(latencies.map(_._2).toSeq, 0.99)}%.3f " +
-      f"late_p99_ms=${Main.quantile(writer.lateNs.map(_ / 1e6).toSeq, 0.99)}%.2f")
+      f"late_p99_ms=${Main.quantile(writer.lateNs.map(_ / 1e6).toSeq, 0.99)}%.2f " +
+      "batch commits (s after writer start, rows): " + commitNs.asScala.toSeq.sorted.map { case (b, c) =>
+        f"${(c - writer.startNs) / 1e9}%.2f:${got.count(_._2 == b)}" }.mkString(" "))
 
     if (o.trace) {
       r.put("setup.session_s", sessionS, "s")
       r.put("setup.archive_ingest_s", ingestS, "s")
-      r.put("trace.overhead_pct",
-        (Main.median(traced.toSeq) / Main.median(untraced.toSeq) - 1) * 100, "%")
-      Pump.progressMetrics(probe.progressSince(mark0), r)
+      // overhead: batch time (previous commit to this commit) of traced
+      // batches against untraced ones, all begun after the warm-up and
+      // while the writer still appends, so the drain-out batches at the
+      // end, which carry almost no records, are left out
+      val commits = commitNs.asScala.toMap
+      val loadEnd = writer.startNs + o.seconds * 1000000000L
+      val timed = commits.keys.toSeq.sorted
+        .filter(b => tracedBatch.containsKey(b) && commits.get(b - 1).exists(_ < loadEnd))
+        .map(b => (tracedBatch.get(b), (commits(b) - commits(b - 1)) / 1e9))
+      def batchS(t: Boolean) = Main.median(timed.filter(_._1 == t).map(_._2))
+      r.put("trace.overhead_pct", (batchS(true) / batchS(false) - 1) * 100, "%")
+      System.err.println("tail batches after warm-up (traced: s): " +
+        timed.map { case (t, d) => f"$t:$d%.2f" }.mkString(" "))
+      Pump.progressMetrics(q.recentProgress.toSeq
+        .filter(p => commits.get(p.batchId).exists(c => !warm(c))), r)
       r.put("sources.offset_bytes", Pump.offsetBytes(ckpt), "bytes")
       Pump.sinkSpanMetrics(probe, mark0, r)
       r.put("streaming.generator_late_p99_ms",

@@ -17,7 +17,9 @@ import org.apache.spark.unsafe.Platform
   * record carries the `drop_reason` `etl.Transform.withReason` must
   * give it.
   *
-  * Traffic shape:
+  * Traffic shape. The numbers below (component shares, the Pareto
+  * Context size, per-process volumes) are assumed, not fitted to a real
+  * 1C log; calibrate them once a real sample is at hand.
   *  - component shares are skewed (DBMSSQL ≈ 40 %, TTIMEOUT ≈ 2 %);
   *  - record size is heavy-tailed (Pareto line counts in Context);
   *  - SQL and Context span several lines, with quotes, backslash
@@ -116,7 +118,7 @@ object TechLogGen {
     * generated data set, so every sink row is distinct).
     */
   def record(seed: Long, fileKey: Long, index: Long, hour: LocalDateTime,
-      offsetMicros: Long, id: Long, malformed: Boolean = true): Record = {
+      offsetMicros: Long, id: Long): Record = {
     val r = rng(seed, fileKey, index)
     val comp = Components(pick(ComponentCdf, r.nextDouble()))
     val mm = (offsetMicros / 60000000L).toInt
@@ -140,8 +142,8 @@ object TechLogGen {
     // malformed shapes keep a boundary-matching line so the assembler
     // still splits them as records of their own
     val ts =
-      if (malformed && kind < 5) "ERR"
-      else if (malformed && kind < 10) f"${60 + mm % 40}%02d:$ss%02d.$frac%06d"
+      if (kind < 5) "ERR"
+      else if (kind < 10) f"${60 + mm % 40}%02d:$ss%02d.$frac%06d"
       else f"$mm%02d:$ss%02d.$frac%06d"
     val sb = new java.lang.StringBuilder(256)
     sb.append(ts).append('-').append(duration).append(',').append(comp)
@@ -155,7 +157,7 @@ object TechLogGen {
       .append(",SessionID=").append(session)
       .append(",Usr='").append(user).append('\'')
       .append(",DataBase=").append(ib)
-    if (malformed && kind < 5) sb.append(",at=").append(f"$mm%02d:$ss%02d.$frac%06d-0")
+    if (kind < 5) sb.append(",at=").append(f"$mm%02d:$ss%02d.$frac%06d-0")
     if (hasSql) {
       sb.append(",Trans=").append(r.nextInt(2)).append(",dbpid=").append(r.nextInt(300))
         .append(",Rows=").append(rows).append(",RowsAffected=").append(affected)
@@ -163,8 +165,8 @@ object TechLogGen {
     }
     if (context.nonEmpty) sb.append(",Context='").append(context).append('\'')
     val reason =
-      if (malformed && kind < 5) "no_time_match"
-      else if (malformed && kind < 10) "bad_time"
+      if (kind < 5) "no_time_match"
+      else if (kind < 10) "bad_time"
       else "ok"
     val row =
       if (reason != "ok") None
