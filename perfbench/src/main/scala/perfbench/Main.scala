@@ -84,6 +84,13 @@ object Main {
     sorted.find { case (_, n) => acc += n; acc >= q * total }.map(_._1).getOrElse(Double.NaN)
   }
 
+  /** Runs `tasks` on `threads` threads; results in task order. */
+  def parallel[T](threads: Int)(tasks: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try tasks.map(t => pool.submit(() => t())).map(_.get())
+    finally pool.shutdown()
+  }
+
   def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val st = Files.walk(p)

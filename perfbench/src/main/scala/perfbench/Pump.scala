@@ -89,13 +89,16 @@ object Pump {
       spark.read.parquet(out.resolve(t).toString).withColumn("__table", lit(t))
     }.reduce(_ unionByName _)
 
-  /** (table, batch_id) → (rows, xor of row hashes): an order-insensitive
-    * checksum (rows are distinct: ConnectionID is unique per data set).
+  /** (sink k, table, batch_id) → (rows, xor of row hashes) over sinks
+    * numbered from 1, in one query: an order-insensitive checksum (rows
+    * are distinct: ConnectionID is unique per data set).
     */
-  def sinkBatches(spark: SparkSession, out: Path): Map[(String, Int), (Long, Long)] =
-    readSink(spark, out).withColumn("hash", rowHash).groupBy("__table", "batch_id")
+  def sinkBatches(spark: SparkSession, outs: Seq[Path]): Map[(Int, String, Int), (Long, Long)] =
+    outs.zipWithIndex.map { case (out, k) => readSink(spark, out).withColumn("__sink", lit(k + 1)) }
+      .reduce(_ unionByName _)
+      .withColumn("hash", rowHash).groupBy("__sink", "__table", "batch_id")
       .agg(count(lit(1)).as("n"), expr("bit_xor(hash)").as("x"))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2)) -> (r.getLong(3), r.getLong(4))).toMap
 
   /** [[sinkBatches]] folded per table, comparable with [[Expect.tables]]. */
   def byTable(batches: Map[(String, Int), (Long, Long)]): Map[String, (Long, Long)] =
@@ -131,8 +134,8 @@ object Pump {
   }
 
   /** One untimed warm-up pass, then three timed readback passes; every
-    * query result is checked. Returns the pass times; in a traced run
-    * also the planner phase times and listener marks of each pass.
+    * query result is checked. Returns the time, planner phase times and
+    * listener marks of each timed pass.
     */
   def readback(spark: SparkSession, out: Path, e: Expect, r: Main.Report,
       probe: Probe): Readback = {
@@ -157,9 +160,9 @@ object Pump {
       times: ArrayBuffer[Double] = ArrayBuffer.empty,
       marks: ArrayBuffer[(Probe.Mark, Probe.Mark, Double)] = ArrayBuffer.empty,
       phases: ArrayBuffer[Map[String, Double]] = ArrayBuffer.empty) {
-    /** Planner phases, jobs, tasks, job-busy seconds and the driver's
-      * gap (pass wall time less the union of job intervals), medians
-      * over passes.
+    /** Planner phases, jobs, tasks, job-busy seconds, the driver's gap
+      * (pass wall time less the union of job intervals) and pass time,
+      * medians over passes.
       */
     def report(probe: Probe, r: Main.Report): Unit = {
       def phase(k: String) = Main.median(phases.map(_.getOrElse(k, 0.0)).toSeq)
@@ -175,6 +178,7 @@ object Pump {
       r.put("ops.tasks", Main.median(per.map(_._2)), "count")
       r.put("ops.job_busy_s", Main.median(per.map(_._3)), "s")
       r.put("ops.driver_gap_s", Main.median(per.map(_._4)), "s")
+      r.put("ops.read_pass_s", Main.median(times.toSeq), "s")
     }
   }
 
