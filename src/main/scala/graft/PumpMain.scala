@@ -25,7 +25,9 @@ import graft.streaming.StreamingPump
   * Component-based table routing follows `clickhouse.go:64-72`;
   * `BatchInterval` is the trigger period (`config.yaml:15`). Each
   * directory gets its own checkpoint subdir, so offsets and batch-id
-  * markers never collide across pumps.
+  * markers never collide across pumps; the lake sink names its batch
+  * files by query id, so the pumps' `batch_id=N` files never collide
+  * either.
   */
 object PumpMain {
 

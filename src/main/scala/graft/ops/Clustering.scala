@@ -201,14 +201,7 @@ object Clustering {
     // distributed loop below runs unchanged (OpsSpec pins the labeling
     // either way).
     val ss = edges0.sparkSession
-    val thrConf = ss.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-    val thr =
-      try {
-        if (thrConf.startsWith("-")) -1L
-        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thrConf)
-      } catch { case _: Throwable => 10L << 20 }
-    if (thr > 0 && prev._1 * 32L <= thr) {
+    if (Graph.nodesFitBroadcast(ss, prev._1)) {
       import ss.implicits._
       var e: Set[(Long, Long)] =
         edges.as[(Long, Long)].collect().toSet
@@ -233,6 +226,11 @@ object Clustering {
       if (!convergedL)
         throw new IllegalStateException(
           s"ccStar: star alternation did not converge in $maxIter rounds")
+      // the fixpoint is one node→root row per non-root; a node with
+      // two rows would collapse silently in toMap
+      if (e.size != e.iterator.map(_._1).toSet.size)
+        throw new IllegalStateException(
+          "ccStar: star-alternation fixpoint maps a node to two roots")
       val root = e.toMap
       val labeled = nodeIds.map(id => id -> root.getOrElse(id, id))
       val sizes = labeled.groupBy(_._2).view.mapValues(_.length.toLong).toMap

@@ -211,16 +211,14 @@ object Graph {
     * their distributed localCheckpoint iterate unchanged, exactly the
     * fallback discipline GraphAuditSpec pins for q130.
     */
-  private def broadcastFitBytes(s: SparkSession): Long = {
+  private[graft] def nodesFitBroadcast(s: SparkSession, nN: Long): Boolean = {
     val conf = s.conf
       .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-    try {
-      if (conf.startsWith("-")) -1L
-      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
-    } catch { case _: Throwable => 10L << 20 }
-  }
-  private def nodesFitBroadcast(s: SparkSession, nN: Long): Boolean = {
-    val thr = broadcastFitBytes(s)
+    val thr =
+      try {
+        if (conf.startsWith("-")) -1L
+        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
+      } catch { case _: Throwable => 10L << 20 }
     thr > 0 && nN * 32L <= thr
   }
 
@@ -287,16 +285,8 @@ object Graph {
     * node-heavy graph — the r6 verdict's missing fallback, pinned by
     * GraphAuditSpec.
     */
-  private[graft] def maybeBroadcastNodes(ranks: DataFrame, nN: Long): DataFrame = {
-    val conf = ranks.sparkSession.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-    val thr =
-      try {
-        if (conf.startsWith("-")) -1L
-        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
-      } catch { case _: Throwable => 10L << 20 }
-    if (thr > 0 && nN * 32L <= thr) broadcast(ranks) else ranks
-  }
+  private[graft] def maybeBroadcastNodes(ranks: DataFrame, nN: Long): DataFrame =
+    if (nodesFitBroadcast(ranks.sparkSession, nN)) broadcast(ranks) else ranks
 
   /** Integer-exact PageRank over an undirected edge list (u, v):
     * (p_key, rank_e12) for every node. See [[pageRank]].

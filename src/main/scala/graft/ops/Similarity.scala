@@ -227,9 +227,11 @@ object Similarity {
         } else {
           // hash-blocking puts each vector in exactly one block, so the
           // two id sets are disjoint and interleave: order each cross
-          // pair by id (cosine is argument-symmetric, value unchanged)
-          val va = blocks.find(_._3 == lo).get._4
-          val vb = blocks.find(_._3 == hi).get._4
+          // pair by id (cosine is argument-symmetric, value unchanged).
+          // A block with no vectors never reaches the group: it sweeps
+          // as an empty array
+          val va = blocks.find(_._3 == lo).fold(Array.empty[(Long, Array[Float])])(_._4)
+          val vb = blocks.find(_._3 == hi).fold(Array.empty[(Long, Array[Float])])(_._4)
           val na = norms(va); val nb = norms(vb)
           var ai = 0
           while (ai < va.length) {
@@ -408,8 +410,9 @@ object Similarity {
           val ns = norms(vs)
           sweep(vs, ns, vs, ns)
         } else {
-          val va = blocks.find(_._3 == lo).get._4
-          val vb = blocks.find(_._3 == hi).get._4
+          // an empty block sweeps as an empty array (see pairsAboveBlocked)
+          val va = blocks.find(_._3 == lo).fold(Array.empty[(Long, Array[Float])])(_._4)
+          val vb = blocks.find(_._3 == hi).fold(Array.empty[(Long, Array[Float])])(_._4)
           val na = norms(va); val nb = norms(vb)
           sweep(va, na, vb, nb)
           sweep(vb, nb, va, na)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Transform
@@ -13,11 +14,15 @@ import graft.parse.TechLogParser
   *   .log files → record assembly → parse → transform → routed sink
   *
   * The plan is narrow end-to-end: one task per input file, no shuffle
-  * anywhere until the (optional) sink repartition. At 100 TB this scales
-  * with file count; the only wide operation is the sink's
-  * `partitionBy(EventDate)` write, where we repartition by the
-  * partition column first so each task writes few files instead of one
-  * file per (task × date) — the classic small-files trap.
+  * anywhere until the sink. At 100 TB this scales with file count; the
+  * only wide operation is the lake sink's single write per micro-batch
+  * (`writeRoutedExactlyOnce`): rows are tagged with their routed
+  * table, repartitioned by (table, EventDate) so each task writes few
+  * files instead of one per (task × table × date) — the classic
+  * small-files trap — and land in a staging dir in ONE job. The driver
+  * then publishes the staged files under `<table>/batch_id=N/`
+  * with renames, scoped to the writing streaming query so pipelines
+  * sharing an outDir never overwrite each other's batches.
   *
   * The streaming form with identical semantics lives in
   * `graft.streaming.StreamingPump`.
@@ -47,45 +52,108 @@ object LogPump {
     * tiny — a literal CASE chain, fully codegen'd, no join.
     */
   def withRoute(rows: DataFrame, tableMap: Map[String, String],
-      defaultTable: String): DataFrame = {
-    val route = tableMap.foldLeft(lit(defaultTable)) {
+      defaultTable: String): DataFrame =
+    rows.withColumn("__table", route(tableMap, defaultTable)(identity))
+
+  /** The routing CASE chain over EventType, yielding `label(table)`. */
+  private def route(tableMap: Map[String, String], defaultTable: String)(
+      label: String => Any): Column =
+    tableMap.foldLeft(lit(label(defaultTable))) {
       case (acc, (component, table)) =>
-        when(col("EventType") === component, lit(table)).otherwise(acc)
+        when(col("EventType") === component, lit(label(table))).otherwise(acc)
     }
-    rows.withColumn("__table", route)
+
+  /** The lake sink's routing column: the index of a row's table among
+    * the candidate tables. An index, not the table name, so the staged
+    * partition directory names need no escaping.
+    */
+  private val RouteCol = "__route"
+
+  /** K1 parquet sink with EXACTLY-ONCE micro-batch replay, in ONE
+    * Spark write per micro-batch. Published layout, per routed table:
+    *
+    *   outDir/<table>/batch_id=N/EventDate=d/<pipeline>-part-….parquet
+    *
+    * partitioned like the reference's MergeTree `PARTITION BY
+    * EventDate` and sorted within each file by EventTime, its
+    * `ORDER BY (EventDate, EventTime)`. Readers list `outDir/<table>`
+    * as ordinary two-level partitioned parquet (batch_id, EventDate).
+    *
+    * Protocol:
+    *  1. stage: every row is tagged with its table's index, shuffled
+    *     by (table, EventDate), sorted by (table, EventDate, EventTime)
+    *     and written by one `partitionBy(table, EventDate)` job into
+    *     `outDir/_staging/<pipeline>-batch_id=N` (a stale staging dir of
+    *     a crashed attempt is deleted first). The sort key starts with
+    *     the write's partition columns, so Spark adds no sort of its
+    *     own that would drop the EventTime order;
+    *  2. publish, on the driver: this pipeline's earlier files of batch
+    *     N are deleted from every candidate table, then each staged
+    *     file is renamed into `<table>/batch_id=N/EventDate=d/`;
+    *  3. the staging dir (and `_staging`, once empty) is removed.
+    *
+    * Crash windows: a crash in (1) publishes nothing, and an earlier
+    * attempt's complete batch stays readable. A crash in (2) leaves
+    * batch N partly published until the replay. A crash in (3) leaves
+    * only staging debris, which readers never list (`_` prefix). The
+    * query has not committed the batch in any of them, so Spark
+    * replays it, and the replay's step 2 replaces this pipeline's
+    * files of batch N whole: no duplicate, no loss.
+    *
+    * Pipeline scoping: batch ids restart at 0 in every streaming
+    * query, so queries sharing an outDir (PumpMain's directories)
+    * would overwrite each other's `batch_id=N`. The `<pipeline>` prefix
+    * of staging dirs and published files is the query id
+    * (`sql.streaming.queryId`, kept in the checkpoint, so a restart
+    * keeps it), and a replay deletes only its own query's files.
+    * Outside a streaming query the prefix is empty, and a call
+    * replaces all of batch N's files.
+    */
+  def writeRoutedExactlyOnce(rows: DataFrame, tableMap: Map[String, String],
+      defaultTable: String, outDir: String, batchId: Long): Unit = {
+    val spark = rows.sparkSession
+    val tables = (defaultTable +: tableMap.values.toSeq).distinct.toIndexedSeq
+    val pipeline = Option(spark.sparkContext
+      .getLocalProperty("sql.streaming.queryId")).fold("")(_ + "-")
+    val stagingRoot = new Path(s"$outDir/_staging")
+    val staging = new Path(stagingRoot, s"${pipeline}batch_id=$batchId")
+    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(staging, true)
+    try {
+      rows.withColumn(RouteCol, route(tableMap, defaultTable)(t => tables.indexOf(t)))
+        .repartition(col(RouteCol), col("EventDate"))
+        .sortWithinPartitions(RouteCol, "EventDate", "EventTime")
+        .write.partitionBy(RouteCol, "EventDate")
+        .parquet(staging.toString)
+
+      val staged = Option(fs.globStatus(
+          new Path(staging, s"$RouteCol=*/EventDate=*/part-*"))).toSeq.flatten
+        .map { f =>
+          val date = f.getPath.getParent
+          (tables(date.getParent.getName.stripPrefix(s"$RouteCol=").toInt),
+            date.getName, f.getPath)
+        }
+      staged.map(_._1).distinct.foreach(t => checkLayout(fs, outDir, t))
+      for (t <- tables; batchDir = new Path(s"$outDir/$t/batch_id=$batchId")
+           if fs.exists(batchDir); d <- fs.listStatus(batchDir);
+           f <- fs.listStatus(d.getPath) if f.getPath.getName.startsWith(pipeline))
+        fs.delete(f.getPath, false)
+      staged.foreach { case (t, date, p) =>
+        val dir = new Path(s"$outDir/$t/batch_id=$batchId/$date")
+        fs.mkdirs(dir)
+        val dst = new Path(dir, pipeline + p.getName)
+        if (!fs.rename(p, dst))
+          throw new java.io.IOException(s"could not publish $p as $dst")
+      }
+    } finally {
+      fs.delete(staging, true)
+      // another pipeline may be staging at this instant: then the
+      // non-recursive delete fails and `_staging` stays, as it should
+      try if (fs.listStatus(stagingRoot).isEmpty) fs.delete(stagingRoot, false)
+      catch { case _: java.io.IOException => () }
+    }
   }
 
-  /** K1 sink, lake-native form (no ClickHouse reachable — SURVEY §4.2):
-    * per routed table, parquet partitioned by EventDate and sorted
-    * within partitions by EventTime — the same physical layout as the
-    * reference's MergeTree `PARTITION BY EventDate ORDER BY (EventDate,
-    * EventTime)` DDL. Routing uses the distinct table set of THIS batch
-    * (small by construction: ≤ #components in config).
-    */
-  def writeRouted(rows: DataFrame, tableMap: Map[String, String],
-      defaultTable: String, outDir: String): Unit =
-    foreachRoutedTable(rows, tableMap, defaultTable) { (t, df) =>
-      df.repartition(col("EventDate"))
-        .sortWithinPartitions(col("EventTime"))
-        .write.mode("append")
-        .partitionBy("EventDate")
-        .parquet(s"$outDir/$t")
-    }
-
-  /** K1 parquet sink with EXACTLY-ONCE micro-batch replay: each batch
-    * lands under its own `batch_id=N` partition directory written
-    * with OVERWRITE — a batch replayed after a sink-committed /
-    * checkpoint-failed restart rewrites the same directory with the
-    * same rows instead of double-appending, and a partially-written
-    * crash directory is healed by the same overwrite (strictly
-    * stronger than the JDBC marker path, whose partial-append window
-    * is documented). Readers list `outDir/<table>` as ordinary
-    * two-level partitioned parquet (batch_id, EventDate).
-    *
-    * Scale shape: identical bytes to `writeRouted` plus one partition
-    * level; the per-batch directory is also the natural retention /
-    * compaction unit (q247's verb folds small batch dirs later).
-    */
   /** Table dirs already cleared by the layout-migration guard — the
     * guard only matters on FIRST contact with a table dir, but it
     * costs two filesystem metadata round-trips; on an object-store
@@ -97,34 +165,25 @@ object LogPump {
   private val layoutChecked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def writeRoutedExactlyOnce(rows: DataFrame, tableMap: Map[String, String],
-      defaultTable: String, outDir: String, batchId: Long): Unit =
-    foreachRoutedTable(rows, tableMap, defaultTable) { (t, df) =>
-      // layout-migration guard: a legacy writeRouted outDir has
-      // top-level EventDate= dirs; mixing them with batch_id= dirs
-      // makes Spark partition discovery fail later with "conflicting
-      // directory structures" at READ time — fail fast at WRITE time
-      // with an actionable message instead (checked once per table)
-      if (!layoutChecked.contains(s"$outDir/$t")) {
-        val tableDir = new org.apache.hadoop.fs.Path(s"$outDir/$t")
-        val fs = tableDir.getFileSystem(
-          df.sparkSession.sessionState.newHadoopConf())
-        if (fs.exists(tableDir) &&
-            fs.listStatus(tableDir).exists(_.getPath.getName.startsWith("EventDate=")))
-          throw new IllegalStateException(
-            s"$outDir/$t holds the legacy single-level EventDate= layout; " +
-            "the exactly-once sink writes batch_id=N/EventDate=... dirs and " +
-            "the two cannot mix. Point the pump at a fresh outDir (or move " +
-            "the legacy data aside) when upgrading.")
-        // memoize only a PASSED verdict — a caught-and-retried failure
-        // must re-check, not silently proceed
-        layoutChecked.add(s"$outDir/$t")
-      }
-      df.repartition(col("EventDate"))
-        .sortWithinPartitions(col("EventTime"))
-        .write.mode("overwrite")
-        .partitionBy("EventDate")
-        .parquet(s"$outDir/$t/batch_id=$batchId")
+  /** Layout-migration guard: a table dir of the older single-level
+    * layout has top-level EventDate= dirs; mixing them with batch_id=
+    * dirs makes Spark partition discovery fail later with "conflicting
+    * directory structures" at READ time — fail fast at WRITE time with
+    * an actionable message instead (checked once per table).
+    */
+  private def checkLayout(fs: FileSystem, outDir: String, table: String): Unit =
+    if (!layoutChecked.contains(s"$outDir/$table")) {
+      val tableDir = new Path(s"$outDir/$table")
+      if (fs.exists(tableDir) &&
+          fs.listStatus(tableDir).exists(_.getPath.getName.startsWith("EventDate=")))
+        throw new IllegalStateException(
+          s"$outDir/$table holds the legacy single-level EventDate= layout; " +
+          "the exactly-once sink writes batch_id=N/EventDate=... dirs and " +
+          "the two cannot mix. Point the pump at a fresh outDir (or move " +
+          "the legacy data aside) when upgrading.")
+      // memoize only a PASSED verdict — a caught-and-retried failure
+      // must re-check, not silently proceed
+      layoutChecked.add(s"$outDir/$table")
     }
 
   /** K1 sink, JDBC form — the reference's actual sink shape (bulk

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.LogPump
@@ -211,11 +213,104 @@ class LogPumpSpec extends AnyFunSuite {
         "00:02.123456-5,CONN,3,Usr=b\n")))
     val outDir = Files.createTempDirectory("graft-sink").toString
     val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
-    LogPump.writeRouted(rows, Map("DBMSSQL" -> "sql_logs"), "logs", outDir)
+    LogPump.writeRoutedExactlyOnce(rows, Map("DBMSSQL" -> "sql_logs"), "logs", outDir, 0L)
     val sqlLogs = spark.read.parquet(s"$outDir/sql_logs")
     val defLogs = spark.read.parquet(s"$outDir/logs")
     assert(sqlLogs.count() == 1 && defLogs.count() == 1)
     assert(sqlLogs.columns.contains("EventDate")) // partition col survives
-    assert(Files.exists(java.nio.file.Paths.get(s"$outDir/sql_logs/EventDate=2025-05-26")))
+    assert(Files.exists(java.nio.file.Paths.get(
+      s"$outDir/sql_logs/batch_id=0/EventDate=2025-05-26")))
+  }
+
+  /** Every data file under `outDir`, as paths relative to it. */
+  private def sinkFiles(outDir: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(outDir)
+    val st = Files.walk(root)
+    try st.iterator().asScala.filter(p => p.toString.endsWith(".parquet") &&
+        !p.getFileName.toString.startsWith("."))
+      .map(p => root.relativize(p).toString).toSeq.sorted
+    finally st.close()
+  }
+
+  /** Hourly files over two days whose records are NOT written in time
+    * order: minutes follow a fixed permutation, so no file, task or
+    * shuffle order can pass for EventTime order by accident.
+    */
+  private def shuffledHours(n: Int): Path = writeLogs((0 until n).map { h =>
+    val day = if (h < n / 2) "250526" else "250527"
+    val lines = (0 until 40).map { i =>
+      val minute = (i * 17) % 40
+      val component = Seq("DBMSSQL", "CONN", "EXCP", "SDBL")(i % 4)
+      f"$minute%02d:0${i % 10}.100000-$i,$component,3,Usr=u$h-$i\n"
+    }
+    f"$day${h % 24}%02d.log" -> lines.mkString
+  }.toMap)
+
+  test("sink files keep the MergeTree ORDER BY: every file is sorted by EventTime") {
+    val dir = shuffledHours(12)
+    val outDir = Files.createTempDirectory("graft-sink-order").toString
+    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    LogPump.writeRoutedExactlyOnce(rows,
+      Map("DBMSSQL" -> "sql_logs", "EXCP" -> "excp_logs"), "logs", outDir, 0L)
+    val files = sinkFiles(outDir)
+    // three tables × two EventDates, one file each
+    assert(files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.size == 6, files)
+    files.foreach { f =>
+      val times = spark.read.parquet(s"$outDir/$f").select("EventTime")
+        .collect().map(_.getTimestamp(0).getTime).toSeq
+      assert(times.size > 1 && times == times.sorted, s"$f is not in EventTime order")
+    }
+    assert(files.map(f => spark.read.parquet(s"$outDir/$f").count()).sum == 12 * 40)
+  }
+
+  test("publish: a stale staging dir of a crashed attempt is replaced; nothing stays staged") {
+    val dir = shuffledHours(2)
+    val outDir = Files.createTempDirectory("graft-sink-stale").toString
+    // debris of a crashed attempt at batch 3: a torn parquet file where
+    // the publish step looks, and junk beside it
+    val torn = java.nio.file.Paths.get(
+      s"$outDir/_staging/batch_id=3/__route=0/EventDate=2025-05-26")
+    Files.createDirectories(torn)
+    Files.writeString(torn.resolve("part-00000-torn.c000.snappy.parquet"), "garbage")
+    Files.writeString(torn.getParent.getParent.resolve("junk"), "garbage")
+    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    LogPump.writeRoutedExactlyOnce(rows, Map("DBMSSQL" -> "sql_logs"), "logs", outDir, 3L)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$outDir/_staging")))
+    assert(sinkFiles(outDir).forall(f => !f.contains("torn")))
+    assert(spark.read.parquet(s"$outDir/sql_logs").count() == 2 * 10)
+    assert(spark.read.parquet(s"$outDir/logs").count() == 2 * 30)
+    assert(spark.read.parquet(s"$outDir/logs").select("batch_id").distinct()
+      .collect().map(_.getInt(0)).toSeq == Seq(3))
+  }
+
+  test("publish: a replayed batch id replaces its own batch, other batches stay") {
+    val outDir = Files.createTempDirectory("graft-sink-replay").toString
+    val all = LogPump.pumpBatch(spark, Seq(shuffledHours(2).toString))
+    def users(): Seq[(Int, String)] = spark.read.parquet(s"$outDir/logs")
+      .select("batch_id", "User").collect().map(r => (r.getInt(0), r.getString(1)))
+      .toSeq.sorted
+    LogPump.writeRoutedExactlyOnce(all, Map.empty, "logs", outDir, 0L)
+    LogPump.writeRoutedExactlyOnce(all.filter("User = 'u0-1'"), Map.empty, "logs", outDir, 1L)
+    assert(users().size == 81)
+    // the replay of batch 0 carries other rows: they replace batch 0 whole
+    LogPump.writeRoutedExactlyOnce(all.filter("User like 'u1-%'"), Map.empty, "logs", outDir, 0L)
+    assert(users() == (Seq((1, "u0-1")) ++ (0 until 40).map(i => (0, s"u1-$i"))).sorted)
+  }
+
+  test("publish: an empty batch creates no table dir") {
+    val outDir = Files.createTempDirectory("graft-sink-empty").toString
+    val rows = LogPump.pumpBatch(spark, Seq(shuffledHours(2).toString)).limit(0)
+    LogPump.writeRoutedExactlyOnce(rows, Map("DBMSSQL" -> "sql_logs"), "logs", outDir, 0L)
+    assert(new java.io.File(outDir).list().isEmpty)
+  }
+
+  test("publish: a table dir of the legacy EventDate= layout is refused") {
+    val outDir = Files.createTempDirectory("graft-sink-legacy").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$outDir/logs/EventDate=2025-05-26"))
+    val rows = LogPump.pumpBatch(spark, Seq(shuffledHours(2).toString))
+    val e = intercept[IllegalStateException](
+      LogPump.writeRoutedExactlyOnce(rows, Map.empty, "logs", outDir, 0L))
+    assert(e.getMessage.contains("legacy single-level EventDate= layout"))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$outDir/logs/batch_id=0")))
   }
 }

@@ -91,6 +91,44 @@ class OpsSpec extends AnyFunSuite {
     assert(blocked == reference)
   }
 
+  test("blocked sweeps skip the pairs of a block that holds no vectors") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // 8 vectors in blocks of 2 rows → 4 hash blocks; take the first 8
+    // ids that hash outside block 0, so block 0 stays empty while every
+    // other block is replicated to its pair with it
+    val ids = spark.range(0, 200)
+      .filter(pmod(hash(col("id")), lit(4)) =!= 0)
+      .limit(8).as[Long].collect().toSeq
+    val rnd = new scala.util.Random(7)
+    val vecs = ids.map(id => (id, Array.fill(4)(rnd.nextFloat() - 0.5f)))
+    val d = java.nio.file.Files.createTempDirectory("graft-empty-block").toString
+    vecs.toDF("vec_id", "embedding").write.parquet(s"$d/embeddings.parquet")
+
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val blocked = triples(Similarity.pairsAboveBlocked(spark, d, -1.0, blockRows = 2))
+    assert(blocked.size == 8 * 7 / 2)
+    assert(blocked == triples(Similarity.pairsAbove(spark, d, -1.0)))
+
+    // kNN: each vector's 3 best over the per-block partial lists equal
+    // a driver-side brute force (same cos, id tie-break)
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      def dot(x: Array[Float], y: Array[Float]) =
+        x.indices.map(i => x(i).toDouble * y(i).toDouble).sum
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    }
+    val brute = vecs.map { case (v, e) =>
+      v -> vecs.filter(_._1 != v).map { case (n, f) => (n, cos(e, f)) }
+        .sortBy { case (n, c) => (-c, n) }.take(3).map(_._1)
+    }.toMap
+    val partial = triples(Similarity.knnBlocked(spark, d, 3, blockRows = 2))
+    val knn = partial.groupBy(_._1).map { case (v, rs) =>
+      v -> rs.toSeq.sortBy { case (_, n, c) => (-c, n) }.take(3).map(_._2)
+    }
+    assert(knn == brute)
+  }
+
   test("approx_count_distinct stays within its 2% rsd bound (×5 slack)") {
     val rows = TextAnalysis.approxDistinctRaw(spark, sf).collect()
     rows.foreach { r =>

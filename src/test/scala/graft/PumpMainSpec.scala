@@ -89,4 +89,34 @@ class PumpMainSpec extends AnyFunSuite {
     assert(Files.exists(Paths.get(ckpt, "Map1")) &&
       Files.exists(Paths.get(ckpt, "Map2")))
   }
+
+  test("startAll: directories routing to the same table keep each other's batches") {
+    // batch ids restart at 0 in every pump query. Each directory's
+    // first record is complete once the second one's header is read,
+    // so both pumps' batch 0 routes a CONN row to the default table,
+    // and neither may overwrite the other's batch_id=0
+    val dirs = Seq("a", "b").map { u =>
+      val d = Files.createTempDirectory(s"graft-main-same-$u")
+      Files.writeString(d.resolve("25052607.log"),
+        s"00:01.000001-1,CONN,2,Usr=${u}1\n00:02.000001-1,CONN,2,Usr=${u}2\n")
+      d
+    }
+    val out = Files.createTempDirectory("graft-main-same-out").toString
+    val ckpt = Files.createTempDirectory("graft-main-same-ckpt").toString
+    val cfg = graft.config.PumpConfig(
+      LogDirectoryMap = Map("Map1" -> dirs(0).toString, "Map2" -> dirs(1).toString),
+      FilePattern = "*.log", BatchInterval = 1,
+      ClickHouse = graft.config.ClickHouseConfig(DefaultTable = "logs"))
+    val queries = PumpMain.startAll(spark, cfg, Some(out), ckpt)
+    def users(): Seq[String] =
+      try spark.read.parquet(s"$out/logs").collect()
+        .map(_.getAs[String]("User")).toSeq.sorted
+      catch { case _: Throwable => Seq.empty }
+    try {
+      val all = Seq("a1", "a2", "b1", "b2")
+      assert(eventually(90000) { users() == all }, s"got ${users()}")
+      Thread.sleep(1000) // later triggers must neither drop nor repeat a row
+      assert(users() == all)
+    } finally queries.foreach(_.stop())
+  }
 }
