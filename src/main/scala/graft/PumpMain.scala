@@ -9,7 +9,9 @@ import graft.streaming.StreamingPump
 
 /** Runnable service entry point — the reference's `cmd/app/main.go`:
   * load + validate config.yaml, start one streaming pump per
-  * configured log directory, run until SIGTERM, stop gracefully.
+  * configured log directory (each tailing its files through the
+  * `techlog` connector, StreamingPump.pumpStream), run until SIGTERM
+  * or until any pump fails, stop gracefully.
   *
   *   spark-submit --class graft.PumpMain graft.jar config.yaml \
   *     [--parquet /lake/root] [--checkpoint /ckpt/root] \
@@ -47,14 +49,31 @@ object PumpMain {
     s"jdbc:clickhouse://$address/${ch.Database}"
   }
 
-  /** Start one pump query per configured directory. Factored from
-    * main() so specs can drive it against a scratch config + sink.
+  /** Start one pump query per configured directory — the only way a
+    * pump is started. Factored from main() so specs can drive it
+    * against a scratch config + sink.
+    *
+    * Hot config reload (reference X1, `scan.go:24-52` fsnotify on
+    * config.yaml): every micro-batch of every directory re-reads the
+    * routing `TableMap`/`DefaultTable` — the part 1C operators
+    * actually retune — from `configPath`; a broken config keeps the
+    * last good one, like the reference logging the reload error and
+    * keeping the old config. Directories, pattern, trigger period and
+    * sink endpoint are read once: Spark cannot swap a running query's
+    * source, so those changes need a restart (documented deviation,
+    * SURVEY.md §7.4).
     */
-  def startAll(spark: SparkSession, cfg: PumpConfig,
+  def startAll(spark: SparkSession, configPath: String,
       parquetOut: Option[String], checkpointRoot: String,
       jdbcUrlOverride: Option[String] = None): Seq[StreamingQuery] = {
-    val ch = cfg.ClickHouse
-    val default = if (ch.DefaultTable.isEmpty) "logs" else ch.DefaultTable
+    val cfg = PumpConfig.load(configPath)
+      .fold(err => throw new IllegalArgumentException(err), identity)
+    @volatile var lastGood = cfg
+    def routing(): (Map[String, String], String) = {
+      PumpConfig.load(configPath).foreach(c => lastGood = c)
+      val ch = lastGood.ClickHouse
+      (ch.TableMap, if (ch.DefaultTable.isEmpty) "logs" else ch.DefaultTable)
+    }
     val trigger = Trigger.ProcessingTime(s"${cfg.BatchInterval} seconds")
     cfg.LogDirectoryMap.toSeq.sortBy(_._1).map { case (key, dir) =>
       val ckpt = s"$checkpointRoot/$key"
@@ -66,16 +85,18 @@ object PumpMain {
       parquetOut match {
         case Some(out) =>
           stream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-            LogPump.writeRoutedExactlyOnce(batch, ch.TableMap, default, out,
-              batchId)
+            val (tableMap, default) = routing()
+            LogPump.writeRoutedExactlyOnce(batch, tableMap, default, out, batchId)
           }.start()
         case None =>
+          val ch = cfg.ClickHouse
           val url = jdbcUrlOverride.getOrElse(jdbcUrl(cfg))
           val props = new java.util.Properties()
           if (ch.Username.nonEmpty) props.setProperty("user", ch.Username)
           if (ch.Password.nonEmpty) props.setProperty("password", ch.Password)
           stream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-            LogPump.idempotentJdbcBatch(batch, batchId, ch.TableMap, default,
+            val (tableMap, default) = routing()
+            LogPump.idempotentJdbcBatch(batch, batchId, tableMap, default,
               url, props, pipelineId = ckpt)
             ()
           }.start()
@@ -83,28 +104,33 @@ object PumpMain {
     }
   }
 
+  /** Block until ANY pump query terminates, rethrowing its failure: a
+    * dead directory pump must end the service, not stop its ingest
+    * unnoticed while the other directories keep running.
+    */
+  private[graft] def awaitAny(spark: SparkSession): Unit =
+    spark.streams.awaitAnyTermination()
+
   def main(args: Array[String]): Unit = {
     val configPath = args.headOption.getOrElse("config.yaml")
     def flag(name: String): Option[String] =
       args.sliding(2).collectFirst { case Array(`name`, v) => v }
-    val cfg = PumpConfig.load(configPath)
-      .fold(err => throw new IllegalArgumentException(err), identity)
     val spark = SparkSession.builder()
       .appName("graft-log-pump")
       .getOrCreate() // master/resources come from spark-submit
     val metrics = graft.streaming.PumpMetrics.attach(spark)
-    val queries = startAll(spark, cfg,
+    val queries = startAll(spark, configPath,
       flag("--parquet"), flag("--checkpoint").getOrElse("graft-checkpoints"),
       flag("--jdbc-url"))
-    // SIGTERM → graceful stop: finish the in-flight micro-batch, print
-    // the rows/batches/lag report, then exit (the reference's
-    // signal.Notify + cancel, main.go — its zap logs carried the same
-    // per-batch counts)
+    // SIGTERM (or a failed pump) → graceful stop: finish the in-flight
+    // micro-batches, print the rows/batches/lag report, then exit (the
+    // reference's signal.Notify + cancel, main.go — its zap logs
+    // carried the same per-batch counts)
     sys.addShutdownHook {
       queries.foreach(q => try q.stop() catch { case _: Throwable => () })
       val rep = metrics.report(queries.map(_.id))
       if (rep.nonEmpty) println(rep)
     }
-    queries.foreach(_.awaitTermination())
+    awaitAny(spark)
   }
 }

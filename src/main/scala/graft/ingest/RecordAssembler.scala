@@ -1,12 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.parse.TechLogParser
-
-/** A raw multi-line log record plus its source file. */
-final case class RawRecord(SourceFile: String, Lines: Seq[String])
 
 /** Multi-line record assembly (reference: `internal/watcher/tail.go:88-115`
   * + boundary regex `scan.go:16-21`): NUL bytes are stripped per line, a
@@ -14,12 +8,8 @@ final case class RawRecord(SourceFile: String, Lines: Seq[String])
   * leading non-boundary lines form a (malformed) record that the
   * downstream transform drops — same as the reference.
   *
-  * Batch path reads each file with `wholetext` so line order inside a
-  * file is trivially preserved. Scale note: this holds one file per task
-  * in memory, which is exactly the right unit here — 1C rotates logs
-  * hourly (`YYMMDDHH.log`), so files are bounded and the read stays an
-  * embarrassingly parallel, shuffle-free narrow plan (one task per
-  * file); at 100 TB the parallelism is the file count, not file size.
+  * The `techlog` connector (graft.sources.TechLogSource) splits every
+  * byte slice it reads with `splitRecords`, batch and streaming alike.
   */
 object RecordAssembler {
 
@@ -52,27 +42,4 @@ object RecordAssembler {
         val r = pending; pending = null; r
       }
     }
-
-  /** Batch source: read every file matching `pattern` under `dirs`
-    * (recursively — reference S1/S2 dir walking) and split into records.
-    */
-  def readBatch(spark: SparkSession, dirs: Seq[String],
-      pattern: String = "*.log"): Dataset[RawRecord] = {
-    import spark.implicits._
-    spark.read
-      .option("wholetext", "true")
-      .option("pathGlobFilter", pattern)
-      .option("recursiveFileLookup", "true")
-      .text(dirs: _*)
-      .select(input_file_name().as("SourceFile"), col("value"))
-      .as[(String, String)]
-      .flatMap { case (file, content) =>
-        // Mirror line-by-line tailing: no phantom empty line after the
-        // final newline, and no trailing CR on Windows-style lines.
-        val lines = content.split("\n", -1)
-        val trimmed = if (lines.nonEmpty && lines.last.isEmpty) lines.init else lines
-        splitRecords(trimmed.iterator.map(_.stripSuffix("\r")))
-          .map(RawRecord(file, _))
-      }
-  }
 }

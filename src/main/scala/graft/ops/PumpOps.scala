@@ -76,12 +76,12 @@ object PumpOps {
 
   /** Render → write .log fixture files → pump → comparable projection. */
   def pumpRoundTrip(s: SparkSession, d: String): DataFrame =
-    comparableProjection(LogPump.pumpBatch(s, Seq(fixtureDir(s, d))))
+    comparableProjection(LogPump.pumpBatch(s, fixtureDir(s, d)))
 
-  /** The same round trip through the DataSource V2 connector
-    * (graft.sources.TechLogSource): `format("techlog")` replaces the
-    * wholetext+flatMap assembly, then the identical 23→16 transform —
-    * so the connector's record assembly, parsing, pruned-column
+  /** The same round trip straight on the DataSource V2 connector
+    * (graft.sources.TechLogSource) that `pumpBatch` wraps:
+    * `format("techlog")`, then the identical 23→16 transform — so the
+    * connector's record assembly, parsing, pruned-column
     * projection and per-file partitioning are all hash-checked against
     * the same oracle as q40.
     */
@@ -167,15 +167,12 @@ object PumpOps {
     * Scale shape: identical to q40 (narrow per-file tasks); the DLQ
     * view adds one |reasons|-keyed rollup.
     */
-  def pumpDlq(s: SparkSession, d: String): DataFrame = {
-    val dir = corruptFixtureDir(s, d)
-    val entries = LogPump.parseRecords(
-      graft.ingest.RecordAssembler.readBatch(s, Seq(dir), "*.log")).toDF()
-    graft.etl.Transform.withReason(entries)
+  def pumpDlq(s: SparkSession, d: String): DataFrame =
+    graft.etl.Transform.withReason(
+        s.read.format("techlog").load(corruptFixtureDir(s, d)))
       .groupBy(col("drop_reason"))
       .agg(count(lit(1)).as("n_records"))
       .orderBy(col("drop_reason"))
-  }
 
   /** Corrupted fixture set for q244 (separate memo — q40/q91 keep
     * their clean files): minute-mangled records preserve the record
@@ -309,8 +306,8 @@ object PumpOps {
         |WHERE n_records > 0
         |ORDER BY drop_reason""".stripMargin
 
-  /** Shared oracle: q40 (wholetext assembly) and q91 (DSv2 connector)
-    * must both reproduce this projection of `events` exactly.
+  /** Shared oracle: q40 (`LogPump.pumpBatch`) and q91 (the bare DSv2
+    * connector) must both reproduce this projection of `events` exactly.
     */
   private lazy val PumpOracle =
       """SELECT strftime(ts, '%Y-%m-%d') AS EventDate,

@@ -1,21 +1,20 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Transform
-import graft.ingest.{RawRecord, RecordAssembler}
-import graft.model.LogEntry
-import graft.parse.TechLogParser
 
 /** Batch form of the reference's whole dataflow (SURVEY.md §3.2):
   *
   *   .log files → record assembly → parse → transform → routed sink
   *
-  * The plan is narrow end-to-end: one task per input file, no shuffle
-  * anywhere until the sink. At 100 TB this scales with file count; the
-  * only wide operation is the lake sink's single write per micro-batch
+  * Assembly and parse happen in the `techlog` connector
+  * (graft.sources.TechLogSource). The plan is narrow end-to-end: files
+  * bin-packed into tasks by size, no shuffle anywhere until the sink.
+  * At 100 TB this scales with bytes and file count; the only wide
+  * operation is the lake sink's single write per micro-batch
   * (`writeRoutedExactlyOnce`): rows are tagged with their routed
   * table, repartitioned by (table, EventDate) so each task writes few
   * files instead of one per (task × table × date) — the classic
@@ -29,23 +28,11 @@ import graft.parse.TechLogParser
   */
 object LogPump {
 
-  /** Records → typed LogEntry, with the filename override of `Timestamp`
-    * (reference `tail.go:77`: base name of the source path).
+  /** Full batch pump: a directory tree of .log files → 16-column
+    * TechLogRow DataFrame (invalid records dropped, reference T5).
     */
-  def parseRecords(records: Dataset[RawRecord]): Dataset[LogEntry] = {
-    import records.sparkSession.implicits._
-    records.map { r =>
-      TechLogParser.parseLine(r.Lines)
-        .copy(Timestamp = r.SourceFile.substring(r.SourceFile.lastIndexOf('/') + 1))
-    }
-  }
-
-  /** Full batch pump: directories of .log files → 16-column TechLogRow
-    * DataFrame (invalid records dropped, reference T5).
-    */
-  def pumpBatch(spark: SparkSession, dirs: Seq[String],
-      pattern: String = "*.log"): DataFrame =
-    Transform(parseRecords(RecordAssembler.readBatch(spark, dirs, pattern)).toDF())
+  def pumpBatch(spark: SparkSession, dir: String): DataFrame =
+    Transform(spark.read.format("techlog").load(dir))
 
   /** A1 table routing (reference `clickhouse.go:64-72`): per-Component
     * table with a default fallback. The map comes from config and is
@@ -245,16 +232,7 @@ object LogPump {
         val rs = check.executeQuery()
         try rs.next() finally rs.close()
       } finally check.close()
-      if (committed) {
-        // a replayed-and-skipped batch must still EXECUTE the
-        // micro-batch plan: stateful operators upstream (the assembly
-        // state) have to commit their stores for this batch id —
-        // Spark 4 validates exactly that on restart — and the state
-        // must advance past the replay even though the sink write is
-        // skipped. Draining the rows does both without writing.
-        batch.foreach(_ => ())
-        false
-      }
+      if (committed) false
       else {
         writeRoutedJdbc(batch, tableMap, defaultTable, url, props)
         val mark = conn.prepareStatement(

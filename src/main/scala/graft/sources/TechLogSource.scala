@@ -28,12 +28,15 @@ import graft.parse.TechLogParser
   *
   *   spark.read.format("techlog").load("/logs")
   *
+  * It is the pump's only reader of .log files: `LogPump.pumpBatch`,
+  * `StreamingPump.pumpStream` (and so `PumpMain`) and q244 all load
+  * through it.
+  *
   * Scan shape: rotated .log files bin-packed into InputPartitions by
   * cumulative size (`maxPartitionBytes`, default 128 MB — task count
   * tracks bytes, not file count; 1C rotates hourly so files are
-  * bounded and the plan stays narrow and shuffle-free like
-  * RecordAssembler.readBatch), with V2 column pruning
-  * (SupportsPushDownRequiredColumns) and equality/range/In/not-null
+  * bounded and the plan stays narrow and shuffle-free), with V2 column
+  * pruning (SupportsPushDownRequiredColumns) and equality/range/In/not-null
   * filter pushdown (SupportsPushDownFilters): a filtered
   * `select(Component)` parses each record once and materializes only
   * passing rows with only the pruned columns. Predicates on the

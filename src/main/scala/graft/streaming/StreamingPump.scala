@@ -1,182 +1,36 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.etl.Transform
-import graft.ingest.{RawRecord, RecordAssembler}
-import graft.pipeline.LogPump
 
-/** Streaming form of the pump (SURVEY.md §2.1 S2/S3/S4, §3.2): the file
-  * stream source replaces fsnotify discovery + rescan, the micro-batch
-  * offset/commit log replaces the per-record byte-offset checkpoint
-  * (strictly stronger: failed batches are retried, whereas the
-  * reference drops a batch on sink error — batch.go:44-49), and a
-  * `flatMapGroupsWithState` keyed by source file replaces the per-file
-  * tail goroutine's record assembly:
+/** Streaming form of the pump (SURVEY.md §2.1 S2/S3/S4, §3.2): the
+  * `techlog` connector (graft.sources.TechLogSource) tails the log
+  * directory, and its per-file byte-offset map is the micro-batch
+  * offset — the reference's per-record offset checkpoint, replayable,
+  * so a failed batch is retried instead of dropped (`batch.go:44-49`).
+  * The connector carries the per-file tail's record assembly:
   *
-  *  - lines of a file arrive in order (restored by the capture sequence
-  *    below), records flush when the next boundary line arrives;
-  *  - the trailing partial record is held in group state and flushed by
-  *    a processing-time timeout — the reference's 2 s idle flush
-  *    (tail.go:58-65).
+  *  - bytes appended to an already-seen file are admitted as a delta
+  *    (`tail.go:21-27`), aligned to whole records;
+  *  - the trailing record of a hot file is held back until a later
+  *    boundary line arrives or the writer goes idle for `idleAdmitMs`
+  *    (default 2 s — the reference's idle flush, `tail.go:58-65`);
+  *  - a rotated or truncated file is re-read from 0.
   *
-  * Scale: state per group is ONE pending record (a few lines), keyed by
-  * file — bounded by (files in flight × record size), irrespective of
-  * data volume.
+  * Pumps are started by `graft.PumpMain.startAll`.
   */
 object StreamingPump {
 
-  /** One source line + its intra-file ordering key. `.text` preserves
-    * byte order within a split; `monotonically_increasing_id` is
-    * (partitionId << 33 | row-in-partition) and file splits are planned
-    * in byte order, so sorting by it restores line order per file.
+  /** Changed files one micro-batch admits: a backlog after downtime
+    * drains in bounded batches instead of one giant catch-up batch.
     */
-  final case class SourceLine(file: String, seq: Long, line: String)
-
-  final case class AssemblyState(buffer: Seq[String])
-
-  val DefaultIdleFlush: java.time.Duration = java.time.Duration.ofSeconds(2)
-
-  /** Split lines into records, holding back the (possibly incomplete)
-    * last record — the streaming twin of RecordAssembler.splitRecords.
-    */
-  private[graft] def splitKeepRemainder(
-      lines: Seq[String]): (Seq[Seq[String]], Seq[String]) = {
-    val all = RecordAssembler.splitRecords(lines.iterator).toVector
-    if (all.isEmpty) (Vector.empty, Vector.empty)
-    else (all.init, all.last)
-  }
-
-  private def assemble(idleFlush: java.time.Duration)(
-      file: String, rows: Iterator[SourceLine],
-      state: GroupState[AssemblyState]): Iterator[RawRecord] = {
-    if (!rows.hasNext) {
-      // timeout path: flush the pending partial record (tail.go:107-114)
-      val pending = state.getOption.map(_.buffer).getOrElse(Seq.empty)
-      state.remove()
-      if (pending.nonEmpty) Iterator.single(RawRecord(file, pending))
-      else Iterator.empty
-    } else {
-      val fresh = rows.toVector.sortBy(_.seq).map(_.line.replace("\u0000", ""))
-      val carried = state.getOption.map(_.buffer).getOrElse(Seq.empty)
-      val (complete, remainder) = splitKeepRemainder(carried ++ fresh)
-      if (remainder.nonEmpty) {
-        state.update(AssemblyState(remainder))
-        state.setTimeoutDuration(idleFlush.toMillis)
-      } else state.remove()
-      complete.iterator.map(RawRecord(file, _))
-    }
-  }
-
-  /** Streaming record source over a directory tree of .log files. */
-  def records(spark: SparkSession, dir: String, pattern: String = "*.log",
-      maxFilesPerTrigger: Int = 100,
-      idleFlush: java.time.Duration = DefaultIdleFlush): Dataset[RawRecord] = {
-    import spark.implicits._
-    spark.readStream
-      .option("pathGlobFilter", pattern)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(dir)
-      .select(input_file_name().as("file"), col("value").as("line"))
-      .as[(String, String)]
-      // monotonically_increasing_id is not allowed on streaming plans;
-      // build the same (partitionId << 33 | row) key by hand.
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-        it.zipWithIndex.map { case ((file, line), i) =>
-          SourceLine(file, (pid << 33) | i.toLong, line)
-        }
-      }
-      .groupByKey(_.file)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.ProcessingTimeTimeout)(assemble(idleFlush))
-  }
+  val MaxFilesPerTrigger = 100
 
   /** Full streaming pump → 16-column TechLogRow stream. */
-  def pumpStream(spark: SparkSession, dir: String, pattern: String = "*.log",
-      maxFilesPerTrigger: Int = 100,
-      idleFlush: java.time.Duration = DefaultIdleFlush): DataFrame =
-    Transform(LogPump.parseRecords(
-      records(spark, dir, pattern, maxFilesPerTrigger, idleFlush)).toDF())
-
-  /** Start the end-to-end streaming pump with the routed parquet sink
-    * (foreachBatch ≈ the reference's InsertTechLogBatch per micro-batch;
-    * the trigger interval ≈ BatchInterval, config.yaml:15).
-    */
-  def start(spark: SparkSession, dir: String, outDir: String,
-      checkpointDir: String, tableMap: Map[String, String],
-      defaultTable: String = "logs",
-      trigger: Trigger = Trigger.ProcessingTime("20 seconds")): StreamingQuery =
-    pumpStream(spark, dir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        LogPump.writeRoutedExactlyOnce(batch, tableMap, defaultTable, outDir,
-          batchId)
-      }
-      .start()
-
-  /** Start the streaming pump against a JDBC sink with idempotent
-    * micro-batches (the reference's actual sink shape,
-    * `clickhouse.go:63-128`, but with batch-id commit markers so
-    * replays after a sink-committed/checkpoint-failed restart are
-    * skipped — see LogPump.idempotentJdbcBatch).
-    */
-  def startJdbcSink(spark: SparkSession, dir: String, url: String,
-      checkpointDir: String, tableMap: Map[String, String],
-      defaultTable: String = "LOGS",
-      trigger: Trigger = Trigger.ProcessingTime("20 seconds"),
-      projection: DataFrame => DataFrame = identity): StreamingQuery =
-    projection(pumpStream(spark, dir))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // checkpoint dir identifies the pipeline: batch ids restart
-        // per checkpoint, so markers must be scoped to it
-        LogPump.idempotentJdbcBatch(batch, batchId, tableMap, defaultTable,
-          url, pipelineId = checkpointDir)
-        () // StreamingQuery ignores the skip/write verdict
-      }
-      .start()
-
-  /** Hot config reload (reference X1, `scan.go:24-52` fsnotify on
-    * config.yaml): Spark cannot swap a running query's source, but the
-    * routing TableMap/DefaultTable — the part 1C operators actually
-    * retune — is re-read from the config file at EVERY micro-batch;
-    * a broken config keeps the last good one, like the reference
-    * logging the reload error and keeping the old config. Source-dir
-    * changes require a query restart (documented deviation,
-    * SURVEY.md §7.4).
-    */
-  def startWithConfigFile(spark: SparkSession, configPath: String,
-      outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("20 seconds"),
-      idleFlush: java.time.Duration = DefaultIdleFlush): StreamingQuery = {
-    val initial = graft.config.PumpConfig.load(configPath)
-      .fold(err => throw new IllegalArgumentException(err), identity)
-    @volatile var lastGood = initial
-    pumpStream(spark, initial.LogDirectoryMap.values.head,
-        initial.FilePattern, idleFlush = idleFlush)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.config.PumpConfig.load(configPath).foreach(c => lastGood = c)
-        val ch = lastGood.ClickHouse
-        val default = if (ch.DefaultTable.isEmpty) "logs" else ch.DefaultTable
-        // same exactly-once sink as start()/PumpMain: a batch replayed
-        // after a sink-write/checkpoint-commit crash overwrites its own
-        // batch_id=N dir instead of double-appending
-        LogPump.writeRoutedExactlyOnce(batch, ch.TableMap, default, outDir, batchId)
-      }
-      .start()
-  }
+  def pumpStream(spark: SparkSession, dir: String, pattern: String = "*.log"): DataFrame =
+    Transform(spark.readStream.format("techlog")
+      .option("pathGlobFilter", pattern)
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger)
+      .load(dir))
 }

@@ -34,7 +34,7 @@ class LogPumpSpec extends AnyFunSuite {
       "25052608.log" ->
         "15:59.999999-1,EXCP,2,Usr=sidorov,DataBase=hr\n"))
 
-    val out = LogPump.pumpBatch(spark, Seq(dir.toString)).collect()
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
       .sortBy(_.getAs[java.sql.Timestamp]("EventTime"))
     assert(out.length == 3)
 
@@ -74,7 +74,7 @@ class LogPumpSpec extends AnyFunSuite {
       "25052607.log" -> ("garbage first line\n" +        // leading junk record dropped
         "99:99.123456-5,CONN,3,Usr=d\n" +                // minute 99 → fails
         "00:02.123456-5,CONN,3,Usr=ok\n")))
-    val out = LogPump.pumpBatch(spark, Seq(dir.toString)).collect()
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
     assert(out.length == 1)
     assert(out(0).getAs[String]("User") == "ok")
   }
@@ -82,7 +82,7 @@ class LogPumpSpec extends AnyFunSuite {
   test("BOM before time is stripped (transform.go:29)") {
     val dir = writeLogs(Map(
       "25052600.log" -> "﻿00:01.123456-5,CONN,3,Usr=bom\n"))
-    val out = LogPump.pumpBatch(spark, Seq(dir.toString)).collect()
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
     assert(out.length == 1)
     assert(out(0).getAs[java.sql.Timestamp]("EventTime").toInstant ==
       Instant.parse("2025-05-26T00:00:01.123456Z"))
@@ -92,7 +92,7 @@ class LogPumpSpec extends AnyFunSuite {
     val dir = writeLogs(Map(
       "25052601.log" -> ("00:01.12-99999999999,CONN,3,Usr=x\n" +
         "00:02.50-3,CONN,3,Usr=y\n")))
-    val out = LogPump.pumpBatch(spark, Seq(dir.toString)).collect()
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
       .sortBy(_.getAs[java.sql.Timestamp]("EventTime"))
     assert(out.length == 2)
     assert(out(0).getAs[Long]("Duration") == 0L) // range error → 0, not clamp
@@ -108,7 +108,7 @@ class LogPumpSpec extends AnyFunSuite {
     val dir = writeLogs(Map(
       "25052601.log" -> ("00:01.123456-5,CONN,3,Usr=x\n" +
         "00:02.5-3,CONN,3,Usr=y\n")))
-    val out = LogPump.pumpBatch(spark, Seq(dir.toString)).collect()
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
     assert(out.length == 1)
     assert(out(0).getAs[String]("User") == "y")
     assert(out(0).getAs[java.sql.Timestamp]("EventTime").toInstant ==
@@ -118,7 +118,7 @@ class LogPumpSpec extends AnyFunSuite {
   test("SessionID narrowed mod 2^32 (transform.go:62)") {
     val dir = writeLogs(Map(
       "25052600.log" -> "00:01.123456-5,CONN,3,SessionID=4294967297\n"))
-    val out = LogPump.pumpBatch(spark, Seq(dir.toString)).collect()
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
     assert(out(0).getAs[Long]("SessionID") == 1L)
   }
 
@@ -127,7 +127,7 @@ class LogPumpSpec extends AnyFunSuite {
       "25052600.log" -> ("00:01.123456-5,DBMSSQL,3,Usr=a\n" +
         "00:02.123456-5,CONN,3,Usr=b\n" +
         "00:03.123456-5,EXCP,3,Usr=c\n")))
-    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    val rows = LogPump.pumpBatch(spark, dir.toString)
     val routed = LogPump.withRoute(rows, Map("DBMSSQL" -> "sql_logs"), "logs")
       .select("EventType", "__table").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -144,7 +144,7 @@ class LogPumpSpec extends AnyFunSuite {
       name -> content
     }.toMap
     val dir = writeLogs(files)
-    val out = LogPump.pumpBatch(spark, Seq(dir.toString))
+    val out = LogPump.pumpBatch(spark, dir.toString)
     assert(out.count() == 10000L)
     // every record present exactly once
     assert(out.select("SessionID").distinct().count() == 10000L)
@@ -155,7 +155,7 @@ class LogPumpSpec extends AnyFunSuite {
       "25052607.log" -> ("00:01.100000-5,DBMSSQL,3,Usr=a,DataBase=hr\n" +
         "00:02.100000-9,DBMSSQL,3,Usr=b,DataBase=hr\n" +
         "00:03.100000-2,CONN,3,Usr=a,DataBase=acc\n")))
-    LogPump.pumpBatch(spark, Seq(dir.toString)).createOrReplaceTempView("tech_log")
+    LogPump.pumpBatch(spark, dir.toString).createOrReplaceTempView("tech_log")
     val rows = spark.sql(
       """SELECT InfoBase, count(*) AS n, sum(Duration) AS total_dur
         |FROM tech_log
@@ -171,7 +171,7 @@ class LogPumpSpec extends AnyFunSuite {
         "00:02.123456-5,CONN,3,Usr=b\n" +
         "00:03.123456-5,CONN,3,Usr=c\n")))
     val url = s"jdbc:derby:memory:pumpdb${System.nanoTime()};create=true"
-    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    val rows = LogPump.pumpBatch(spark, dir.toString)
       // Derby has no unbounded VARCHAR default for CLOB-ish cols; keep
       // the sink-shape test on the fixed-width columns
       .select("EventDate", "EventTime", "EventType", "User", "SessionID", "Duration")
@@ -193,7 +193,7 @@ class LogPumpSpec extends AnyFunSuite {
       "25052600.log" -> ("00:01.123456-5,DBMSSQL,3,Usr=a\n" +
         "00:02.123456-5,CONN,3,Usr=b\n")))
     val url = s"jdbc:derby:memory:idemdb${System.nanoTime()};create=true"
-    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    val rows = LogPump.pumpBatch(spark, dir.toString)
       .select("EventDate", "EventTime", "EventType", "User", "SessionID", "Duration")
     def count() = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "LOGS").load().count()
@@ -212,7 +212,7 @@ class LogPumpSpec extends AnyFunSuite {
       "25052600.log" -> ("00:01.123456-5,DBMSSQL,3,Usr=a\n" +
         "00:02.123456-5,CONN,3,Usr=b\n")))
     val outDir = Files.createTempDirectory("graft-sink").toString
-    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    val rows = LogPump.pumpBatch(spark, dir.toString)
     LogPump.writeRoutedExactlyOnce(rows, Map("DBMSSQL" -> "sql_logs"), "logs", outDir, 0L)
     val sqlLogs = spark.read.parquet(s"$outDir/sql_logs")
     val defLogs = spark.read.parquet(s"$outDir/logs")
@@ -249,7 +249,7 @@ class LogPumpSpec extends AnyFunSuite {
   test("sink files keep the MergeTree ORDER BY: every file is sorted by EventTime") {
     val dir = shuffledHours(12)
     val outDir = Files.createTempDirectory("graft-sink-order").toString
-    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    val rows = LogPump.pumpBatch(spark, dir.toString)
     LogPump.writeRoutedExactlyOnce(rows,
       Map("DBMSSQL" -> "sql_logs", "EXCP" -> "excp_logs"), "logs", outDir, 0L)
     val files = sinkFiles(outDir)
@@ -273,7 +273,7 @@ class LogPumpSpec extends AnyFunSuite {
     Files.createDirectories(torn)
     Files.writeString(torn.resolve("part-00000-torn.c000.snappy.parquet"), "garbage")
     Files.writeString(torn.getParent.getParent.resolve("junk"), "garbage")
-    val rows = LogPump.pumpBatch(spark, Seq(dir.toString))
+    val rows = LogPump.pumpBatch(spark, dir.toString)
     LogPump.writeRoutedExactlyOnce(rows, Map("DBMSSQL" -> "sql_logs"), "logs", outDir, 3L)
     assert(!Files.exists(java.nio.file.Paths.get(s"$outDir/_staging")))
     assert(sinkFiles(outDir).forall(f => !f.contains("torn")))
@@ -285,7 +285,7 @@ class LogPumpSpec extends AnyFunSuite {
 
   test("publish: a replayed batch id replaces its own batch, other batches stay") {
     val outDir = Files.createTempDirectory("graft-sink-replay").toString
-    val all = LogPump.pumpBatch(spark, Seq(shuffledHours(2).toString))
+    val all = LogPump.pumpBatch(spark, shuffledHours(2).toString)
     def users(): Seq[(Int, String)] = spark.read.parquet(s"$outDir/logs")
       .select("batch_id", "User").collect().map(r => (r.getInt(0), r.getString(1)))
       .toSeq.sorted
@@ -299,7 +299,7 @@ class LogPumpSpec extends AnyFunSuite {
 
   test("publish: an empty batch creates no table dir") {
     val outDir = Files.createTempDirectory("graft-sink-empty").toString
-    val rows = LogPump.pumpBatch(spark, Seq(shuffledHours(2).toString)).limit(0)
+    val rows = LogPump.pumpBatch(spark, shuffledHours(2).toString).limit(0)
     LogPump.writeRoutedExactlyOnce(rows, Map("DBMSSQL" -> "sql_logs"), "logs", outDir, 0L)
     assert(new java.io.File(outDir).list().isEmpty)
   }
@@ -307,7 +307,7 @@ class LogPumpSpec extends AnyFunSuite {
   test("publish: a table dir of the legacy EventDate= layout is refused") {
     val outDir = Files.createTempDirectory("graft-sink-legacy").toString
     Files.createDirectories(java.nio.file.Paths.get(s"$outDir/logs/EventDate=2025-05-26"))
-    val rows = LogPump.pumpBatch(spark, Seq(shuffledHours(2).toString))
+    val rows = LogPump.pumpBatch(spark, shuffledHours(2).toString)
     val e = intercept[IllegalStateException](
       LogPump.writeRoutedExactlyOnce(rows, Map.empty, "logs", outDir, 0L))
     assert(e.getMessage.contains("legacy single-level EventDate= layout"))

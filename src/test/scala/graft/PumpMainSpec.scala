@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The service entry point (reference cmd/app/main.go parity): config
@@ -18,6 +22,32 @@ class PumpMainSpec extends AnyFunSuite {
     }
     cond
   }
+
+  /** A scratch config.yaml pumping `dirs` (key → dir) to the default
+    * table `logs`, DBMSSQL routed to `sql_logs`; returns its path.
+    */
+  private def writeConfig(dirs: Seq[(String, Path)]): String = {
+    val confPath = Files.createTempDirectory("graft-main-conf").resolve("config.yaml")
+    Files.writeString(confPath,
+      s"""LogDirectoryMap:
+         |${dirs.map { case (k, d) => s"""  $k: "$d"""" }.mkString("\n")}
+         |FilePattern: "*.log"
+         |BatchSize: 100
+         |BatchInterval: 1
+         |ClickHouse:
+         |  Address: "localhost:9000"
+         |  Database: "logs_db"
+         |  DefaultTable: "logs"
+         |  TableMap:
+         |    DBMSSQL: "sql_logs"
+         |""".stripMargin)
+    confPath.toString
+  }
+
+  private def users(out: String, table: String): Seq[String] =
+    try spark.read.parquet(s"$out/$table").collect()
+      .map(_.getAs[String]("User")).toSeq.sorted
+    catch { case _: Throwable => Seq.empty }
 
   test("jdbcUrl translates the reference's native endpoint to the JDBC HTTP port") {
     import graft.config.{ClickHouseConfig, PumpConfig}
@@ -41,35 +71,15 @@ class PumpMainSpec extends AnyFunSuite {
       "00:02.000001-2,CONN,2,process=rphost,Usr=b\n")
     val out = Files.createTempDirectory("graft-main-out").toString
     val ckpt = Files.createTempDirectory("graft-main-ckpt").toString
-    val confPath = Files.createTempDirectory("graft-main-conf").resolve("config.yaml")
-    Files.writeString(confPath,
-      s"""LogDirectoryMap:
-         |  Map1: "$d1"
-         |  Map2: "$d2"
-         |FilePattern: "*.log"
-         |BatchSize: 100
-         |BatchInterval: 1
-         |ClickHouse:
-         |  Address: "localhost:9000"
-         |  Database: "logs_db"
-         |  DefaultTable: "logs"
-         |  TableMap:
-         |    DBMSSQL: "sql_logs"
-         |""".stripMargin)
-    val cfg = graft.config.PumpConfig.load(confPath.toString)
-      .fold(e => fail(e), identity)
+    val conf = writeConfig(Seq("Map1" -> d1, "Map2" -> d2))
     val metrics = graft.streaming.PumpMetrics.attach(spark)
-    val queries = PumpMain.startAll(spark, cfg, Some(out), ckpt)
+    val queries = PumpMain.startAll(spark, conf, Some(out), ckpt)
     try {
       assert(queries.size == 2) // one pump per directory
       // DBMSSQL routes to sql_logs (clickhouse.go:64-72); CONN falls
       // back to the default table — each from its own directory's pump
       assert(eventually(90000) {
-        def u(t: String): Set[String] =
-          try spark.read.parquet(s"$out/$t").collect()
-            .map(_.getAs[String]("User")).toSet
-          catch { case _: Throwable => Set.empty }
-        u("sql_logs") == Set("a") && u("logs") == Set("b")
+        users(out, "sql_logs") == Seq("a") && users(out, "logs") == Seq("b")
       })
       // metrics surface: after the drain each pump's counters show its
       // one record and at least one data-carrying micro-batch (the
@@ -103,20 +113,63 @@ class PumpMainSpec extends AnyFunSuite {
     }
     val out = Files.createTempDirectory("graft-main-same-out").toString
     val ckpt = Files.createTempDirectory("graft-main-same-ckpt").toString
-    val cfg = graft.config.PumpConfig(
-      LogDirectoryMap = Map("Map1" -> dirs(0).toString, "Map2" -> dirs(1).toString),
-      FilePattern = "*.log", BatchInterval = 1,
-      ClickHouse = graft.config.ClickHouseConfig(DefaultTable = "logs"))
-    val queries = PumpMain.startAll(spark, cfg, Some(out), ckpt)
-    def users(): Seq[String] =
-      try spark.read.parquet(s"$out/logs").collect()
-        .map(_.getAs[String]("User")).toSeq.sorted
-      catch { case _: Throwable => Seq.empty }
+    val conf = writeConfig(Seq("Map1" -> dirs(0), "Map2" -> dirs(1)))
+    val queries = PumpMain.startAll(spark, conf, Some(out), ckpt)
     try {
       val all = Seq("a1", "a2", "b1", "b2")
-      assert(eventually(90000) { users() == all }, s"got ${users()}")
+      assert(eventually(90000) { users(out, "logs") == all },
+        s"got ${users(out, "logs")}")
       Thread.sleep(1000) // later triggers must neither drop nor repeat a row
-      assert(users() == all)
+      assert(users(out, "logs") == all)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("startAll: records appended to an already-ingested file reach the sink exactly once") {
+    // 1C appends to the current-hour file; the reference tails it
+    // (tail.go:27, Follow: true)
+    val dir = Files.createTempDirectory("graft-main-append")
+    val f = dir.resolve("25052607.log")
+    def records(from: Int): String = (from until from + 3)
+      .map(i => f"00:$i%02d.000001-$i,CONN,2,Usr=u$i\n").mkString
+    Files.writeString(f, records(1))
+    val out = Files.createTempDirectory("graft-main-append-out").toString
+    val ckpt = Files.createTempDirectory("graft-main-append-ckpt").toString
+    val queries = PumpMain.startAll(spark, writeConfig(Seq("Main" -> dir)),
+      Some(out), ckpt)
+    try {
+      val first = (1 to 3).map(i => s"u$i")
+      assert(eventually(90000) { users(out, "logs") == first },
+        s"got ${users(out, "logs")}")
+      Files.writeString(f, records(4), StandardOpenOption.APPEND)
+      val all = (1 to 6).map(i => s"u$i")
+      assert(eventually(90000) { users(out, "logs") == all },
+        s"got ${users(out, "logs")}")
+      Thread.sleep(3000) // later triggers must neither drop nor repeat a row
+      assert(users(out, "logs") == all)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("main's wait returns with the failure of one of two pumps") {
+    // directory A's pump fails at its sink (sql_logs holds the legacy
+    // layout the lake sink refuses) while directory B's keeps running
+    val a = Files.createTempDirectory("graft-main-fail-a")
+    Files.writeString(a.resolve("25052607.log"), "00:01.000001-1,DBMSSQL,3,Usr=a\n")
+    val b = Files.createTempDirectory("graft-main-fail-b")
+    Files.writeString(b.resolve("25052607.log"), "00:02.000001-2,CONN,2,Usr=b\n")
+    val out = Files.createTempDirectory("graft-main-fail-out").toString
+    Files.createDirectories(Paths.get(out, "sql_logs", "EventDate=2025-05-26"))
+    val ckpt = Files.createTempDirectory("graft-main-fail-ckpt").toString
+    spark.streams.resetTerminated() // forget queries other specs stopped
+    val queries = PumpMain.startAll(spark, writeConfig(Seq("A" -> a, "B" -> b)),
+      Some(out), ckpt)
+    try {
+      val waited = Future(PumpMain.awaitAny(spark))(scala.concurrent.ExecutionContext.global)
+      val e = intercept[StreamingQueryException](Await.result(waited, 90.seconds))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage)
+        .contains("legacy single-level EventDate= layout")), e.getMessage)
+      assert(queries(0).exception.isDefined) // A, sorted first
+      assert(queries(1).isActive && queries(1).exception.isEmpty)
     } finally queries.foreach(_.stop())
   }
 }

@@ -9,7 +9,8 @@ import graft.streaming.StreamingPump
 
 /** Checkpointed resume (reference C1-C4: offset store → Spark
   * checkpointLocation) and hot config reload (X1) — driven through
-  * real restarted streaming queries with the parquet sink.
+  * real restarted streaming queries with the parquet sink. The
+  * `techlog` connector's byte offsets are the replayed source state.
   */
 class PumpResumeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -34,8 +35,7 @@ class PumpResumeSpec extends AnyFunSuite {
     Files.writeString(logs.resolve("25052607.log"),
       "00:01.100000-1,CONN,3,Usr=a\n00:02.100000-2,CONN,3,Usr=b\n")
 
-    def startQuery() = StreamingPump.pumpStream(spark, logs.toString,
-        idleFlush = java.time.Duration.ofMillis(200))
+    def startQuery() = StreamingPump.pumpStream(spark, logs.toString)
       .writeStream.outputMode("append")
       .option("checkpointLocation", cp)
       .trigger(Trigger.ProcessingTime("250 milliseconds"))
@@ -69,8 +69,8 @@ class PumpResumeSpec extends AnyFunSuite {
     val logs = Files.createTempDirectory("replay-logs")
     val cp = Files.createTempDirectory("replay-cp").toString
     val url = s"jdbc:derby:memory:replaydb${System.nanoTime()};create=true"
-    // two records: the first flushes on its boundary, the second is
-    // held in assembly state and flushes on the 200 ms idle timeout
+    // two records: the first is admitted on its boundary, the second is
+    // held back until the file has been idle for the connector's 2 s
     Files.writeString(logs.resolve("25052607.log"),
       "00:01.100000-1,CONN,3,Usr=a\n00:02.100000-2,CONN,3,Usr=b\n")
     def rows(table: String) =
@@ -79,8 +79,7 @@ class PumpResumeSpec extends AnyFunSuite {
         .collect().map(_.getAs[String]("User")).toSeq
       catch { case _: Throwable => Seq.empty[String] }
     val injected = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def startQuery(inject: Boolean) = StreamingPump.pumpStream(spark,
-        logs.toString, idleFlush = java.time.Duration.ofMillis(200))
+    def startQuery(inject: Boolean) = StreamingPump.pumpStream(spark, logs.toString)
       .select("EventDate", "EventTime", "EventType", "User", "SessionID",
         "Duration")
       .writeStream.outputMode("append")
@@ -135,8 +134,7 @@ class PumpResumeSpec extends AnyFunSuite {
         .select("User").collect().map(_.getString(0)).toSeq
       catch { case _: Throwable => Seq.empty }
     val injected = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def startQuery(inject: Boolean) = StreamingPump.pumpStream(spark,
-        logs.toString, idleFlush = java.time.Duration.ofMillis(200))
+    def startQuery(inject: Boolean) = StreamingPump.pumpStream(spark, logs.toString)
       .writeStream.outputMode("append")
       .option("checkpointLocation", cp)
       .trigger(Trigger.ProcessingTime("250 milliseconds"))
@@ -185,9 +183,8 @@ class PumpResumeSpec extends AnyFunSuite {
 
     Files.writeString(logs.resolve("25052607.log"),
       "00:01.100000-1,DBMSSQL,3,Usr=a\n")
-    val q = StreamingPump.startWithConfigFile(spark, cfgFile.toString,
-      out, cp, Trigger.ProcessingTime("250 milliseconds"),
-      idleFlush = java.time.Duration.ofMillis(200))
+    // every directory's pump re-reads the routing at each micro-batch
+    val queries = PumpMain.startAll(spark, cfgFile.toString, Some(out), cp)
     try {
       assert(eventually(90000)(countOut(s"$out/logs") == 1L))
 
@@ -198,6 +195,6 @@ class PumpResumeSpec extends AnyFunSuite {
       assert(eventually(90000)(countOut(s"$out/sql_logs") == 1L),
         s"sql_logs=${countOut(s"$out/sql_logs")} logs=${countOut(s"$out/logs")}")
       assert(countOut(s"$out/logs") == 1L) // first record stays in default
-    } finally q.stop()
+    } finally queries.foreach(_.stop())
   }
 }

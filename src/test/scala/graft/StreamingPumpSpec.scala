@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.StreamingPump
+import graft.etl.Transform
 
 class StreamingPumpSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -22,18 +23,41 @@ class StreamingPumpSpec extends AnyFunSuite {
   private def users(table: String): Set[String] =
     spark.table(table).collect().map(_.getAs[String]("User")).toSet
 
+  /** StreamingPump.pumpStream's composition with the connector's idle
+    * window set: the holdback and idle-flush specs pin `idleAdmitMs`
+    * far above or below the 2 s default.
+    */
+  private def pumpStream(dir: String, idleAdmitMs: Long): DataFrame =
+    Transform(spark.readStream.format("techlog")
+      .option("pathGlobFilter", "*.log")
+      .option("idleAdmitMs", idleAdmitMs)
+      .load(dir))
+
   test("streaming JDBC sink: idempotent routed append end to end (Derby)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-jdbc")
-    java.nio.file.Files.writeString(dir.resolve("25052600.log"),
+    val dir = Files.createTempDirectory("graft-stream-jdbc")
+    Files.writeString(dir.resolve("25052600.log"),
       "00:01.123456-5,DBMSSQL,3,Usr=a\n00:02.123456-5,CONN,3,Usr=b\n")
     val url = s"jdbc:derby:memory:sjdbc${System.nanoTime()};create=true"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-jdbc-ck").toString
-    val q = graft.streaming.StreamingPump.startJdbcSink(
-      spark, dir.toString, url, ckpt,
-      Map("DBMSSQL" -> "SQL_LOGS"), "LOGS",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"),
-      projection = _.select("EventDate", "EventTime", "EventType", "User",
-        "SessionID", "Duration"))
+    val ckpt = Files.createTempDirectory("graft-stream-jdbc-ck").toString
+    val confPath = Files.createTempDirectory("graft-stream-jdbc-conf")
+      .resolve("config.yaml")
+    Files.writeString(confPath,
+      s"""LogDirectoryMap:
+         |  Main: "$dir"
+         |FilePattern: "*.log"
+         |BatchSize: 100
+         |BatchInterval: 1
+         |ClickHouse:
+         |  Address: "localhost:9000"
+         |  Database: "logs_db"
+         |  DefaultTable: "LOGS"
+         |  TableMap:
+         |    DBMSSQL: "SQL_LOGS"
+         |""".stripMargin)
+    // the production entry point, full 16-column row, Derby standing in
+    // for ClickHouse through the URL override
+    val queries = PumpMain.startAll(spark, confPath.toString, None, ckpt,
+      jdbcUrlOverride = Some(url))
     try {
       assert(eventually(90000) {
         try spark.read.format("jdbc").option("url", url)
@@ -45,16 +69,7 @@ class StreamingPumpSpec extends AnyFunSuite {
       // commit marker recorded for the batch
       assert(spark.read.format("jdbc").option("url", url)
         .option("dbtable", "graft_batch_commits").load().count() >= 1)
-    } finally q.stop()
-  }
-
-  test("splitKeepRemainder holds back the trailing partial record") {
-    val (complete, rest) = StreamingPump.splitKeepRemainder(Seq(
-      "00:01.123456-5,CONN,3,Usr=a",
-      "continuation",
-      "00:02.123456-7,CONN,3,Usr=b"))
-    assert(complete == Seq(Seq("00:01.123456-5,CONN,3,Usr=a", "continuation")))
-    assert(rest == Seq("00:02.123456-7,CONN,3,Usr=b"))
+    } finally queries.foreach(_.stop())
   }
 
   test("boundary completes a record; the trailing record is held in state") {
@@ -63,9 +78,7 @@ class StreamingPumpSpec extends AnyFunSuite {
     Files.writeString(dir.resolve("25052607.log"),
       "00:03.310025-42,DBMSSQL,5,Usr=ivanov\n" +
         "00:04.500000-7,CONN,3,Usr=petrov\n")
-    val q = StreamingPump
-      .pumpStream(spark, dir.toString,
-        idleFlush = java.time.Duration.ofMinutes(10)) // effectively never
+    val q = pumpStream(dir.toString, idleAdmitMs = 600000) // effectively never
       .writeStream.outputMode("append")
       .format("memory").queryName("pump_hold")
       .option("checkpointLocation", cp.toString)
@@ -85,9 +98,7 @@ class StreamingPumpSpec extends AnyFunSuite {
     val cp = Files.createTempDirectory("graft-stream2-cp")
     Files.writeString(dir.resolve("25052608.log"),
       "00:10.100000-1,EXCP,2,Usr=sidorov\n")
-    val q = StreamingPump
-      .pumpStream(spark, dir.toString,
-        idleFlush = java.time.Duration.ofMillis(300))
+    val q = pumpStream(dir.toString, idleAdmitMs = 300)
       .writeStream.outputMode("append")
       .format("memory").queryName("pump_flush")
       .option("checkpointLocation", cp.toString)

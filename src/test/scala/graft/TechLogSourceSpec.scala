@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,12 +23,19 @@ class TechLogSourceSpec extends AnyFunSuite {
   test("techlog DSv2 source equals the RecordAssembler batch pipeline") {
     val s = TestSpark.spark
     val viaSource = s.read.format("techlog").load(dir)
-    val viaAssembler = graft.pipeline.LogPump
-      .parseRecords(graft.ingest.RecordAssembler.readBatch(s, Seq(dir)))
-      .toDF()
-    assert(viaSource.schema == viaAssembler.schema)
+    // the reference in plain Scala over the same bytes: line split,
+    // record assembly, parse, and the filename Timestamp (tail.go:77)
+    val files = Files.list(Paths.get(dir))
+    val entries = try files.iterator().asScala.toSeq.flatMap { f =>
+        val lines = Files.readString(f).split("\n").toSeq
+        graft.ingest.RecordAssembler.splitRecords(lines.iterator)
+          .map(r => graft.parse.TechLogParser.parseLine(r)
+            .copy(Timestamp = f.getFileName.toString))
+      } finally files.close()
+    val viaScala = s.createDataFrame(entries)
+    assert(viaSource.schema == viaScala.schema)
     val a = viaSource.drop("InsertedAt").orderBy("LogTimestamp").collect().toSeq
-    val b = viaAssembler.drop("InsertedAt").orderBy("LogTimestamp").collect().toSeq
+    val b = viaScala.drop("InsertedAt").orderBy("LogTimestamp").collect().toSeq
     assert(a == b)
     assert(a.size == 3)
   }
