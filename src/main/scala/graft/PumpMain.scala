@@ -25,7 +25,10 @@ import graft.streaming.StreamingPump
   * markers (LogPump.idempotentJdbcBatch — strictly stronger than the
   * reference, which drops a batch on sink error, `batch.go:44-49`).
   * Component-based table routing follows `clickhouse.go:64-72`;
-  * `BatchInterval` is the trigger period (`config.yaml:15`). Each
+  * `BatchInterval` is the trigger period (`config.yaml:15`);
+  * `BatchSize` is validated but unused — the reference's count flush
+  * only sends a full batch early (`batch.go:59`), so time alone
+  * triggers (COVERAGE.md, B1). Each
   * directory gets its own checkpoint subdir, so offsets and batch-id
   * markers never collide across pumps; the lake sink names its batch
   * files by query id, so the pumps' `batch_id=N` files never collide

@@ -78,16 +78,17 @@ object PumpOps {
   def pumpRoundTrip(s: SparkSession, d: String): DataFrame =
     comparableProjection(LogPump.pumpBatch(s, fixtureDir(s, d)))
 
-  /** The same round trip straight on the DataSource V2 connector
-    * (graft.sources.TechLogSource) that `pumpBatch` wraps:
-    * `format("techlog")`, then the identical 23→16 transform — so the
-    * connector's record assembly, parsing, pruned-column
-    * projection and per-file partitioning are all hash-checked against
-    * the same oracle as q40.
+  /** The same round trip through the connector's pushdown path: a
+    * `Timestamp` range predicate that every fixture file name passes
+    * is pushed into the scan, so the file-list pruning (`pruneByName`)
+    * and the reader's per-record checks run, then the identical 23→16
+    * transform — hash-checked against the same oracle as q40, which
+    * reads with no pushed filter.
     */
   def dsv2RoundTrip(s: SparkSession, d: String): DataFrame =
-    comparableProjection(
-      graft.etl.Transform(s.read.format("techlog").load(fixtureDir(s, d))))
+    comparableProjection(graft.etl.Transform(
+      s.read.format("techlog").load(fixtureDir(s, d))
+        .filter(col("Timestamp") >= "00000000.log")))
 
   private def comparableProjection(pumped: DataFrame): DataFrame =
     pumped

@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.nio.file.{FileVisitResult, Files, NoSuchFileException, Paths, SimpleFileVisitor, Path => NioPath}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -11,7 +13,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -33,9 +35,10 @@ import graft.parse.TechLogParser
   * through it.
   *
   * Scan shape: rotated .log files bin-packed into InputPartitions by
-  * cumulative size (`maxPartitionBytes`, default 128 MB — task count
-  * tracks bytes, not file count; 1C rotates hourly so files are
-  * bounded and the plan stays narrow and shuffle-free), with V2 column
+  * cumulative size plus a 4 MB open cost per file (`maxPartitionBytes`,
+  * default 128 MB — task count tracks max(bytes, file count); 1C
+  * rotates hourly so files are bounded and the plan stays narrow and
+  * shuffle-free), with V2 column
   * pruning (SupportsPushDownRequiredColumns) and equality/range/In/not-null
   * filter pushdown (SupportsPushDownFilters): a filtered
   * `select(Component)` parses each record once and materializes only
@@ -48,9 +51,12 @@ import graft.parse.TechLogParser
   *
   * File selection matches the reference's glob `FilePattern`
   * (`scan.go:116-124` translates `*`/`?` globs to an anchored regex):
-  * `option("pathGlobFilter", "rphost_*.log")` (or the reference's own
-  * option name, `filePattern`) filters base names; without it the
-  * `suffix` option (default `.log`) applies.
+  * `option("pathGlobFilter", "rphost_*.log")` filters base names
+  * (default `*.log`).
+  *
+  * Options: `path`, `pathGlobFilter`, `maxPartitionBytes`, and for
+  * streams `maxFilesPerTrigger` and `idleAdmitMs`; `fs.*`/`hadoop.*`
+  * options configure the Hadoop FS of a remote store.
   */
 class TechLogSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "techlog"
@@ -95,20 +101,14 @@ object TechLogSource {
 
   /** Base-name predicate from the reference's glob `FilePattern`
     * (`scan.go:116-124`: `.`→`\.`, `*`→`.*`, `?`→`.`, anchored both
-    * ends). `pathGlobFilter` is the Spark-conventional option name;
-    * `filePattern` is the reference's. Without either, the `suffix`
-    * option (default `.log`) applies — the pre-round-4 behavior.
+    * ends), read from `pathGlobFilter` (default `*.log`).
     */
-  private[sources] def nameMatcher(conf: Map[String, String]): String => Boolean =
-    conf.get("pathGlobFilter").orElse(conf.get("filePattern")) match {
-      case Some(glob) =>
-        val re = ("^" + glob.replace(".", "\\.").replace("*", ".*")
-          .replace("?", ".") + "$").r
-        (name: String) => re.matches(name)
-      case None =>
-        val suffix = conf.getOrElse("suffix", ".log")
-        (name: String) => name.endsWith(suffix)
-    }
+  private[sources] def nameMatcher(conf: Map[String, String]): String => Boolean = {
+    val glob = conf.getOrElse("pathGlobFilter", "*.log")
+    val re = ("^" + glob.replace(".", "\\.").replace("*", ".*")
+      .replace("?", ".") + "$").r
+    (name: String) => re.matches(name)
+  }
 
   /** Name-sorted recursive listing: (path, size, mtimeMs). The mtime
     * feeds the streaming idle-admission rule (a current-hour file
@@ -126,15 +126,9 @@ object TechLogSource {
         // FORKS A SHELL PER FILE to load permission bits during
         // listing — ~8 ms × every rotated file, on the driver, every
         // plan. NIO walks the tree without touching permissions.
-        val rootPath = java.nio.file.Paths.get(uri.getPath)
-        val stream = java.nio.file.Files.walk(rootPath)
-        try stream.iterator().asScala
-          .filter(p => matches(p.getFileName.toString) &&
-            java.nio.file.Files.isRegularFile(p))
-          .map(p => (p.toString, java.nio.file.Files.size(p),
-            java.nio.file.Files.getLastModifiedTime(p).toMillis))
-          .toVector
-        finally stream.close()
+        val visitor = new LocalLogFiles(Paths.get(uri.getPath), matches)
+        Files.walkFileTree(visitor.root, visitor)
+        visitor.found.result()
       } else {
         val fs = FileSystem.get(uri, hadoopConfFor(conf))
         val it = fs.listFiles(new Path(root), /* recursive = */ true)
@@ -149,34 +143,59 @@ object TechLogSource {
     out.sortBy(_._1)
   }
 
-  /** Bytes [from, to) of a file (driver-side, small tail windows only). */
+  /** Local-tree walk collecting matching regular files with size and
+    * mtime from the walker's own attributes, one stat per file. A file
+    * (or directory) that 1C retention deletes between the directory
+    * read and its stat is skipped — the next listing drops it from the
+    * offset like any deleted file — instead of failing the stream.
+    */
+  private[graft] final class LocalLogFiles(val root: NioPath, matches: String => Boolean)
+      extends SimpleFileVisitor[NioPath] {
+    val found = Vector.newBuilder[(String, Long, Long)]
+    override def visitFile(p: NioPath, attrs: BasicFileAttributes): FileVisitResult = {
+      // a symlinked file is listed with its target's size and mtime; a
+      // dangling link keeps the link's own attributes and is skipped
+      val a = if (!attrs.isSymbolicLink) attrs
+        else try Files.readAttributes(p, classOf[BasicFileAttributes])
+        catch { case _: java.io.IOException => attrs }
+      if (a.isRegularFile && matches(p.getFileName.toString))
+        found += ((p.toString, a.size, a.lastModifiedTime.toMillis))
+      FileVisitResult.CONTINUE
+    }
+    override def visitFileFailed(p: NioPath, e: java.io.IOException): FileVisitResult =
+      e match {
+        case _: NoSuchFileException if p != root => FileVisitResult.CONTINUE
+        case _ => throw e
+      }
+  }
+
+  /** Bytes [from, min(to, current size)) of a file: the driver's tail
+    * windows and the executors' slices. A read that fills its buffer
+    * returns the buffer itself, so a slice is copied once, into its
+    * String.
+    */
   private[sources] def readRange(path: String, from: Long, to: Long,
       hconf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
     require(to - from <= Int.MaxValue, s"readRange window > 2 GB in $path")
+    // cap at the CURRENT length: the file may have been truncated
+    // since the listing (readFully past EOF throws)
+    def window(size: Long): Int = math.max(0L, math.min(size, to) - from).toInt
     val uri = new Path(path).toUri
     if (uri.getScheme == null || uri.getScheme == "file") {
-      val ch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(uri.getPath))
+      val ch = java.nio.channels.FileChannel.open(Paths.get(uri.getPath))
       try {
-        val upper = math.min(ch.size(), to)
-        val n = math.max(0L, upper - from).toInt
-        val buf = java.nio.ByteBuffer.allocate(n)
+        val buf = java.nio.ByteBuffer.allocate(window(ch.size()))
         ch.position(from)
         while (buf.hasRemaining && ch.read(buf) >= 0) {}
-        java.util.Arrays.copyOf(buf.array(), buf.position())
+        if (buf.hasRemaining) java.util.Arrays.copyOf(buf.array(), buf.position())
+        else buf.array()
       } finally ch.close()
     } else {
       val fs = FileSystem.get(uri, hconf)
-      // cap at the CURRENT length: the file may have been truncated
-      // between the listing and this read (readFully past EOF throws)
-      val upper = math.min(fs.getFileStatus(new Path(path)).getLen, to)
-      val n = math.max(0L, upper - from).toInt
+      val arr = new Array[Byte](window(fs.getFileStatus(new Path(path)).getLen))
       val in = fs.open(new Path(path))
-      try {
-        val arr = new Array[Byte](n)
-        in.readFully(from, arr)
-        arr
-      } finally in.close()
+      try in.readFully(from, arr) finally in.close()
+      arr
     }
   }
 
@@ -249,54 +268,7 @@ object TechLogSource {
     0L
   }
 
-  /** Count-bounded admission (B1, `batch.go:59`): forward-scan the
-    * record-aligned delta [from, to) and return (admitTarget,
-    * recordsAdmitted) where admitTarget is `to` if the delta holds at
-    * most `maxRecords` records, else the byte offset of the START of
-    * the (maxRecords+1)-th record-boundary line — so the admitted
-    * range always ends exactly at a record boundary. `from` must be
-    * record-aligned (committed offsets always are; with idleAdmitMs=0
-    * the caller opted out of alignment and the count is approximate).
-    *
-    * Chunked scan with a partial-line carry: memory is one chunk, not
-    * the delta, and the scan stops as soon as the budget is exhausted
-    * — a post-downtime backlog costs O(admitted bytes) per trigger.
-    */
-  private[graft] def recordLimitedAdmit(path: String, from: Long, to: Long,
-      maxRecords: Long, hconf: org.apache.hadoop.conf.Configuration,
-      chunkSize: Int = 256 * 1024): (Long, Long) = {
-    var pos = from
-    var records = 0L
-    var curLineStart = from
-    val pending = new java.lang.StringBuilder
-    while (pos < to) {
-      val bytes = readRange(path, pos, math.min(to, pos + chunkSize), hconf)
-      if (bytes.isEmpty) return (to, records) // file shrank under us
-      var i = 0
-      var chunkLineStart = 0
-      while (i < bytes.length) {
-        if (bytes(i) == '\n') {
-          val line = (pending.toString + new String(bytes, chunkLineStart,
-            i - chunkLineStart, java.nio.charset.StandardCharsets.UTF_8))
-            .stripSuffix("\r").replace("\u0000", "")
-          if (TechLogParser.isNewLogRecord(line)) {
-            if (records == maxRecords) return (curLineStart, records)
-            records += 1
-          }
-          pending.setLength(0)
-          curLineStart = pos + i + 1
-          chunkLineStart = i + 1
-        }
-        i += 1
-      }
-      pending.append(new String(bytes, chunkLineStart,
-        bytes.length - chunkLineStart, java.nio.charset.StandardCharsets.UTF_8))
-      pos += bytes.length
-    }
-    (to, records)
-  }
-
-  private def baseName(path: String): String =
+  private[sources] def baseName(path: String): String =
     path.substring(path.lastIndexOf('/') + 1)
 
   /** File-list pruning from pushed predicates on the `Timestamp`
@@ -326,17 +298,17 @@ object TechLogSource {
   }
 
   /** Bin-pack contiguous slices into partitions by cumulative COSTED
-    * size: actual bytes plus `openCostInBytes` padding per file
-    * (defaults match the built-in file source: 128 MB partitions, 4 MB
-    * open cost). One partition per tiny file would schedule a task per
-    * hourly rotation; packing by bytes alone would serialize thousands
+    * size: actual bytes plus a 4 MB open cost per file (the built-in
+    * file source's defaults: 128 MB partitions, 4 MB open cost). One
+    * partition per tiny file would schedule a task per hourly
+    * rotation; packing by bytes alone would serialize thousands
     * of small files into one task — the open-cost padding balances
     * both, scaling task count with max(bytes, file count).
     */
   private[sources] def packPartitions(slices: Seq[TechLogFileSlice],
       conf: Map[String, String]): Array[InputPartition] = {
     val target = conf.getOrElse("maxPartitionBytes", s"${128L * 1024 * 1024}").toLong
-    val openCost = conf.getOrElse("openCostInBytes", s"${4L * 1024 * 1024}").toLong
+    val openCost = 4L * 1024 * 1024
     val parts = Array.newBuilder[InputPartition]
     val cur = Seq.newBuilder[TechLogFileSlice]
     var cost = 0L
@@ -504,12 +476,9 @@ final class TechLogMicroBatchStream(conf: Map[String, String],
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget = Some(TechLogSource.listLogFiles(conf))
   override def initialOffset(): Offset = TechLogOffset(Map.empty)
-  /** Legacy non-admission-control entry point — Spark uses the
-    * (start, limit) form for SupportsAdmissionControl sources, but
-    * keep the alignment guarantees if anything else calls this.
-    */
+  /** Spark calls the (start, limit) form on admission-control sources. */
   override def latestOffset(): Offset =
-    latestOffset(TechLogOffset(Map.empty), ReadLimit.allAvailable())
+    throw new UnsupportedOperationException("use latestOffset(start, limit)")
   /** Idle-admission window (ms): a file younger than this holds back
     * its record-in-progress (see alignedAdmit); once its writer goes
     * idle the pending record flushes — the reference's 2 s idle flush
@@ -526,24 +495,16 @@ final class TechLogMicroBatchStream(conf: Map[String, String],
   private val admitMemo =
     scala.collection.mutable.HashMap.empty[(String, Long, Boolean), Long]
   /** Admission control: `maxFilesPerTrigger` caps how many CHANGED
-    * files (new, grown, or truncated) one micro-batch admits;
-    * `maxRecordsPerTrigger` caps how many RECORDS (count-based flush —
-    * the reference's B1 batch-size bound, `batch.go:59`, record-
-    * aligned by recordLimitedAdmit). Either alone or both composed:
+    * files (new, grown, or truncated) one micro-batch admits, so a
     * backlog after downtime drains in bounded batches instead of one
-    * giant catch-up batch.
+    * giant catch-up batch. There is no record cap: the reference's
+    * count flush (`batch.go:59`) sends a FULL batch early, it never
+    * holds records back, so the trigger period plus this file cap is
+    * the whole B1 port (see COVERAGE.md, B1).
     */
-  override def getDefaultReadLimit: ReadLimit = {
-    val limits = Seq(
-      conf.get("maxFilesPerTrigger").map(n => ReadLimit.maxFiles(n.toInt)),
-      conf.get("maxRecordsPerTrigger").map(n => ReadLimit.maxRows(n.toLong)))
-      .flatten
-    limits match {
-      case Seq() => ReadLimit.allAvailable()
-      case Seq(one) => one
-      case many => ReadLimit.compositeLimit(many.toArray)
-    }
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    conf.get("maxFilesPerTrigger").map(n => ReadLimit.maxFiles(n.toInt))
+      .getOrElse(ReadLimit.allAvailable())
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val committed = start.asInstanceOf[TechLogOffset].files
     val files = availableNowTarget.getOrElse(TechLogSource.listLogFiles(conf))
@@ -587,41 +548,11 @@ final class TechLogMicroBatchStream(conf: Map[String, String],
         if (target == prev) None else Some(p -> target)
       }
     }
-    // decompose the limit: a file cap, a record cap, or both composed
-    def caps(l: ReadLimit): (Option[Int], Option[Long]) = l match {
-      case mf: ReadMaxFiles => (Some(mf.maxFiles()), None)
-      case mr: ReadMaxRows => (None, Some(mr.maxRows()))
-      case c: CompositeReadLimit =>
-        val ls = c.getReadLimits
-        (ls.collectFirst { case m: ReadMaxFiles => m.maxFiles() },
-          ls.collectFirst { case m: ReadMaxRows => m.maxRows() })
-      case _ => (None, None)
+    val capped = limit match {
+      case mf: ReadMaxFiles => changed.take(mf.maxFiles())
+      case _ => changed
     }
-    val (fileCap, recordCap) = caps(limit)
-    val capped = fileCap.map(n => changed.take(n)).getOrElse(changed)
-    recordCap match {
-      case None => TechLogOffset(kept ++ capped)
-      case Some(budget) =>
-        // count-based flush (B1): walk the capped files in listing
-        // order, shrinking the last admitted file's target to the
-        // record-budget boundary; committed offsets are record-aligned,
-        // so the delta scan counts boundary lines exactly. Files past
-        // the exhausted budget wait for the next trigger.
-        val b = Map.newBuilder[String, Long]
-        var remaining = math.max(1L, budget) // always make progress
-        val it = capped
-        while (remaining > 0 && it.hasNext) {
-          val (p, target) = it.next()
-          val prev = committed.getOrElse(p, 0L)
-          val lo = if (target < prev) 0L else prev // truncated: re-read
-          val (t, n) =
-            try TechLogSource.recordLimitedAdmit(p, lo, target, remaining, hconf)
-            catch { case _: java.io.IOException => (lo, 0L) } // deleted mid-scan
-          if (t != prev) b += p -> t
-          remaining -= n
-        }
-        TechLogOffset(kept ++ b.result())
-    }
+    TechLogOffset(kept ++ capped)
   }
   override def deserializeOffset(json: String): Offset =
     TechLogOffset.parse(json, conf)
@@ -703,55 +634,18 @@ final class TechLogFileReader(slices: Seq[TechLogFileSlice], requiredCols: Array
     case f => throw new IllegalStateException(s"unpushable filter $f")
   }
 
-  /** Read exactly [start, min(end, current-size)): `end` is the size
-    * this batch committed — bytes appended since belong to a later
-    * delta and must not leak into a replayed batch.
-    */
-  private def readSlice(slice: TechLogFileSlice,
-      hconf: org.apache.hadoop.conf.Configuration): String = {
-    val uri = new Path(slice.path).toUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      // local fast path (see listLogFiles: RawLocalFileSystem forks)
-      val ch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(uri.getPath))
-      try {
-        val upper = math.min(ch.size(), slice.end)
-        val len = upper - slice.start
-        if (len <= 0) ""
-        else {
-          require(len <= Int.MaxValue, s"slice > 2 GB in ${slice.path}")
-          val buf = java.nio.ByteBuffer.allocate(len.toInt)
-          ch.position(slice.start)
-          while (buf.hasRemaining && ch.read(buf) >= 0) {}
-          new String(buf.array(), 0, buf.position(),
-            java.nio.charset.StandardCharsets.UTF_8)
-        }
-      } finally ch.close()
-    } else {
-      val fs = FileSystem.get(uri, hconf)
-      val status = fs.getFileStatus(new Path(slice.path))
-      val upper = math.min(status.getLen, slice.end)
-      val len = upper - slice.start
-      if (len <= 0) ""
-      else {
-        require(len <= Int.MaxValue, s"slice > 2 GB in ${slice.path}")
-        val in = fs.open(new Path(slice.path))
-        try {
-          val arr = new Array[Byte](len.toInt)
-          in.readFully(slice.start, arr)
-          new String(arr, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      }
-    }
-  }
-
   private val records: Iterator[LogEntry] = {
     val hconf = TechLogSource.hadoopConfFor(fsOpts)
     slices.iterator.flatMap { slice =>
-      val content = readSlice(slice, hconf)
+      // exactly [start, min(end, current size)): `end` is the size this
+      // batch committed — bytes appended since belong to a later delta
+      // and must not leak into a replayed batch
+      val content = new String(
+        TechLogSource.readRange(slice.path, slice.start, slice.end, hconf),
+        java.nio.charset.StandardCharsets.UTF_8)
       val lines = content.split("\n", -1)
       val trimmed = if (lines.nonEmpty && lines.last.isEmpty) lines.init else lines
-      val base = slice.path.substring(slice.path.lastIndexOf('/') + 1)
+      val base = TechLogSource.baseName(slice.path)
       RecordAssembler.splitRecords(trimmed.iterator.map(_.stripSuffix("\r")))
         .map(ls => TechLogParser.parseLine(ls).copy(Timestamp = base))
     }

@@ -24,6 +24,7 @@ object StreamingPump {
 
   /** Changed files one micro-batch admits: a backlog after downtime
     * drains in bounded batches instead of one giant catch-up batch.
+    * The only admission limit: no record cap (COVERAGE.md, B1).
     */
   val MaxFilesPerTrigger = 100
 

@@ -165,6 +165,17 @@ class LogPumpSpec extends AnyFunSuite {
       Seq(("acc", 1L, 2L), ("hr", 2L, 14L)))
   }
 
+  test("q91 reads through the pushed-filter scan, q40 through the plain one, same rows") {
+    val sf = "/root/testdata/sf0.001"
+    val q40 = graft.ops.PumpOps.pumpRoundTrip(spark, sf)
+    val q91 = graft.ops.PumpOps.dsv2RoundTrip(spark, sf)
+    val plan40 = q40.queryExecution.executedPlan.toString
+    val plan91 = q91.queryExecution.executedPlan.toString
+    assert(plan91.contains("GreaterThanOrEqual(Timestamp,00000000.log)"), plan91)
+    assert(!plan40.contains("GreaterThanOrEqual(Timestamp"), plan40)
+    assert(q91.collect().toSeq == q40.collect().toSeq)
+  }
+
   test("routed JDBC sink bulk-appends per table (K1, embedded Derby)") {
     val dir = writeLogs(Map(
       "25052600.log" -> ("00:01.123456-5,DBMSSQL,3,Usr=a\n" +

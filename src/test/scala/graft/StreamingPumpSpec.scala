@@ -109,4 +109,34 @@ class StreamingPumpSpec extends AnyFunSuite {
         s"timeout flush missing, got ${users("pump_flush")}")
     } finally q.stop()
   }
+
+  test("processAllAvailable returns once a quiesced backlog is sunk, each record once") {
+    val dir = Files.createTempDirectory("graft-stream-drain")
+    val cp = Files.createTempDirectory("graft-stream-drain-cp")
+    // files last written long before the 2 s idle window: nothing is
+    // held back, so the first trigger admits every record
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600000L)
+    (0 until 3).foreach { h =>
+      val f = dir.resolve(f"250526$h%02d.log")
+      Files.writeString(f, (1 to 4).map { i =>
+        f"00:0$i.100000-$i,CONN,3,Usr=u${h}_$i,Context='l1\nl2'"
+      }.mkString("", "\n", "\n"))
+      Files.setLastModifiedTime(f, old)
+    }
+    val q = graft.streaming.StreamingPump.pumpStream(spark, dir.toString)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("pump_drain")
+      .option("checkpointLocation", cp.toString)
+      .trigger(Trigger.ProcessingTime("250 milliseconds"))
+      .start()
+    try {
+      val drained = new Thread(() => q.processAllAvailable())
+      drained.start()
+      drained.join(60000)
+      assert(!drained.isAlive, "processAllAvailable did not return within 60 s")
+      val got = spark.table("pump_drain").collect().map(_.getAs[String]("User")).toSeq
+      assert(got.sorted == (for (h <- 0 until 3; i <- 1 to 4) yield s"u${h}_$i").sorted)
+    } finally q.stop()
+  }
 }

@@ -134,55 +134,6 @@ class TechLogSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("maxRecordsPerTrigger: count-based flush admits N records per batch") {
-    val s = TestSpark.spark
-    val sdir = graft.util.TmpDirs.scratch("techlog-reccap")
-    val recs = (1 to 10).map(i => f"00:00.$i%06d-$i,CONN,2,process=rphost,Usr=u$i")
-    Files.writeString(Paths.get(sdir, "25052600.log"), recs.mkString("\n") + "\n")
-    val q = s.readStream.format("techlog")
-      .option("idleAdmitMs", "0")
-      .option("maxRecordsPerTrigger", "3").load(sdir)
-      .select(col("User"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("tl_reccap").start()
-    try {
-      q.processAllAvailable()
-      assert(s.table("tl_reccap").count() == 10)
-      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows)
-      // B1 count-based flush: batch sizes track the configured count
-      assert(batches.toSeq == Seq(3L, 3L, 3L, 1L), batches.mkString(","))
-      assert(s.table("tl_reccap").collect().map(_.getString(0)).sorted.toSeq ==
-        (1 to 10).map(i => s"u$i").sorted)
-    } finally q.stop()
-  }
-
-  test("maxRecordsPerTrigger never splits a multi-line record across batches") {
-    val s = TestSpark.spark
-    val sdir = graft.util.TmpDirs.scratch("techlog-reccap-multi")
-    // 4 records, each a boundary line + 2 continuation lines: a byte
-    // cap at anything but a record boundary would tear one apart
-    // the continuation lines extend the LAST property (Sql) — 1C
-    // property values are multiline; Usr stays clean on the header
-    val recs = (1 to 4).map { i =>
-      f"00:00.$i%06d-$i,CONN,2,process=rphost,Usr=u$i,Sql=SELECT a\nFROM t$i\nWHERE x = $i"
-    }
-    Files.writeString(Paths.get(sdir, "25052600.log"), recs.mkString("\n") + "\n")
-    val q = s.readStream.format("techlog")
-      .option("idleAdmitMs", "0")
-      .option("maxRecordsPerTrigger", "2").load(sdir)
-      .select(col("User"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("tl_reccap_m").start()
-    try {
-      q.processAllAvailable()
-      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows)
-      assert(batches.toSeq == Seq(2L, 2L), batches.mkString(","))
-      // every record parsed whole — the header user survives assembly
-      assert(s.table("tl_reccap_m").collect().map(_.getString(0)).sorted.toSeq ==
-        (1 to 4).map(i => s"u$i"))
-    } finally q.stop()
-  }
-
   test("Trigger.AvailableNow drains the backlog in bounded batches, then stops") {
     val s = TestSpark.spark
     val sdir = graft.util.TmpDirs.scratch("techlog-availnow")
@@ -316,15 +267,54 @@ class TechLogSourceSpec extends AnyFunSuite {
       "00:02.000001-2,CONN,2,process=ragent,Usr=ra\n")
     Files.writeString(Paths.get(gdir, "rphost_1234.txt"),
       "00:03.000001-3,CONN,2,process=rphost,Usr=nope\n")
-    def usersWith(opt: String): Seq[String] =
-      s.read.format("techlog").option(opt, "rphost_*.log").load(gdir)
-        .select("User").collect().map(_.getString(0)).sorted.toSeq
-    assert(usersWith("pathGlobFilter") == Seq("rp"))
-    assert(usersWith("filePattern") == Seq("rp")) // reference's option name
+    def users(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("User").collect().map(_.getString(0)).sorted.toSeq
+    assert(users(s.read.format("techlog").option("pathGlobFilter", "rphost_*.log")
+      .load(gdir)) == Seq("rp"))
+    // no pattern set: the default glob `*.log` skips rphost_1234.txt
+    assert(users(s.read.format("techlog").load(gdir)) == Seq("ra", "rp"))
     // `?` matches exactly one character
     val q = s.read.format("techlog").option("pathGlobFilter", "r?host_????.log")
       .load(gdir).select("User").collect().map(_.getString(0)).toSeq
     assert(q == Seq("rp"))
+  }
+
+  test("listing skips a file deleted between the directory read and its stat") {
+    import java.nio.file.{FileVisitResult, NoSuchFileException}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import graft.sources.{TechLogMicroBatchStream, TechLogOffset, TechLogSource}
+    val ldir = Paths.get(graft.util.TmpDirs.scratch("techlog-list-race"))
+    // the walker reports a vanished entry through visitFileFailed: a
+    // deleted file or subdirectory is skipped, the root and any other
+    // I/O error still fail the listing
+    val v = new TechLogSource.LocalLogFiles(ldir, _ => true)
+    assert(v.visitFileFailed(ldir.resolve("25052607.log"),
+      new NoSuchFileException("25052607.log")) == FileVisitResult.CONTINUE)
+    assert(v.visitFileFailed(ldir.resolve("rphost_1"),
+      new NoSuchFileException("rphost_1")) == FileVisitResult.CONTINUE)
+    intercept[NoSuchFileException](v.visitFileFailed(ldir, new NoSuchFileException("root")))
+    intercept[java.nio.file.AccessDeniedException](v.visitFileFailed(
+      ldir.resolve("x.log"), new java.nio.file.AccessDeniedException("x.log")))
+    // a stream's latestOffset racing retention never throws: a
+    // deleter empties the directory while the listing walks it
+    val files = (0 until 200).map(i => ldir.resolve(f"$i%08d.log"))
+    val st = new TechLogMicroBatchStream(
+      Map("path" -> ldir.toString, "idleAdmitMs" -> "0"), TechLogSource.schema)
+    def latest() = st.latestOffset(st.initialOffset(), ReadLimit.allAvailable())
+    (1 to 5).foreach { _ =>
+      files.foreach(f => Files.writeString(f, "x\n"))
+      val deleter = new Thread(() => files.foreach(Files.deleteIfExists))
+      deleter.start()
+      try while (deleter.isAlive) latest()
+      finally deleter.join()
+      assert(latest() == TechLogOffset(Map.empty))
+    }
+    // a symlinked log is listed at its target's size; a dangling link is not
+    val target = Files.writeString(
+      Paths.get(graft.util.TmpDirs.scratch("techlog-list-target"), "t.log"), "x\n")
+    Files.createSymbolicLink(ldir.resolve("25052600.log"), target)
+    Files.createSymbolicLink(ldir.resolve("25052601.log"), ldir.resolve("missing"))
+    assert(latest() == TechLogOffset(Map(ldir.resolve("25052600.log").toString -> 2L)))
   }
 
   test("range and IN filters push into the scan and are dropped post-scan") {
