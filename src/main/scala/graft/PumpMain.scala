@@ -29,10 +29,13 @@ import graft.streaming.StreamingPump
   * `BatchSize` is validated but unused — the reference's count flush
   * only sends a full batch early (`batch.go:59`), so time alone
   * triggers (COVERAGE.md, B1). Each
-  * directory gets its own checkpoint subdir, so offsets and batch-id
-  * markers never collide across pumps; the lake sink names its batch
-  * files by query id, so the pumps' `batch_id=N` files never collide
-  * either.
+  * directory gets its own checkpoint subdir, and both sinks key their
+  * batches by the streaming query id kept in that checkpoint: the lake
+  * sink names its `batch_id=N` files by it, and a JDBC batch-id marker
+  * is the pair (query id, batch id). So the pumps' batches never
+  * collide, a restart still skips a replayed batch, and deleting a
+  * directory's checkpoint to re-ingest starts a new query id whose
+  * batches are written, not skipped as the old query's.
   */
 object PumpMain {
 
@@ -100,7 +103,7 @@ object PumpMain {
           stream.foreachBatch { (batch: DataFrame, batchId: Long) =>
             val (tableMap, default) = routing()
             LogPump.idempotentJdbcBatch(batch, batchId, tableMap, default,
-              url, props, pipelineId = ckpt)
+              url, props)
             ()
           }.start()
       }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Dataset-audit operators — the profiling passes a pipeline runs
@@ -417,22 +418,20 @@ object Audit {
     * the BuildCost ledger (`stream_mv_src`); the memo is sf-keyed so
     * a second sf can never serve the first sf's shards.
     */
-  private val mvSrcMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, org.apache.spark.sql.types.StructType)]()
-  graft.util.CacheRegistry.registerMemo(mvSrcMemo)
+  private val mvSrcMemo = new Memo[
+    (SparkSession, String), (String, org.apache.spark.sql.types.StructType)]
   private def ensureMvStreamSrc(s: SparkSession, d: String)
       : (String, org.apache.spark.sql.types.StructType) =
-    mvSrcMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("stream_mv_src") {
-        val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
-        val src = graft.util.TmpDirs.scratchFor("stream-mv-src", d)
-        orders(s, d).select(
-            date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-            col("o_orderstatus").as("status"),
-            col("o_totalprice").cast(Dec).as("price"))
-          .repartition(4).write.mode("overwrite").parquet(src)
-        (src, s.read.parquet(src).schema)
-      })
+    mvSrcMemo((s, d), "stream_mv_src") {
+      val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
+      val src = graft.util.TmpDirs.scratchFor("stream-mv-src", d)
+      orders(s, d).select(
+          date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+          col("o_orderstatus").as("status"),
+          col("o_totalprice").cast(Dec).as("price"))
+        .repartition(4).write.mode("overwrite").parquet(src)
+      (src, s.read.parquet(src).schema)
+    }
 
   def streamMvRefresh(s: SparkSession, d: String): DataFrame =
     graft.util.StreamTuning.withShuffle(s, 8) {
@@ -494,9 +493,8 @@ object Audit {
     * scan — time travel costs one directory resolution, never a log
     * replay, and old versions are the retention/vacuum unit.
     */
-  private val mvChainMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (String, Long)]()
-  graft.util.CacheRegistry.registerMemo(mvChainMemo)
+  private val mvChainMemo = new Memo[
+    (SparkSession, String, String), (String, Long)]
 
   /** The shared chain driver: shard k = o_orderkey mod 4 ingested in
     * mod-time order (OrderedFeed — the q287 discipline), one
@@ -553,7 +551,7 @@ object Audit {
     */
   private[graft] def ensureMvChain(s: SparkSession, d: String,
       label: String): (String, Long) =
-    mvChainMemo.computeIfAbsent((s, d, label), _ => {
+    mvChainMemo((s, d, label)) {
       val dir = graft.util.TmpDirs.scratchFor(label, d)
       val head = buildVersionedChain(s, d, dir) { (cur, batch, _) =>
         cur.unionByName(chainRollup(batch))
@@ -561,7 +559,7 @@ object Audit {
           .agg(sum(col("n")).as("n"), sum(col("rev")).as("rev"))
       }
       (dir, head)
-    })
+    }
 
   def mvTimeTravel(s: SparkSession, d: String): DataFrame = {
     val (dir, maxV) = ensureMvChain(s, d, "mv-timetravel")
@@ -770,38 +768,35 @@ object Audit {
     * chain is built state (the q287/q300 restart-family discipline);
     * the gate re-reads its version dirs.
     */
-  private val cdfReplicaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long)]()
-  graft.util.CacheRegistry.registerMemo(cdfReplicaMemo)
+  private val cdfReplicaMemo = new Memo[(SparkSession, String), (String, Long)]
 
   private def ensureCdfReplica(s: SparkSession, d: String): (String, Long) =
-    cdfReplicaMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("q301_cdf_replica_drive") {
-        val (dir, maxV) = ensureMvChain(s, d, "mv-timetravel")
-        val feed = buildCdfFeed(s, dir, maxV, "mv-cdf-feed", d)
-        val rep = graft.util.TmpDirs.scratchFor("mv-cdf-replica", d)
-        s.read.parquet(s"$dir/mv_v0").write.mode("overwrite")
-          .parquet(s"$rep/r0")
-        val ver = new java.util.concurrent.atomic.AtomicLong(0)
-        val sink = replicaMerge(s, rep)
-        graft.util.StreamTuning.withShuffle(s, 8) {
-          val q = s.readStream.schema(s.read.parquet(s"$feed/v1").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(s"$feed/v*")
-            .writeStream.outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              sink(batch, id)
-              ver.incrementAndGet()
-              ()
-            }
-            .start()
-          graft.util.StreamTuning.drained(q)
-        }
-        require(ver.get() == maxV,
-          s"replica must apply all $maxV deltas; applied ${ver.get()}")
-        (rep, maxV)
-      })
+    cdfReplicaMemo((s, d), "q301_cdf_replica_drive") {
+      val (dir, maxV) = ensureMvChain(s, d, "mv-timetravel")
+      val feed = buildCdfFeed(s, dir, maxV, "mv-cdf-feed", d)
+      val rep = graft.util.TmpDirs.scratchFor("mv-cdf-replica", d)
+      s.read.parquet(s"$dir/mv_v0").write.mode("overwrite")
+        .parquet(s"$rep/r0")
+      val ver = new java.util.concurrent.atomic.AtomicLong(0)
+      val sink = replicaMerge(s, rep)
+      graft.util.StreamTuning.withShuffle(s, 8) {
+        val q = s.readStream.schema(s.read.parquet(s"$feed/v1").schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(s"$feed/v*")
+          .writeStream.outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (batch: DataFrame, id: Long) =>
+            sink(batch, id)
+            ver.incrementAndGet()
+            ()
+          }
+          .start()
+        graft.util.StreamTuning.drained(q)
+      }
+      require(ver.get() == maxV,
+        s"replica must apply all $maxV deltas; applied ${ver.get()}")
+      (rep, maxV)
+    }
 
   def mvCdfReplica(s: SparkSession, d: String): DataFrame = {
     val (rep, maxV) = ensureCdfReplica(s, d)
@@ -823,35 +818,30 @@ object Audit {
     * Scale shape: recovery cost is one re-merged view-sized delta —
     * never a feed replay from v0.
     */
-  private val cdfRestartMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long)]()
-  graft.util.CacheRegistry.registerMemo(cdfRestartMemo)
+  private val cdfRestartMemo = new Memo[(SparkSession, String), (String, Long)]
 
   private def ensureCdfReplicaRestart(s: SparkSession, d: String)
       : (String, Long) =
-    cdfRestartMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("q309_cdf_restart_drive") {
-        val (dir, maxV) = ensureMvChain(s, d, "mv-timetravel")
-        val feed = buildCdfFeed(s, dir, maxV, "mv-cdf-feed-restart", d)
-        val rep = graft.util.TmpDirs.scratchFor("mv-cdf-replica-restart", d)
-        s.read.parquet(s"$dir/mv_v0").write.mode("overwrite")
-          .parquet(s"$rep/r0")
-        val ckpt = graft.util.TmpDirs.scratchFor("mv-cdf-replica-ckpt", d)
-        val src = s.readStream.schema(s.read.parquet(s"$feed/v1").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/v*")
-        EventAnalytics.crashRestartDrive(s, src, ckpt, crashAt = 1L,
-          width = 8)(replicaMerge(s, rep))
-        (rep, maxV)
-      })
+    cdfRestartMemo((s, d), "q309_cdf_restart_drive") {
+      val (dir, maxV) = ensureMvChain(s, d, "mv-timetravel")
+      val feed = buildCdfFeed(s, dir, maxV, "mv-cdf-feed-restart", d)
+      val rep = graft.util.TmpDirs.scratchFor("mv-cdf-replica-restart", d)
+      s.read.parquet(s"$dir/mv_v0").write.mode("overwrite")
+        .parquet(s"$rep/r0")
+      val ckpt = graft.util.TmpDirs.scratchFor("mv-cdf-replica-ckpt", d)
+      val src = s.readStream.schema(s.read.parquet(s"$feed/v1").schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$feed/v*")
+      EventAnalytics.crashRestartDrive(s, src, ckpt, crashAt = 1L,
+        width = 8)(replicaMerge(s, rep))
+      (rep, maxV)
+    }
 
   def mvCdfReplicaRestart(s: SparkSession, d: String): DataFrame = {
     val (rep, maxV) = ensureCdfReplicaRestart(s, d)
     replicaVersions(s, rep, maxV)
   }
 
-  private val mvRetractMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long)]()
-  graft.util.CacheRegistry.registerMemo(mvRetractMemo)
+  private val mvRetractMemo = new Memo[(SparkSession, String), (String, Long)]
 
   /** The q311/q312 fixture: the standard 4-version chain plus a
     * RETRACTION commit — version 5 applies late corrections as a
@@ -867,7 +857,7 @@ object Audit {
     */
   private[graft] def ensureMvRetractChain(s: SparkSession, d: String)
       : (String, Long) =
-    mvRetractMemo.computeIfAbsent((s, d), _ => {
+    mvRetractMemo((s, d)) {
       val (dir0, maxV) = ensureMvChain(s, d, "mv-retract")
       val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
       val v4 = s.read.parquet(s"$dir0/mv_v$maxV")
@@ -894,7 +884,7 @@ object Audit {
         .filter(col("n") =!= 0)
         .write.mode("overwrite").parquet(s"$dir0/mv_v${maxV + 1}")
       (dir0, maxV + 1)
-    })
+    }
 
   /** q311: the RETRACTED view state — version 5 must equal a rollup
     * over a corpus that never contained the cancelled orders, with
@@ -925,9 +915,7 @@ object Audit {
       .orderBy(col("month"), col("status"))
   }
 
-  private val mvEvolveMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long)]()
-  graft.util.CacheRegistry.registerMemo(mvEvolveMemo)
+  private val mvEvolveMemo = new Memo[(SparkSession, String), (String, Long)]
 
   /** The q302 fixture: the ensureMvChain ingest discipline, but the
     * rollup EVOLVES mid-history — commits 3 and 4 add a new measure
@@ -940,7 +928,7 @@ object Audit {
     */
   private[graft] def ensureMvEvolveChain(s: SparkSession, d: String)
       : (String, Long) =
-    mvEvolveMemo.computeIfAbsent((s, d), _ => {
+    mvEvolveMemo((s, d)) {
       val dir = graft.util.TmpDirs.scratchFor("mv-evolve", d)
       val head = buildVersionedChain(s, d, dir) { (cur, batch, v) =>
         val evolved = v >= 2 // versions 3+ carry the new column
@@ -960,7 +948,7 @@ object Audit {
             .agg(sum(col("n")).as("n"), sum(col("rev")).as("rev"))
       }
       (dir, head)
-    })
+    }
 
   /** q302: SCHEMA EVOLUTION across the versioned view — a measure
     * column added mid-history (commit 3 of 4), with the no-backfill
@@ -992,9 +980,8 @@ object Audit {
       .orderBy(col("version"), col("month"), col("status"))
   }
 
-  private val mvOccMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]()
-  graft.util.CacheRegistry.registerMemo(mvOccMemo)
+  private val mvOccMemo = new Memo[
+    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]
 
   private val occStageSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -1065,8 +1052,8 @@ object Audit {
     */
   private[graft] def ensureMvOccChain(s: SparkSession, d: String)
       : (String, Long, Seq[(Long, String, Long)]) =
-    mvOccMemo.computeIfAbsent((s, d), _ => graft.util.BuildCost
-      .record("mv_occ_chain")(graft.util.StreamTuning.withShuffle(s, 8) {
+    mvOccMemo((s, d), "mv_occ_chain") {
+      graft.util.StreamTuning.withShuffle(s, 8) {
         val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
         val dir = graft.util.TmpDirs.scratchFor("mv-occ", d)
         val o = orders(s, d).select(
@@ -1104,7 +1091,8 @@ object Audit {
         require(commit(2L, merged(2L, shard(2))), "writer B's rebase commits")
         ledger += ((3L, "writer_b", 2L))
         (dir, head.get(), ledger.toSeq)
-      }))
+      }
+    }
 
   /** q303: CONCURRENT COMMITS under optimistic concurrency — the gate
     * reads the commit ledger (writer, attempt count) joined to each
@@ -1152,9 +1140,8 @@ object Audit {
   // are unreferenced orphans (deleted in finally), never a half-visible
   // commit.
 
-  private val mvMultiMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]()
-  graft.util.CacheRegistry.registerMemo(mvMultiMemo)
+  private val mvMultiMemo = new Memo[
+    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]
 
   private val multiStageSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -1255,8 +1242,8 @@ object Audit {
     */
   private[graft] def ensureMvMultiChain(s: SparkSession, d: String)
       : (String, Long, Seq[(Long, String, Long)]) =
-    mvMultiMemo.computeIfAbsent((s, d), _ => graft.util.BuildCost
-      .record("mv_multi_chain")(graft.util.StreamTuning.withShuffle(s, 8) {
+    mvMultiMemo((s, d), "mv_multi_chain") {
+      graft.util.StreamTuning.withShuffle(s, 8) {
         val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
         val dir = graft.util.TmpDirs.scratchFor("mv-multi", d)
         java.nio.file.Files.createDirectories(
@@ -1308,7 +1295,8 @@ object Audit {
           "writer B's rebase commits BOTH tables")
         ledger += ((3L, "writer_b", 2L))
         (dir, head.get(), ledger.toSeq)
-      }))
+      }
+    }
 
   /** q320: the multi-table commit gate — per version, the ledger row
     * joined to BOTH tables' exact totals resolved through the ONE
@@ -1357,9 +1345,8 @@ object Audit {
   // stays O(1) and the commit cost stays one KB manifest rename —
   // independent of N.
 
-  private val mvNMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]()
-  graft.util.CacheRegistry.registerMemo(mvNMemo)
+  private val mvNMemo = new Memo[
+    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]
 
   private val nStageSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -1594,14 +1581,12 @@ object Audit {
   // never touch source inodes — the shared fixture stays byte-pinned
   // for q335's own gate by the filesystem, not test ordering).
 
-  private val gc2Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]()
-  graft.util.CacheRegistry.registerMemo(gc2Memo)
+  private val gc2Memo = new Memo[
+    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]
 
   private[graft] def ensureIvfChainGc(s: SparkSession, d: String)
       : (Long, Long, Long, Seq[Boolean]) =
-    gc2Memo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_chain_gc") {
+    gc2Memo((s, d), "ivf_chain_gc") {
       val (srcRoot, srcHead) = Clustering.ensureIvfErasureCommit(s, d)
       require(srcHead == 1L, s"q335 chain head must be 1, got $srcHead")
       val root = graft.util.TmpDirs.scratchFor("ivf_chain_gc", d)
@@ -1675,7 +1660,7 @@ object Audit {
       (kept.size.toLong, swept.size.toLong, fenced.size.toLong,
         Seq(expiredGone, preScan > 0L, postScan == 0L,
           commitSurvives, headOk))
-    })
+    }
 
   /** q345: one gate row — deterministic kept/swept/fenced counts (3
     * v1 units + the in-flight unit kept; the 3 genesis units + the
@@ -1728,14 +1713,12 @@ object Audit {
       .foreach(u => age(s"$root/data/$u"))
   }
 
-  private val gc3Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]()
-  graft.util.CacheRegistry.registerMemo(gc3Memo)
+  private val gc3Memo = new Memo[
+    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]
 
   private[graft] def ensureCompactionChainGc(s: SparkSession, d: String)
       : (Long, Long, Long, Seq[Boolean]) =
-    gc3Memo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("compaction_chain_gc") {
+    gc3Memo((s, d), "compaction_chain_gc") {
       val srcRoot = Clustering.ensureManifestPolicy(s, d)
       val root = graft.util.TmpDirs.scratchFor("compaction_chain_gc", d)
       GraphAnn.linkTree(srcRoot, root)
@@ -1787,7 +1770,7 @@ object Audit {
         .count() == headBefore.values.map(_._1).sum + 1
       (kept.size.toLong, swept.size.toLong, fenced.size.toLong,
         Seq(expiredGone, unflaggedSurvive, headOk, commitSurvives))
-    })
+    }
 
   /** q351: one gate row for retention on the compaction chain —
     * deterministic kept/swept/fenced counts (the 11 v2 units — 6
@@ -1807,14 +1790,12 @@ object Audit {
         "head_serve_identical", "inflight_commit_survives_sweep")
   }
 
-  private val gc4Memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]()
-  graft.util.CacheRegistry.registerMemo(gc4Memo)
+  private val gc4Memo = new Memo[
+    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]
 
   private[graft] def ensureNTableChainGc(s: SparkSession, d: String)
       : (Long, Long, Long, Seq[Boolean]) =
-    gc4Memo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ntable_chain_gc") {
+    gc4Memo((s, d), "ntable_chain_gc") {
       val (srcDir, srcHead, _) = ensureMvNErasure(s, d)
       require(srcHead == 4L, s"q331/q332 chain head must be 4, got $srcHead")
       val root = graft.util.TmpDirs.scratchFor("ntable_chain_gc", d)
@@ -1870,7 +1851,7 @@ object Audit {
         t5("index") == headBefore("index")
       (kept.size.toLong, swept.size.toLong, fenced.size.toLong,
         Seq(expiredGone, pinnedSurvives, headOk, commitSurvives))
-    })
+    }
 
   /** q352: one gate row for retention on the N-table view chain with
     * a LIVE pinned reader — deterministic kept/swept/fenced counts
@@ -1968,9 +1949,8 @@ object Audit {
       }
     }
 
-  private val polMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, String, Long, Long, Long, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(polMemo)
+  private val polMemo = new Memo[
+    (SparkSession, String), Seq[(String, String, Long, Long, Long, Boolean)]]
 
   /** The q354 drive: THREE chains of TWO layout kinds swept by one
     * retentionRun invocation —
@@ -1988,8 +1968,7 @@ object Audit {
     */
   private[graft] def ensureRetentionRun(s: SparkSession, d: String)
       : Seq[(String, String, Long, Long, Long, Boolean)] =
-    polMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("retention_policy_run") {
+    polMemo((s, d), "retention_policy_run") {
       val (srcRoot, srcHead) = Clustering.ensureIvfErasureCommit(s, d)
       require(srcHead == 1L, s"q335 chain head must be 1, got $srcHead")
       // clone A: keep the head only
@@ -2060,7 +2039,7 @@ object Audit {
       ledger.map { case (c, kind, k, sw, f) =>
         (c, kind, k, sw, f, conserved(c))
       }
-    })
+    }
 
   /** q354: the retention-runner ledger — one row per walked chain
     * with deterministic (kept, swept, fenced) counts (head-keep: 3
@@ -2099,10 +2078,9 @@ object Audit {
   // (a ≤|versions| driver walk); everything else rides the
   // primitives unchanged.
 
-  private val twMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val twMemo = new Memo[
     (SparkSession, String), Seq[(String, String, Long, Long, Long, Boolean,
-      Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(twMemo)
+      Boolean)]]
 
   private def setMtime(path: String, ms: Long): Unit =
     java.nio.file.Files.setLastModifiedTime(
@@ -2111,8 +2089,7 @@ object Audit {
 
   private[graft] def ensureTimeRetention(s: SparkSession, d: String)
       : Seq[(String, String, Long, Long, Long, Boolean, Boolean)] =
-    twMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("time_retention_run") {
+    twMemo((s, d), "time_retention_run") {
       val (srcRoot, srcHead) = Clustering.ensureIvfErasureCommit(s, d)
       require(srcHead == 1L, s"q335 chain head must be 1, got $srcHead")
       val now = System.currentTimeMillis()
@@ -2193,7 +2170,7 @@ object Audit {
       ledger.map { case (c, kind, k, sw, f) =>
         (c, kind, k, sw, f, expiredOld(c), conserved(c))
       }
-    })
+    }
 
   /** q362: the time-window retention ledger — one row per chain with
     * deterministic (kept, swept, fenced) counts driven by a DERIVED
@@ -2217,8 +2194,8 @@ object Audit {
     */
   private[graft] def ensureMvNChain(s: SparkSession, d: String)
       : (String, Long, Seq[(Long, String, Long)]) =
-    mvNMemo.computeIfAbsent((s, d), _ => graft.util.BuildCost
-      .record("mv_ntable_chain")(graft.util.StreamTuning.withShuffle(s, 8) {
+    mvNMemo((s, d), "mv_ntable_chain") {
+      graft.util.StreamTuning.withShuffle(s, 8) {
         val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
         val dir = graft.util.TmpDirs.scratchFor("mv-ntable", d)
         java.nio.file.Files.createDirectories(
@@ -2272,7 +2249,8 @@ object Audit {
           "writer B's rebase commits ALL tables")
         ledger += ((3L, "writer_b", 2L))
         (dir, head.get(), ledger.toSeq)
-      }))
+      }
+    }
 
   /** q331: the N-table commit gate, long form — one row per (version,
     * table) with the ledger and that table's exact totals resolved
@@ -2316,9 +2294,8 @@ object Audit {
   // the gate hashes every version's totals on every table — a torn or
   // half-applied erasure breaks one side at v4.
 
-  private val mvNEraseMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]()
-  graft.util.CacheRegistry.registerMemo(mvNEraseMemo)
+  private val mvNEraseMemo = new Memo[
+    (SparkSession, String), (String, Long, Seq[(Long, String, Long)])]
 
   /** Append the erasure commit (v4) to the q331 chain: the deletion
     * cohort is the standard ≡0 mod 97 customer discipline, restricted
@@ -2327,38 +2304,37 @@ object Audit {
     */
   private[graft] def ensureMvNErasure(s: SparkSession, d: String)
       : (String, Long, Seq[(Long, String, Long)]) =
-    mvNEraseMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("mv_ntable_erasure") {
-        val (dir, head, ledger) = ensureMvNChain(s, d)
-        val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
-        val o = orders(s, d).select(
-          date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-          col("o_orderstatus").as("status"),
-          col("o_totalprice").cast(Dec).as("price"),
-          col("o_orderkey"), col("o_custkey"))
-        val cohort = o.filter(pmod(col("o_orderkey"), lit(4)) < 3 &&
-          col("o_custkey") % 97 === 0)
-        val groupings: Seq[(String, Seq[String])] = Seq(
-          "view" -> Seq("month", "status"),
-          "replica" -> Seq("status"),
-          "index" -> Seq("month"))
-        val cur = readNSnapshot(s, dir, head)
-        val erased = groupings.map { case (tbl, keys) =>
-          val neg = cohort.groupBy(keys.map(col): _*)
-            .agg((-count(lit(1))).as("n"),
-              (-sum(col("price"))).as("rev"))
-          tbl -> cur(tbl).unionByName(neg)
-            .groupBy(keys.map(col): _*)
-            .agg(sum(col("n")).as("n"), sum(col("rev")).as("rev"))
-            // a fully-cancelled group lands at exactly zero and is
-            // dropped — the q311 retraction row-deletion case
-            .filter(col("n") > 0)
-        }
-        val hd = new java.util.concurrent.atomic.AtomicLong(head)
-        require(occCommitN(s, dir, hd, head, erased),
-          "the erasure commit holds the expected head")
-        (dir, hd.get(), ledger :+ ((head + 1, "erasure_commit", 1L)))
-      })
+    mvNEraseMemo((s, d), "mv_ntable_erasure") {
+      val (dir, head, ledger) = ensureMvNChain(s, d)
+      val Dec = org.apache.spark.sql.types.DataTypes.createDecimalType(28, 6)
+      val o = orders(s, d).select(
+        date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+        col("o_orderstatus").as("status"),
+        col("o_totalprice").cast(Dec).as("price"),
+        col("o_orderkey"), col("o_custkey"))
+      val cohort = o.filter(pmod(col("o_orderkey"), lit(4)) < 3 &&
+        col("o_custkey") % 97 === 0)
+      val groupings: Seq[(String, Seq[String])] = Seq(
+        "view" -> Seq("month", "status"),
+        "replica" -> Seq("status"),
+        "index" -> Seq("month"))
+      val cur = readNSnapshot(s, dir, head)
+      val erased = groupings.map { case (tbl, keys) =>
+        val neg = cohort.groupBy(keys.map(col): _*)
+          .agg((-count(lit(1))).as("n"),
+            (-sum(col("price"))).as("rev"))
+        tbl -> cur(tbl).unionByName(neg)
+          .groupBy(keys.map(col): _*)
+          .agg(sum(col("n")).as("n"), sum(col("rev")).as("rev"))
+          // a fully-cancelled group lands at exactly zero and is
+          // dropped — the q311 retraction row-deletion case
+          .filter(col("n") > 0)
+      }
+      val hd = new java.util.concurrent.atomic.AtomicLong(head)
+      require(occCommitN(s, dir, hd, head, erased),
+        "the erasure commit holds the expected head")
+      (dir, hd.get(), ledger :+ ((head + 1, "erasure_commit", 1L)))
+    }
 
   /** q332: the atomic-erasure ledger — per (version, table), the exact
     * totals resolved through the one manifest chain. Versions 0-3

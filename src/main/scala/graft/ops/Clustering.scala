@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Cluster-level dedup and cell-probed similarity search — the stages
@@ -368,11 +369,9 @@ object Clustering {
     * SemDeDup stage all scan it — one cache populate per session, not
     * one per call (the Tables discipline).
     */
-  private val dblVecMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(dblVecMemo)
+  private val dblVecMemo = new Memo[(SparkSession, String), DataFrame]
   private def dblVecs(s: SparkSession, d: String): DataFrame =
-    dblVecMemo.computeIfAbsent((s, d), _ => graft.util.CacheRegistry.register(
+    dblVecMemo((s, d))(graft.util.CacheRegistry.register(
       embeddings(s, d)
         .select(col("vec_id"),
           transform(col("embedding"), _.cast("double")).as("v"))
@@ -384,15 +383,12 @@ object Clustering {
     * stage convention (one fill per session, CacheRegistry-cleared,
     * bench pass 1 pays it).
     */
-  private val kmeansMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(kmeansMemo)
+  private val kmeansMemo = new Memo[(SparkSession, String, Int, Int), DataFrame]
 
   private[graft] def kmeansAssigned(s: SparkSession, d: String, k: Int = 10,
       iters: Int = 3): DataFrame =
-    kmeansMemo.computeIfAbsent((s, d, k, iters), _ =>
-      graft.util.CacheRegistry.register(
-        kmeansAssignedUncached(s, d, k, iters).cache()))
+    kmeansMemo((s, d, k, iters))(graft.util.CacheRegistry.register(
+      kmeansAssignedUncached(s, d, k, iters).cache()))
 
   private[graft] def kmeansAssignedUncached(s: SparkSession, d: String,
       k: Int = 10, iters: Int = 3): DataFrame = {
@@ -639,21 +635,18 @@ object Clustering {
       .agg(max_by(col("cent_id"),
         struct(col("cos"), (-col("cent_id")).as("neg_id"))).as("cell"))
 
-  private val ivfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(ivfMemo)
+  private val ivfMemo = new Memo[(SparkSession, String), String]
 
   /** Ensure the IVF cell table exists for (session, sf dir); returns
     * its name. Memoized so repeated probes in one session never
     * rebuild (proven by the indexBuilds counter in AnnIndexSpec).
     */
   private[graft] def ensureIvfIndex(s: SparkSession, d: String): String =
-    ivfMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_index") {
+    ivfMemo((s, d), "ivf_index") {
       val name = tableNameFor("graft_ivf_cells_", d)
       recreateBucketed(s, name, ivfAssignment(s, d), "cell")
       name
-    })
+    }
 
   /** q203: IVF probe against the PERSISTED cell index — q52's search
     * semantics (same queries, nprobe=2, top-3) with the corpus-side
@@ -740,13 +733,10 @@ object Clustering {
     * probes) this completes the index lifecycle: build → serve →
     * incrementally grow.
     */
-  private val ivfIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(ivfIncrMemo)
+  private val ivfIncrMemo = new Memo[(SparkSession, String), String]
 
   private[graft] def ensureIvfIncremental(s: SparkSession, d: String): String =
-    ivfIncrMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_grown") {
+    ivfIncrMemo((s, d), "ivf_grown") {
       val name = tableNameFor("graft_ivf_incr_", d)
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
       recreateBucketed(s, name,
@@ -758,7 +748,7 @@ object Clustering {
         .write.mode("append").format("parquet")
         .bucketBy(8, "cell").sortBy("cell").saveAsTable(name)
       name
-    })
+    }
 
   def ivfIncremental(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -776,13 +766,10 @@ object Clustering {
     * oracle). O(batch) maintenance, both persisted ANN families now
     * complete the build → serve → grow lifecycle.
     */
-  private val pqIncrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(pqIncrMemo)
+  private val pqIncrMemo = new Memo[(SparkSession, String), String]
 
   private[graft] def ensurePqIncremental(s: SparkSession, d: String): String =
-    pqIncrMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("pq_grown") {
+    pqIncrMemo((s, d), "pq_grown") {
       val name = tableNameFor("graft_pq_incr_", d)
       val e = embeddings(s, d)
         .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
@@ -792,7 +779,7 @@ object Clustering {
         .write.mode("append").format("parquet")
         .bucketBy(8, "vec_id").sortBy("vec_id").saveAsTable(name)
       name
-    })
+    }
 
   def pqIncremental(s: SparkSession, d: String): DataFrame =
     pqProbeOn(s, d, ensurePqIncremental(s, d))
@@ -927,9 +914,7 @@ object Clustering {
     corpus.filter(col("vec_id") % 100 === 0 || col("vec_id") % 100 === 25)
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
 
-  private val driftMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(driftMemo)
+  private val driftMemo = new Memo[(SparkSession, String), (String, String)]
 
   /** Build the two candidate indexes: GROWN = base build + drifted
     * batch appended under frozen centroids (exactly q215's
@@ -939,8 +924,7 @@ object Clustering {
     */
   private[graft] def ensureDriftIndexes(s: SparkSession, d: String)
       : (String, String) =
-    driftMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_drift_indexes") {
+    driftMemo((s, d), "ivf_drift_indexes") {
       val corpus = driftCorpus(s, d)
       val centsA = frozenCents(corpus)
       val grown = tableNameFor("graft_ivf_grown_", d)
@@ -954,7 +938,7 @@ object Clustering {
       recreateBucketed(s, rebuilt,
         ivfAssignAgainst(corpus, refreshedCents(corpus)), "cell")
       (grown, rebuilt)
-    })
+    }
 
   /** q259: per-query recall@3 of the grown vs rebuilt index for
     * drifted queries (vec_id ≡ 51 mod 100 — all in the shifted
@@ -1195,9 +1179,8 @@ object Clustering {
   //    on the control (ratio < 2 and magnitude ≪ n/4) while the
   //    drift saturates every bit (imb_refreshed = 0, ratio = ∞).
 
-  private val staleCtlMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(staleCtlMemo)
+  private val staleCtlMemo = new Memo[
+    (SparkSession, String), Seq[(String, Boolean)]]
 
   /** q336: one row per family, trigger_quiet — each boolean computed
     * by the hot audit's OWN rule over the undrifted corpus through
@@ -1206,8 +1189,7 @@ object Clustering {
     * audit from control.
     */
   def stalenessControls(s: SparkSession, d: String): DataFrame = {
-    val rows = staleCtlMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("staleness_controls") {
+    val rows = staleCtlMemo((s, d), "staleness_controls") {
       val ef = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val ev = embeddings(s, d).select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -1230,7 +1212,7 @@ object Clustering {
         !(t.getLong(0) >= 2L * t.getLong(1) && 4L * t.getLong(0) >= t.getLong(2))
       }
       Seq("binary" -> binQuiet, "ivf" -> ivfQuiet, "pq" -> pqQuiet)
-    })
+    }
     import s.implicits._
     rows.toDF("family", "trigger_quiet").orderBy(col("family"))
   }
@@ -1264,15 +1246,13 @@ object Clustering {
   // rebuild the engine already produced + one KB manifest rename; the
   // control costs the measure alone. Nothing here is all-pairs.
 
-  private val trigActMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val trigActMemo = new Memo[
     (SparkSession, String),
-    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(trigActMemo)
+    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensureTriggerAction(s: SparkSession, d: String)
       : Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)] =
-    trigActMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_trigger_action") {
+    trigActMemo((s, d), "ivf_trigger_action") {
       import s.implicits._
       Seq("ctl", "drift").map { chain =>
         val corpus =
@@ -1342,7 +1322,7 @@ object Clustering {
         val serveComplete = servedQ == qs.count()
         (chain, fires, hv, idxOk, centsOk, serveComplete)
       }
-    })
+    }
 
   /** q348: one row per chain — the measured trigger decision, the
     * head version it CAUSED (1 = refresh committed, 0 = nothing), the
@@ -1400,11 +1380,10 @@ object Clustering {
   // manifest-resolved units — cells pruned by the probe join, the
   // same leg q259/q348 serve.
 
-  private val maintIvfMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val maintIvfMemo = new Memo[
     (SparkSession, String),
     Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(maintIvfMemo)
+      Boolean, Boolean)]]
 
   /** Executed-plan witness that `df` scanned ONLY the directory at
     * `wantPath` — shared by every stamped-stats maintenance check
@@ -1436,8 +1415,7 @@ object Clustering {
   private[graft] def ensureIvfMaintLoop(s: SparkSession, d: String)
       : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
         Boolean, Boolean)] =
-    maintIvfMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_maint_loop") {
+    maintIvfMemo((s, d), "ivf_maint_loop") {
       import s.implicits._
       val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val arrived = driftCorpus(s, d)
@@ -1623,7 +1601,7 @@ object Clustering {
             hdr.getBoolean(3), headServeComplete)
         }
       }
-    })
+    }
 
   /** q353: per (chain, micro-batch) — the resolved version, the
     * ingest landing at batch 0, the stamped-stats trigger decision
@@ -1702,15 +1680,13 @@ object Clustering {
       .agg(coalesce(sum(col("d")), lit(0L)).as("s"))
       .first().getLong(0) // one bounded driver scalar (the decision)
 
-  private val pqTrigMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val pqTrigMemo = new Memo[
     (SparkSession, String),
-    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(pqTrigMemo)
+    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensurePqTriggerAction(s: SparkSession, d: String)
       : Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)] =
-    pqTrigMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("pq_trigger_action") {
+    pqTrigMemo((s, d), "pq_trigger_action") {
       import s.implicits._
       val frozenPred = col("vec_id") % 2 === 0 && col("vec_id") < 32
       val refreshedPred =
@@ -1766,7 +1742,7 @@ object Clustering {
         val headQuiet = pqArrivedDistortion(corpus, snap("cb")) < 2L * fb
         (chain, fires, hv, codesOk, cbOk, headQuiet)
       }
-    })
+    }
 
   /** q355: one row per chain — the measured trigger decision, the
     * head version it CAUSED, the committed codes ≡ a from-scratch
@@ -1850,15 +1826,13 @@ object Clustering {
           pow(lit(2.0), (col("j") - 33).cast("double")).cast("long"))
           .otherwise(0L)).as("hi"))
 
-  private val binTrigMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val binTrigMemo = new Memo[
     (SparkSession, String),
-    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(binTrigMemo)
+    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensureBinTriggerAction(s: SparkSession, d: String)
       : Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)] =
-    binTrigMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("bin_trigger_action") {
+    binTrigMemo((s, d), "bin_trigger_action") {
       import s.implicits._
       Seq("ctl", "drift").map { chain =>
         val corpus =
@@ -1903,7 +1877,7 @@ object Clustering {
         val headQuiet = !(faH >= 2L * fb && 4L * faH >= nnH)
         (chain, fires, hv, codesOk, thrOk, headQuiet)
       }
-    })
+    }
 
   /** q356: one row per chain — the measured trigger decision, the
     * head version it CAUSED, the committed codes ≡ a from-scratch
@@ -1986,17 +1960,15 @@ object Clustering {
       .select(col("query_id"), col("vec_id"))
   }
 
-  private val maintBinMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val maintBinMemo = new Memo[
     (SparkSession, String),
     Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(maintBinMemo)
+      Boolean, Boolean)]]
 
   private[graft] def ensureBinMaintLoop(s: SparkSession, d: String)
       : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
         Boolean, Boolean)] =
-    maintBinMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("bin_maint_loop") {
+    maintBinMemo((s, d), "bin_maint_loop") {
       import s.implicits._
       val base = embeddings(s, d).select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -2172,7 +2144,7 @@ object Clustering {
             hdr.getBoolean(3), headServeComplete)
         }
       }
-    })
+    }
 
   /** q357: per (chain, micro-batch) — the binary family's maintenance
     * loop under a live Hamming probe stream: the resolved version,
@@ -2294,17 +2266,15 @@ object Clustering {
     (res, pushed)
   }
 
-  private val maintPqMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val maintPqMemo = new Memo[
     (SparkSession, String),
     Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(maintPqMemo)
+      Boolean, Boolean)]]
 
   private[graft] def ensurePqMaintLoop(s: SparkSession, d: String)
       : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
         Boolean, Boolean)] =
-    maintPqMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("pq_maint_loop") {
+    maintPqMemo((s, d), "pq_maint_loop") {
       import s.implicits._
       val frozenPred = col("vec_id") % 2 === 0 && col("vec_id") < 32
       val refreshedPred =
@@ -2510,7 +2480,7 @@ object Clustering {
             hdr.getBoolean(3), hdr.getBoolean(4))
         }
       }
-    })
+    }
 
   /** q361: per (chain, micro-batch) — the resolved version, the
     * delta-only ingest landing at batch 0, the stamped-stats trigger
@@ -2576,16 +2546,14 @@ object Clustering {
       family -> ((fires, metaOnly, act))
     }.toMap
 
-  private val schedMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val schedMemo = new Memo[
     (SparkSession, String),
-    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(schedMemo)
+    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensureMaintScheduler(s: SparkSession, d: String)
       : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean,
         Boolean)] =
-    schedMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("maint_scheduler") {
+    schedMemo((s, d), "maint_scheduler") {
       import s.implicits._
       // IVF chain, born HOT: the drifted ingest landed pre-stream
       val arrived = driftCorpus(s, d)
@@ -2736,7 +2704,7 @@ object Clustering {
             hdr.getBoolean(3), singlePass)
         }
       }
-    })
+    }
 
   /** q363: per (family, micro-batch) — the batch-start resolved
     * version, the ONE scheduler pass's trigger decision (both
@@ -2790,17 +2758,14 @@ object Clustering {
       .select(col("vec_id"), col("m"), col("mm.cid").as("code"))
   }
 
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(pqMemo)
+  private val pqMemo = new Memo[(SparkSession, String), String]
 
   private[graft] def ensurePqIndex(s: SparkSession, d: String): String =
-    pqMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("pq_index") {
+    pqMemo((s, d), "pq_index") {
       val name = tableNameFor("graft_pq_codes_", d)
       recreateBucketed(s, name, pqCodes(s, d), "vec_id")
       name
-    })
+    }
 
   /** q204: ADC probe against the PERSISTED PQ code table — q114's
     * search (5 queries, top-3 by asymmetric distance, true distance
@@ -2906,9 +2871,7 @@ object Clustering {
   // unchanged: at fixture scale the composed top-k reproduces the
   // flat ranking exactly — recall 1.0 is the gate, not an accident).
 
-  private val ivfPqMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(ivfPqMemo)
+  private val ivfPqMemo = new Memo[(SparkSession, String), String]
 
   /** The composed IVF-PQ code table: (cell, vec_id, m, code), one
     * partition dir per coarse cell — built once per corpus version
@@ -2916,29 +2879,25 @@ object Clustering {
     * (q203's assignment, q204's codes).
     */
   private[graft] def ensureIvfPqIndex(s: SparkSession, d: String): String =
-    ivfPqMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivfpq_index") {
+    ivfPqMemo((s, d), "ivfpq_index") {
       val name = tableNameFor("graft_ivfpq_codes_", d)
       recreatePartitioned(s, name,
         pqCodes(s, d).join(ivfAssignment(s, d), Seq("vec_id")), "cell")
       name
-    })
+    }
 
-  private val ivfBinMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(ivfBinMemo)
+  private val ivfBinMemo = new Memo[(SparkSession, String), String]
 
   /** The composed IVF-binary code table: (cell, vec_id, lo, hi), one
     * partition dir per coarse cell.
     */
   private[graft] def ensureIvfBinIndex(s: SparkSession, d: String): String =
-    ivfBinMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivfbin_index") {
+    ivfBinMemo((s, d), "ivfbin_index") {
       val name = tableNameFor("graft_ivfbin_codes_", d)
       recreatePartitioned(s, name,
         signCodes(s, d).join(ivfAssignment(s, d), Seq("vec_id")), "cell")
       name
-    })
+    }
 
   /** Query → nprobe coarse cells (broadcast centroid table, cosine
     * desc, ties by cent_id — q203's probe assignment verbatim).
@@ -2966,19 +2925,18 @@ object Clustering {
     * memo in the q27/q28-MinHash-signature tradition: a fixture-shaped
     * control input, not a query answer.
     */
-  private val gateProbesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String, Int), (DataFrame, Array[Long])]()
-  graft.util.CacheRegistry.registerMemo(gateProbesMemo)
+  private val gateProbesMemo = new Memo[
+    (SparkSession, String, String, Int), (DataFrame, Array[Long])]
 
   private def ensureGateProbes(s: SparkSession, d: String, tag: String,
       qs: => DataFrame, nprobe: Int): (DataFrame, Array[Long]) =
-    gateProbesMemo.computeIfAbsent((s, d, tag, nprobe), _ => {
+    gateProbesMemo((s, d, tag, nprobe)) {
       val probes = graft.util.CacheRegistry.register(
         coarseProbes(s, d, qs, nprobe).cache())
       val cells = probes.select(col("cell")).distinct()
         .collect().map(_.getLong(0)).sorted
       (probes, cells)
-    })
+    }
 
   /** The partition set of a cell-partitioned code table, from catalog
     * METADATA (SHOW PARTITIONS — no data read).
@@ -3102,17 +3060,14 @@ object Clustering {
     * flat-scan probe — one shared reference stage instead of two
     * (the q27/q28 shared-MinHash-signature discipline).
     */
-  private val pqFlatRefMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(pqFlatRefMemo)
+  private val pqFlatRefMemo = new Memo[(SparkSession, String), DataFrame]
 
   private def ensureFlatPqRef(s: SparkSession, d: String): DataFrame =
-    pqFlatRefMemo.computeIfAbsent((s, d), _ =>
-      graft.util.CacheRegistry.register(
-        pqProbeForQueries(s, d, ensurePqIndex(s, d),
-          embeddings(s, d).filter(col("vec_id") < 5)
-            .select(col("vec_id"),
-              transform(col("embedding"), _.cast("double")).as("v"))).cache()))
+    pqFlatRefMemo((s, d))(graft.util.CacheRegistry.register(
+      pqProbeForQueries(s, d, ensurePqIndex(s, d),
+        embeddings(s, d).filter(col("vec_id") < 5)
+          .select(col("vec_id"),
+            transform(col("embedding"), _.cast("double")).as("v"))).cache()))
 
   private def ivfPqProbeGate(s: SparkSession, d: String,
       idx: String): DataFrame = {
@@ -3209,13 +3164,10 @@ object Clustering {
   // cells' directories — O(batch), never O(corpus); the serving scan
   // keeps its partition pruning because append preserves the layout.
 
-  private val ivfPqGrowMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(ivfPqGrowMemo)
+  private val ivfPqGrowMemo = new Memo[(SparkSession, String), String]
 
   private[graft] def ensureIvfPqGrown(s: SparkSession, d: String): String =
-    ivfPqGrowMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivfpq_grown") {
+    ivfPqGrowMemo((s, d), "ivfpq_grown") {
       val name = tableNameFor("graft_ivfpq_grown_", d)
       val e = embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
@@ -3237,7 +3189,7 @@ object Clustering {
         .partitionBy("cell").saveAsTable(name)
       indexBuilds.incrementAndGet()
       name
-    })
+    }
 
   /** q365: the q358 gate verbatim over the incrementally-grown
     * composed table — answers, recall-vs-flat, and the physical
@@ -3292,13 +3244,10 @@ object Clustering {
   /** Average micro-Gram of the embedding table, memoized per
     * (session, sf dir): q180 and q200 share one build.
     */
-  private val gramMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(gramMemo)
+  private val gramMemo = new Memo[(SparkSession, String), DataFrame]
 
   private def gramAvg(s: SparkSession, d: String): DataFrame =
-    gramMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("gram_index") {
+    gramMemo((s, d), "gram_index") {
       import s.implicits._
       val e = embeddings(s, d).select(col("embedding"))
       val parts = e.as[Array[Float]].mapPartitions { it =>
@@ -3333,7 +3282,7 @@ object Clustering {
             floor(col("gint").cast("double") / col("n").cast("double")
               + lit(0.5)).cast("long").as("g"))
           .cache())
-    })
+    }
 
   /** The collected average micro-Gram — a dim²-bounded (64×64 long)
     * summary, the q151 "driver control rows" shape: once the
@@ -3640,16 +3589,13 @@ object Clustering {
       }.toDF("vec_id", "lo", "hi")
   }
 
-  private val binMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(binMemo)
+  private val binMemo = new Memo[(SparkSession, String), String]
   private[graft] def ensureBinaryIndex(s: SparkSession, d: String): String =
-    binMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("bin_index") {
+    binMemo((s, d), "bin_index") {
       val name = tableNameFor("graft_bin_codes_", d)
       recreateBucketed(s, name, signCodes(s, d), "vec_id")
       name
-    })
+    }
 
   /** q253: persisted binary index probe — the q239 sign-bit search
     * served from a STORED 16-byte-per-vector code table (the third
@@ -3870,18 +3816,16 @@ object Clustering {
     (ivf, pq, bin)
   }
 
-  private val sweptMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String)]()
-  graft.util.CacheRegistry.registerMemo(sweptMemo)
+  private val sweptMemo = new Memo[
+    (SparkSession, String), (String, String, String)]
 
   private[graft] def ensureSweptIndexes(s: SparkSession, d: String)
       : (String, String, String) =
-    sweptMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("erasure_swept") {
+    sweptMemo((s, d), "erasure_swept") {
       val t = buildEraseIndexes(s, d)
       sweepEraseIndexes(s, d, t)
       t
-    })
+    }
 
   /** q254: IVF probe against the SWEPT inverted lists — q203's search
     * (same queries, nprobe=2, top-3) after the deletion cohort was
@@ -3935,19 +3879,16 @@ object Clustering {
     * costs flat; at warehouse scale it runs only on the partitions
     * the sweep actually touched.
     */
-  private val compactMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(compactMemo)
+  private val compactMemo = new Memo[(SparkSession, String), String]
 
   private[graft] def ensureCompactedSweptIvf(s: SparkSession, d: String): String =
-    compactMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("compacted") {
+    compactMemo((s, d), "compacted") {
       val (ivf, _, _) = ensureSweptIndexes(s, d)
       val name = tableNameFor("graft_ivf_compact_", d)
       recreatePartitioned(s, name,
         s.table(ivf).repartition(col("cell")), "cell")
       name
-    })
+    }
 
   def ivfCompactedProbe(s: SparkSession, d: String): DataFrame = {
     val compacted = ensureCompactedSweptIvf(s, d)
@@ -3983,14 +3924,11 @@ object Clustering {
   // regardless of surface count (the q331 property) and conflict
   // detection stays one token compare.
 
-  private val ivfGdprMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long)]()
-  graft.util.CacheRegistry.registerMemo(ivfGdprMemo)
+  private val ivfGdprMemo = new Memo[(SparkSession, String), (String, Long)]
 
   private[graft] def ensureIvfErasureCommit(s: SparkSession, d: String)
       : (String, Long) =
-    ivfGdprMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_erasure_commit") {
+    ivfGdprMemo((s, d), "ivf_erasure_commit") {
       val root = graft.util.TmpDirs.scratchFor("ivf_gdpr", d)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(s"$root/manifest"))
@@ -4021,7 +3959,7 @@ object Clustering {
           Seq("corpus" -> corpus1, "index" -> index1, "stats" -> stats1)),
         "the erasure commit holds the expected head")
       (root, head.get())
-    })
+    }
 
   /** q335: the atomic index-erasure ledger — per (version, surface),
     * the cardinality and the represented-vector total resolved
@@ -4139,14 +4077,12 @@ object Clustering {
         s"graph_edge_l$l" -> Left(u0(s"graph_edge_l$l")))
   }
 
-  private val capMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long, Boolean, Map[String, Boolean])]()
-  graft.util.CacheRegistry.registerMemo(capMemo)
+  private val capMemo = new Memo[
+    (SparkSession, String), (String, Long, Boolean, Map[String, Boolean])]
 
   private[graft] def ensureErasureCapstoneCommit(s: SparkSession, d: String)
       : (String, Long, Boolean, Map[String, Boolean]) =
-    capMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("erasure_capstone_commit") {
+    capMemo((s, d), "erasure_capstone_commit") {
       val root = graft.util.TmpDirs.scratchFor("erasure_capstone", d)
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(s"$root/manifest"))
@@ -4253,7 +4189,7 @@ object Clustering {
           rBin.select(col("vec_id"), col("lo"), col("hi"))),
         "graph" -> (v0Self == nProbe && v1CohortLeft == 0L))
       (root, head.get(), basesShared, contracts)
-    })
+    }
 
   // ---- q364: the CAPSTONE ERASURE lands UNDER LIVE SERVING -----------
   //
@@ -4284,15 +4220,13 @@ object Clustering {
   // cohort-visibility witness is one bounded semi-join count per
   // family per batch (gate-only instrumentation).
 
-  private val capServeMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val capServeMemo = new Memo[
     (SparkSession, String),
-    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(capServeMemo)
+    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensureCapstoneUnderServing(s: SparkSession, d: String)
       : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean)] =
-    capServeMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("capstone_under_serving") {
+    capServeMemo((s, d), "capstone_under_serving") {
       import s.implicits._
       val (srcRoot, srcHead, _, _) = ensureErasureCapstoneCommit(s, d)
       require(srcHead == 1L, s"capstone chain head must be 1, got $srcHead")
@@ -4421,7 +4355,7 @@ object Clustering {
           (fam, id, v, id == 0L, equalsRef, hdr.getBoolean(1), cohortFree)
         }
       }
-    })
+    }
 
   /** q364: per (family, micro-batch) — the version all four families
     * resolve at batch start (0, then 1 from the very next trigger
@@ -4546,23 +4480,20 @@ object Clustering {
       name: String): Array[Long] =
     sweepIndexPartitions(s, name, "vec_id", "cell", erasedVecIds(s, d))
 
-  private val lifeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(lifeMemo)
+  private val lifeMemo = new Memo[(SparkSession, String), String]
 
   /** Run the full chain once per (session, sf dir); returns the ONE
     * table name every verb ran against.
     */
   private[graft] def ensureLifecycleIvf(s: SparkSession, d: String): String =
-    lifeMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("ivf_lifecycle") {
+    lifeMemo((s, d), "ivf_lifecycle") {
       val name = tableNameFor("graft_ivf_life_", d)
       lifecycleBaseBuild(s, d, name)
       lifecycleGrow(s, d, name)
       val swept = lifecycleErase(s, d, name)
       compactPartitionsInPlace(s, name, "cell", swept.toSeq)
       name
-    })
+    }
 
   /** q272: batch probe of the chained-lifecycle table (q203's search:
     * same queries, nprobe = 2, top-3). Gated by the q254 oracle —
@@ -4622,18 +4553,15 @@ object Clustering {
   // growth never rebuilds), and that the base files survived growth
   // byte-for-byte.
 
-  private val swgMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(swgMemo)
+  private val swgMemo = new Memo[(SparkSession, String), (String, String)]
 
   /** Base-build data files (path → (size, mtime)) of each
     * serve-while-grow table, captured before its grow stream starts —
     * the spec's evidence that appends added files without touching
     * existing ones. Keyed by (session, sf dir, family).
     */
-  private[graft] val swgBaseFiles = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val swgBaseFiles = graft.util.CacheRegistry.newMap[
     (SparkSession, String, String), Map[String, (Long, Long)]]()
-  graft.util.CacheRegistry.registerMemo(swgBaseFiles)
 
   private[graft] def listDataFiles(root: java.nio.file.Path)
       : Map[String, (Long, Long)] = {
@@ -4669,9 +4597,8 @@ object Clustering {
     * first-caller status (sbt suite order is arbitrary and shifts with
     * the suite set).
     */
-  private[graft] val swgBuildDelta = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val swgBuildDelta = graft.util.CacheRegistry.newMap[
     (SparkSession, String, String), Int]()
-  graft.util.CacheRegistry.registerMemo(swgBuildDelta)
 
   private def serveWhileGrowRun(s: SparkSession, d: String, name: String,
       family: String, baseBuild: () => Unit,
@@ -4724,8 +4651,7 @@ object Clustering {
 
   private[graft] def ensureServeWhileGrow(s: SparkSession, d: String)
       : (String, String) =
-    swgMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("swg_ivf") {
+    swgMemo((s, d), "swg_ivf") {
       val name = tableNameFor("graft_ivf_swg_", d)
       serveWhileGrowRun(s, d, name, "ivf",
         baseBuild = () => lifecycleBaseBuild(s, d, name),
@@ -4737,7 +4663,7 @@ object Clustering {
           ivfProbeOn(ss, d, name,
             batch.select(col("vec_id").as("query_id"),
               col("embedding").as("qe"))))
-    })
+    }
 
   /** q289: the post-growth probe of the stream-grown table — must
     * equal the q215 batch-grown oracle (growth path must be
@@ -4755,14 +4681,11 @@ object Clustering {
     batch.select(col("vec_id"),
       transform(col("embedding"), _.cast("double")).as("v"))
 
-  private val swgPqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(swgPqMemo)
+  private val swgPqMemo = new Memo[(SparkSession, String), (String, String)]
 
   private[graft] def ensureServeWhileGrowPq(s: SparkSession, d: String)
       : (String, String) =
-    swgPqMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("swg_pq") {
+    swgPqMemo((s, d), "swg_pq") {
       val name = tableNameFor("graft_pq_swg_", d)
       serveWhileGrowRun(s, d, name, "pq",
         baseBuild = () => recreatePartitioned(s, name,
@@ -4777,7 +4700,7 @@ object Clustering {
             .partitionBy("pg").saveAsTable(name),
         probe = (ss, batch) =>
           pqProbeForQueries(ss, d, name, asPqQueries(batch)))
-    })
+    }
 
   /** q298: the PQ family's serve-while-grow — streamed O(batch)
     * encode-and-append under the frozen codebook while the ADC probe
@@ -4789,14 +4712,11 @@ object Clustering {
     pqProbeOn(s, d, name)
   }
 
-  private val swgBinMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(swgBinMemo)
+  private val swgBinMemo = new Memo[(SparkSession, String), (String, String)]
 
   private[graft] def ensureServeWhileGrowBin(s: SparkSession, d: String)
       : (String, String) =
-    swgBinMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("swg_bin") {
+    swgBinMemo((s, d), "swg_bin") {
       val name = tableNameFor("graft_bin_swg_", d)
       serveWhileGrowRun(s, d, name, "bin",
         baseBuild = () => recreatePartitioned(s, name,
@@ -4812,7 +4732,7 @@ object Clustering {
             signCodesOf(ss, batch.select(col("vec_id"), col("embedding")))
               .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
                 col("hi").as("qhi"))))
-    })
+    }
 
   /** q299: the binary family's serve-while-grow — streamed sign
     * encode-and-append while Hamming probes serve; final probe must
@@ -4842,9 +4762,7 @@ object Clustering {
   // distinct ids, id sums — a double-applied replay doubles a batch's
   // rows, a lost batch zeroes them).
 
-  private val growRestartMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), String]()
-  graft.util.CacheRegistry.registerMemo(growRestartMemo)
+  private val growRestartMemo = new Memo[(SparkSession, String, String), String]
 
   /** The generic crash-safe growth runner, one per index family
     * (prefix "ivf"/"pq"/"bin"): build the base (even half, `encode`d
@@ -4864,8 +4782,7 @@ object Clustering {
   private def growRestartRun(s: SparkSession, d: String, prefix: String,
       partCol: String,
       encode: (SparkSession, DataFrame) => DataFrame): String =
-    growRestartMemo.computeIfAbsent((s, d, prefix), _ =>
-      graft.util.BuildCost.record(s"grow_restart_$prefix") {
+    growRestartMemo((s, d, prefix), s"grow_restart_$prefix") {
       val loc = graft.util.TmpDirs.scratch(
         tableNameFor(s"${prefix}_growrestart_", d))
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -4888,7 +4805,7 @@ object Clustering {
           .parquet(s"$loc/gb=${id + 1}")
       }
       loc
-    })
+    }
 
   private[graft] def ensureGrowRestart(s: SparkSession, d: String): String =
     growRestartRun(s, d, "ivf", "cell",
@@ -4990,9 +4907,7 @@ object Clustering {
   // (identical rows, 5 units vs 1); q307 gates the probe through the
   // filesystem-resolved HEAD manifest against the standard oracle.
 
-  private val manifestMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(manifestMemo)
+  private val manifestMemo = new Memo[(SparkSession, String), String]
 
   private def writeManifest(s: SparkSession, root: String, v: Long,
       units: Seq[String]): Unit = {
@@ -5022,8 +4937,7 @@ object Clustering {
     * file, and reads of v1 AFTER v2 commits stay exact.
     */
   private[graft] def ensureManifestIndex(s: SparkSession, d: String): String =
-    manifestMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("manifest_snapshots") {
+    manifestMemo((s, d), "manifest_snapshots") {
       val root = graft.util.TmpDirs.scratch(tableNameFor("ivf_manifest_", d))
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
       ivfAssignmentFor(s, d, e.filter(pmod(col("vec_id"), lit(2)) === 0))
@@ -5041,7 +4955,7 @@ object Clustering {
         .parquet(s"$root/data/compact1")
       writeManifest(s, root, 2, Seq("compact1"))
       root
-    })
+    }
 
   /** q306: the snapshot ledger of the manifest-versioned table — both
     * snapshots hold the identical logical contents (exact counts,
@@ -5138,13 +5052,10 @@ object Clustering {
   // table, gated by the q255/q256 oracles (base ∪ appended = full
   // corpus, so the target is rebuild-from-survivors).
 
-  private val pqLifeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(pqLifeMemo)
+  private val pqLifeMemo = new Memo[(SparkSession, String), String]
 
   private[graft] def ensureLifecyclePq(s: SparkSession, d: String): String =
-    pqLifeMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("pq_lifecycle") {
+    pqLifeMemo((s, d), "pq_lifecycle") {
       val name = tableNameFor("graft_pq_life_", d)
       val e = embeddings(s, d)
         .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
@@ -5159,7 +5070,7 @@ object Clustering {
         erasedVecIds(s, d))
       compactPartitionsInPlace(s, name, "pg", swept.toSeq)
       name
-    })
+    }
 
   /** q283: ADC probe of the chained-lifecycle PQ table (q255's query
     * set; same oracle — rebuild-from-survivors under the frozen
@@ -5168,13 +5079,10 @@ object Clustering {
   def pqLifecycleProbe(s: SparkSession, d: String): DataFrame =
     pqProbeOn(s, d, ensureLifecyclePq(s, d), nQuery = 6, qMin = 1)
 
-  private val binLifeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(binLifeMemo)
+  private val binLifeMemo = new Memo[(SparkSession, String), String]
 
   private[graft] def ensureLifecycleBin(s: SparkSession, d: String): String =
-    binLifeMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("bin_lifecycle") {
+    binLifeMemo((s, d), "bin_lifecycle") {
       val name = tableNameFor("graft_bin_life_", d)
       recreatePartitioned(s, name,
         signCodes(s, d).filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -5187,7 +5095,7 @@ object Clustering {
         erasedVecIds(s, d))
       compactPartitionsInPlace(s, name, "pg", swept.toSeq)
       name
-    })
+    }
 
   /** q284: Hamming top-5 from the chained-lifecycle binary table
     * (q256's query set and oracle).
@@ -5210,9 +5118,7 @@ object Clustering {
   // query-invisible from the moment the tombstone lands, through
   // fold-in, forever.
 
-  private val prodLifeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(prodLifeMemo)
+  private val prodLifeMemo = new Memo[(SparkSession, String), (String, String)]
 
   /** Build (even half) → grow (odd half, frozen centroids) →
     * tombstone the q233 cohort. Returns (index table, tombstone
@@ -5221,8 +5127,7 @@ object Clustering {
     */
   private[graft] def ensureProdLifecycle(s: SparkSession, d: String)
       : (String, String) =
-    prodLifeMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("prod_lifecycle") {
+    prodLifeMemo((s, d), "prod_lifecycle") {
       val name = tableNameFor("graft_ivf_prod_", d)
       lifecycleBaseBuild(s, d, name)
       lifecycleGrow(s, d, name)
@@ -5231,7 +5136,7 @@ object Clustering {
       erasedVecIds(s, d).coalesce(1)
         .write.format("parquet").saveAsTable(dv)
       (name, dv)
-    })
+    }
 
   /** q286: the probe in both delete states on ONE table — stage 1
     * through the tombstone anti-join (no file rewritten yet), stage 2
@@ -5287,11 +5192,10 @@ object Clustering {
     * the shared deletion-request log.
     */
   private def ensureDvPair(
-      memo: java.util.concurrent.ConcurrentHashMap[
-        (SparkSession, String), (String, String)],
+      memo: Memo[(SparkSession, String), (String, String)],
       s: SparkSession, d: String, prefix: String,
       contents: => DataFrame, partCol: String): (String, String) =
-    memo.computeIfAbsent((s, d), _ => {
+    memo((s, d)) {
       val t = tableNameFor(s"graft_${prefix}_mor_", d)
       recreatePartitioned(s, t, contents, partCol)
       val dv = tableNameFor(s"graft_${prefix}_dv_", d)
@@ -5299,28 +5203,22 @@ object Clustering {
       erasedVecIds(s, d).coalesce(1)
         .write.format("parquet").saveAsTable(dv)
       (t, dv)
-    })
+    }
 
-  private val dvMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(dvMemo)
+  private val dvMemo = new Memo[(SparkSession, String), (String, String)]
 
   private[graft] def ensureDvIvf(s: SparkSession, d: String)
       : (String, String) =
     ensureDvPair(dvMemo, s, d, "ivf", ivfAssignment(s, d), "cell")
 
-  private val dvPqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(dvPqMemo)
+  private val dvPqMemo = new Memo[(SparkSession, String), (String, String)]
 
   private[graft] def ensureDvPq(s: SparkSession, d: String)
       : (String, String) =
     ensureDvPair(dvPqMemo, s, d, "pq",
       pqCodes(s, d).withColumn("pg", pmod(col("vec_id"), lit(8))), "pg")
 
-  private val dvBinMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(dvBinMemo)
+  private val dvBinMemo = new Memo[(SparkSession, String), (String, String)]
 
   private[graft] def ensureDvBin(s: SparkSession, d: String)
       : (String, String) =
@@ -5542,9 +5440,8 @@ object Clustering {
 
   private[graft] val FoldThresholdPct = 10L
 
-  private val polMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String)]()
-  graft.util.CacheRegistry.registerMemo(polMemo)
+  private val polMemo = new Memo[
+    (SparkSession, String), (String, String, String)]
 
   /** Build the policy fixture ONCE per (session, sf): the binary code
     * table partitioned by pg, its tombstone table, the measured
@@ -5555,8 +5452,7 @@ object Clustering {
     */
   private[graft] def ensureFoldinPolicy(s: SparkSession, d: String)
       : (String, String, String) =
-    polMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("foldin_policy") {
+    polMemo((s, d), "foldin_policy") {
       val bin = tableNameFor("graft_bin_pol_", d)
       recreatePartitioned(s, bin,
         signCodes(s, d).withColumn("pg", pmod(col("vec_id"), lit(8))), "pg")
@@ -5601,7 +5497,7 @@ object Clustering {
           .write.mode("overwrite").format("parquet").saveAsTable(dv)
       }
       (bin, dv, dec)
-    })
+    }
 
   /** q288: the fold-in decision table with its post-fold accounting —
     * per partition group: the pre-fold debt measurement, the decision,
@@ -5642,9 +5538,7 @@ object Clustering {
 
   private[graft] val CompactFileThreshold = 4L
 
-  private val cpolMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(cpolMemo)
+  private val cpolMemo = new Memo[(SparkSession, String), String]
 
   /** Build the fragmented fixture (pg k written as k+1 files), then
     * MEASURE → flag → compact the flagged partitions in place →
@@ -5654,8 +5548,7 @@ object Clustering {
     */
   private[graft] def ensureCompactionPolicy(s: SparkSession, d: String)
       : String =
-    cpolMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("compaction_policy") {
+    cpolMemo((s, d), "compaction_policy") {
       val name = tableNameFor("graft_bin_cpol_", d)
       val codes = signCodes(s, d)
         .withColumn("pg", pmod(col("vec_id"), lit(8)))
@@ -5681,7 +5574,7 @@ object Clustering {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"${graft.util.TmpDirs.scratch(tableNameFor("cpol_dec_", d))}/dec")
       name
-    })
+    }
 
   /** Files per partition group, MEASURED off the scan
     * (input_file_name), never assumed — ≤ #partitions output rows.
@@ -5719,17 +5612,14 @@ object Clustering {
   // POST-compaction row counts, and the spec pins the v1 unit files
   // size/mtime-identical across the policy run.
 
-  private val mpolMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(mpolMemo)
+  private val mpolMemo = new Memo[(SparkSession, String), String]
 
   /** v1 data-unit files (path → (size, mtime)) captured when v1 is
     * published, BEFORE the policy runs — the spec's byte-untouched
     * evidence.
     */
-  private[graft] val mpolV1Files = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val mpolV1Files = graft.util.CacheRegistry.newMap[
     (SparkSession, String), Map[String, (Long, Long)]]()
-  graft.util.CacheRegistry.registerMemo(mpolV1Files)
 
   private def measuredFileCountsOf(df: DataFrame): Map[Long, Long] =
     df.select(col("pg"), input_file_name().as("f"))
@@ -5737,8 +5627,7 @@ object Clustering {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
   private[graft] def ensureManifestPolicy(s: SparkSession, d: String): String =
-    mpolMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("manifest_policy") {
+    mpolMemo((s, d), "manifest_policy") {
       val root = graft.util.TmpDirs.scratchFor("bin_mpol", d)
       val codes = signCodes(s, d).withColumn("pg", pmod(col("vec_id"), lit(8)))
       // the planted gradient as IMMUTABLE units: pg k split into k+1
@@ -5786,7 +5675,7 @@ object Clustering {
         .coalesce(1).write.mode("overwrite")
         .parquet(s"${graft.util.TmpDirs.scratch(tableNameFor("mpol_dec_", d))}/dec")
       root
-    })
+    }
 
   /** q321: the manifest-routed compaction decision table — q295's
     * policy semantics (measured counts, ≥4 threshold, flagged → 1
@@ -5815,21 +5704,17 @@ object Clustering {
   // run 1 drains exactly the pre-tombstone query chunk, the cohort
   // lands, run 2 resumes from the same checkpoint for the rest.
 
-  private val swgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(swgeMemo)
+  private val swgeMemo = new Memo[(SparkSession, String), String]
 
   /** indexBuilds delta across the q322 serve runs (0 = the erasure
     * cost no rebuild) — recorded by the fixture itself, read by the
     * spec (the swgBuildDelta order-robust pattern).
     */
-  private[graft] val swgeServeBuilds = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val swgeServeBuilds = graft.util.CacheRegistry.newMap[
     (SparkSession, String), Int]()
-  graft.util.CacheRegistry.registerMemo(swgeServeBuilds)
 
   private[graft] def ensureSwgErasure(s: SparkSession, d: String): String =
-    swgeMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("swg_erasure") {
+    swgeMemo((s, d), "swg_erasure") {
       val (name, _) = ensureServeWhileGrowBin(s, d) // grown table, memoized
       val buildsAtStart = indexBuilds.get()
       val tableFiles = listDataFiles(tableLocation(s, name))
@@ -5899,7 +5784,7 @@ object Clustering {
       require(after == tableFiles,
         "mid-serve erasure must not rewrite the index table")
       out
-    })
+    }
 
   /** q322: the two-phase serve ledger — phase 1 (pre-tombstone
     * trigger) must equal the full-table Hamming search, phase 2 (next

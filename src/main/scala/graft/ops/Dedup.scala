@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Deduplication operators over `documents` (north-star LLM-pipeline
@@ -119,9 +120,7 @@ object Dedup {
     * reference, but dynamically 16 evaluations → md5 would be
     * recomputed per (hash, shingle) — measured 10× slower).
     */
-  private val bandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(bandsCache)
+  private val bandsCache = new Memo[(SparkSession, String), DataFrame]
   /** (doc_id, sig) → (doc_id, band_no, band) — 8 bands × 2 rows; shared
     * by the batch lshBands cache and the streaming incremental dedup
     * (graft.streaming.DedupStreams), so both paths band identically.
@@ -135,9 +134,8 @@ object Dedup {
       .withColumnRenamed("pos", "band_no")
       .withColumnRenamed("col", "band")
   private def lshBands(s: SparkSession, d: String): DataFrame =
-    bandsCache.computeIfAbsent((s, d), _ =>
-      graft.util.CacheRegistry.register(
-        bandsOf(signatures(documents(s, d))).cache()))
+    bandsCache((s, d))(graft.util.CacheRegistry.register(
+      bandsOf(signatures(documents(s, d))).cache()))
 
   /** Distinct LSH candidate pairs (band self-join). */
   private def candidatePairs(s: SparkSession, d: String): DataFrame = {
@@ -157,11 +155,9 @@ object Dedup {
   /** Candidate pairs scored with EXACT n-gram Jaccard, memoized per
     * (session, sf dir) — q28 and q51's component run both consume it.
     */
-  private val scoredCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(scoredCache)
+  private val scoredCache = new Memo[(SparkSession, String), DataFrame]
   private[ops] def scoredPairs(s: SparkSession, d: String): DataFrame =
-    scoredCache.computeIfAbsent((s, d), _ => graft.util.CacheRegistry.register {
+    scoredCache((s, d))(graft.util.CacheRegistry.register {
       import s.implicits._
       val texts = documents(s, d).select(col("doc_id"), col("text"))
       candidatePairs(s, d)
@@ -577,37 +573,34 @@ object Dedup {
     * state, gates re-read the batch-keyed sink dirs, first-touch cost
     * lands in the BuildCost ledger.
     */
-  private val ndRestartMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(ndRestartMemo)
+  private val ndRestartMemo = new Memo[(SparkSession, String), String]
 
   private def ensureNearDupRestart(s: SparkSession, d: String): String =
-    ndRestartMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("q300_neardup_restart_drive") {
-        val split = graft.util.TmpDirs.scratchFor("neardup-restart-split", d)
-        val out = graft.util.TmpDirs.scratchFor("neardup-restart-out", d)
-        val ckpt = graft.util.TmpDirs.scratchFor("neardup-restart-ckpt", d)
-        val docs = s.read.parquet(s"$d/documents.parquet")
-          .select(col("doc_id"), col("text"))
-        // exact-percentile doc_id boundaries (1-row bounded aggregate)
-        val bs = docs.agg(expr(
-            "percentile(doc_id, array(0.3333333333333333D, 0.6666666666666666D))")
-          .as("b")).collect()(0).getSeq[Double](0)
-        (0 until 3).foreach { k =>
-          val lo = if (k == 0) lit(true) else col("doc_id") > lit(bs(k - 1))
-          val hi = if (k == 2) lit(true) else col("doc_id") <= lit(bs(k))
-          graft.util.OrderedFeed.writeChunk(s"$split/c$k", k,
-            docs.filter(lo && hi))
-        }
-        val src = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$split/c*")
-        val flags = graft.streaming.DedupStreams.bandFlags(src).toDF()
-        EventAnalytics.crashRestartDrive(s, flags, ckpt, crashAt = 1L,
-          width = 8) { (batch, id) =>
-          batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
-        }
-        out
-      })
+    ndRestartMemo((s, d), "q300_neardup_restart_drive") {
+      val split = graft.util.TmpDirs.scratchFor("neardup-restart-split", d)
+      val out = graft.util.TmpDirs.scratchFor("neardup-restart-out", d)
+      val ckpt = graft.util.TmpDirs.scratchFor("neardup-restart-ckpt", d)
+      val docs = s.read.parquet(s"$d/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      // exact-percentile doc_id boundaries (1-row bounded aggregate)
+      val bs = docs.agg(expr(
+          "percentile(doc_id, array(0.3333333333333333D, 0.6666666666666666D))")
+        .as("b")).collect()(0).getSeq[Double](0)
+      (0 until 3).foreach { k =>
+        val lo = if (k == 0) lit(true) else col("doc_id") > lit(bs(k - 1))
+        val hi = if (k == 2) lit(true) else col("doc_id") <= lit(bs(k))
+        graft.util.OrderedFeed.writeChunk(s"$split/c$k", k,
+          docs.filter(lo && hi))
+      }
+      val src = s.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$split/c*")
+      val flags = graft.streaming.DedupStreams.bandFlags(src).toDF()
+      EventAnalytics.crashRestartDrive(s, flags, ckpt, crashAt = 1L,
+        width = 8) { (batch, id) =>
+        batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
+      }
+      out
+    }
 
   def streamNearDupRestart(s: SparkSession, d: String): DataFrame =
     graft.util.Mounts.parquet(s, ensureNearDupRestart(s, d))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DataTypes
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Event-stream analytics over the `events` table (SURVEY.md §2.2):
@@ -1414,9 +1415,8 @@ object EventAnalytics {
     * still proves mid-backlog recovery: one committed batch, one
     * crashed-and-replayed, one never-seen-by-run-1.
     */
-  private val chronoMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (String, org.apache.spark.sql.types.StructType)]()
-  graft.util.CacheRegistry.registerMemo(chronoMemo)
+  private val chronoMemo = new Memo[
+    (SparkSession, String, Int), (String, org.apache.spark.sql.types.StructType)]
 
   /** The chronological event chunks, built ONCE per (session, sf, n)
     * and shared READ-ONLY by every consumer that only streams from the
@@ -1427,11 +1427,10 @@ object EventAnalytics {
     */
   private[graft] def ensureChronoChunks(s: SparkSession, d: String,
       n: Int = 3): (String, org.apache.spark.sql.types.StructType) =
-    chronoMemo.computeIfAbsent((s, d, n), _ =>
-      graft.util.BuildCost.record(s"chrono_chunks_$n") {
+    chronoMemo((s, d, n), s"chrono_chunks_$n") {
       val split = graft.util.TmpDirs.scratchFor(s"chrono-split-$n", d)
       (split, chronoSplit(s, d, split, n))
-    })
+    }
 
   private def chronoSplit(s: SparkSession, d: String, split: String,
       n: Int = 3): org.apache.spark.sql.types.StructType = {
@@ -1511,23 +1510,20 @@ object EventAnalytics {
     * the batch-keyed sink dirs; first-touch cost lands in the
     * BuildCost ledger (bench `builds`).
     */
-  private val restartRecMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(restartRecMemo)
+  private val restartRecMemo = new Memo[(SparkSession, String), String]
 
   private def ensureRestartRecovery(s: SparkSession, d: String): String =
-    restartRecMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("q287_restart_drive") {
-        val out = graft.util.TmpDirs.scratchFor("restart-out", d)
-        val ckpt = graft.util.TmpDirs.scratchFor("restart-ckpt", d)
-        val (split, schema) = ensureChronoChunks(s, d)
-        val src = graft.util.Tables.normalizeTs(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(s"$split/c*"))
-        crashRestartRun(s, chainedJoinWindowAgg(src), out, ckpt,
-          crashAt = 1L, width = 4)
-        out
-      })
+    restartRecMemo((s, d), "q287_restart_drive") {
+      val out = graft.util.TmpDirs.scratchFor("restart-out", d)
+      val ckpt = graft.util.TmpDirs.scratchFor("restart-ckpt", d)
+      val (split, schema) = ensureChronoChunks(s, d)
+      val src = graft.util.Tables.normalizeTs(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          .parquet(s"$split/c*"))
+      crashRestartRun(s, chainedJoinWindowAgg(src), out, ckpt,
+        crashAt = 1L, width = 4)
+      out
+    }
 
   def streamRestartRecovery(s: SparkSession, d: String): DataFrame = {
     val path = s"$d/events.parquet"
@@ -1559,29 +1555,26 @@ object EventAnalytics {
     * ACROSS the crash boundary (state restored from the last commit)
     * must close identically to an uninterrupted run.
     */
-  private val sessRestartMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(sessRestartMemo)
+  private val sessRestartMemo = new Memo[(SparkSession, String), String]
 
   private def ensureSessionsRestart(s: SparkSession, d: String): String =
-    sessRestartMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("q296_sessrestart_drive") {
-        val out = graft.util.TmpDirs.scratchFor("sess-restart-out", d)
-        val ckpt = graft.util.TmpDirs.scratchFor("sess-restart-ckpt", d)
-        val (split, schema) = ensureChronoChunks(s, d)
-        val agg = graft.util.Tables.normalizeTs(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-              .parquet(s"$split/c*"))
-          .withWatermark("ts", "1 hour")
-          .groupBy(session_window(col("ts"), "30 minutes").as("w"),
-            col("user_id"))
-          .agg(count(lit(1)).as("n_events"))
-          .select(col("user_id"),
-            date_format(col("w.start"), TsFmt).as("session_start"),
-            col("n_events"))
-        crashRestartRun(s, agg, out, ckpt, crashAt = 1L, width = 8)
-        out
-      })
+    sessRestartMemo((s, d), "q296_sessrestart_drive") {
+      val out = graft.util.TmpDirs.scratchFor("sess-restart-out", d)
+      val ckpt = graft.util.TmpDirs.scratchFor("sess-restart-ckpt", d)
+      val (split, schema) = ensureChronoChunks(s, d)
+      val agg = graft.util.Tables.normalizeTs(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+            .parquet(s"$split/c*"))
+        .withWatermark("ts", "1 hour")
+        .groupBy(session_window(col("ts"), "30 minutes").as("w"),
+          col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"),
+          date_format(col("w.start"), TsFmt).as("session_start"),
+          col("n_events"))
+      crashRestartRun(s, agg, out, ckpt, crashAt = 1L, width = 8)
+      out
+    }
 
   def streamSessionsRestart(s: SparkSession, d: String): DataFrame = {
     val out = ensureSessionsRestart(s, d)

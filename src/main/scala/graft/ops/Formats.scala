@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataTypes
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Source/sink format breadth: the engine's row data round-trips
@@ -40,9 +41,8 @@ object Formats {
     * is the difference between touching ~z-tiles-in-box and touching
     * everything.
     */
-  private val zorderMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, (Long, Long, Long, Long))]()
-  graft.util.CacheRegistry.registerMemo(zorderMemo)
+  private val zorderMemo = new Memo[
+    (SparkSession, String), (String, String, (Long, Long, Long, Long))]
 
   /** Write both layouts once per (session, sf dir); returns the two
     * directories plus the (pLo, pHi, sLo, sHi) box bounds derived
@@ -87,7 +87,7 @@ object Formats {
 
   private[graft] def ensureZorderLayouts(s: SparkSession, d: String)
       : (String, String, (Long, Long, Long, Long)) =
-    zorderMemo.computeIfAbsent((s, d), _ => {
+    zorderMemo((s, d)) {
       val li = lineitem(s, d)
         .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"),
           col("l_returnflag"))
@@ -100,7 +100,7 @@ object Formats {
         .sortWithinPartitions(col("l_partkey"))
         .write.mode("overwrite").parquet(s"$dir/linear")
       (s"$dir/zorder", s"$dir/linear", zBox(bounds))
-    })
+    }
 
   def zorderLayout(s: SparkSession, d: String): DataFrame = {
     val (zdir, _, (pLo, pHi, sLo, sHi)) = ensureZorderLayouts(s, d)
@@ -127,13 +127,12 @@ object Formats {
   // spec measures what degrades and what is restored: delta files
   // are (nearly) all hit, the re-clustered table prunes like q281.
 
-  private val zmaintMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String, (Long, Long, Long, Long))]()
-  graft.util.CacheRegistry.registerMemo(zmaintMemo)
+  private val zmaintMemo = new Memo[
+    (SparkSession, String), (String, String, String, (Long, Long, Long, Long))]
 
   private[graft] def ensureZorderMaintenance(s: SparkSession, d: String)
       : (String, String, String, (Long, Long, Long, Long)) =
-    zmaintMemo.computeIfAbsent((s, d), _ => {
+    zmaintMemo((s, d)) {
       val li = lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_returnflag"))
@@ -154,7 +153,7 @@ object Formats {
           pMin, pMax, sMin, sMax, 16)
         .write.mode("overwrite").parquet(s"$dir/merged")
       (s"$dir/base", s"$dir/delta", s"$dir/merged", zBox(bounds))
-    })
+    }
 
   /** q285: the 2-D box rollup in both layout-lifecycle states —
     * degraded (base + ingest-ordered delta) and re-clustered. Both
@@ -191,9 +190,7 @@ object Formats {
   // fractions sit far from the threshold at every fixture sf, so the
   // decisions are properties of the cohort shape, not the sf.
 
-  private val zpolMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(zpolMemo)
+  private val zpolMemo = new Memo[(SparkSession, String), String]
 
   /** Build base + deltas, measure both cycles, EXECUTE the decisions
     * (stage 1: keep; stage 2: one z-rewrite of everything). Returns
@@ -201,7 +198,7 @@ object Formats {
     * only because stage 2 fired — merged/.
     */
   private[graft] def ensureZorderPolicy(s: SparkSession, d: String): String =
-    zpolMemo.computeIfAbsent((s, d), _ => {
+    zpolMemo((s, d)) {
       val li = lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_returnflag"))
@@ -243,7 +240,7 @@ object Formats {
       dec.toDF("stage", "n_total", "n_delta", "delta_pct", "recluster")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/decisions")
       dir
-    })
+    }
 
   /** q292: the two re-cluster decisions with their measurements —
     * pure integer arithmetic the oracle literalizes; the executed

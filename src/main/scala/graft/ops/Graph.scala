@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Distributed graph analytics over relationship graphs derived from
@@ -34,11 +35,9 @@ object Graph {
     * build instead of re-running the distinct per query (what a
     * production pipeline does by materializing the basket table).
     */
-  private val incMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(incMemo)
+  private val incMemo = new Memo[(SparkSession, String), DataFrame]
   private def incidence(s: SparkSession, d: String): DataFrame =
-    incMemo.computeIfAbsent((s, d), _ => graft.util.CacheRegistry.register(
+    incMemo((s, d))(graft.util.CacheRegistry.register(
       lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
@@ -57,32 +56,26 @@ object Graph {
     * directly, so the expensive pair aggregation runs once per session
     * instead of once per consumer (guide §1.2: remove repeated passes).
     */
-  private val pairCountMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(pairCountMemo)
+  private val pairCountMemo = new Memo[(SparkSession, String), DataFrame]
   private def pairCounts(s: SparkSession, d: String): DataFrame =
-    pairCountMemo.computeIfAbsent((s, d), _ =>
-      graft.util.CacheRegistry.register {
-        val li = incidence(s, d)
-        li.as("a").join(li.as("b"),
-            col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("u"), col("b.p").as("v"))
-          .agg(count(lit(1)).as("cuv"))
-          .cache()
-      })
+    pairCountMemo((s, d))(graft.util.CacheRegistry.register {
+      val li = incidence(s, d)
+      li.as("a").join(li.as("b"),
+          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+        .groupBy(col("a.p").as("u"), col("b.p").as("v"))
+        .agg(count(lit(1)).as("cuv"))
+        .cache()
+    })
 
-  private val edgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(edgeMemo)
+  private val edgeMemo = new Memo[(SparkSession, String, Long), DataFrame]
   private def copurchaseEdges(s: SparkSession, d: String,
       minSupport: Long): DataFrame =
-    edgeMemo.computeIfAbsent((s, d, minSupport), _ =>
-      graft.util.CacheRegistry.register {
-        pairCounts(s, d)
-          .filter(col("cuv") >= minSupport)
-          .select(col("u"), col("v"))
-          .cache()
-      })
+    edgeMemo((s, d, minSupport))(graft.util.CacheRegistry.register {
+      pairCounts(s, d)
+        .filter(col("cuv") >= minSupport)
+        .select(col("u"), col("v"))
+        .cache()
+    })
 
   /** Top parts by triangle participation in the co-purchase graph:
     * (part, n_triangles), n_triangles desc then part asc, top 10.
@@ -150,17 +143,14 @@ object Graph {
     * session, the same shared-stage accounting as copurchaseEdges
     * (guide §1.2: pass 1 pays the fill, CacheRegistry clears it).
     */
-  private val symAdjMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(symAdjMemo)
+  private val symAdjMemo = new Memo[(SparkSession, String, Long), DataFrame]
   private def symAdj(s: SparkSession, d: String, minSupport: Long): DataFrame =
-    symAdjMemo.computeIfAbsent((s, d, minSupport), _ =>
-      graft.util.CacheRegistry.register {
-        val e = copurchaseEdges(s, d, minSupport)
-        e.select(col("u").as("s"), col("v").as("t"))
-          .unionAll(e.select(col("v").as("s"), col("u").as("t")))
-          .cache()
-      })
+    symAdjMemo((s, d, minSupport))(graft.util.CacheRegistry.register {
+      val e = copurchaseEdges(s, d, minSupport)
+      e.select(col("u").as("s"), col("v").as("t"))
+        .unionAll(e.select(col("v").as("s"), col("u").as("t")))
+        .cache()
+    })
 
   /** Degree-attached adjacency (s, t, deg_s) + its node set, the
     * per-iteration probe tables of q130's PageRank — memo-CACHED per
@@ -168,12 +158,11 @@ object Graph {
     * count (a scalar of the algorithm) memoized alongside so repeat
     * calls skip the count job.
     */
-  private val degAdjMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (DataFrame, DataFrame, Long)]()
-  graft.util.CacheRegistry.registerMemo(degAdjMemo)
+  private val degAdjMemo = new Memo[
+    (SparkSession, String, Long), (DataFrame, DataFrame, Long)]
   private def degAdj(s: SparkSession, d: String,
       minSupport: Long): (DataFrame, DataFrame, Long) =
-    degAdjMemo.computeIfAbsent((s, d, minSupport), _ => {
+    degAdjMemo((s, d, minSupport)) {
       val sa = symAdj(s, d, minSupport)
       val deg = sa.groupBy(col("s").as("n")).agg(count(lit(1)).as("deg"))
       val adj = graft.util.CacheRegistry.register(
@@ -181,23 +170,22 @@ object Graph {
           .select(col("s"), col("t"), col("deg")).cache())
       val (nodes, nN) = graphNodes(s, d, minSupport)
       (adj, nodes, nN)
-    })
+    }
 
   /** The graph's node set + its count, memo-CACHED per (session, sf
     * dir, minSupport): q130/q133/q227/q268 each need the node catalog
     * (or just its size, for the localized-iterate guard below) and
     * each used to re-derive it per call.
     */
-  private val nodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), (DataFrame, Long)]()
-  graft.util.CacheRegistry.registerMemo(nodesMemo)
+  private val nodesMemo = new Memo[
+    (SparkSession, String, Long), (DataFrame, Long)]
   private def graphNodes(s: SparkSession, d: String,
       minSupport: Long): (DataFrame, Long) =
-    nodesMemo.computeIfAbsent((s, d, minSupport), _ => {
+    nodesMemo((s, d, minSupport)) {
       val nodes = graft.util.CacheRegistry.register(
         symAdj(s, d, minSupport).select(col("s").as("n")).distinct().cache())
       (nodes, nodes.count())
-    })
+    }
 
   /** The localized-iterate guard — the same decision rule as
     * [[maybeBroadcastNodes]]: when a node-sized table provably fits the

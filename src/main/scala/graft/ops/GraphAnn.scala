@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Graph-based ANN — the HNSW-family index (Malkov & Yashunin 2016,
@@ -118,9 +119,7 @@ object GraphAnn {
   private def maxLevelFor(n: Long): Int =
     math.max(2, (63 - java.lang.Long.numberOfLeadingZeros(n)) - 3)
 
-  private val hnswMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Int, Long)]()
-  graft.util.CacheRegistry.registerMemo(hnswMemo)
+  private val hnswMemo = new Memo[(SparkSession, String), (String, Int, Long)]
 
   /** Build the layered k-NN graph once per (session, corpus): returns
     * (edge-table dir, maxLevel, entry node id). Edge table layout:
@@ -152,8 +151,7 @@ object GraphAnn {
     * corpus rescan); the prune is one shuffle over ~n·2M edge rows.
     */
   private[graft] def ensureHnsw(s: SparkSession, d: String): (String, Int, Long) =
-    hnswMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_base") {
+    hnswMemo((s, d), "hnsw_base") {
       val raw = graft.util.TmpDirs.scratchFor("hnsw_raw", d)
       val loc = graft.util.TmpDirs.scratchFor("hnsw_edges", d)
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -215,7 +213,7 @@ object GraphAnn {
         .write.mode("overwrite").partitionBy("layer").parquet(loc)
       hnswBuilds.incrementAndGet()
       (loc, maxLevel, entryRow)
-    })
+    }
 
   /** The layered edge construction for an arbitrary (vec_id,
     * embedding) node set — shared by the full q316 build and the
@@ -382,9 +380,7 @@ object GraphAnn {
     embeddings(s, d).filter(col("vec_id") % 100 === 7)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
 
-  private val evalBeamMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(evalBeamMemo)
+  private val evalBeamMemo = new Memo[(SparkSession, String), DataFrame]
 
   /** ONE broadcast-path descent of the fixed eval queries at ef = 8
     * over the q316 base graph, memoized per (session, sf) — the r12
@@ -398,11 +394,10 @@ object GraphAnn {
     * rows are identical whether it descends alone or in a union.
     */
   private[graft] def evalBeam8(s: SparkSession, d: String): DataFrame =
-    evalBeamMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_eval_descent") {
-        val (loc, maxLevel, entry) = ensureHnsw(s, d)
-        beamSweepOn(s, d, loc, maxLevel, entry, evalQueries(s, d), Seq(8))
-      })
+    evalBeamMemo((s, d), "hnsw_eval_descent") {
+      val (loc, maxLevel, entry) = ensureHnsw(s, d)
+      beamSweepOn(s, d, loc, maxLevel, entry, evalQueries(s, d), Seq(8))
+    }
 
   private def exactTop5(s: SparkSession, d: String, qs: DataFrame): DataFrame =
     exactTop5On(qs,
@@ -435,9 +430,7 @@ object GraphAnn {
       .select(col("ef"), col("query_id"), col("vec_id"))
   }
 
-  private val recallMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Map[Int, Double]]()
-  graft.util.CacheRegistry.registerMemo(recallMemo)
+  private val recallMemo = new Memo[(SparkSession, String), Map[Int, Double]]
 
   /** Corpus-level recall@5 per sweep ef, memoized — q316 and q317
     * together cost one build + one search. The ef = 8 point rides the
@@ -445,8 +438,7 @@ object GraphAnn {
     * sweep-specific widths {2, 32} descend here.
     */
   private[graft] def recalls(s: SparkSession, d: String): Map[Int, Double] =
-    recallMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_recalls") {
+    recallMemo((s, d), "hnsw_recalls") {
       val qs = evalQueries(s, d)
       val ann = beamTop5(
         beamSweep(s, d, qs, SweepFloors.map(_._1).filterNot(_ == 8))
@@ -465,7 +457,7 @@ object GraphAnn {
         r.getLong(1).toDouble / r.getLong(2)).toMap
       m.foreach { case (ef, r) => gateRecalls.put((d, s"sweep_ef$ef"), r) }
       m
-    })
+    }
 
   /** q316: HNSW build + beam probe at ef = 8 — one row per eval query
     * asserting the corpus-level recall@5 meets the declared floor, the
@@ -522,16 +514,13 @@ object GraphAnn {
     */
   private val EfInsert = 24
 
-  private val grownMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Int, Long)]()
-  graft.util.CacheRegistry.registerMemo(grownMemo)
+  private val grownMemo = new Memo[(SparkSession, String), (String, Int, Long)]
 
   /** Base-graph files captured before growth (spec evidence that
     * appends touched nothing).
     */
-  private[graft] val grownBaseFiles = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val grownBaseFiles = graft.util.CacheRegistry.newMap[
     (SparkSession, String), Map[String, (Long, Long)]]()
-  graft.util.CacheRegistry.registerMemo(grownBaseFiles)
 
   /** Build the base graph on the even half, then insert the odd half
     * in two deterministic batches (residue 1 mod 4, then 3 mod 4) —
@@ -541,8 +530,7 @@ object GraphAnn {
     */
   private[graft] def ensureHnswGrown(s: SparkSession, d: String)
       : (String, Int, Long) =
-    grownMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_grown") {
+    grownMemo((s, d), "hnsw_grown") {
       val loc = graft.util.TmpDirs.scratchFor("hnsw_grown", d)
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val base = e.filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -561,7 +549,7 @@ object GraphAnn {
           e.filter(pmod(col("vec_id"), lit(4)) === r))
       }
       (loc, maxLevel, entry)
-    })
+    }
 
   /** Attach one batch: beam-search the current graph with the batch
     * as the query relation, connect each new vector to its top-M
@@ -624,9 +612,7 @@ object GraphAnn {
     * per gate call only re-measures Spark job latency (the recallMemo
     * discipline; registered, so Verify/Bench passes clear them).
     */
-  private val gateMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), Seq[Boolean]]()
-  graft.util.CacheRegistry.registerMemo(gateMemo)
+  private val gateMemo = new Memo[(SparkSession, String, String), Seq[Boolean]]
 
   /** Measured gate recall values, RECORDED at evaluation time keyed
     * (sfDir, gate) — the runner-records pattern: the floor-tightening
@@ -637,9 +623,8 @@ object GraphAnn {
     * snapshot BEFORE its closing clear(), so the feedback loop keeps
     * its data.
     */
-  private[graft] val gateRecalls = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val gateRecalls = graft.util.CacheRegistry.newMap[
     (String, String), Double]()
-  graft.util.CacheRegistry.registerMemo(gateRecalls)
 
   /** Corpus recall@5 of `ann` vs `exact`, one action, recorded. */
   private def recallOf(ann: DataFrame, exact: DataFrame,
@@ -658,14 +643,13 @@ object GraphAnn {
     recallOf(ann, exact, d, gate) >= floor
 
   def hnswGrowProbe(s: SparkSession, d: String): DataFrame = {
-    val met = gateMemo.computeIfAbsent((s, d, "grow"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_grow") {
+    val met = gateMemo((s, d, "grow"), "hnsw_gate_grow") {
       val (loc, maxLevel, entry) = ensureHnswGrown(s, d)
       val qs = evalQueries(s, d)
       val ann = beamTop5(beamSweepOn(s, d, loc, maxLevel, entry, qs, Seq(8)))
         .select(col("query_id"), col("vec_id"))
       Seq(recallMet(ann, exactTop5(s, d, qs), d, "grow"))
-    }).head
+    }.head
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 7)
       .select(col("query_id"), lit(met).as("recall_floor_met"))
@@ -714,8 +698,7 @@ object GraphAnn {
     * self-query ef, not a weaker gate.
     */
   def hnswErasureProbe(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "erasure"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_erasure") {
+    val flags = gateMemo((s, d, "erasure"), "hnsw_gate_erasure") {
       val qs = evalQueries(s, d)
       val tomb = Clustering.erasedVecIds(s, d)
       val ghostQs = embeddings(s, d).filter(col("vec_id") % 97 === 0)
@@ -754,7 +737,7 @@ object GraphAnn {
       val exact = exactTop5On(allQs, eSurv)
       Seq(leaked == 0L, recallMet(served, exact, d, "erasure"),
         rawSelfHits == nGhosts)
-    })
+    }
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 7)
       .select(col("query_id"), lit(flags(0)).as("no_tombstone_served"),
@@ -779,9 +762,8 @@ object GraphAnn {
     * pins the row set + TRUE.
     */
   def hnswStreamServe(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "stream-serve"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_streamserve")(
-        hnswStreamServeDrive(s, d)))
+    val flags = gateMemo((s, d, "stream-serve"), "hnsw_gate_streamserve")(
+      hnswStreamServeDrive(s, d))
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 7)
       .select(col("query_id"), lit(flags(0)).as("equals_batch_probe"),
@@ -835,14 +817,11 @@ object GraphAnn {
   // searched, recomputes the identical edges, and overwrites its own
   // orphaned dir (exactly-once by layout, q287 discipline).
 
-  private val hnswGrMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Int, Long)]()
-  graft.util.CacheRegistry.registerMemo(hnswGrMemo)
+  private val hnswGrMemo = new Memo[(SparkSession, String), (String, Int, Long)]
 
   private[graft] def ensureHnswGrowRestart(s: SparkSession, d: String)
       : (String, Int, Long) =
-    hnswGrMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_growrestart") {
+    hnswGrMemo((s, d), "hnsw_growrestart") {
       val loc = graft.util.TmpDirs.scratchFor("hnsw_growrestart", d)
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val base = e.filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -875,7 +854,7 @@ object GraphAnn {
           .parquet(s"$loc/gb=${id + 1}")
       }
       (loc, maxLevel, entry)
-    })
+    }
 
   /** Test seam: recompute an insert batch's edges under a gb cap —
     * GraphAnnSpec pins the stored replayed batch edge-equal to this.
@@ -892,14 +871,13 @@ object GraphAnn {
     * (q31 gate; the layout/commit facts are spec-pinned).
     */
   def hnswGrowRestart(s: SparkSession, d: String): DataFrame = {
-    val met = gateMemo.computeIfAbsent((s, d, "grow-restart"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_growrestart") {
+    val met = gateMemo((s, d, "grow-restart"), "hnsw_gate_growrestart") {
       val (loc, maxLevel, entry) = ensureHnswGrowRestart(s, d)
       val qs = evalQueries(s, d)
       val ann = beamTop5(beamSweepOn(s, d, loc, maxLevel, entry, qs, Seq(8)))
         .select(col("query_id"), col("vec_id"))
       Seq(recallMet(ann, exactTop5(s, d, qs), d, "grow-restart"))
-    }).head
+    }.head
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 7)
       .select(col("query_id"), lit(met).as("recall_floor_met"))
@@ -1115,17 +1093,15 @@ object GraphAnn {
       .parquet(s"$loc/layer=$layer")
   }
 
-  private val foldMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Int, Long, String)]()
-  graft.util.CacheRegistry.registerMemo(foldMemo)
+  private val foldMemo = new Memo[
+    (SparkSession, String), (String, Int, Long, String)]
 
   /** Folded-table files captured AFTER the copy and BEFORE the fold —
     * the spec proves clean layers byte-identical across the policy
     * and flagged layers actually rewritten.
     */
-  private[graft] val foldPreFiles = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val foldPreFiles = graft.util.CacheRegistry.newMap[
     (SparkSession, String), Map[String, (Long, Long)]]()
-  graft.util.CacheRegistry.registerMemo(foldPreFiles)
 
   /** Build the fold fixture ONCE per (session, sf): copy the GROWN
     * graph (q323's — it carries real degree-overshoot debt) into its
@@ -1135,8 +1111,7 @@ object GraphAnn {
     */
   private[graft] def ensureHnswFold(s: SparkSession, d: String)
       : (String, Int, Long, String) =
-    foldMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_fold") {
+    foldMemo((s, d), "hnsw_fold") {
       val (gloc, maxLevel, entry) = ensureHnswGrown(s, d)
       val loc = graft.util.TmpDirs.scratchFor("hnsw_fold", d)
       val dec = graft.util.TmpDirs.scratchFor("hnsw_fold_dec", d)
@@ -1174,7 +1149,7 @@ object GraphAnn {
           "post_edges", "post_ghost", "post_maxdeg", "pre_maxdeg")
         .coalesce(1).write.mode("overwrite").parquet(dec)
       (loc, maxLevel, entry, dec)
-    })
+    }
 
   /** q327: the fold-in decision table as deterministic booleans — the
     * measured flag set must equal the planted pattern (layers 0-1),
@@ -1211,8 +1186,7 @@ object GraphAnn {
     * vs the survivor-exact baseline holds the declared floor.
     */
   def hnswFoldinProbe(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "foldin"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_foldin") {
+    val flags = gateMemo((s, d, "foldin"), "hnsw_gate_foldin") {
       val (loc, maxLevel, entry, _) = ensureHnswFold(s, d)
       val qs = evalQueries(s, d)
       val cohort = foldCohort(s, d, maxLevel)
@@ -1246,7 +1220,7 @@ object GraphAnn {
       Seq(leaked == 0L, selfHits == 0L && nGhosts > 0L,
         recallMet(served.join(broadcast(qs.select(col("query_id"))),
           Seq("query_id"), "left_semi"), exact, d, "foldin", floor = 0.40))
-    })
+    }
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 7)
       .select(col("query_id"), lit(flags(0)).as("no_tombstone_served"),
@@ -1279,23 +1253,19 @@ object GraphAnn {
   // write; clean layers cost zero bytes in v2 — their units are
   // SHARED with v1 by name.
 
-  private val mfoldMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.util.CacheRegistry.registerMemo(mfoldMemo)
+  private val mfoldMemo = new Memo[(SparkSession, String), (String, String)]
 
   /** v1 unit files (path → (size, mtime)) captured when v1 publishes,
     * BEFORE the fold — the spec's byte-untouched evidence.
     */
-  private[graft] val mfoldV1Files = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val mfoldV1Files = graft.util.CacheRegistry.newMap[
     (SparkSession, String), Map[String, (Long, Long)]]()
-  graft.util.CacheRegistry.registerMemo(mfoldV1Files)
 
   /** Unit names per manifest version — the spec's sharing evidence
     * (clean layers appear in BOTH manifests under the same unit).
     */
-  private[graft] val mfoldManifests = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val mfoldManifests = graft.util.CacheRegistry.newMap[
     (SparkSession, String), Map[Long, Map[Long, String]]]()
-  graft.util.CacheRegistry.registerMemo(mfoldManifests)
 
   /** Build the manifest-fold fixture once per (session, sf): publish
     * the grown graph as per-layer immutable units (manifest v1),
@@ -1305,8 +1275,7 @@ object GraphAnn {
     */
   private[graft] def ensureHnswFoldManifest(s: SparkSession, d: String)
       : (String, String) =
-    mfoldMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_mfold") {
+    mfoldMemo((s, d), "hnsw_mfold") {
       val (gloc, maxLevel, _) = ensureHnswGrown(s, d) // read-only source
       val root = graft.util.TmpDirs.scratchFor("hnsw_mfold", d)
       val dec = graft.util.TmpDirs.scratchFor("hnsw_mfold_dec", d)
@@ -1384,7 +1353,7 @@ object GraphAnn {
           "v1_reader_intact", "equals_inplace_fold")
         .coalesce(1).write.mode("overwrite").parquet(dec)
       (root, dec)
-    })
+    }
 
   /** q334: the manifest-routed fold-in decision table — q327's policy
     * semantics with snapshot isolation: per layer, the planted flag
@@ -1519,15 +1488,14 @@ object GraphAnn {
   }
 
   def hnswStaleness(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "staleness"), _ =>
-      graft.util.BuildCost.record("hnsw_staleness") {
-        val corpus = graft.util.CacheRegistry.register(
-          graphDriftCorpus(s, d).cache())
-        val (staleHits, freshHits, nExact) =
-          staleAuditRun(s, d, corpus, "drift")
-        Seq(staleTriggerFires(staleHits, freshHits, nExact),
-          freshHits.toDouble / nExact >= ProbeFloor)
-      })
+    val flags = gateMemo((s, d, "staleness"), "hnsw_staleness") {
+      val corpus = graft.util.CacheRegistry.register(
+        graphDriftCorpus(s, d).cache())
+      val (staleHits, freshHits, nExact) =
+        staleAuditRun(s, d, corpus, "drift")
+      Seq(staleTriggerFires(staleHits, freshHits, nExact),
+        freshHits.toDouble / nExact >= ProbeFloor)
+    }
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 51)
       .select(col("query_id"), lit(flags(0)).as("rebuild_trigger"),
@@ -1548,15 +1516,14 @@ object GraphAnn {
     * Round12OpsSpec) while the drift run clears it with a wide margin.
     */
   def hnswStalenessControl(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "staleness-ctl"), _ =>
-      graft.util.BuildCost.record("hnsw_staleness_ctl") {
-        val corpus = graft.util.CacheRegistry.register(
-          embeddings(s, d).select(col("vec_id"), col("embedding")).cache())
-        val (staleHits, freshHits, nExact) =
-          staleAuditRun(s, d, corpus, "ctl")
-        Seq(!staleTriggerFires(staleHits, freshHits, nExact),
-          staleHits.toDouble / nExact >= ProbeFloor)
-      })
+    val flags = gateMemo((s, d, "staleness-ctl"), "hnsw_staleness_ctl") {
+      val corpus = graft.util.CacheRegistry.register(
+        embeddings(s, d).select(col("vec_id"), col("embedding")).cache())
+      val (staleHits, freshHits, nExact) =
+        staleAuditRun(s, d, corpus, "ctl")
+      Seq(!staleTriggerFires(staleHits, freshHits, nExact),
+        staleHits.toDouble / nExact >= ProbeFloor)
+    }
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 51)
       .select(col("query_id"), lit(flags(0)).as("trigger_quiet"),
@@ -1588,9 +1555,7 @@ object GraphAnn {
       maxBytes: Long = DescentBroadcastMaxBytes): String =
     if (edgeBytes <= maxBytes) "broadcast" else "bucketed"
 
-  private val bucketMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Int, Long)]()
-  graft.util.CacheRegistry.registerMemo(bucketMemo)
+  private val bucketMemo = new Memo[(SparkSession, String), (String, Int, Long)]
 
   /** The q316 graph re-persisted as a layer-partitioned, src-bucketed
     * TABLE — the hop join's co-location artifact. Built once per
@@ -1598,8 +1563,7 @@ object GraphAnn {
     */
   private[graft] def ensureHnswBucketed(s: SparkSession, d: String)
       : (String, Int, Long) =
-    bucketMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_bucketed") {
+    bucketMemo((s, d), "hnsw_bucketed") {
       val (loc, maxLevel, entry) = ensureHnsw(s, d)
       val name = Clustering.tableNameFor("graft_hnsw_edges_", d)
       Clustering.dropAndCleanLocation(s, name)
@@ -1608,7 +1572,7 @@ object GraphAnn {
         .partitionBy("layer").bucketBy(8, "src").sortBy("src")
         .saveAsTable(name)
       (name, maxLevel, entry)
-    })
+    }
 
   /** Size-driven descent entry: route the sweep through broadcast
     * hops or bucketed hops by the measured edge-table footprint — the
@@ -1642,8 +1606,7 @@ object GraphAnn {
     * two-way set difference) and hold the recall floor.
     */
   def hnswBucketedProbe(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "bucketed"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_bucketed") {
+    val flags = gateMemo((s, d, "bucketed"), "hnsw_gate_bucketed") {
       val (name, maxLevel, entry) = ensureHnswBucketed(s, d)
       val (loc, _, _) = ensureHnsw(s, d)
       val qs = evalQueries(s, d)
@@ -1659,7 +1622,7 @@ object GraphAnn {
         viaBroadcast.exceptAll(viaBuckets).count()
       Seq(diff == 0L,
         recallMet(viaBuckets, exactTop5(s, d, qs), d, "bucketed"))
-    })
+    }
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 7)
       .select(col("query_id"), lit(flags(0)).as("equals_broadcast_probe"),
@@ -1680,8 +1643,7 @@ object GraphAnn {
   // broadcast descent.
 
   def hnswAutoDescent(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "auto-descent"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_autodescent") {
+    val flags = gateMemo((s, d, "auto-descent"), "hnsw_gate_autodescent") {
       val (loc, _, _) = ensureHnsw(s, d)
       val qs = evalQueries(s, d)
       // the decision under the lowered budget, read from the router's
@@ -1695,7 +1657,7 @@ object GraphAnn {
         viaBroadcast.exceptAll(viaAuto).count()
       Seq(decided == "bucketed", diff == 0L,
         recallMet(viaAuto, exactTop5(s, d, qs), d, "auto-descent"))
-    })
+    }
     embeddings(s, d).select(col("vec_id").as("query_id"))
       .filter(col("query_id") % 100 === 7)
       .select(col("query_id"), lit(flags(0)).as("auto_routed_bucketed"),
@@ -1756,16 +1718,14 @@ object GraphAnn {
   // composition is the q282/q273 discipline and a named round-14
   // candidate.
 
-  private val gdprMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Long, Seq[Boolean])]]()
-  graft.util.CacheRegistry.registerMemo(gdprMemo)
+  private val gdprMemo = new Memo[
+    (SparkSession, String), Seq[(Long, Seq[Boolean])]]
 
   /** (root, v0 data files (path → (size, mtime)) captured at genesis)
     * — the spec's zero-edge-write / immutability evidence.
     */
-  private[graft] val gdprV0Files = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val gdprV0Files = graft.util.CacheRegistry.newMap[
     (SparkSession, String), (String, Map[String, (Long, Long)])]()
-  graft.util.CacheRegistry.registerMemo(gdprV0Files)
 
   /** The chain's two descents (pre-fold ≡ v0/v1 edges, post-fold ≡ v2
     * edges; queries = eval ∪ self-probe subcohort), localCheckpointed —
@@ -1773,14 +1733,12 @@ object GraphAnn {
     * instead of re-descending (the evalBeam8 cost-sharing discipline;
     * sound because the descent is per-(ef, query) independent).
     */
-  private[graft] val gdprBeams = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val gdprBeams = graft.util.CacheRegistry.newMap[
     (SparkSession, String), (DataFrame, DataFrame)]()
-  graft.util.CacheRegistry.registerMemo(gdprBeams)
 
   private[graft] def ensureHnswGdprLedger(s: SparkSession, d: String)
       : Seq[(Long, Seq[Boolean])] =
-    gdprMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_gdpr_chain") {
+    gdprMemo((s, d), "hnsw_gdpr_chain") {
       val (_, maxLevel, entry) = ensureHnswGrown(s, d) // read-only
       // the immutable grown/folded units the q334 fixture already
       // holds — genesis HARDLINKS the grown layers (zero data bytes;
@@ -1957,7 +1915,7 @@ object GraphAnn {
           rawReach(v) == nSub, selfServed == nSub, leaked == 0L,
           consistent, sharedOk(v), recallOk(v), v0Intact)
       }
-    })
+    }
 
   /** q338: the ledger — one row per version, every column a measured
     * boolean over the manifest-resolved surfaces (see the block
@@ -2014,14 +1972,12 @@ object GraphAnn {
   // flagged-layer writes + one KB rename, full stop. Nothing pauses
   // the stream.
 
-  private val sfoldMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(sfoldMemo)
+  private val sfoldMemo = new Memo[
+    (SparkSession, String), Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensureHnswStreamFold(s: SparkSession, d: String)
       : Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean)] =
-    sfoldMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_stream_fold") {
+    sfoldMemo((s, d), "hnsw_stream_fold") {
       val (_, maxLevel, entry) = ensureHnswGrown(s, d)
       // the stream rides the q342 BUCKETED SNAPSHOT TABLE — its OWN
       // manifest chain (smanifest/) carries only the layer → ever
@@ -2139,7 +2095,7 @@ object GraphAnn {
         (id, v, hdr.getBoolean(1), equalsRef, selfStateOk,
           hdr.getBoolean(2))
       }
-    })
+    }
 
   /** q339: one row per micro-batch — the resolved manifest version,
     * whether the fold was already on disk when the batch descended,
@@ -2188,15 +2144,13 @@ object GraphAnn {
   // included (the r13 scale-killer is gone from BOTH streaming
   // gates). Recovery cost = one replayed batch, the family rule.
 
-  private val srestartMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val srestartMemo = new Memo[
     (SparkSession, String),
-    Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(srestartMemo)
+    Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensureHnswServeRestart(s: SparkSession, d: String)
       : Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean)] =
-    srestartMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_serve_restart") {
+    srestartMemo((s, d), "hnsw_serve_restart") {
       val (_, maxLevel, entry) = ensureHnswGrown(s, d)
       ensureHnswStreamFold(s, d) // the shared chain, beams, and feed
       val (bname, flagged, _) = ensureGdprBucketed(s, d)
@@ -2336,7 +2290,7 @@ object GraphAnn {
         (id, v, hdr.getBoolean(1), equalsRef, replayStable, selfStateOk,
           hdr.getBoolean(2))
       }
-    })
+    }
 
   /** q341: one row per micro-batch of the crash-restart drive — the
     * resolved (pinned) version, the MEASURED replay witness (the sink
@@ -2376,14 +2330,12 @@ object GraphAnn {
   // witness is MEASURED (data files byte-listed before/after the
   // commit), not asserted.
 
-  private val dvMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Long, Boolean, Boolean, Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(dvMemo)
+  private val dvMemo = new Memo[
+    (SparkSession, String), Seq[(Long, Boolean, Boolean, Boolean, Boolean)]]
 
   private[graft] def ensureGdprDvCommit(s: SparkSession, d: String)
       : Seq[(Long, Boolean, Boolean, Boolean, Boolean)] =
-    dvMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_gdpr_dv") {
+    dvMemo((s, d), "hnsw_gdpr_dv") {
       ensureHnswGdprLedger(s, d)
       val (root, _) = gdprV0Files.get((s, d))
       val chainV1 = Audit.manifestUnits(s, root, 1L)
@@ -2429,7 +2381,7 @@ object GraphAnn {
         val dvActive = Audit.readNSnapshot(s, dvRoot, v)("dv").count() > 0L
         (v, dvActive, eq, zeroStaged, u("corpus") == "data/base")
       }
-    })
+    }
 
   /** q343: per version — DV active, the resolved survivor set equal
     * to q338's full-flip corpus unit (v0: the full registry), the
@@ -2473,9 +2425,8 @@ object GraphAnn {
   // on a bucketed table — and the predicate flips, which is the q334
   // manifest commit realized in table-partition form.
 
-  private val gbucketMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Set[Int], Boolean)]()
-  graft.util.CacheRegistry.registerMemo(gbucketMemo)
+  private val gbucketMemo = new Memo[
+    (SparkSession, String), (String, Set[Int], Boolean)]
 
   /** Returns (table name, flagged layers — derived from the chain's
     * MANIFESTS: exactly the layers whose v2 unit differs from v1's —
@@ -2483,8 +2434,7 @@ object GraphAnn {
     */
   private[graft] def ensureGdprBucketed(s: SparkSession, d: String)
       : (String, Set[Int], Boolean) =
-    gbucketMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_gdpr_bucketed") {
+    gbucketMemo((s, d), "hnsw_gdpr_bucketed") {
       ensureHnswGdprLedger(s, d)
       val (root, _) = gdprV0Files.get((s, d))
       val (_, maxLevel, _) = ensureHnswGrown(s, d)
@@ -2513,7 +2463,7 @@ object GraphAnn {
         when(col("layer").isin(flagged.toSeq: _*), 2).otherwise(1)
       val shuffleFree = hopPlanShuffleFree(s, d, name, resolveV2)
       (name, flagged, shuffleFree)
-    })
+    }
 
   /** The executed-plan witness for a snapshot-resolved hop through
     * the (ever, layer) bucketed table: a bounded 20-row probe joins
@@ -2545,8 +2495,7 @@ object GraphAnn {
     * the block comment).
     */
   def hnswBucketedSnapshot(s: SparkSession, d: String): DataFrame = {
-    val flags = gateMemo.computeIfAbsent((s, d, "bucketed-snapshot"), _ =>
-      graft.util.BuildCost.record("hnsw_gate_bucketsnap") {
+    val flags = gateMemo((s, d, "bucketed-snapshot"), "hnsw_gate_bucketsnap") {
       val (name, flagged, shuffleFree) = ensureGdprBucketed(s, d)
       val (_, maxLevel, entry) = ensureHnswGrown(s, d)
       val subQs = embeddings(s, d)
@@ -2572,7 +2521,7 @@ object GraphAnn {
       val noClean2 = s.table(name).filter(col("ever") === 2 &&
         !col("layer").isin(flagged.toSeq: _*)).count() == 0L
       Seq(equal(0), equal(1), noClean2, shuffleFree)
-    })
+    }
     import s.implicits._
     Seq((1L, flags(0), flags(2), flags(3)), (2L, flags(1), flags(2), flags(3)))
       .toDF("snapshot_version", "equals_broadcast_descent",
@@ -2646,14 +2595,11 @@ object GraphAnn {
       .saveAsTable(name)
   }
 
-  private val incFoldMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Boolean]]()
-  graft.util.CacheRegistry.registerMemo(incFoldMemo)
+  private val incFoldMemo = new Memo[(SparkSession, String), Seq[Boolean]]
 
   private[graft] def ensureIncrementalFold(s: SparkSession, d: String)
       : Seq[Boolean] =
-    incFoldMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_incremental_fold") {
+    incFoldMemo((s, d), "hnsw_incremental_fold") {
       val (name, flagged, maxLevel) =
         everTableFromChain(s, d, "graft_gdpr_inc_")
       val (incRoot, _) = gdprV0Files.get((s, d))
@@ -2695,7 +2641,7 @@ object GraphAnn {
       }
       val shuffleFree = hopPlanShuffleFree(s, d, name, resolve(2L))
       Seq(equal(0), equal(1), pinned, onlyFlagged, shuffleFree)
-    })
+    }
 
   /** q347: per snapshot version — the incrementally-folded table's
     * descent equals the broadcast reference, the pre-fold partitions
@@ -2804,14 +2750,12 @@ object GraphAnn {
     (live.intersect(all), swept, fenced)
   }
 
-  private val pgcMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long, Seq[Boolean])]()
-  graft.util.CacheRegistry.registerMemo(pgcMemo)
+  private val pgcMemo = new Memo[
+    (SparkSession, String), (Long, Long, Seq[Boolean])]
 
   private[graft] def ensurePartitionGc(s: SparkSession, d: String)
       : (Long, Long, Seq[Boolean]) =
-    pgcMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_partition_gc") {
+    pgcMemo((s, d), "hnsw_partition_gc") {
       val (_, maxLevel, entry) = ensureHnswGrown(s, d)
       // own table instance + manifest chain (the q347 incremental
       // build: ever=1 genesis, fold appended as ever=2 partitions)
@@ -2865,7 +2809,7 @@ object GraphAnn {
         srcAns.exceptAll(gcAns).count() == 0L
       (liveKept.size.toLong, dead.size.toLong,
         Seq(deadGone, serveOk, preScan > 0L, postScan == 0L))
-    })
+    }
 
   /** q349: one gate row — deterministic kept/swept PARTITION counts
     * (the head predicate maps maxLevel+1 partitions; exactly the
@@ -2905,14 +2849,12 @@ object GraphAnn {
   // Scale shape: the fences add one bounded stage-manifest read and
   // one mtime stat per dead dir; the sweep still reads no data.
 
-  private val pgcRaceMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]()
-  graft.util.CacheRegistry.registerMemo(pgcRaceMemo)
+  private val pgcRaceMemo = new Memo[
+    (SparkSession, String), (Long, Long, Long, Seq[Boolean])]
 
   private[graft] def ensurePartitionGcRace(s: SparkSession, d: String)
       : (Long, Long, Long, Seq[Boolean]) =
-    pgcRaceMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("partition_gc_race") {
+    pgcRaceMemo((s, d), "partition_gc_race") {
       val (name, flagged, maxLevel) =
         everTableFromChain(s, d, "graft_gdpr_race_")
       val (root, _) = gdprV0Files.get((s, d))
@@ -2979,7 +2921,7 @@ object GraphAnn {
       (kept.size.toLong, swept.size.toLong, fenced.size.toLong,
         Seq(inflightSurvive, oldOrphanGone, youngFenced, headOk,
           foldResolves))
-    })
+    }
 
   /** q360: one gate row — deterministic kept/swept/fenced partition
     * counts (the maxLevel+1 v1 pairs + the 2 staged fold pairs kept;
@@ -3032,17 +2974,15 @@ object GraphAnn {
   // window — and the serve path underneath is the q342 bucketed
   // descent, edge-side shuffle-free per hop.
 
-  private val maintMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val maintMemo = new Memo[
     (SparkSession, String),
     Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(maintMemo)
+      Boolean, Boolean)]]
 
   private[graft] def ensureMaintLoop(s: SparkSession, d: String)
       : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
         Boolean, Boolean)] =
-    maintMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_maint_loop") {
+    maintMemo((s, d), "hnsw_maint_loop") {
       val (_, maxLevel, entry) = ensureHnswGrown(s, d)
       ensureHnswGdprLedger(s, d)
       val (root, _) = gdprV0Files.get((s, d))
@@ -3201,7 +3141,7 @@ object GraphAnn {
             selfStateOk, bytesOk, hdr.getBoolean(3), statsMatch(c))
         }
       }
-    })
+    }
 
   /** q346: per (chain, micro-batch) — the resolved version, the
     * measured trigger decision, whether THIS batch's measurement
@@ -3255,17 +3195,15 @@ object GraphAnn {
   // trigger (zero data read); recovery cost = one replayed batch +
   // one manifest rename, the family rule.
 
-  private val maintRstMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val maintRstMemo = new Memo[
     (SparkSession, String),
     Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]()
-  graft.util.CacheRegistry.registerMemo(maintRstMemo)
+      Boolean, Boolean)]]
 
   private[graft] def ensureMaintRestart(s: SparkSession, d: String)
       : Seq[(Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean, Boolean,
         Boolean, Boolean)] =
-    maintRstMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_maint_restart") {
+    maintRstMemo((s, d), "hnsw_maint_restart") {
       val (_, maxLevel, entry) = ensureHnswGrown(s, d)
       ensureHnswGdprLedger(s, d)
       val (root, _) = gdprV0Files.get((s, d))
@@ -3422,7 +3360,7 @@ object GraphAnn {
           equalsRef, selfStateOk, exactlyOnce, hdr.getBoolean(4),
           statsMatch)
       }
-    })
+    }
 
   /** q350: one row per micro-batch of the maintenance crash-restart —
     * the replayed batch finds the orphaned staged fold (its own pin),
@@ -3478,9 +3416,8 @@ object GraphAnn {
   // prices a full read of what remains, which is what a GDPR audit
   // costs; production runs it per retention window, not per query.
 
-  private val gcMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long, Seq[Boolean])]()
-  graft.util.CacheRegistry.registerMemo(gcMemo)
+  private val gcMemo = new Memo[
+    (SparkSession, String), (Long, Long, Seq[Boolean])]
 
   /** Hardlink clone: directories recreated, files linked (same inode —
     * zero data bytes; clone deletions cannot touch source bytes).
@@ -3498,8 +3435,7 @@ object GraphAnn {
 
   private[graft] def ensureGdprGc(s: SparkSession, d: String)
       : (Long, Long, Seq[Boolean]) =
-    gcMemo.computeIfAbsent((s, d), _ =>
-      graft.util.BuildCost.record("hnsw_gdpr_gc") {
+    gcMemo((s, d), "hnsw_gdpr_gc") {
       ensureHnswGdprLedger(s, d) // the source chain
       val (srcRoot, _) = gdprV0Files.get((s, d))
       val (_, maxLevel, entry) = ensureHnswGrown(s, d)
@@ -3553,7 +3489,7 @@ object GraphAnn {
         srcAns.exceptAll(gcAns).count() == 0L
       (live.size.toLong, swept.size.toLong,
         Seq(expiredGone, serveOk, preScan > 0L, postScan == 0L))
-    })
+    }
 
   /** q340: one gate row — deterministic kept/swept unit counts plus
     * the four measured GC witnesses (see the block comment).

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.LogPump
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Oracle-checked end-to-end exercise of the ENTIRE pump dataflow
@@ -54,11 +55,9 @@ object PumpOps {
     * set, so only the first of the two pays the render+write (same
     * shared-stage timing caveat as the LSH caches — see CacheRegistry).
     */
-  private val fixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(fixtureCache)
+  private val fixtureCache = new Memo[(SparkSession, String), String]
   private def fixtureDir(s: SparkSession, d: String): String =
-    fixtureCache.computeIfAbsent((s, d), _ => {
+    fixtureCache((s, d)) {
       val perFile = rendered(s, d)
         .groupBy(col("fname"))
         .agg(concat_ws("\n", collect_list(col("record"))).as("content"))
@@ -72,7 +71,7 @@ object PumpOps {
         Files.writeString(dir.resolve(r.getString(0)), r.getString(1) + "\n")
       }
       dir.toString
-    })
+    }
 
   /** Render → write .log fixture files → pump → comparable projection. */
   def pumpRoundTrip(s: SparkSession, d: String): DataFrame =
@@ -180,11 +179,9 @@ object PumpOps {
     * boundary shape (99:99. still matches the assembler's start
     * pattern) so assembly is exercised, only the transform rejects.
     */
-  private val corruptCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.util.CacheRegistry.registerMemo(corruptCache)
+  private val corruptCache = new Memo[(SparkSession, String), String]
   private def corruptFixtureDir(s: SparkSession, d: String): String =
-    corruptCache.computeIfAbsent((s, d), _ => {
+    corruptCache((s, d)) {
       // corrupt by regex on the record itself, keyed by the rendered
       // event id after the '-' separator
       val corrupted = rendered(s, d)
@@ -214,7 +211,7 @@ object PumpOps {
         Files.writeString(dir.resolve(r.getString(0)), r.getString(1) + "\n")
       }
       dir.toString
-    })
+    }
 
   /** q245: the q244 dead-letter accounting through the STREAMING
     * techlog DSv2 source — the corrupt fixtures are tailed by the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** Text-analysis operators over the `documents` table (SURVEY.md §2.2 /
@@ -171,12 +172,10 @@ object TextAnalysis {
     * it three times — df filter, both join sides) — the q124-q128
     * gram-table sharing discipline.
     */
-  private val winnowMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(winnowMemo)
+  private val winnowMemo = new Memo[(SparkSession, String), DataFrame]
 
   private def winnowSelected(s: SparkSession, d: String): DataFrame =
-    winnowMemo.computeIfAbsent((s, d), _ =>
+    winnowMemo((s, d))(
       graft.util.CacheRegistry.register(winnowSelectedUncached(s, d).cache()))
 
   private def winnowSelectedUncached(s: SparkSession, d: String): DataFrame =
@@ -525,11 +524,9 @@ object TextAnalysis {
     * stage shared by q62 and the q262 governance card — computed once
     * per (session, sf dir), plan-pinned by Round8OpsSpec.
     */
-  private val qualityCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(qualityCache)
+  private val qualityCache = new Memo[(SparkSession, String), DataFrame]
   private[graft] def docQuality(s: SparkSession, d: String): DataFrame =
-    qualityCache.computeIfAbsent((s, d), _ => graft.util.CacheRegistry.register {
+    qualityCache((s, d))(graft.util.CacheRegistry.register {
       val nTok = size(toks)
       val nStop = size(filter(toks, t => t === "the" || t === "a"))
       documents(s, d)
@@ -801,11 +798,9 @@ object TextAnalysis {
     * as a memo-CACHED stage shared by q231 and the q262 governance
     * card.
     */
-  private val noveltyCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(noveltyCache)
+  private val noveltyCache = new Memo[(SparkSession, String), DataFrame]
   private[graft] def docNovelty(s: SparkSession, d: String): DataFrame =
-    noveltyCache.computeIfAbsent((s, d), _ => graft.util.CacheRegistry.register {
+    noveltyCache((s, d))(graft.util.CacheRegistry.register {
       val grams = documents(s, d)
         .withColumn("ws", toks)
         .select(col("doc_id"), col("lang"), col("source"), expr(
@@ -971,16 +966,15 @@ object TextAnalysis {
     * consumer (guide §1.2; the pairCounts/dblVecs shared-stage
     * convention: pass 1 pays the fill, CacheRegistry clears it).
     */
-  private val fusionMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame)]()
-  graft.util.CacheRegistry.registerMemo(fusionMemo)
+  private val fusionMemo = new Memo[
+    (SparkSession, String, Int), (DataFrame, DataFrame)]
   private[graft] def fusionRankings(s: SparkSession, d: String,
       topN: Int): (DataFrame, DataFrame) =
-    fusionMemo.computeIfAbsent((s, d, topN), _ => {
+    fusionMemo((s, d, topN)) {
       val (lex, sem) = fusionRankingsUncached(s, d, topN)
       (graft.util.CacheRegistry.register(lex.cache()),
         graft.util.CacheRegistry.register(sem.cache()))
-    })
+    }
 
   private def fusionRankingsUncached(s: SparkSession, d: String,
       topN: Int): (DataFrame, DataFrame) = {

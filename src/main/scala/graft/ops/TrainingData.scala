@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
 import graft.util.Tables._
 
 /** End-to-end training-data pipeline compositions — the north-star
@@ -90,11 +91,9 @@ object TrainingData {
     * memo-CACHED frame shared by q90 and the q262 governance card —
     * the gram-hash sweep runs once per (session, sf dir).
     */
-  private val contamCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(contamCache)
+  private val contamCache = new Memo[(SparkSession, String), DataFrame]
   private[graft] def contaminatedIds(s: SparkSession, d: String): DataFrame =
-    contamCache.computeIfAbsent((s, d), _ => graft.util.CacheRegistry.register {
+    contamCache((s, d))(graft.util.CacheRegistry.register {
       val grams = gramHashes(s, d)
       val evalGrams = grams.filter(col("doc_id") % 97 === 0)
         .select(col("g")).distinct()
@@ -288,14 +287,11 @@ object TrainingData {
     * instance canonicalizes differently), so the sharing must happen
     * at this layer, like the Tables catalog.
     */
-  private val posGramsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(DataFrame, Int), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(posGramsMemo)
+  private val posGramsMemo = new Memo[(DataFrame, Int), DataFrame]
 
   private def posGrams(docs: DataFrame, k: Int): DataFrame =
-    posGramsMemo.computeIfAbsent((docs, k), { kk =>
-      graft.util.CacheRegistry.register(posGramsUncached(kk._1, kk._2).cache())
-    })
+    posGramsMemo((docs, k))(
+      graft.util.CacheRegistry.register(posGramsUncached(docs, k).cache()))
 
   private def posGramsUncached(docs: DataFrame, k: Int): DataFrame = {
     import docs.sparkSession.implicits._
@@ -689,13 +685,11 @@ object TrainingData {
     * control rows, so the memo holds the algorithm's parameters, not
     * data.
     */
-  private val mergesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Seq[(Long, String, String, Long)]]()
-  graft.util.CacheRegistry.registerMemo(mergesMemo)
+  private val mergesMemo = new Memo[
+    (SparkSession, String, Int), Seq[(Long, String, String, Long)]]
   private def learnedMerges(s: SparkSession, d: String,
       iters: Int): Seq[(Long, String, String, Long)] =
-    mergesMemo.computeIfAbsent((s, d, iters), _ =>
-      bpeMergeSeq(documents(s, d), iters))
+    mergesMemo((s, d, iters))(bpeMergeSeq(documents(s, d), iters))
 
   private[graft] def bpeMergesOn(docs: DataFrame, iters: Int): DataFrame = {
     val s = docs.sparkSession
@@ -1046,11 +1040,9 @@ object TrainingData {
     * Rides the memoized Dedup.scoredPairs — the MinHash/shingle work
     * is computed once per (session, sf dir) across the whole family.
     */
-  private val dedupMarksCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  graft.util.CacheRegistry.registerMemo(dedupMarksCache)
+  private val dedupMarksCache = new Memo[(SparkSession, String), DataFrame]
   private[graft] def dedupMarks(s: SparkSession, d: String): DataFrame =
-    dedupMarksCache.computeIfAbsent((s, d), _ => graft.util.CacheRegistry.register {
+    dedupMarksCache((s, d))(graft.util.CacheRegistry.register {
       val docs = documents(s, d).select(col("doc_id"), col("lang"), col("source"),
         md5(col("text")).as("fp"),
         size(split(col("text"), "\\s+")).cast("long").as("nt"))

@@ -56,6 +56,13 @@ object LogPump {
     */
   private val RouteCol = "__route"
 
+  /** The id of the streaming query running this batch, if any — both
+    * sinks' pipeline key. Spark keeps it in the checkpoint, so it
+    * survives a restart and changes when the checkpoint is recreated.
+    */
+  private def streamingQueryId(spark: SparkSession): Option[String] =
+    Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+
   /** K1 parquet sink with EXACTLY-ONCE micro-batch replay, in ONE
     * Spark write per micro-batch. Published layout, per routed table:
     *
@@ -100,8 +107,7 @@ object LogPump {
       defaultTable: String, outDir: String, batchId: Long): Unit = {
     val spark = rows.sparkSession
     val tables = (defaultTable +: tableMap.values.toSeq).distinct.toIndexedSeq
-    val pipeline = Option(spark.sparkContext
-      .getLocalProperty("sql.streaming.queryId")).fold("")(_ + "-")
+    val pipeline = streamingQueryId(spark).fold("")(_ + "-")
     val stagingRoot = new Path(s"$outDir/_staging")
     val staging = new Path(stagingRoot, s"${pipeline}batch_id=$batchId")
     val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
@@ -201,12 +207,14 @@ object LogPump {
     * window: a crash between a partial append and the marker insert
     * re-appends that batch (the non-transactional-sink limit);
     * ClickHouse absorbs it with ReplacingMergeTree (q76's semantics).
+    * A marker is keyed by (streaming query id, batch id); outside a
+    * streaming query the query id is "default".
     * Returns false when the batch was skipped as already committed.
     */
   def idempotentJdbcBatch(batch: DataFrame, batchId: Long,
       tableMap: Map[String, String], defaultTable: String, url: String,
-      props: java.util.Properties = new java.util.Properties(),
-      pipelineId: String = "default"): Boolean = {
+      props: java.util.Properties = new java.util.Properties()): Boolean = {
+    val pipeline = streamingQueryId(batch.sparkSession).getOrElse("default")
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
       // existence via catalog metadata, NOT try-create-and-swallow: a
@@ -221,14 +229,15 @@ object LogPump {
         try st.executeUpdate(markerTableDdl(url))
         finally st.close()
       }
-      // markers are keyed by (pipeline, batch id): batch ids restart
-      // from 0 per query/checkpoint, so a bare batch_id key would make
-      // independent pipelines (or a fresh-checkpoint reprocess) skip
-      // each other's batches — silent data loss
+      // markers are keyed by (query id, batch id): batch ids restart
+      // from 0 per query/checkpoint, so a bare batch_id key (or a key
+      // that outlives a deleted checkpoint) would make independent
+      // pipelines, or a fresh-checkpoint reprocess, skip each other's
+      // batches — silent data loss
       val check = conn.prepareStatement(
         "SELECT 1 FROM graft_batch_commits WHERE pipeline = ? AND batch_id = ?")
       val committed = try {
-        check.setString(1, pipelineId); check.setLong(2, batchId)
+        check.setString(1, pipeline); check.setLong(2, batchId)
         val rs = check.executeQuery()
         try rs.next() finally rs.close()
       } finally check.close()
@@ -237,7 +246,7 @@ object LogPump {
         writeRoutedJdbc(batch, tableMap, defaultTable, url, props)
         val mark = conn.prepareStatement(
           "INSERT INTO graft_batch_commits VALUES (?, ?)")
-        try { mark.setString(1, pipelineId); mark.setLong(2, batchId); mark.executeUpdate() }
+        try { mark.setString(1, pipeline); mark.setLong(2, batchId); mark.executeUpdate() }
         finally mark.close()
         true
       }

@@ -7,9 +7,10 @@ package graft.util
   * 2× regression in a build would never reach the headline number,
   * and 600× pass spreads polluted the noise block instead). So every
   * expensive ensure* records its build seconds here FROM INSIDE its
-  * memo's computeIfAbsent lambda — memo hits never re-enter, so the
-  * ledger holds exactly the first-touch costs — and Bench emits the
-  * snapshot as the artifact's `builds` section, covered by the same
+  * memo's fill — a [[Memo]] call given a label wraps the fill in
+  * `record(label)`; memo hits never re-enter the fill, so the ledger
+  * holds exactly the first-touch costs — and Bench emits the snapshot
+  * as the artifact's `builds` section, covered by the same
   * round-over-round comparison as the query times.
   *
   * Nesting discipline (r12 advice): gate records wrap fixture
@@ -29,7 +30,7 @@ object BuildCost {
 
   // per-thread stack of child-time accumulators: the top entry
   // collects the full elapsed time of every direct child record so
-  // the enclosing record can subtract it. Memo lambdas run on the
+  // the enclosing record can subtract it. Memo fills run on the
   // caller's thread, so same-thread nesting is the only shape that
   // occurs (computeIfAbsent never migrates threads).
   private val childNanos = new ThreadLocal[java.util.ArrayDeque[Array[Long]]] {

@@ -14,13 +14,12 @@ object Tables {
     * re-planning the scan 40 times (a per-query fixed cost at bench
     * scale). This is the engine's stand-in for a table catalog.
     */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  CacheRegistry.registerMemo(cache)
+  private val cache = new Memo[(SparkSession, String), DataFrame]
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      k => k._1.read.parquet(k._2))
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    cache((spark, path))(spark.read.parquet(path))
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

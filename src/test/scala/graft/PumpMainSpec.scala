@@ -149,6 +149,33 @@ class PumpMainSpec extends AnyFunSuite {
     } finally queries.foreach(_.stop())
   }
 
+  test("startAll JDBC: a recreated checkpoint re-ingests instead of hitting the old batch markers") {
+    // an operator deletes a directory's checkpoint and restarts at the
+    // same path to re-ingest: batch ids restart at 0, and the first
+    // run's markers must not make the new query skip its batches
+    val dir = Files.createTempDirectory("graft-main-reingest")
+    Files.writeString(dir.resolve("25052607.log"),
+      "00:01.000001-1,CONN,2,Usr=a\n00:02.000001-2,CONN,2,Usr=b\n")
+    val url = s"jdbc:derby:memory:reingest${System.nanoTime()};create=true"
+    val ckpt = Files.createTempDirectory("graft-main-reingest-ckpt")
+    val conf = writeConfig(Seq("Main" -> dir))
+    def sunk(): Seq[String] =
+      try spark.read.format("jdbc").option("url", url).option("dbtable", "logs")
+        .load().collect().map(_.getAs[String]("User")).toSeq.sorted
+      catch { case _: Throwable => Seq.empty } // table not created yet
+    def run(expected: Seq[String]): Unit = {
+      val queries = PumpMain.startAll(spark, conf, None, ckpt.toString,
+        jdbcUrlOverride = Some(url))
+      try assert(eventually(90000) { sunk() == expected }, s"got ${sunk()}")
+      finally queries.foreach(_.stop())
+    }
+    run(Seq("a", "b"))
+    val main = ckpt.resolve("Main")
+    Files.walk(main).sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+    run(Seq("a", "a", "b", "b"))
+  }
+
   test("main's wait returns with the failure of one of two pumps") {
     // directory A's pump fails at its sink (sql_logs holds the legacy
     // layout the lake sink refuses) while directory B's keeps running

@@ -87,7 +87,7 @@ class PumpResumeSpec extends AnyFunSuite {
       .trigger(Trigger.ProcessingTime("250 milliseconds"))
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         val wrote = graft.pipeline.LogPump.idempotentJdbcBatch(
-          batch, id, Map.empty, "LOGS", url, pipelineId = cp)
+          batch, id, Map.empty, "LOGS", url)
         // the injection point: the sink committed THIS batch, the
         // checkpoint commit log has not yet recorded it — the exact
         // window the reference handles by dropping the batch

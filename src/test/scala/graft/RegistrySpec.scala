@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract registry consistency: a typo'd key would silently
@@ -34,5 +36,21 @@ class RegistrySpec extends AnyFunSuite {
     // deterministic bound-check gate rows — has a DuckDB oracle
     assert(SparkEntry.oracleSql.size == 365)
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  }
+
+  test("ops memos use graft.util.Memo, never a hand-rolled registered map") {
+    val ops = java.nio.file.Paths.get("src/main/scala/graft/ops")
+    assert(java.nio.file.Files.isDirectory(ops), s"${ops.toAbsolutePath} missing")
+    val banned = Seq("registerMemo(", "new java.util.concurrent.ConcurrentHashMap")
+    val stream = java.nio.file.Files.walk(ops)
+    val hits = try stream.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if banned.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
+        }
+      }
+      finally stream.close()
+    if (hits.nonEmpty) fail(hits.mkString("hand-rolled memo maps:\n", "\n", ""))
   }
 }
