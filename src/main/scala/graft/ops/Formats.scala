@@ -24,8 +24,8 @@ object Formats {
     * ZORDER BY) behind 2-D selective scans. Both keys are ranked into
     * 10-bit buckets (bounds read once — a 1-row driver scalar, the
     * q151 bounded-control-data discipline) and bit-interleaved into a
-    * Morton code; `repartitionByRange(z) + sortWithinPartitions(z)`
-    * writes files whose (partkey, suppkey) min/max boxes tile BOTH
+    * Morton code; exact z-quantile tiles + `sortWithinPartitions(z)`
+    * write files whose (partkey, suppkey) min/max boxes tile BOTH
     * dimensions, so a wide-partkey × narrow-suppkey box prunes most
     * files — a linear partkey sort cannot prune on suppkey at all
     * (Round9OpsSpec measures the file-hit counts on both layouts and
@@ -34,24 +34,25 @@ object Formats {
     * lossless, with the box bounds derived from the same integer
     * min/max arithmetic in both engines.
     *
-    * Scale shape: one range shuffle on the 20-bit z key (the exact
-    * cost of any clustered rewrite), paid once per maintenance cycle;
-    * after it, every 2-D selective query prunes at file AND row-group
-    * granularity instead of scanning the full table — at 100 TB this
-    * is the difference between touching ~z-tiles-in-box and touching
-    * everything.
+    * Scale shape: one quantile aggregate and one shuffle on the 20-bit
+    * z key (the exact cost of any clustered rewrite), paid once per
+    * maintenance cycle; after it, every 2-D selective query prunes at
+    * file AND row-group granularity instead of scanning the full
+    * table — at 100 TB this is the difference between touching
+    * ~z-tiles-in-box and touching everything.
     */
   private val zorderMemo = new Memo[
     (SparkSession, String), (String, String, (Long, Long, Long, Long))]
 
-  /** Write both layouts once per (session, sf dir); returns the two
-    * directories plus the (pLo, pHi, sLo, sHi) box bounds derived
-    * from the key min/max with pure integer arithmetic (mirrored by
-    * the oracle).
-    */
   /** Morton-sort `df` on the 10-bit bucket ranks of (l_partkey,
-    * l_suppkey) under the given key bounds, into `parts` range
-    * partitions.
+    * l_suppkey) under the given key bounds, into `parts` files that
+    * tile the z curve at its exact quantiles. The layout is a function
+    * of the data alone: `repartitionByRange` would sample its bounds
+    * with a seed taken from the RDD id, so the files' key boxes (and
+    * the measured pruning) would vary with how many RDDs the session
+    * made before. The quantiles come from one exact `percentile`
+    * aggregate, whose value→count map is bounded by the 2^20 z values
+    * at any row count; z tile i goes to partition i.
     */
   private def zSorted(df: DataFrame, pMin: Long, pMax: Long,
       sMin: Long, sMax: Long, parts: Int): DataFrame = {
@@ -65,10 +66,18 @@ object Formats {
       s"(shiftleft(shiftright(rp, $i) & 1, ${2 * i + 1}) | " +
         s"shiftleft(shiftright(rs, $i) & 1, ${2 * i}))")
       .mkString(" | ")
-    df.withColumn("rp", rp).withColumn("rs", rs)
-      .withColumn("z", expr(zBits))
-      .repartitionByRange(parts, col("z")).sortWithinPartitions(col("z"))
-      .drop("rp", "rs", "z")
+    val zd = df.withColumn("rp", rp).withColumn("rs", rs)
+      .withColumn("z", expr(zBits)).drop("rp", "rs")
+    val cuts = (1 until parts).map(i => s"${i.toDouble / parts}").mkString(", ")
+    val bounds = zd.agg(expr(s"percentile(z, array($cuts))")).collect()(0)
+      .getSeq[Double](0).map(math.floor)
+    val tiled = zd.withColumn("tile",
+      bounds.foldLeft(lit(0))((n, b) => n + (col("z") > b).cast("int")))
+    // HashPartitioner sends a small non-negative Int key k to partition k
+    val byTile = tiled.rdd.keyBy(_.getAs[Int]("tile"))
+      .partitionBy(new org.apache.spark.HashPartitioner(parts)).values
+    df.sparkSession.createDataFrame(byTile, tiled.schema)
+      .sortWithinPartitions(col("z")).drop("tile", "z")
   }
 
   private def zKeyBounds(s: SparkSession, d: String)
@@ -85,6 +94,11 @@ object Formats {
       sMin + (sMax - sMin) / 10, sMin + (sMax - sMin) / 5)
   }
 
+  /** Write both layouts once per (session, sf dir); returns the two
+    * directories plus the (pLo, pHi, sLo, sHi) box bounds derived
+    * from the key min/max with pure integer arithmetic (mirrored by
+    * the oracle).
+    */
   private[graft] def ensureZorderLayouts(s: SparkSession, d: String)
       : (String, String, (Long, Long, Long, Long)) =
     zorderMemo((s, d)) {

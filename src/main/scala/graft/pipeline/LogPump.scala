@@ -63,6 +63,12 @@ object LogPump {
   private def streamingQueryId(spark: SparkSession): Option[String] =
     Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
 
+  /** Hadoop conf of the lake sink's staging write and publish: fork-free
+    * local FS, no `_SUCCESS` marker.
+    */
+  private val StagingOpts = graft.util.LocalFs.Conf +
+    ("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+
   /** K1 parquet sink with EXACTLY-ONCE micro-batch replay, in ONE
     * Spark write per micro-batch. Published layout, per routed table:
     *
@@ -85,6 +91,17 @@ object LogPump {
     *     N are deleted from every candidate table, then each staged
     *     file is renamed into `<table>/batch_id=N/EventDate=d/`;
     *  3. the staging dir (and `_staging`, once empty) is removed.
+    *
+    * Local sinks (`file:` outDir) write through [[graft.util.LocalFs]]
+    * on both sides — the staging job's executors via the write's
+    * options, which Spark folds into that job's Hadoop conf, and the
+    * driver's publish `fs` via the same conf. Without Hadoop's native
+    * library the stock local FS forks a `chmod` for every file, `.crc`
+    * and directory it creates (37 per batch of perfbench's `tail`
+    * workload), and those forks were most of the sink's fixed cost per
+    * micro-batch. Modes, `.crc`
+    * sidecars and layout are unchanged. The staging job writes no
+    * `_SUCCESS` marker: publish goes by rename and nothing reads it.
     *
     * Crash windows: a crash in (1) publishes nothing, and an earlier
     * attempt's complete batch stays readable. A crash in (2) leaves
@@ -110,13 +127,13 @@ object LogPump {
     val pipeline = streamingQueryId(spark).fold("")(_ + "-")
     val stagingRoot = new Path(s"$outDir/_staging")
     val staging = new Path(stagingRoot, s"${pipeline}batch_id=$batchId")
-    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = staging.getFileSystem(spark.sessionState.newHadoopConfWithOptions(StagingOpts))
     fs.delete(staging, true)
     try {
       rows.withColumn(RouteCol, route(tableMap, defaultTable)(t => tables.indexOf(t)))
         .repartition(col(RouteCol), col("EventDate"))
         .sortWithinPartitions(RouteCol, "EventDate", "EventTime")
-        .write.partitionBy(RouteCol, "EventDate")
+        .write.options(StagingOpts).partitionBy(RouteCol, "EventDate")
         .parquet(staging.toString)
 
       val staged = Option(fs.globStatus(

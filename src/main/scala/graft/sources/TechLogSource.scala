@@ -125,7 +125,9 @@ object TechLogSource {
         // local fast path: Hadoop's RawLocalFileSystem (no native lib)
         // FORKS A SHELL PER FILE to load permission bits during
         // listing — ~8 ms × every rotated file, on the driver, every
-        // plan. NIO walks the tree without touching permissions.
+        // plan. NIO walks the tree without touching permissions. The
+        // same missing native lib makes it fork a `chmod` per created
+        // file; the lake sink avoids that through graft.util.LocalFs.
         val visitor = new LocalLogFiles(Paths.get(uri.getPath), matches)
         Files.walkFileTree(visitor.root, visitor)
         visitor.found.result()

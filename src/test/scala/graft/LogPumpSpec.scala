@@ -5,6 +5,7 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.LogPump
@@ -306,6 +307,28 @@ class LogPumpSpec extends AnyFunSuite {
     // the replay of batch 0 carries other rows: they replace batch 0 whole
     LogPump.writeRoutedExactlyOnce(all.filter("User like 'u1-%'"), Map.empty, "logs", outDir, 0L)
     assert(users() == (Seq((1, "u0-1")) ++ (0 until 40).map(i => (0, s"u1-$i"))).sorted)
+  }
+
+  test("publish: files and dirs carry the stock modes; no _staging or _SUCCESS stays") {
+    val outDir = Files.createTempDirectory("graft-sink-modes")
+    val rows = LogPump.pumpBatch(spark, shuffledHours(2).toString)
+    LogPump.writeRoutedExactlyOnce(rows, Map("DBMSSQL" -> "sql_logs"), "logs",
+      outDir.toString, 0L)
+    // what Hadoop's stock local FS gives a created file and dir
+    val umask = FsPermission.getUMask(spark.sessionState.newHadoopConf())
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toShort.toInt
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toShort.toInt
+    val st = Files.walk(outDir)
+    val all = try st.iterator().asScala.filter(_ != outDir).toSeq finally st.close()
+    val names = all.map(_.getFileName.toString)
+    assert(names.exists(_.endsWith(".parquet")) &&
+      names.exists(n => n.startsWith(".") && n.endsWith(".parquet.crc")), names)
+    assert(!names.exists(n => n.contains("_staging") || n.contains("_SUCCESS")), names)
+    all.foreach { p =>
+      val mode = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+      val want = if (Files.isDirectory(p)) dirMode else fileMode
+      assert(mode == want, s"$p: ${mode.toOctalString}, want ${want.toOctalString}")
+    }
   }
 
   test("publish: an empty batch creates no table dir") {

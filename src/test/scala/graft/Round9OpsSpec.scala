@@ -103,14 +103,12 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(mergedHit < degradedHit,
       s"re-clustering must restore pruning: merged $mergedHit/$mergedTotal " +
         s"vs degraded $degradedHit/$degradedTotal")
-    // and the merged table prunes like q281's full-table z-order.
-    // Bound is ≤10/16, not ≤8/16: repartitionByRange samples its
-    // boundaries from the input in FILE-ENUMERATION order, and a
-    // fixture REBUILD (CacheRegistry.clear() between suites) rolls new
-    // part-file UUIDs, reordering the listing — measured box hits vary
-    // 6-9/16 across rebuilds of identical data (r12). The pruning
-    // CLAIM (the box scan skips a large fraction of files while the
-    // ingest-ordered layout cannot skip any) is what's pinned.
+    // and the merged table prunes like q281's full-table z-order
+    // (7/16 at sf0.001, the same on every rebuild: Formats.zSorted's
+    // layout is a function of the data alone). The ≤10/16 bound pins
+    // the pruning CLAIM (the box scan skips a large fraction of files
+    // while the ingest-ordered layout cannot skip any), not one
+    // fixture's count.
     assert(mergedHit <= 10,
       s"re-clustered table must prune at least 6 of its files: $mergedHit/16")
   }

@@ -14,7 +14,7 @@ sf="${1:-/root/testdata/sf0.01}"
 queries="q40_pump_roundtrip,q91_dsv2_roundtrip,q244_pump_dlq,q245_stream_dlq"
 specs="graft.TechLogSourceSpec graft.RecordAssemblerSpec graft.StreamingPumpSpec
   graft.PumpResumeSpec graft.PumpMainSpec graft.LogPumpSpec graft.ConfigSpec
-  graft.ClickHouseSinkSpec"
+  graft.ClickHouseSinkSpec graft.LocalFsSpec"
 
 out="$(mktemp -d "${TMPDIR:-/tmp}/pump-check.XXXXXX")"
 trap 'rm -rf "$out"' EXIT
