@@ -1217,435 +1217,187 @@ object Clustering {
     rows.toDF("family", "trigger_quiet").orderBy(col("family"))
   }
 
-  // ---- q348: the STALENESS TRIGGER ACTS — rebuild committed on fire -
+  // ---- q348/q353/q355/q356/q357/q361/q363: index maintenance --------
   //
-  // q259 fires the IVF rebuild trigger and q336 keeps its no-drift
-  // control quiet; nothing consumed the firing (the r13 verdict's
-  // item 7). Here the trigger's own measurement DRIVES the refresh:
-  // an (index, cents) manifest chain starts at the frozen production
-  // surface; the maintenance job evaluates the q259 distortion rule
-  // against the HEAD's centroid surface (resolved through the
-  // manifest, not re-assumed), and only a firing trigger commits
-  // v1 = (the q259 rebuilt index — the rebuild the engine already
-  // built — plus the refreshed centroid set) through occCommitN: both
-  // surfaces flip in ONE atom, because an index probed with the wrong
-  // centroid generation is exactly the torn state the chain exists to
-  // prevent. The CONTROL chain runs the SAME code over the undrifted
-  // corpus: its trigger stays quiet, it commits NOTHING (head 0), and
-  // its serving surface remains the frozen genesis.
-  //
-  // The serving witness is content-level: the head-resolved index
-  // unit must equal a from-scratch assignment of the corpus under the
-  // head-resolved centroid surface (the q254 rebuilt contract —
-  // refreshed for the fired chain, frozen for the quiet one), and the
-  // head probe (q259's own nprobe-2/top-3 serve through staleHits)
-  // must answer every drifted query.
-  //
-  // Scale shape: the trigger costs the q259 measure (one assignment-
-  // shaped pass per centroid surface); the action re-stages the
-  // rebuild the engine already produced + one KB manifest rename; the
-  // control costs the measure alone. Nothing here is all-pairs.
+  // The trigger→action, maintenance-loop and scheduler verbs are
+  // written once over IndexKind, which states the loop contract. Each
+  // kind below keeps its math: surfaces, encode, stamp and rule, serve.
 
-  private val trigActMemo = new Memo[
-    (SparkSession, String),
-    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]
-
-  private[graft] def ensureTriggerAction(s: SparkSession, d: String)
-      : Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)] =
-    trigActMemo((s, d), "ivf_trigger_action") {
-      import s.implicits._
-      Seq("ctl", "drift").map { chain =>
-        val corpus =
-          if (chain == "drift") driftCorpus(s, d)
-          else embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val root = graft.util.TmpDirs.scratchFor(s"ivf_trigact_$chain", d)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$root/manifest"))
-        // genesis: the maintained index under the FROZEN surface —
-        // for the drift chain that is exactly q259's grown table
-        val grownDf =
-          if (chain == "drift") {
-            val (grown, _) = ensureDriftIndexes(s, d)
-            s.table(grown).select(col("vec_id"), col("cell"))
-          } else ivfAssignAgainst(corpus, frozenCents(corpus))
-            .select(col("vec_id"), col("cell"))
-        grownDf.write.mode("overwrite").parquet(s"$root/data/index_0")
-        frozenCents(corpus)
-          .write.mode("overwrite").parquet(s"$root/data/cents_0")
-        Seq(("cents", "data/cents_0"), ("index", "data/index_0"))
-          .toDF("tbl", "unit").coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest/v0")
-        val head = new java.util.concurrent.atomic.AtomicLong(0)
-        // THE TRIGGER: q259's integer rule, measured off the HEAD's
-        // manifest-resolved centroid surface
-        val headCents = Audit.readNSnapshot(s, root, head.get())("cents")
-        val fa = ivfDistortionSum(corpus, headCents)
-        val fb = ivfDistortionSum(corpus, refreshedCents(corpus))
-        val fires = fa > 0L && fa >= 2L * fb // strict at zero (r15 advice)
-        if (fires) {
-          // THE ACTION: the rebuild the engine already built (q259's
-          // rebuilt leg), committed atomically WITH its centroids
-          val (_, rebuilt) = ensureDriftIndexes(s, d)
-          require(Audit.occCommitN(s, root, head, 0L, Seq(
-              "index" -> s.table(rebuilt).select(col("vec_id"), col("cell")),
-              "cents" -> refreshedCents(corpus))),
-            s"the trigger-driven refresh commit holds the head ($chain)")
-        }
-        val hv = head.get()
-        val snap = Audit.readNSnapshot(s, root, hv)
-        // expected state per the trigger decision — refreshed surface
-        // iff fired, frozen otherwise; the committed index must equal
-        // a from-scratch assignment under the committed centroids
-        val expCents =
-          if (fires) refreshedCents(corpus) else frozenCents(corpus)
-        val expIndex = ivfAssignAgainst(corpus, expCents)
-          .select(col("vec_id"), col("cell"))
-        def same(a: DataFrame, b: DataFrame): Boolean =
-          a.exceptAll(b).count() + b.exceptAll(a).count() == 0L
-        val idxOk = same(snap("index").select(col("vec_id"), col("cell")),
-          expIndex)
-        val centsOk = same(snap("cents"), expCents)
-        // the head SERVES: q259's probe off the resolved units answers
-        // every drifted query (the serving path reads the manifest)
-        val qs = corpus.filter(col("vec_id") % 100 === 51)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        val wRank = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        val exact = broadcast(qs)
-          .join(corpus, col("vec_id") =!= col("query_id"))
-          .withColumn("cos", cosine(col("qe"), col("embedding")))
-          .withColumn("rk", row_number().over(wRank))
-          .filter(col("rk") <= 3)
-          .select(col("query_id").as("xq"), col("vec_id").as("xv"))
-        val servedQ = staleHits(s, corpus, qs, exact,
-          snap("index"), snap("cents")).count()
-        val serveComplete = servedQ == qs.count()
-        (chain, fires, hv, idxOk, centsOk, serveComplete)
-      }
-    }
-
-  /** q348: one row per chain — the measured trigger decision, the
-    * head version it CAUSED (1 = refresh committed, 0 = nothing), the
-    * committed index ≡ from-scratch assignment under the committed
-    * centroid surface, the centroid surface ≡ the decision's mandate,
-    * and the head serve answering every drifted query.
+  /** IVF (q348, q353, q363): centroid surface `cents` (frozenCents /
+    * refreshedCents), (vec_id, cell) units `index_*`. Rule: q259's
+    * arrived-half assignment distortion, dist_head_us ≥
+    * 2·dist_refreshed_us. Serve: the nprobe-2 top-3 probe. Corpus:
+    * float embeddings, odd half drifted +10f.
     */
-  def ivfTriggerAction(s: SparkSession, d: String): DataFrame = {
-    val rows = ensureTriggerAction(s, d)
+  private[graft] object IvfIndex extends IndexKind {
+    val name = "ivf"
+    val triggerLabel = "ivf_trigger_action"
+    val loopLabel = "ivf_maint_loop"
+    val surface = "cents"
+    val codes = "index"
+    override val triggerWitnessServes = true
+    def base(s: SparkSession, d: String): DataFrame =
+      embeddings(s, d).select(col("vec_id"), col("embedding"))
+    def arrived(s: SparkSession, d: String): DataFrame = driftCorpus(s, d)
+    def frozen(corpus: DataFrame): DataFrame = frozenCents(corpus)
+    def refreshed(corpus: DataFrame): DataFrame = refreshedCents(corpus)
+    def encode(corpus: DataFrame, part: Column, surf: DataFrame): DataFrame =
+      ivfAssignAgainst(corpus.filter(part), surf)
+    def stamp(corpus: DataFrame, head: DataFrame): Seq[Long] =
+      Seq(ivfDistortionSum(corpus, head),
+        ivfDistortionSum(corpus, refreshedCents(corpus)))
+    def serve(snap: Map[String, DataFrame], qs: DataFrame)
+        : (DataFrame, Boolean) =
+      (ivfProbeTop3(IndexKind.halvesOf(snap, "corpus"), qs,
+        IndexKind.halvesOf(snap, "index"), snap("cents")), true)
+  }
+
+  /** PQ (q355, q361): codebook surface `cb` (16 even ids < 32 frozen;
+    * ids ≡ 0,1 mod 8 < 64 refreshed), (cell, vec_id, m, code) units
+    * `codes_*` clustered by cell under the static coarse centroids
+    * `cents` (every 50th id — even, so never drifted). Rule: q277's
+    * arrived-half codeword distortion, same form as IVF's. Serve: the
+    * composed IVF-PQ probe, witnessed for its pushed cell filter.
+    * Corpus: IVF's.
+    */
+  private[graft] object PqIndex extends IndexKind {
+    val name = "pq"
+    val triggerLabel = "pq_trigger_action"
+    val loopLabel = "pq_maint_loop"
+    val surface = "cb"
+    val codes = "codes"
+    override val loopWitnessPushdown = true
+    private def dbl(corpus: DataFrame): DataFrame = corpus.select(
+      col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    def base(s: SparkSession, d: String): DataFrame = IvfIndex.base(s, d)
+    def arrived(s: SparkSession, d: String): DataFrame = driftCorpus(s, d)
+    def frozen(corpus: DataFrame): DataFrame = pqCodebookOf(dbl(corpus),
+      col("vec_id") % 2 === 0 && col("vec_id") < 32)
+    def refreshed(corpus: DataFrame): DataFrame = pqCodebookOf(dbl(corpus),
+      pmod(col("vec_id"), lit(8)) < 2 && col("vec_id") < 64)
+    override def statics(corpus: DataFrame): Seq[(String, DataFrame)] =
+      Seq("cents" -> frozenCents(corpus))
+    def encode(corpus: DataFrame, part: Column, surf: DataFrame): DataFrame =
+      maintPqCodes(corpus.filter(part), frozenCents(corpus), surf)
+    def stamp(corpus: DataFrame, head: DataFrame): Seq[Long] =
+      Seq(pqArrivedDistortion(dbl(corpus), head),
+        pqArrivedDistortion(dbl(corpus), refreshed(corpus)))
+    def serve(snap: Map[String, DataFrame], qs: DataFrame)
+        : (DataFrame, Boolean) = composedPqServe(snap, qs)
+  }
+
+  /** Binary (q356, q357, q363): per-dim mean thresholds `thr` (base
+    * half frozen, whole corpus refreshed), (vec_id, lo, hi) sign codes
+    * `codes_*`. Rule: q278's bit balance, imb_head ≥ 2·imb_refreshed
+    * and 4·imb_head ≥ n_total, strict at zero like the others. Serve:
+    * two-word Hamming top-3. Corpus: doubles, odd half shifted +10.
+    */
+  private[graft] object BinIndex extends IndexKind {
+    val name = "bin"
+    override val family = "binary"
+    val triggerLabel = "bin_trigger_action"
+    val loopLabel = "bin_maint_loop"
+    val surface = "thr"
+    val codes = "codes"
+    override val metaCols = Seq("imb_head", "imb_refreshed", "n_total")
+    def base(s: SparkSession, d: String): DataFrame =
+      embeddings(s, d).select(col("vec_id"),
+        transform(col("embedding"), _.cast("double")).as("v"))
+    def arrived(s: SparkSession, d: String): DataFrame = shiftCorpus(s, d)
+    def frozen(corpus: DataFrame): DataFrame =
+      binThresholdsOf(corpus, col("vec_id") % 2 === 0)
+    def refreshed(corpus: DataFrame): DataFrame =
+      binThresholdsOf(corpus, lit(true))
+    def encode(corpus: DataFrame, part: Column, surf: DataFrame): DataFrame =
+      thresholdSignCodes(corpus.filter(part), surf)
+    def stamp(corpus: DataFrame, head: DataFrame): Seq[Long] = {
+      val (fa, nn) = binImbalance(corpus, head)
+      Seq(fa, binImbalance(corpus, refreshed(corpus))._1, nn)
+    }
+    override def fires(st: Seq[Long]): Boolean =
+      super.fires(st) && 4L * st(0) >= st(2)
+    def serve(snap: Map[String, DataFrame], qs: DataFrame)
+        : (DataFrame, Boolean) =
+      (hammingTop3(qs, snap("thr"), IndexKind.halvesOf(snap, "codes")), true)
+  }
+
+  private def triggerReport(s: SparkSession, rows: Seq[IndexKind.TriggerRow],
+      cols: String*): DataFrame = {
     import s.implicits._
-    rows.toDF("chain", "trigger_fired", "head_version",
-        "index_equals_expected", "cents_equals_expected",
-        "head_serve_complete")
+    rows.toDF(Seq("chain", "trigger_fired", "head_version") ++ cols: _*)
       .orderBy(col("chain"))
   }
 
-  // ---- q353: the IVF MAINTENANCE LOOP under LIVE SERVING ------------
-  //
-  // q348 proves the staleness trigger ACTS, batch-side; q346 proves
-  // the maintenance loop runs under a stream for the graph family.
-  // This is the composition for a SECOND family (the r14 verdict's
-  // item 4), with the r15 O(manifest) discipline built in from the
-  // start: the chain carries a `meta` table — ONE row of commit-time
-  // distortion stats (dist_head_us, dist_refreshed_us) — and the
-  // per-trigger check reads the manifest plus that row, nothing else
-  // (plan-witnessed per trigger). The measurement is paid by the
-  // commit that CHANGES what the rule sees: genesis stamps the base
-  // corpus quiet, THE INGEST (the odd half's vectors re-embedded by a
-  // drifted model, landing mid-stream as ONE atomic commit) stamps
-  // the drifted measure, and the refresh stamps itself quiet. The
-  // corpus lives as TWO units — corpus_base (the even half, never
-  // re-embedded) and corpus_delta (the odd half) — so the ingest
-  // stages LITERALLY only its arriving bytes: the delta unit replaces
-  // fresh, the base and centroids re-list by name, and the grown
-  // index (q215's maintenance path under the frozen centroids) is the
-  // only other fresh surface.
-  //
-  // Timeline per chain (one probe stream serves both):
-  //   batch 0  serves v0 (frozen genesis); then the ingest commits v1
-  //   batch 1  the check reads v1's meta row — the drift chain's q259
-  //            integer rule FIRES and commits v2 = (rebuilt index,
-  //            refreshed cents, quiet meta) through one occCommitN
-  //            atom (corpus re-listed by name, zero bytes); the ctl
-  //            chain's zero-delta ingest stays quiet
-  //   batch 2  the drift chain serves the refreshed head; ctl still v1
-  // The ctl chain's serving units (index_0/cents_0) are byte-pinned
-  // across the whole drive — its ingest re-lists them by NAME and its
-  // trigger never fires.
-  //
-  // Scale shape: the per-trigger check is a KB manifest read + one
-  // meta row; the ingest pays one assignment-shaped distortion pass
-  // over ITS OWN delta (amortized per ingest, never per trigger); the
-  // refresh re-stages the rebuild the engine already produced + one
-  // KB rename. The serve is the nprobe-2 descent through the
-  // manifest-resolved units — cells pruned by the probe join, the
-  // same leg q259/q348 serve.
-
-  private val maintIvfMemo = new Memo[
-    (SparkSession, String),
-    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]
-
-  /** Executed-plan witness that `df` scanned ONLY the directory at
-    * `wantPath` — shared by every stamped-stats maintenance check
-    * (q353 IVF, q357 binary).
-    */
-  private def scanOnlyWitness(df: DataFrame, wantPath: String): Boolean =
-    graft.util.PlanWitness.scanOnly(df, wantPath)
-
-  /** The q353 per-trigger check: resolve the head manifest (bounded),
-    * read the ONE meta row, apply q259's integer rule — and witness
-    * off the executed plan that the meta read scanned ONLY the meta
-    * unit (the manifest resolve is itself a bounded KB read; no
-    * corpus or index bytes are touched by the decision).
-    */
-  private[graft] def ivfMaintCheck(ss: SparkSession, root: String, v: Long)
-      : (Boolean, Boolean) = {
-    val u = Audit.manifestUnits(ss, root, v) // ≤ N bounded rows
-    val df = ss.read.parquet(s"$root/${u("meta")}")
-    val r = df.collect()(0) // 1 bounded row — THE decision
-    // strict at zero (r15 advice): a converged/empty chain stamps
-    // (0, 0), which satisfies fa >= 2*fb — a quiet chain must never
-    // re-fire, so the rule requires measurable head distortion first
-    // (the n > 0 guard flaggedFromStats applies to the graph family)
-    val fa = r.getAs[Long]("dist_head_us")
-    val fires = fa > 0L && fa >= 2L * r.getAs[Long]("dist_refreshed_us")
-    (fires, scanOnlyWitness(df, s"$root/${u("meta")}"))
-  }
-
-  private[graft] def ensureIvfMaintLoop(s: SparkSession, d: String)
-      : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-        Boolean, Boolean)] =
-    maintIvfMemo((s, d), "ivf_maint_loop") {
-      import s.implicits._
-      val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val arrived = driftCorpus(s, d)
-      val cents0 = frozenCents(base)
-      val (grown, rebuilt) = ensureDriftIndexes(s, d)
-      // commit-time distortion stamps, measured OUTSIDE the stream by
-      // the writer that owns each commit (genesis / ingest / refresh)
-      val fa0 = ivfDistortionSum(base, cents0)
-      val fb0 = ivfDistortionSum(base, refreshedCents(base))
-      val faDrift = ivfDistortionSum(arrived, cents0)
-      val fbDrift = ivfDistortionSum(arrived, refreshedCents(arrived))
-      val chains = Seq("ctl", "drift")
-      val roots = chains.map(c =>
-        c -> graft.util.TmpDirs.scratchFor(s"ivf_maint_$c", d)).toMap
-      val heads = chains.map(c =>
-        c -> new java.util.concurrent.atomic.AtomicLong(0)).toMap
-      // the corpus lives as TWO units so the ingest can stage ONLY
-      // its arriving bytes: corpus_base = the even half (never
-      // re-embedded, re-listed by name through every commit),
-      // corpus_delta = the odd half (the unit the drift REPLACES)
-      chains.foreach { c =>
-        val root = roots(c)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$root/manifest"))
-        base.filter(col("vec_id") % 2 === 0)
-          .write.mode("overwrite").parquet(s"$root/data/corpus_base_0")
-        base.filter(col("vec_id") % 2 === 1)
-          .write.mode("overwrite").parquet(s"$root/data/corpus_delta_0")
-        ivfAssignAgainst(base, cents0).select(col("vec_id"), col("cell"))
-          .write.mode("overwrite").parquet(s"$root/data/index_0")
-        cents0.write.mode("overwrite").parquet(s"$root/data/cents_0")
-        Seq((fa0, fb0)).toDF("dist_head_us", "dist_refreshed_us")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/data/meta_0")
-        Seq(("corpus_base", "data/corpus_base_0"),
-            ("corpus_delta", "data/corpus_delta_0"),
-            ("index", "data/index_0"),
-            ("cents", "data/cents_0"), ("meta", "data/meta_0"))
-          .toDF("tbl", "unit").coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest/v0")
-      }
-      // the ctl serving units must survive the drive byte-identical
-      val ctlPinBefore =
-        listDataFiles(java.nio.file.Paths.get(s"${roots("ctl")}/data/index_0")) ++
-        listDataFiles(java.nio.file.Paths.get(s"${roots("ctl")}/data/cents_0"))
-      // the probe feed: drifted queries (≡51 mod 100), 3 ordered chunks
-      val qVecs = Map(
-        "ctl" -> base.filter(col("vec_id") % 100 === 51)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-        "drift" -> arrived.filter(col("vec_id") % 100 === 51)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qe")))
-      val feed = graft.util.TmpDirs.scratchFor("ivf_maint_feed", d)
-      (0 until 3).foreach { c =>
-        graft.util.OrderedFeed.writeChunk(s"$feed/c$c", c,
-          qVecs("drift").select(col("query_id"))
-            .filter(pmod(col("query_id"), lit(3)) === c))
-      }
-      val outDir = graft.util.TmpDirs.scratchFor("ivf_maint_out", d)
-      graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        val q = src.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              val ss = batch.sparkSession
-              chains.foreach { c =>
-                val root = roots(c)
-                val v = heads(c).get() // resolve the head at batch start
-                // THE MAINTENANCE CHECK — manifest + one meta row
-                val (fires, metaOnly) = ivfMaintCheck(ss, root, v)
-                val refreshNow = fires && v == 1L
-                if (refreshNow) {
-                  // THE ACTION: the rebuild the engine already built,
-                  // committed atomically WITH its centroids and the
-                  // quiet re-stamp; BOTH corpus units re-list by name
-                  val u = Audit.manifestUnits(ss, root, v)
-                  require(Audit.occCommitNShared(s, root, heads(c), 1L, Seq(
-                      "corpus_base" -> Left(u("corpus_base")),
-                      "corpus_delta" -> Left(u("corpus_delta")),
-                      "index" -> Right(s.table(rebuilt)
-                        .select(col("vec_id"), col("cell"))),
-                      "cents" -> Right(refreshedCents(arrived)),
-                      "meta" -> Right(Seq((fbDrift, fbDrift))
-                        .toDF("dist_head_us", "dist_refreshed_us")))),
-                    s"the maintenance refresh holds the head ($c)")
-                }
-                // serve THIS batch through the version resolved at start
-                val snap = Audit.readNSnapshot(ss, root, v)
-                val qs = batch.select(col("query_id"))
-                  .join(qVecs(c), Seq("query_id"))
-                ivfProbeTop3(
-                    snap("corpus_base").unionByName(snap("corpus_delta")),
-                    qs, snap("index"), snap("cents"))
-                  .withColumn("resolved_v", lit(v))
-                  .withColumn("trigger_fired", lit(fires))
-                  .withColumn("refresh_committed", lit(refreshNow))
-                  .withColumn("check_meta_only", lit(metaOnly))
-                  .write.mode("overwrite")
-                  .parquet(s"$outDir/chain=$c/batch_id=$id")
-                // after batch 0's serve: THE INGEST lands — one atomic
-                // corpus+index+meta commit (drift), or the zero-delta
-                // re-stamp (ctl: every serving unit re-listed by name)
-                if (id == 0L) {
-                  val u0 = Audit.manifestUnits(ss, root, 0L)
-                  val ingest: Seq[(String, Either[String, DataFrame])] =
-                    if (c == "drift") Seq(
-                      // ONLY the arriving bytes stage fresh: the
-                      // re-embedded odd half replaces its delta unit;
-                      // the untouched even base re-lists by name
-                      "corpus_base" -> Left(u0("corpus_base")),
-                      "corpus_delta" -> Right(
-                        arrived.filter(col("vec_id") % 2 === 1)),
-                      "index" -> Right(s.table(grown)
-                        .select(col("vec_id"), col("cell"))),
-                      "cents" -> Left(u0("cents")),
-                      "meta" -> Right(Seq((faDrift, fbDrift))
-                        .toDF("dist_head_us", "dist_refreshed_us")))
-                    else Seq(
-                      "corpus_base" -> Left(u0("corpus_base")),
-                      "corpus_delta" -> Left(u0("corpus_delta")),
-                      "index" -> Left(u0("index")),
-                      "cents" -> Left(u0("cents")),
-                      "meta" -> Right(Seq((fa0, fb0))
-                        .toDF("dist_head_us", "dist_refreshed_us")))
-                  require(Audit.occCommitNShared(s, root, heads(c), 0L,
-                      ingest), s"the ingest commit holds the head ($c)")
-                }
-              }
-            }
-          }
-          .start()
-        graft.util.StreamTuning.drained(q)
-      }
-      val ctlPinned = {
-        val after =
-          listDataFiles(java.nio.file.Paths.get(s"${roots("ctl")}/data/index_0")) ++
-          listDataFiles(java.nio.file.Paths.get(s"${roots("ctl")}/data/cents_0"))
-        ctlPinBefore == after
-      }
-      // post-drive: per-version references through the SAME serve leg,
-      // and the head answering every drifted query (q348's witness)
-      chains.flatMap { c =>
-        val root = roots(c)
-        val served = s.read.parquet(s"$outDir/chain=$c")
-        def ref(v: Long, chunk: DataFrame): DataFrame = {
-          val snap = Audit.readNSnapshot(s, root, v)
-          ivfProbeTop3(
-            snap("corpus_base").unionByName(snap("corpus_delta")),
-            chunk.join(qVecs(c), Seq("query_id")),
-            snap("index"), snap("cents"))
-        }
-        val headV = heads(c).get()
-        val headSnap = Audit.readNSnapshot(s, root, headV)
-        val corpusH = if (c == "drift") arrived else base
-        val qsAll = qVecs(c)
-        val wRank = Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("vec_id"))
-        val exact = broadcast(qsAll)
-          .join(corpusH, col("vec_id") =!= col("query_id"))
-          .withColumn("cos", cosine(col("qe"), col("embedding")))
-          .withColumn("rk", row_number().over(wRank))
-          .filter(col("rk") <= 3)
-          .select(col("query_id").as("xq"), col("vec_id").as("xv"))
-        val headServeComplete = staleHits(s,
-          headSnap("corpus_base").unionByName(headSnap("corpus_delta")),
-          qsAll, exact, headSnap("index"), headSnap("cents")).count() ==
-          qsAll.count()
-        (0L to 2L).map { id =>
-          val b = served.filter(col("batch_id") === id)
-          val hdr = b.select(col("resolved_v"), col("trigger_fired"),
-              col("refresh_committed"), col("check_meta_only"))
-            .limit(1).collect()(0) // 1 bounded control row
-          val v = hdr.getLong(0)
-          val chunk = s.read.parquet(s"$feed/c${id.toInt}")
-            .select(col("query_id"))
-          val bAns = b.select(col("query_id"), col("vec_id"))
-          val refAns = ref(v, chunk).select(col("query_id"), col("vec_id"))
-          val equalsRef = bAns.exceptAll(refAns).count() +
-            refAns.exceptAll(bAns).count() == 0L
-          (c, id, v, id == 0L, hdr.getBoolean(1), hdr.getBoolean(2),
-            equalsRef, if (c == "ctl") ctlPinned else true,
-            hdr.getBoolean(3), headServeComplete)
-        }
-      }
-    }
-
-  /** q353: per (chain, micro-batch) — the resolved version, the
-    * ingest landing at batch 0, the stamped-stats trigger decision
-    * (fires at v1 on the drift chain only), whether THIS batch's
-    * decision committed the refresh, exact serve equality with the
-    * resolved version's reference through the same probe leg, the
-    * control's serving-units byte-pin, the per-trigger meta-only plan
-    * witness, and the head answering every drifted query.
-    */
-  def ivfMaintLoop(s: SparkSession, d: String): DataFrame = {
-    val rows = ensureIvfMaintLoop(s, d)
+  private def loopReport(s: SparkSession, rows: Seq[IndexKind.LoopRow],
+      witness: String): DataFrame = {
     import s.implicits._
     rows.toDF("chain", "batch_id", "resolved_version", "ingest_committed",
         "trigger_fired", "refresh_committed", "equals_pinned_reference",
-        "serving_units_pinned", "check_meta_only", "head_serve_complete")
+        "serving_units_pinned", "check_meta_only", witness)
       .orderBy(col("chain"), col("batch_id"))
   }
 
-  // ---- q355: the PQ STALENESS TRIGGER ACTS ---------------------------
-  //
-  // q348 closes trigger→action for IVF and q353 runs it under a
-  // stream; the PQ family still only AUDITED (q277 fires, q336 keeps
-  // the control quiet — nothing consumed the firing). Same shape as
-  // q348: a (codes, codebook) manifest chain starts at the frozen
-  // production codebook with the corpus' nearest-codeword codes; the
-  // maintenance job evaluates q277's integer rule against the HEAD's
-  // manifest-resolved codebook (arrived-half quantization distortion
-  // vs the refreshed candidate), and only a firing trigger commits
-  // v1 = (codes re-quantized under the refreshed codebook, the
-  // refreshed codebook) through one occCommitN — codes probed with
-  // the wrong codebook generation are exactly the torn state the
-  // atom prevents. The CONTROL chain runs the same code over the
-  // undrifted corpus: quiet rule, head 0, frozen genesis serving.
-  //
-  // The serving witness is q277's own health metric measured on the
-  // OUTCOME: the head's arrived-half distortion under its committed
-  // codebook sits inside the refreshed bound (quiet) — hot before the
-  // action, quiet after it, frozen-and-quiet on the control.
-  //
-  // Scale shape: the trigger costs one assignment-shaped pass per
-  // codebook surface (the same crossJoin-argmin the codes themselves
-  // cost); the action re-quantizes once and renames one KB manifest;
-  // the control costs the measure alone. Codebooks are O(k·m) —
-  // always broadcast.
+  /** q348: per chain — the measured trigger decision, the head version
+    * it caused (1 = refresh committed), the committed index ≡ a
+    * from-scratch assignment under the committed centroids, the
+    * centroids ≡ the decision's mandate, and the head serving every
+    * drifted query.
+    */
+  def ivfTriggerAction(s: SparkSession, d: String): DataFrame =
+    triggerReport(s, IndexKind.triggerAction(s, d, IvfIndex),
+      "index_equals_expected", "cents_equals_expected", "head_serve_complete")
+
+  /** q355: per chain — the decision, the head version it caused, the
+    * codes ≡ a from-scratch re-quantization under the committed
+    * codebook, the codebook ≡ the mandate, and the head's own rule
+    * re-measured quiet.
+    */
+  def pqTriggerAction(s: SparkSession, d: String): DataFrame =
+    triggerReport(s, IndexKind.triggerAction(s, d, PqIndex),
+      "codes_equal_expected", "codebook_equals_expected", "head_rule_quiet")
+
+  /** q356: per chain — the decision, the head version it caused, the
+    * codes ≡ a from-scratch re-sign under the committed thresholds,
+    * the thresholds ≡ the mandate, and the head's own bit-balance rule
+    * re-measured quiet.
+    */
+  def binTriggerAction(s: SparkSession, d: String): DataFrame =
+    triggerReport(s, IndexKind.triggerAction(s, d, BinIndex),
+      "codes_equal_expected", "thresholds_equal_expected", "head_rule_quiet")
+
+  /** q353: the IVF maintenance loop under a live probe stream — per
+    * (chain, batch) the loop ledger, ending in the head answering
+    * every drifted query.
+    */
+  def ivfMaintLoop(s: SparkSession, d: String): DataFrame =
+    loopReport(s, IndexKind.maintLoop(s, d, IvfIndex), "head_serve_complete")
+
+  /** q357: the binary maintenance loop under a live Hamming probe
+    * stream, ending in the head answering every query.
+    */
+  def binMaintLoop(s: SparkSession, d: String): DataFrame =
+    loopReport(s, IndexKind.maintLoop(s, d, BinIndex), "head_serve_complete")
+
+  /** q361: the PQ maintenance loop under a live composed-probe
+    * stream, ending in each batch's cell-pushdown witness.
+    */
+  def pqMaintLoop(s: SparkSession, d: String): DataFrame =
+    loopReport(s, IndexKind.maintLoop(s, d, PqIndex), "serve_filter_pushed")
+
+  /** q363: one scheduler over an IVF and a binary chain — per (family,
+    * batch) the resolved version, the single pass's decision (both
+    * fire at batch 0, both quiet at batch 1 off their re-stamps),
+    * whether it committed the refresh, serve ≡ reference, the meta-only
+    * check, and one scheduler pass per trigger.
+    */
+  def maintScheduler(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    IndexKind.scheduler(s, d, Seq(IvfIndex, BinIndex))
+      .toDF("family", "batch_id", "resolved_version", "trigger_fired",
+        "action_committed", "equals_pinned_reference", "check_meta_only",
+        "single_scheduler_pass")
+      .orderBy(col("family"), col("batch_id"))
+  }
 
   /** Sub-codebook extraction: the (cid, m, csv) rows drawn from the
     * corpus rows matching `pred` — the q277 frozen/refreshed forms.
@@ -1679,105 +1431,6 @@ object Clustering {
       .agg(min(col("d_us")).as("d"))
       .agg(coalesce(sum(col("d")), lit(0L)).as("s"))
       .first().getLong(0) // one bounded driver scalar (the decision)
-
-  private val pqTrigMemo = new Memo[
-    (SparkSession, String),
-    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]
-
-  private[graft] def ensurePqTriggerAction(s: SparkSession, d: String)
-      : Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)] =
-    pqTrigMemo((s, d), "pq_trigger_action") {
-      import s.implicits._
-      val frozenPred = col("vec_id") % 2 === 0 && col("vec_id") < 32
-      val refreshedPred =
-        (pmod(col("vec_id"), lit(8)) === 0 || pmod(col("vec_id"), lit(8)) === 1) &&
-          col("vec_id") < 64
-      Seq("ctl", "drift").map { chain =>
-        val corpus =
-          if (chain == "drift") shiftCorpus(s, d)
-          else embeddings(s, d).select(col("vec_id"),
-            transform(col("embedding"), _.cast("double")).as("v"))
-        val root = graft.util.TmpDirs.scratchFor(s"pq_trigact_$chain", d)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$root/manifest"))
-        val frozenCb = pqCodebookOf(corpus, frozenPred)
-        val refreshedCb = pqCodebookOf(corpus, refreshedPred)
-        // genesis: the maintained codes under the FROZEN codebook —
-        // the arrived half was quantized as it landed (q215's path)
-        pqAssignAgainst(corpus, frozenCb)
-          .write.mode("overwrite").parquet(s"$root/data/codes_0")
-        frozenCb.write.mode("overwrite").parquet(s"$root/data/cb_0")
-        Seq(("cb", "data/cb_0"), ("codes", "data/codes_0"))
-          .toDF("tbl", "unit").coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest/v0")
-        val head = new java.util.concurrent.atomic.AtomicLong(0)
-        // THE TRIGGER: q277's integer rule, measured off the HEAD's
-        // manifest-resolved codebook surface
-        val headCb = Audit.readNSnapshot(s, root, head.get())("cb")
-        val fa = pqArrivedDistortion(corpus, headCb)
-        val fb = pqArrivedDistortion(corpus, refreshedCb)
-        val fires = fa > 0L && fa >= 2L * fb // strict at zero (r15 advice)
-        if (fires) {
-          // THE ACTION: re-quantize under the refreshed codebook and
-          // commit codes + codebook in ONE atom
-          require(Audit.occCommitN(s, root, head, 0L, Seq(
-              "codes" -> pqAssignAgainst(corpus, refreshedCb),
-              "cb" -> refreshedCb)),
-            s"the trigger-driven requantization holds the head ($chain)")
-        }
-        val hv = head.get()
-        val snap = Audit.readNSnapshot(s, root, hv)
-        val expCb = if (fires) refreshedCb else frozenCb
-        def same(a: DataFrame, b: DataFrame): Boolean =
-          a.exceptAll(b).count() + b.exceptAll(a).count() == 0L
-        val codesOk = same(
-          snap("codes").select(col("vec_id"), col("m"), col("code")),
-          pqAssignAgainst(corpus, expCb))
-        val cbOk = same(snap("cb").select(col("cid"), col("m"), col("csv")),
-          expCb)
-        // the OUTCOME health check: the head's own rule, re-measured
-        // off the committed codebook, must sit inside the refreshed
-        // bound — hot chains become quiet BY the action, controls
-        // were never hot
-        val headQuiet = pqArrivedDistortion(corpus, snap("cb")) < 2L * fb
-        (chain, fires, hv, codesOk, cbOk, headQuiet)
-      }
-    }
-
-  /** q355: one row per chain — the measured trigger decision, the
-    * head version it CAUSED, the committed codes ≡ a from-scratch
-    * re-quantization under the committed codebook, the codebook ≡ the
-    * decision's mandate, and the head's own staleness rule re-measured
-    * quiet off the committed surface.
-    */
-  def pqTriggerAction(s: SparkSession, d: String): DataFrame = {
-    val rows = ensurePqTriggerAction(s, d)
-    import s.implicits._
-    rows.toDF("chain", "trigger_fired", "head_version",
-        "codes_equal_expected", "codebook_equals_expected",
-        "head_rule_quiet")
-      .orderBy(col("chain"))
-  }
-
-  // ---- q356: the BINARY STALENESS TRIGGER ACTS -----------------------
-  //
-  // The fourth and last family's trigger→action closure (IVF q348/
-  // q353, graph q346, PQ q355): a (thresholds, codes) manifest chain
-  // starts at the frozen base-half per-dim means with the corpus
-  // sign-coded against them; the maintenance job evaluates q278's
-  // bit-balance rule against the HEAD's manifest-resolved threshold
-  // surface (global imbalance under head vs refreshed thresholds,
-  // both integer micro-units), and only a firing trigger commits
-  // v1 = (codes re-signed under the refreshed thresholds, the
-  // refreshed thresholds) through one occCommitN — a Hamming probe
-  // against codes signed under a different threshold generation is
-  // the torn state. Control chain: undrifted corpus, quiet rule,
-  // head 0, frozen genesis serving.
-  //
-  // Scale shape: thresholds are O(dim) — always broadcast; the
-  // measure and the re-sign are each one explode+aggregate pass over
-  // the corpus (the cost of writing the codes at all); the commit is
-  // a KB rename. All integer arithmetic — exact on every engine.
 
   /** (vec_id, j, x_us) micro-unit expansion — the shared leg under
     * the thresholds, the imbalance measure, and the sign encode.
@@ -1826,118 +1479,6 @@ object Clustering {
           pow(lit(2.0), (col("j") - 33).cast("double")).cast("long"))
           .otherwise(0L)).as("hi"))
 
-  private val binTrigMemo = new Memo[
-    (SparkSession, String),
-    Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)]]
-
-  private[graft] def ensureBinTriggerAction(s: SparkSession, d: String)
-      : Seq[(String, Boolean, Long, Boolean, Boolean, Boolean)] =
-    binTrigMemo((s, d), "bin_trigger_action") {
-      import s.implicits._
-      Seq("ctl", "drift").map { chain =>
-        val corpus =
-          if (chain == "drift") shiftCorpus(s, d)
-          else embeddings(s, d).select(col("vec_id"),
-            transform(col("embedding"), _.cast("double")).as("v"))
-        val root = graft.util.TmpDirs.scratchFor(s"bin_trigact_$chain", d)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$root/manifest"))
-        val frozenThr = binThresholdsOf(corpus, col("vec_id") % 2 === 0)
-        val refreshedThr = binThresholdsOf(corpus, lit(true))
-        thresholdSignCodes(corpus, frozenThr)
-          .write.mode("overwrite").parquet(s"$root/data/codes_0")
-        frozenThr.write.mode("overwrite").parquet(s"$root/data/thr_0")
-        Seq(("codes", "data/codes_0"), ("thr", "data/thr_0"))
-          .toDF("tbl", "unit").coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest/v0")
-        val head = new java.util.concurrent.atomic.AtomicLong(0)
-        // THE TRIGGER: q278's integer rule off the HEAD's surface
-        val headThr = Audit.readNSnapshot(s, root, head.get())("thr")
-        val (fa, nn) = binImbalance(corpus, headThr)
-        val (fb, _) = binImbalance(corpus, refreshedThr)
-        val fires = fa >= 2L * fb && 4L * fa >= nn
-        if (fires) {
-          require(Audit.occCommitN(s, root, head, 0L, Seq(
-              "codes" -> thresholdSignCodes(corpus, refreshedThr),
-              "thr" -> refreshedThr)),
-            s"the trigger-driven re-sign holds the head ($chain)")
-        }
-        val hv = head.get()
-        val snap = Audit.readNSnapshot(s, root, hv)
-        val expThr = if (fires) refreshedThr else frozenThr
-        def same(a: DataFrame, b: DataFrame): Boolean =
-          a.exceptAll(b).count() + b.exceptAll(a).count() == 0L
-        val codesOk = same(
-          snap("codes").select(col("vec_id"), col("lo"), col("hi")),
-          thresholdSignCodes(corpus, expThr))
-        val thrOk = same(snap("thr").select(col("j"), col("mu")), expThr)
-        // outcome health: the head's own rule off the committed
-        // thresholds must be quiet
-        val (faH, nnH) = binImbalance(corpus, snap("thr"))
-        val headQuiet = !(faH >= 2L * fb && 4L * faH >= nnH)
-        (chain, fires, hv, codesOk, thrOk, headQuiet)
-      }
-    }
-
-  /** q356: one row per chain — the measured trigger decision, the
-    * head version it CAUSED, the committed codes ≡ a from-scratch
-    * re-sign under the committed thresholds, the threshold surface ≡
-    * the decision's mandate, and the head's own bit-balance rule
-    * re-measured quiet off the committed surface.
-    */
-  def binTriggerAction(s: SparkSession, d: String): DataFrame = {
-    val rows = ensureBinTriggerAction(s, d)
-    import s.implicits._
-    rows.toDF("chain", "trigger_fired", "head_version",
-        "codes_equal_expected", "thresholds_equal_expected",
-        "head_rule_quiet")
-      .orderBy(col("chain"))
-  }
-
-  // ---- q357: the BINARY MAINTENANCE LOOP under LIVE SERVING ---------
-  //
-  // q353's composition for a THIRD family: the binary index serves a
-  // Hamming probe stream while q356's trigger→action runs inside the
-  // loop. The chain carries the q353 unit split discipline end to
-  // end — corpus_base/corpus_delta (the never-re-embedded even half
-  // vs the odd half) AND codes_base/codes_delta (their sign codes),
-  // so THE INGEST (the odd half re-embedded, landing mid-stream as
-  // one atomic commit) stages literally its arriving bytes: the delta
-  // corpus unit, the delta CODES re-signed under the UNCHANGED frozen
-  // thresholds (quantize-on-arrival, q215's maintenance path), and
-  // the meta stamp; base corpus, base codes, and thresholds re-list
-  // by name. The per-trigger check reads the manifest + ONE meta row
-  // carrying q278's decision quantities (imb_head, imb_refreshed,
-  // n_total — the rule needs the magnitude term too), plan-witnessed
-  // meta-only. A firing check commits the full re-sign — BOTH code
-  // units must refresh because the THRESHOLDS changed, which is
-  // exactly why the re-sign is a commit and not an append — plus the
-  // refreshed thresholds and the quiet re-stamp, corpus units
-  // re-listed. The ctl chain's zero-delta ingest re-lists everything
-  // but meta and never fires; its serving units stay byte-pinned.
-  //
-  // Scale shape: the serve is the production binary probe — encode
-  // the micro-batch's queries under the resolved thresholds (O(dim)
-  // broadcast) and rank by two-word Hamming distance (bit_count on
-  // codegen'd longs, no arrays touched); the check is a KB read; the
-  // ingest measure is one explode+aggregate pass over its own delta,
-  // amortized per ingest.
-
-  /** The q357 per-trigger check: q278's two-condition integer rule
-    * off the head's stamped meta row, with the meta-only plan
-    * witness.
-    */
-  private[graft] def binMaintCheck(ss: SparkSession, root: String, v: Long)
-      : (Boolean, Boolean) = {
-    val u = Audit.manifestUnits(ss, root, v) // ≤ N bounded rows
-    val df = ss.read.parquet(s"$root/${u("meta")}")
-    val r = df.collect()(0) // 1 bounded row — THE decision
-    val (fa, fb, nn) = (r.getAs[Long]("imb_head"),
-      r.getAs[Long]("imb_refreshed"), r.getAs[Long]("n_total"))
-    (fa >= 2L * fb && 4L * fa >= nn,
-      scanOnlyWitness(df, s"$root/${u("meta")}"))
-  }
-
   /** The binary serve: encode queries under the resolved thresholds,
     * rank corpus codes by two-word Hamming distance, top-3 per query
     * (self excluded; ties by vec_id).
@@ -1959,242 +1500,6 @@ object Clustering {
       .filter(col("rk") <= 3)
       .select(col("query_id"), col("vec_id"))
   }
-
-  private val maintBinMemo = new Memo[
-    (SparkSession, String),
-    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]
-
-  private[graft] def ensureBinMaintLoop(s: SparkSession, d: String)
-      : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-        Boolean, Boolean)] =
-    maintBinMemo((s, d), "bin_maint_loop") {
-      import s.implicits._
-      val base = embeddings(s, d).select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("v"))
-      val arrived = shiftCorpus(s, d)
-      val thr0All = binThresholdsOf(base, col("vec_id") % 2 === 0)
-      // commit-time stamps, measured OUTSIDE the stream by each
-      // commit's writer (genesis / ingest / refresh)
-      val (fa0, nn0) = binImbalance(base, thr0All)
-      val (fb0, _) = binImbalance(base, binThresholdsOf(base, lit(true)))
-      val refreshedThr = binThresholdsOf(arrived, lit(true))
-      val (faDrift, nnD) = binImbalance(arrived, thr0All)
-      val (fbDrift, _) = binImbalance(arrived, refreshedThr)
-      val chains = Seq("ctl", "drift")
-      val roots = chains.map(c =>
-        c -> graft.util.TmpDirs.scratchFor(s"bin_maint_$c", d)).toMap
-      val heads = chains.map(c =>
-        c -> new java.util.concurrent.atomic.AtomicLong(0)).toMap
-      chains.foreach { c =>
-        val root = roots(c)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$root/manifest"))
-        base.filter(col("vec_id") % 2 === 0)
-          .write.mode("overwrite").parquet(s"$root/data/corpus_base_0")
-        base.filter(col("vec_id") % 2 === 1)
-          .write.mode("overwrite").parquet(s"$root/data/corpus_delta_0")
-        thresholdSignCodes(base.filter(col("vec_id") % 2 === 0), thr0All)
-          .write.mode("overwrite").parquet(s"$root/data/codes_base_0")
-        thresholdSignCodes(base.filter(col("vec_id") % 2 === 1), thr0All)
-          .write.mode("overwrite").parquet(s"$root/data/codes_delta_0")
-        thr0All.write.mode("overwrite").parquet(s"$root/data/thr_0")
-        Seq((fa0, fb0, nn0)).toDF("imb_head", "imb_refreshed", "n_total")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/data/meta_0")
-        Seq(("corpus_base", "data/corpus_base_0"),
-            ("corpus_delta", "data/corpus_delta_0"),
-            ("codes_base", "data/codes_base_0"),
-            ("codes_delta", "data/codes_delta_0"),
-            ("thr", "data/thr_0"), ("meta", "data/meta_0"))
-          .toDF("tbl", "unit").coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest/v0")
-      }
-      val ctlPinBefore = Seq("thr_0", "codes_base_0", "codes_delta_0")
-        .map(u => listDataFiles(
-          java.nio.file.Paths.get(s"${roots("ctl")}/data/$u")))
-        .reduce(_ ++ _)
-      val qVecs = Map(
-        "ctl" -> base.filter(col("vec_id") % 100 === 51)
-          .select(col("vec_id").as("query_id"), col("v").as("qe")),
-        "drift" -> arrived.filter(col("vec_id") % 100 === 51)
-          .select(col("vec_id").as("query_id"), col("v").as("qe")))
-      val feed = graft.util.TmpDirs.scratchFor("bin_maint_feed", d)
-      (0 until 3).foreach { c =>
-        graft.util.OrderedFeed.writeChunk(s"$feed/c$c", c,
-          qVecs("drift").select(col("query_id"))
-            .filter(pmod(col("query_id"), lit(3)) === c))
-      }
-      val outDir = graft.util.TmpDirs.scratchFor("bin_maint_out", d)
-      graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        val q = src.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              val ss = batch.sparkSession
-              chains.foreach { c =>
-                val root = roots(c)
-                val v = heads(c).get() // resolve the head at batch start
-                val (fires, metaOnly) = binMaintCheck(ss, root, v)
-                val refreshNow = fires && v == 1L
-                if (refreshNow) {
-                  // THE ACTION: the thresholds changed, so BOTH code
-                  // units re-sign — that is what makes the refresh a
-                  // commit; corpus units re-list by name
-                  val u = Audit.manifestUnits(ss, root, v)
-                  require(Audit.occCommitNShared(s, root, heads(c), 1L, Seq(
-                      "corpus_base" -> Left(u("corpus_base")),
-                      "corpus_delta" -> Left(u("corpus_delta")),
-                      "codes_base" -> Right(thresholdSignCodes(
-                        arrived.filter(col("vec_id") % 2 === 0),
-                        refreshedThr)),
-                      "codes_delta" -> Right(thresholdSignCodes(
-                        arrived.filter(col("vec_id") % 2 === 1),
-                        refreshedThr)),
-                      "thr" -> Right(refreshedThr),
-                      "meta" -> Right(Seq((fbDrift, fbDrift, nnD))
-                        .toDF("imb_head", "imb_refreshed", "n_total")))),
-                    s"the maintenance re-sign holds the head ($c)")
-                }
-                // serve THIS batch through the version resolved at start
-                val snap = Audit.readNSnapshot(ss, root, v)
-                val qs = batch.select(col("query_id"))
-                  .join(qVecs(c), Seq("query_id"))
-                hammingTop3(qs, snap("thr"),
-                    snap("codes_base").unionByName(snap("codes_delta")))
-                  .withColumn("resolved_v", lit(v))
-                  .withColumn("trigger_fired", lit(fires))
-                  .withColumn("refresh_committed", lit(refreshNow))
-                  .withColumn("check_meta_only", lit(metaOnly))
-                  .write.mode("overwrite")
-                  .parquet(s"$outDir/chain=$c/batch_id=$id")
-                // after batch 0's serve: THE INGEST — the odd half
-                // re-embedded; ONLY its bytes stage (delta corpus +
-                // delta codes quantized under the UNCHANGED frozen
-                // thresholds + meta); ctl re-lists everything but meta
-                if (id == 0L) {
-                  val u0 = Audit.manifestUnits(ss, root, 0L)
-                  val ingest: Seq[(String, Either[String, DataFrame])] =
-                    if (c == "drift") Seq(
-                      "corpus_base" -> Left(u0("corpus_base")),
-                      "corpus_delta" -> Right(
-                        arrived.filter(col("vec_id") % 2 === 1)),
-                      "codes_base" -> Left(u0("codes_base")),
-                      "codes_delta" -> Right(thresholdSignCodes(
-                        arrived.filter(col("vec_id") % 2 === 1), thr0All)),
-                      "thr" -> Left(u0("thr")),
-                      "meta" -> Right(Seq((faDrift, fbDrift, nnD))
-                        .toDF("imb_head", "imb_refreshed", "n_total")))
-                    else Seq(
-                      "corpus_base" -> Left(u0("corpus_base")),
-                      "corpus_delta" -> Left(u0("corpus_delta")),
-                      "codes_base" -> Left(u0("codes_base")),
-                      "codes_delta" -> Left(u0("codes_delta")),
-                      "thr" -> Left(u0("thr")),
-                      "meta" -> Right(Seq((fa0, fb0, nn0))
-                        .toDF("imb_head", "imb_refreshed", "n_total")))
-                  require(Audit.occCommitNShared(s, root, heads(c), 0L,
-                      ingest), s"the ingest commit holds the head ($c)")
-                }
-              }
-            }
-          }
-          .start()
-        graft.util.StreamTuning.drained(q)
-      }
-      val ctlPinned = {
-        val after = Seq("thr_0", "codes_base_0", "codes_delta_0")
-          .map(u => listDataFiles(
-            java.nio.file.Paths.get(s"${roots("ctl")}/data/$u")))
-          .reduce(_ ++ _)
-        ctlPinBefore == after
-      }
-      // post-drive: per-version references through the SAME serve leg;
-      // head completeness = every query answered at the head
-      chains.flatMap { c =>
-        val root = roots(c)
-        val served = s.read.parquet(s"$outDir/chain=$c")
-        def ref(v: Long, chunk: DataFrame): DataFrame = {
-          val snap = Audit.readNSnapshot(s, root, v)
-          hammingTop3(chunk.join(qVecs(c), Seq("query_id")),
-            snap("thr"),
-            snap("codes_base").unionByName(snap("codes_delta")))
-        }
-        val headV = heads(c).get()
-        val headSnap = Audit.readNSnapshot(s, root, headV)
-        val headServeComplete = hammingTop3(qVecs(c), headSnap("thr"),
-            headSnap("codes_base").unionByName(headSnap("codes_delta")))
-          .select(col("query_id")).distinct().count() == qVecs(c).count()
-        (0L to 2L).map { id =>
-          val b = served.filter(col("batch_id") === id)
-          val hdr = b.select(col("resolved_v"), col("trigger_fired"),
-              col("refresh_committed"), col("check_meta_only"))
-            .limit(1).collect()(0) // 1 bounded control row
-          val v = hdr.getLong(0)
-          val chunk = s.read.parquet(s"$feed/c${id.toInt}")
-            .select(col("query_id"))
-          val bAns = b.select(col("query_id"), col("vec_id"))
-          val refAns = ref(v, chunk).select(col("query_id"), col("vec_id"))
-          val equalsRef = bAns.exceptAll(refAns).count() +
-            refAns.exceptAll(bAns).count() == 0L
-          (c, id, v, id == 0L, hdr.getBoolean(1), hdr.getBoolean(2),
-            equalsRef, if (c == "ctl") ctlPinned else true,
-            hdr.getBoolean(3), headServeComplete)
-        }
-      }
-    }
-
-  /** q357: per (chain, micro-batch) — the binary family's maintenance
-    * loop under a live Hamming probe stream: the resolved version,
-    * the ingest landing at batch 0 (delta-only bytes), the stamped
-    * q278 trigger decision, whether THIS batch's decision committed
-    * the re-sign, exact serve equality with the resolved version's
-    * reference, the control's serving-units byte-pin, the per-trigger
-    * meta-only plan witness, and the head answering every query.
-    */
-  def binMaintLoop(s: SparkSession, d: String): DataFrame = {
-    val rows = ensureBinMaintLoop(s, d)
-    import s.implicits._
-    rows.toDF("chain", "batch_id", "resolved_version", "ingest_committed",
-        "trigger_fired", "refresh_committed", "equals_pinned_reference",
-        "serving_units_pinned", "check_meta_only", "head_serve_complete")
-      .orderBy(col("chain"), col("batch_id"))
-  }
-
-  // ---- q361: the PQ MAINTENANCE LOOP under LIVE SERVING --------------
-  //
-  // The last family without one (graph q346, IVF q353, binary q357 —
-  // the r15 verdict's item 2): q355's trigger→action lifted under a
-  // probe stream, with the serve leg being the COMPOSED IVF-PQ probe
-  // (the r15 item 1 closure, q358's leg) resolved through the chain's
-  // own manifest. The chain carries the q353/q357 unit-split
-  // discipline — corpus_base/corpus_delta AND codes_base/codes_delta
-  // (their (cell, m, code) rows under the serving codebook) — so THE
-  // INGEST (the odd half re-embedded, landing mid-stream as one
-  // atomic commit) stages literally its arriving bytes: the delta
-  // corpus unit, the delta CODES quantized-on-arrival under the
-  // UNCHANGED frozen codebook and assigned under the UNCHANGED coarse
-  // centroids (all multiples of 50 are even, so the coarse quantizer
-  // rows are never re-embedded — the cells survive the drift by
-  // construction), and the meta stamp; corpus_base, cents,
-  // codes_base, and cb re-list by name. The per-trigger check reads
-  // the manifest + ONE meta row (q353's rule and plan witness,
-  // strict at zero). A firing check commits the full re-quantization
-  // — BOTH code units refresh because the CODEBOOK changed (q357's
-  // rationale: codes probed under the wrong codebook generation are
-  // the torn state the atom prevents) — plus the refreshed codebook
-  // and the quiet re-stamp; corpus units and cents re-list.
-  //
-  // Scale shape: the serve is the composed probe — queries assign to
-  // nprobe coarse cells against the broadcast manifest-resolved
-  // centroids, and the ADC scan reads the code units WITH THE CELL
-  // PREDICATE PUSHED to parquet (units are written clustered by
-  // cell, so row groups outside the probed cells never decompress;
-  // the partition-dir layout of q358's persisted table is the same
-  // contract one level up). The check is a KB read; the ingest
-  // measure is one assignment-shaped pass over its own delta.
 
   /** (cell, vec_id, m, code) for `corpusF` under a codebook and the
     * chain's coarse centroids, clustered by cell so the serve's cell
@@ -2240,12 +1545,12 @@ object Clustering {
       .select(col("query_id").as("qid"), col("cent_id").as("cell"))
     val probeCells = probes.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).sorted // nprobe × |queries| bounded
-    val codes = snap("codes_base").unionByName(snap("codes_delta"))
+    val codes = IndexKind.halvesOf(snap, "codes")
       .filter(col("cell").isin(probeCells: _*))
     val pushed = cellPushdownWitness(codes)
     val cb = snap("cb")
-    val lut = subvectors(qs.select(col("query_id").as("vec_id"), col("v")),
-        8, 8)
+    val lut = subvectors(qs.select(col("query_id").as("vec_id"),
+        transform(col("qe"), _.cast("double")).as("v")), 8, 8)
       .join(broadcast(cb), Seq("m"))
       .withColumn("ld", round(dist2Col(col("sv"), col("csv")), 6))
       .select(col("vec_id").as("qid"), col("m"), col("cid"), col("ld"))
@@ -2261,466 +1566,8 @@ object Clustering {
     val wR = Window.partitionBy(col("qid")).orderBy(col("adc"), col("vec_id"))
     val res = adc.withColumn("rank", row_number().over(wR))
       .filter(col("rank") <= 3)
-      .select(col("qid").as("query_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), col("adc"))
+      .select(col("qid").as("query_id"), col("vec_id"))
     (res, pushed)
-  }
-
-  private val maintPqMemo = new Memo[
-    (SparkSession, String),
-    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-      Boolean, Boolean)]]
-
-  private[graft] def ensurePqMaintLoop(s: SparkSession, d: String)
-      : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean,
-        Boolean, Boolean)] =
-    maintPqMemo((s, d), "pq_maint_loop") {
-      import s.implicits._
-      val frozenPred = col("vec_id") % 2 === 0 && col("vec_id") < 32
-      val refreshedPred =
-        (pmod(col("vec_id"), lit(8)) === 0 || pmod(col("vec_id"), lit(8)) === 1) &&
-          col("vec_id") < 64
-      val chains = Seq("ctl", "drift")
-      // the float-domain drift is q353's own (odd half re-embedded
-      // +10/dim) — one shift serves the coarse cosine assignment and,
-      // cast to doubles, the PQ arithmetic
-      val corpora = Map(
-        "ctl" -> embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "drift" -> driftCorpus(s, d))
-      def dbl(f: DataFrame): DataFrame = f.select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("v"))
-      // centroid rows are all multiples of 50 — even, never drifted:
-      // ONE coarse surface serves every version of both chains
-      def centsOf(f: DataFrame): DataFrame =
-        f.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      // commit-time distortion stamps, measured by the writer that
-      // owns each commit (genesis / ingest / refresh) — never by a
-      // trigger
-      val base = corpora("ctl")
-      val frozenCb = pqCodebookOf(dbl(base), frozenPred)
-      val refreshedCbCtl = pqCodebookOf(dbl(base), refreshedPred)
-      val refreshedCbDrift = pqCodebookOf(dbl(corpora("drift")), refreshedPred)
-      val fa0 = pqArrivedDistortion(dbl(base), frozenCb)
-      val fb0 = pqArrivedDistortion(dbl(base), refreshedCbCtl)
-      val faDrift = pqArrivedDistortion(dbl(corpora("drift")), frozenCb)
-      val fbDrift = pqArrivedDistortion(dbl(corpora("drift")), refreshedCbDrift)
-      val roots = chains.map(c =>
-        c -> graft.util.TmpDirs.scratchFor(s"pq_maint_$c", d)).toMap
-      val heads = chains.map(c =>
-        c -> new java.util.concurrent.atomic.AtomicLong(0)).toMap
-      chains.foreach { c =>
-        val root = roots(c)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(s"$root/manifest"))
-        val cents = centsOf(base)
-        base.filter(col("vec_id") % 2 === 0)
-          .write.mode("overwrite").parquet(s"$root/data/corpus_base_0")
-        base.filter(col("vec_id") % 2 === 1)
-          .write.mode("overwrite").parquet(s"$root/data/corpus_delta_0")
-        cents.write.mode("overwrite").parquet(s"$root/data/cents_0")
-        maintPqCodes(base.filter(col("vec_id") % 2 === 0), cents, frozenCb)
-          .write.mode("overwrite").parquet(s"$root/data/codes_base_0")
-        maintPqCodes(base.filter(col("vec_id") % 2 === 1), cents, frozenCb)
-          .write.mode("overwrite").parquet(s"$root/data/codes_delta_0")
-        frozenCb.write.mode("overwrite").parquet(s"$root/data/cb_0")
-        Seq((fa0, fb0)).toDF("dist_head_us", "dist_refreshed_us")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/data/meta_0")
-        Seq(("corpus_base", "data/corpus_base_0"),
-            ("corpus_delta", "data/corpus_delta_0"),
-            ("cents", "data/cents_0"),
-            ("codes_base", "data/codes_base_0"),
-            ("codes_delta", "data/codes_delta_0"),
-            ("cb", "data/cb_0"), ("meta", "data/meta_0"))
-          .toDF("tbl", "unit").coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest/v0")
-      }
-      // the ctl serving units must survive the drive byte-identical
-      val ctlPinBefore =
-        listDataFiles(java.nio.file.Paths.get(
-          s"${roots("ctl")}/data/codes_base_0")) ++
-        listDataFiles(java.nio.file.Paths.get(
-          s"${roots("ctl")}/data/codes_delta_0")) ++
-        listDataFiles(java.nio.file.Paths.get(s"${roots("ctl")}/data/cb_0"))
-      // the probe feed: ids ≡ 51 mod 100 (odd — drifted on the drift
-      // chain), 3 ordered chunks
-      val qVecs = chains.map { c =>
-        c -> corpora(c).filter(col("vec_id") % 100 === 51)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").as("qe"),
-            transform(col("embedding"), _.cast("double")).as("v"))
-      }.toMap
-      val feed = graft.util.TmpDirs.scratchFor("pq_maint_feed", d)
-      (0 until 3).foreach { c =>
-        graft.util.OrderedFeed.writeChunk(s"$feed/c$c", c,
-          qVecs("drift").select(col("query_id"))
-            .filter(pmod(col("query_id"), lit(3)) === c))
-      }
-      val outDir = graft.util.TmpDirs.scratchFor("pq_maint_out", d)
-      graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        val q = src.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              val ss = batch.sparkSession
-              chains.foreach { c =>
-                val root = roots(c)
-                val v = heads(c).get() // resolve the head at batch start
-                // THE MAINTENANCE CHECK — manifest + one meta row
-                // (ivfMaintCheck IS the shared stamped-stats rule)
-                val (fires, metaOnly) = ivfMaintCheck(ss, root, v)
-                val refreshNow = fires && v == 1L
-                if (refreshNow) {
-                  // THE ACTION: full re-quantization under the
-                  // refreshed codebook — BOTH code units fresh, the
-                  // codebook fresh, the quiet re-stamp; corpus and
-                  // cents re-list by name
-                  val u = Audit.manifestUnits(ss, root, v)
-                  val corpF = corpora(c)
-                  val cents = centsOf(base)
-                  require(Audit.occCommitNShared(s, root, heads(c), 1L, Seq(
-                      "corpus_base" -> Left(u("corpus_base")),
-                      "corpus_delta" -> Left(u("corpus_delta")),
-                      "cents" -> Left(u("cents")),
-                      "codes_base" -> Right(maintPqCodes(
-                        corpF.filter(col("vec_id") % 2 === 0), cents,
-                        refreshedCbDrift)),
-                      "codes_delta" -> Right(maintPqCodes(
-                        corpF.filter(col("vec_id") % 2 === 1), cents,
-                        refreshedCbDrift)),
-                      "cb" -> Right(refreshedCbDrift),
-                      "meta" -> Right(Seq((fbDrift, fbDrift))
-                        .toDF("dist_head_us", "dist_refreshed_us")))),
-                    s"the maintenance refresh holds the head ($c)")
-                }
-                // serve THIS batch through the version resolved at start
-                val snap = Audit.readNSnapshot(ss, root, v)
-                val qs = batch.select(col("query_id"))
-                  .join(qVecs(c), Seq("query_id"))
-                val (served, pushed) = composedPqServe(snap, qs)
-                served
-                  .withColumn("resolved_v", lit(v))
-                  .withColumn("trigger_fired", lit(fires))
-                  .withColumn("refresh_committed", lit(refreshNow))
-                  .withColumn("check_meta_only", lit(metaOnly))
-                  .withColumn("serve_filter_pushed", lit(pushed))
-                  .write.mode("overwrite")
-                  .parquet(s"$outDir/chain=$c/batch_id=$id")
-                // after batch 0's serve: THE INGEST lands — the delta
-                // corpus re-embedded + its codes quantized-on-arrival
-                // under the FROZEN codebook (drift), or the zero-delta
-                // re-stamp (ctl)
-                if (id == 0L) {
-                  val u0 = Audit.manifestUnits(ss, root, 0L)
-                  val ingest: Seq[(String, Either[String, DataFrame])] =
-                    if (c == "drift") Seq(
-                      "corpus_base" -> Left(u0("corpus_base")),
-                      "corpus_delta" -> Right(
-                        corpora(c).filter(col("vec_id") % 2 === 1)),
-                      "cents" -> Left(u0("cents")),
-                      "codes_base" -> Left(u0("codes_base")),
-                      "codes_delta" -> Right(maintPqCodes(
-                        corpora(c).filter(col("vec_id") % 2 === 1),
-                        centsOf(base), frozenCb)),
-                      "cb" -> Left(u0("cb")),
-                      "meta" -> Right(Seq((faDrift, fbDrift))
-                        .toDF("dist_head_us", "dist_refreshed_us")))
-                    else Seq(
-                      "corpus_base" -> Left(u0("corpus_base")),
-                      "corpus_delta" -> Left(u0("corpus_delta")),
-                      "cents" -> Left(u0("cents")),
-                      "codes_base" -> Left(u0("codes_base")),
-                      "codes_delta" -> Left(u0("codes_delta")),
-                      "cb" -> Left(u0("cb")),
-                      "meta" -> Right(Seq((fa0, fb0))
-                        .toDF("dist_head_us", "dist_refreshed_us")))
-                  require(Audit.occCommitNShared(s, root, heads(c), 0L,
-                      ingest), s"the ingest commit holds the head ($c)")
-                }
-              }
-            }
-          }
-          .start()
-        graft.util.StreamTuning.drained(q)
-      }
-      val ctlPinned = {
-        val after =
-          listDataFiles(java.nio.file.Paths.get(
-            s"${roots("ctl")}/data/codes_base_0")) ++
-          listDataFiles(java.nio.file.Paths.get(
-            s"${roots("ctl")}/data/codes_delta_0")) ++
-          listDataFiles(java.nio.file.Paths.get(s"${roots("ctl")}/data/cb_0"))
-        ctlPinBefore == after
-      }
-      // post-drive: per-version references through the SAME serve leg
-      chains.flatMap { c =>
-        val root = roots(c)
-        val served = s.read.parquet(s"$outDir/chain=$c")
-        (0L to 2L).map { id =>
-          val b = served.filter(col("batch_id") === id)
-          val hdr = b.select(col("resolved_v"), col("trigger_fired"),
-              col("refresh_committed"), col("check_meta_only"),
-              col("serve_filter_pushed"))
-            .limit(1).collect()(0) // 1 bounded control row
-          val v = hdr.getLong(0)
-          val chunk = s.read.parquet(s"$feed/c${id.toInt}")
-            .select(col("query_id"))
-          val snap = Audit.readNSnapshot(s, root, v)
-          val (ref, _) = composedPqServe(snap,
-            chunk.join(qVecs(c), Seq("query_id")))
-          val bAns = b.select(col("query_id"), col("neighbor_id"))
-          val refAns = ref.select(col("query_id"), col("neighbor_id"))
-          val equalsRef = bAns.exceptAll(refAns).count() +
-            refAns.exceptAll(bAns).count() == 0L
-          (c, id, v, id == 0L, hdr.getBoolean(1), hdr.getBoolean(2),
-            equalsRef, if (c == "ctl") ctlPinned else true,
-            hdr.getBoolean(3), hdr.getBoolean(4))
-        }
-      }
-    }
-
-  /** q361: per (chain, micro-batch) — the resolved version, the
-    * delta-only ingest landing at batch 0, the stamped-stats trigger
-    * decision (fires at v1 on the drift chain only), whether THIS
-    * batch's decision committed the re-quantization, exact serve
-    * equality with the resolved version's reference through the same
-    * COMPOSED probe leg, the control's serving-units byte-pin, the
-    * per-trigger meta-only plan witness, and the serve's cell-
-    * predicate pushdown witness.
-    */
-  def pqMaintLoop(s: SparkSession, d: String): DataFrame = {
-    val rows = ensurePqMaintLoop(s, d)
-    import s.implicits._
-    rows.toDF("chain", "batch_id", "resolved_version", "ingest_committed",
-        "trigger_fired", "refresh_committed", "equals_pinned_reference",
-        "serving_units_pinned", "check_meta_only", "serve_filter_pushed")
-      .orderBy(col("chain"), col("batch_id"))
-  }
-
-  // ---- q363: ONE maintenance SCHEDULER over every registered chain --
-  //
-  // Each maintenance loop so far is its own stream body (graph q346,
-  // IVF q353, PQ q361, binary q357); a deployment wants ONE job that
-  // walks every registered chain's stamped stats per tick and fires
-  // each family's own action through its existing commit path (the
-  // r15 verdict's item 4 — the q354 analog for maintenance). The
-  // scheduler IS the q354 shape: a declarative chain list, one walk,
-  // family-dispatched primitives — here the per-chain stamped-stats
-  // checks (ivfMaintCheck / binMaintCheck, each a manifest + ONE meta
-  // row, plan-witnessed) and the occCommitNShared refresh atoms.
-  //
-  // The drive: an IVF chain and a binary chain both born HOT (their
-  // drifted ingests landed pre-stream, meta stamped by the writers
-  // that owned them), served by one live probe stream. Batch 0's
-  // SINGLE scheduler pass reads both chains' stats and fires BOTH
-  // families' refreshes; batch 0 still serves the versions resolved
-  // at batch start; batch 1 serves both refreshed heads and the same
-  // walk finds both chains quiet (the re-stamp closed the loop).
-  //
-  // Scale shape: one tick costs |chains| bounded manifest+meta reads
-  // (KBs per chain, zero data rows) — the per-trigger discipline the
-  // r15 rework bought, now amortized across every registered chain
-  // in one walk; each fired action re-stages only what its family's
-  // commit already stages.
-
-  /** ONE scheduler pass: walk every registered chain's stamped stats,
-    * apply the chain's own integer rule at its resolved head, fire
-    * the family's registered action for every hot chain. Returns per
-    * family (fired, meta-only witness, acted).
-    */
-  private def maintSchedulerTick(ss: SparkSession,
-      chains: Seq[(String, String)], vs: Map[String, Long],
-      actions: Map[String, () => Unit])
-      : Map[String, (Boolean, Boolean, Boolean)] =
-    chains.map { case (family, root) =>
-      val v = vs(family)
-      val (fires, metaOnly) = family match {
-        case "binary" => binMaintCheck(ss, root, v)
-        case _ => ivfMaintCheck(ss, root, v)
-      }
-      val act = fires && v == 0L
-      if (act) actions(family)()
-      family -> ((fires, metaOnly, act))
-    }.toMap
-
-  private val schedMemo = new Memo[
-    (SparkSession, String),
-    Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean)]]
-
-  private[graft] def ensureMaintScheduler(s: SparkSession, d: String)
-      : Seq[(String, Long, Long, Boolean, Boolean, Boolean, Boolean,
-        Boolean)] =
-    schedMemo((s, d), "maint_scheduler") {
-      import s.implicits._
-      // IVF chain, born HOT: the drifted ingest landed pre-stream
-      val arrived = driftCorpus(s, d)
-      val cents0 = frozenCents(arrived)
-      val (_, rebuilt) = ensureDriftIndexes(s, d)
-      val faDrift = ivfDistortionSum(arrived, cents0)
-      val fbDrift = ivfDistortionSum(arrived, refreshedCents(arrived))
-      val ivfRoot = graft.util.TmpDirs.scratchFor("sched_ivf", d)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$ivfRoot/manifest"))
-      arrived.write.mode("overwrite").parquet(s"$ivfRoot/data/corpus_0")
-      ivfAssignAgainst(arrived, cents0).select(col("vec_id"), col("cell"))
-        .write.mode("overwrite").parquet(s"$ivfRoot/data/index_0")
-      cents0.write.mode("overwrite").parquet(s"$ivfRoot/data/cents_0")
-      Seq((faDrift, fbDrift)).toDF("dist_head_us", "dist_refreshed_us")
-        .coalesce(1).write.mode("overwrite").parquet(s"$ivfRoot/data/meta_0")
-      Seq(("corpus", "data/corpus_0"), ("index", "data/index_0"),
-          ("cents", "data/cents_0"), ("meta", "data/meta_0"))
-        .toDF("tbl", "unit").coalesce(1)
-        .write.mode("overwrite").parquet(s"$ivfRoot/manifest/v0")
-      // binary chain, born HOT (q356's surfaces)
-      val bcorp = shiftCorpus(s, d)
-      val frozenThr = binThresholdsOf(bcorp, col("vec_id") % 2 === 0)
-      val refreshedThr = binThresholdsOf(bcorp, lit(true))
-      val (bfa, bnn) = binImbalance(bcorp, frozenThr)
-      val (bfb, _) = binImbalance(bcorp, refreshedThr)
-      val binRoot = graft.util.TmpDirs.scratchFor("sched_bin", d)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$binRoot/manifest"))
-      bcorp.write.mode("overwrite").parquet(s"$binRoot/data/corpus_0")
-      thresholdSignCodes(bcorp, frozenThr)
-        .write.mode("overwrite").parquet(s"$binRoot/data/codes_0")
-      frozenThr.write.mode("overwrite").parquet(s"$binRoot/data/thr_0")
-      Seq((bfa, bfb, bnn)).toDF("imb_head", "imb_refreshed", "n_total")
-        .coalesce(1).write.mode("overwrite").parquet(s"$binRoot/data/meta_0")
-      Seq(("corpus", "data/corpus_0"), ("codes", "data/codes_0"),
-          ("thr", "data/thr_0"), ("meta", "data/meta_0"))
-        .toDF("tbl", "unit").coalesce(1)
-        .write.mode("overwrite").parquet(s"$binRoot/manifest/v0")
-      val families = Seq("ivf", "binary")
-      val roots = Map("ivf" -> ivfRoot, "binary" -> binRoot)
-      val heads = families.map(f =>
-        f -> new java.util.concurrent.atomic.AtomicLong(0)).toMap
-      val uIvf = Audit.manifestUnits(s, ivfRoot, 0L)
-      val uBin = Audit.manifestUnits(s, binRoot, 0L)
-      // each family's action = its OWN refresh atom (corpus re-listed
-      // by name, the quiet re-stamp inside the same commit)
-      val actions: Map[String, () => Unit] = Map(
-        "ivf" -> (() => require(Audit.occCommitNShared(s, ivfRoot,
-            heads("ivf"), 0L, Seq(
-              "corpus" -> Left(uIvf("corpus")),
-              "index" -> Right(s.table(rebuilt)
-                .select(col("vec_id"), col("cell"))),
-              "cents" -> Right(refreshedCents(arrived)),
-              "meta" -> Right(Seq((fbDrift, fbDrift))
-                .toDF("dist_head_us", "dist_refreshed_us")))),
-          "the scheduler-fired IVF refresh holds the head")),
-        "binary" -> (() => require(Audit.occCommitNShared(s, binRoot,
-            heads("binary"), 0L, Seq(
-              "corpus" -> Left(uBin("corpus")),
-              "codes" -> Right(thresholdSignCodes(bcorp, refreshedThr)),
-              "thr" -> Right(refreshedThr),
-              "meta" -> Right(Seq((bfb, bfb, bnn))
-                .toDF("imb_head", "imb_refreshed", "n_total")))),
-          "the scheduler-fired binary refresh holds the head")))
-      // the probe feed both families serve: ids ≡ 51 mod 100, 2 chunks
-      val qIvf = arrived.filter(col("vec_id") % 100 === 51)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val qBin = bcorp.filter(col("vec_id") % 100 === 51)
-        .select(col("vec_id").as("query_id"), col("v").as("qe"))
-      val feed = graft.util.TmpDirs.scratchFor("sched_feed", d)
-      (0 until 2).foreach { c =>
-        // ids are 51 + 100k (all odd) — chunk by k's parity, not the
-        // id's (pmod(id, 2) would leave chunk 0 empty)
-        graft.util.OrderedFeed.writeChunk(s"$feed/c$c", c,
-          arrived.filter(col("vec_id") % 100 === 51)
-            .select(col("vec_id").as("query_id"))
-            .filter(pmod(((col("query_id") - 51) / 100).cast("long"),
-              lit(2)) === c))
-      }
-      val outDir = graft.util.TmpDirs.scratchFor("sched_out", d)
-      val ticks = new java.util.concurrent.atomic.AtomicLong(0)
-      graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        val q = src.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              val ss = batch.sparkSession
-              // resolve every family's head at batch start, then ONE
-              // scheduler pass walks all chains and fires the hot ones
-              val vs = families.map(f => f -> heads(f).get()).toMap
-              val dec = maintSchedulerTick(ss,
-                families.map(f => f -> roots(f)), vs, actions)
-              ticks.incrementAndGet()
-              // serve THIS batch at the batch-start versions
-              families.foreach { f =>
-                val snap = Audit.readNSnapshot(ss, roots(f), vs(f))
-                val qs = batch.select(col("query_id"))
-                val served = f match {
-                  case "ivf" => ivfProbeTop3(snap("corpus"),
-                    qs.join(qIvf, Seq("query_id")),
-                    snap("index"), snap("cents"))
-                  case _ => hammingTop3(qs.join(qBin, Seq("query_id")),
-                    snap("thr"), snap("codes"))
-                }
-                val (fired, metaOnly, acted) = dec(f)
-                served
-                  .withColumn("resolved_v", lit(vs(f)))
-                  .withColumn("trigger_fired", lit(fired))
-                  .withColumn("action_committed", lit(acted))
-                  .withColumn("check_meta_only", lit(metaOnly))
-                  .write.mode("overwrite")
-                  .parquet(s"$outDir/family=$f/batch_id=$id")
-              }
-            }
-          }
-          .start()
-        graft.util.StreamTuning.drained(q)
-      }
-      val singlePass = ticks.get() == 2L
-      // post-drive: serve equality vs the resolved versions' reference
-      families.flatMap { f =>
-        val served = s.read.parquet(s"$outDir/family=$f")
-        (0L to 1L).map { id =>
-          val b = served.filter(col("batch_id") === id)
-          val hdr = b.select(col("resolved_v"), col("trigger_fired"),
-              col("action_committed"), col("check_meta_only"))
-            .limit(1).collect()(0) // 1 bounded control row
-          val v = hdr.getLong(0)
-          val chunk = s.read.parquet(s"$feed/c${id.toInt}")
-            .select(col("query_id"))
-          val snap = Audit.readNSnapshot(s, roots(f), v)
-          val ref = f match {
-            case "ivf" => ivfProbeTop3(snap("corpus"),
-              chunk.join(qIvf, Seq("query_id")),
-              snap("index"), snap("cents"))
-            case _ => hammingTop3(chunk.join(qBin, Seq("query_id")),
-              snap("thr"), snap("codes"))
-          }
-          val bAns = b.select(col("query_id"), col("vec_id"))
-          val refAns = ref.select(col("query_id"), col("vec_id"))
-          val equalsRef = bAns.exceptAll(refAns).count() +
-            refAns.exceptAll(bAns).count() == 0L
-          (f, id, v, hdr.getBoolean(1), hdr.getBoolean(2), equalsRef,
-            hdr.getBoolean(3), singlePass)
-        }
-      }
-    }
-
-  /** q363: per (family, micro-batch) — the batch-start resolved
-    * version, the ONE scheduler pass's trigger decision (both
-    * families fire at batch 0, both quiet at batch 1 off their own
-    * re-stamps), whether that pass committed the family's refresh,
-    * exact serve equality with the resolved version's reference, the
-    * per-chain meta-only plan witness, and the single-walk witness
-    * (exactly one scheduler pass per trigger).
-    */
-  def maintScheduler(s: SparkSession, d: String): DataFrame = {
-    val rows = ensureMaintScheduler(s, d)
-    import s.implicits._
-    rows.toDF("family", "batch_id", "resolved_version", "trigger_fired",
-        "action_committed", "equals_pinned_reference", "check_meta_only",
-        "single_scheduler_pass")
-      .orderBy(col("family"), col("batch_id"))
   }
 
   /** (vec_id, m, sv) subvector expansion shared by q114 and the q204

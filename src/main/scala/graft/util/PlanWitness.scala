@@ -3,9 +3,8 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 
 /** Executed-plan scan witnesses shared by every stamped-stats
-  * maintenance check (the graph manifest read in GraphAnn, the
-  * q353/q357 meta checks in Clustering) — extracted per the r15
-  * advice so the two copies cannot drift.
+  * maintenance check (the graph manifest read in GraphAnn, the meta
+  * check in IndexKind), so the two cannot drift.
   */
 object PlanWitness {
 

@@ -211,7 +211,7 @@ class Round14OpsSpec extends AnyFunSuite {
 
   test("q348 trigger action: the drift chain's measurement commits the refresh, the control commits nothing") {
     val sf = "/root/testdata/sf0.001"
-    val rows = Clustering.ensureTriggerAction(spark, sf)
+    val rows = graft.ops.IndexKind.triggerAction(spark, sf, Clustering.IvfIndex)
     assert(rows == Seq(
       ("ctl", false, 0L, true, true, true),
       ("drift", true, 1L, true, true, true)), s"ledger: $rows")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ops.GraphAnn
+import graft.ops.{Clustering, GraphAnn, IndexKind}
 import graft.util.BenchNoise
 
 /** Round-15 structural invariants: the O(manifest) maintenance check
@@ -150,7 +150,7 @@ class Round15OpsSpec extends AnyFunSuite {
 
   test("q353 IVF maintenance loop: the ingest lands, the stamped check fires once on the drift chain, the control stays pinned") {
     val sf = "/root/testdata/sf0.001"
-    val rows = graft.ops.Clustering.ensureIvfMaintLoop(spark, sf)
+    val rows = IndexKind.maintLoop(spark, sf, Clustering.IvfIndex)
     val byChain = rows.groupBy(_._1)
     // version sequence: drift 0→1→2, ctl 0→1→1
     assert(byChain("drift").map(_._3) == Seq(0L, 1L, 2L))
@@ -181,7 +181,7 @@ class Round15OpsSpec extends AnyFunSuite {
 
   test("q357 binary maintenance loop: delta-only ingest, one firing re-sign, control fully re-listed") {
     val sf = "/root/testdata/sf0.001"
-    val rows = graft.ops.Clustering.ensureBinMaintLoop(spark, sf)
+    val rows = IndexKind.maintLoop(spark, sf, Clustering.BinIndex)
     val byChain = rows.groupBy(_._1)
     assert(byChain("drift").map(_._3) == Seq(0L, 1L, 2L))
     assert(byChain("ctl").map(_._3) == Seq(0L, 1L, 1L))
@@ -207,12 +207,56 @@ class Round15OpsSpec extends AnyFunSuite {
       assert(u(2)(k) != u(1)(k), s"$k must refresh with the thresholds") }
   }
 
+  test("q361 PQ maintenance loop: delta-only ingest, one firing re-quantization, every serve pushes the cell filter") {
+    val sf = "/root/testdata/sf0.001"
+    val rows = IndexKind.maintLoop(spark, sf, Clustering.PqIndex)
+    val byChain = rows.groupBy(_._1)
+    assert(byChain("drift").map(_._3) == Seq(0L, 1L, 2L))
+    assert(byChain("ctl").map(_._3) == Seq(0L, 1L, 1L))
+    assert(rows.filter(_._5).map(r => (r._1, r._2)) == Seq(("drift", 1L)))
+    assert(rows.filter(_._6).map(r => (r._1, r._2)) == Seq(("drift", 1L)))
+    // serve equality, ctl pin, meta-only check, cell-filter pushdown
+    rows.foreach { r =>
+      assert(r._7 && r._8 && r._9 && r._10,
+        s"${r._1} batch ${r._2} witnesses: $r")
+    }
+    // delta-only ingest: the base corpus, base codes and codebook are
+    // name-shared v0→v1; the re-quantization at v2 replaces both code
+    // units and the codebook, the corpus units re-list by name
+    val droot = graft.util.TmpDirs.pathFor("pq_maint_drift", sf)
+    val u = (0L to 2L).map(v =>
+      graft.ops.Audit.manifestUnits(spark, droot, v))
+    Seq("corpus_base", "codes_base", "cb").foreach { k =>
+      assert(u(1)(k) == u(0)(k), s"$k re-staged by the ingest") }
+    assert(u(1)("corpus_delta") != u(0)("corpus_delta"))
+    assert(u(1)("codes_delta") != u(0)("codes_delta"))
+    Seq("corpus_base", "corpus_delta").foreach { k =>
+      assert(u(2)(k) == u(1)(k), s"$k re-staged by the re-quantization") }
+    Seq("codes_base", "codes_delta", "cb").foreach { k =>
+      assert(u(2)(k) != u(1)(k), s"$k must refresh with the codebook") }
+  }
+
+  test("q363 maintenance scheduler: one pass per trigger fires and acts on both families at batch 0, both quiet at batch 1") {
+    val sf = "/root/testdata/sf0.001"
+    val rows = IndexKind.scheduler(spark, sf,
+      Seq(Clustering.IvfIndex, Clustering.BinIndex))
+    assert(rows.map(r => (r._1, r._2, r._3, r._4, r._5)) == Seq(
+      ("ivf", 0L, 0L, true, true), ("ivf", 1L, 1L, false, false),
+      ("binary", 0L, 0L, true, true), ("binary", 1L, 1L, false, false)),
+      s"scheduler ledger: $rows")
+    rows.foreach { r =>
+      assert(r._6, s"${r._1} batch ${r._2} diverged from its reference")
+      assert(r._7, s"${r._1} batch ${r._2} check scanned beyond meta")
+      assert(r._8, s"${r._1} batch ${r._2}: not one scheduler pass per trigger")
+    }
+  }
+
   test("q355/q356: the PQ and binary triggers ACT on drift and stay quiet on the control") {
     val sf = "/root/testdata/sf0.001"
-    val pq = graft.ops.Clustering.ensurePqTriggerAction(spark, sf)
+    val pq = IndexKind.triggerAction(spark, sf, Clustering.PqIndex)
     assert(pq == Seq(("ctl", false, 0L, true, true, true),
       ("drift", true, 1L, true, true, true)), s"pq ledger: $pq")
-    val bin = graft.ops.Clustering.ensureBinTriggerAction(spark, sf)
+    val bin = IndexKind.triggerAction(spark, sf, Clustering.BinIndex)
     assert(bin == Seq(("ctl", false, 0L, true, true, true),
       ("drift", true, 1L, true, true, true)), s"bin ledger: $bin")
   }

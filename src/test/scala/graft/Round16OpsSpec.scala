@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Audit, Clustering, GraphAnn}
+import graft.ops.{Audit, Clustering, GraphAnn, IndexKind}
 import graft.util.PlanWitness
 
 /** Round-16 structural invariants: the strict-at-zero stamped rule,
@@ -19,27 +19,43 @@ class Round16OpsSpec extends AnyFunSuite {
     * write-once by protocol (and their mounts memoized — Mounts), so
     * the spec must not rewrite v0 in place at a reused path.
     */
-  private def metaRoot(tag: String, fa: Long, fb: Long): String = {
+  private def metaRoot(tag: String, meta: org.apache.spark.sql.DataFrame)
+      : String = {
     import spark.implicits._
     val root = graft.util.TmpDirs.scratch(s"r16-strictzero-$tag")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$root/manifest"))
-    Seq((fa, fb)).toDF("dist_head_us", "dist_refreshed_us")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/data/meta_0")
+    meta.coalesce(1).write.mode("overwrite").parquet(s"$root/data/meta_0")
     Seq(("meta", "data/meta_0")).toDF("tbl", "unit").coalesce(1)
       .write.mode("overwrite").parquet(s"$root/manifest/v0")
     root
   }
 
+  /** The IVF/PQ stamp (dist_head_us, dist_refreshed_us) under check. */
+  private def ivfCheck(tag: String, fa: Long, fb: Long): (Boolean, Boolean) = {
+    import spark.implicits._
+    IndexKind.check(spark, metaRoot(tag,
+      Seq((fa, fb)).toDF("dist_head_us", "dist_refreshed_us")), 0L,
+      Clustering.IvfIndex)
+  }
+
   test("stamped trigger rule is strict at zero: a (0, 0) quiet stamp never re-fires, a hot stamp does, a sub-2x stamp does not") {
     // converged/empty chain: fa = fb = 0
-    val (zeroFires, w0) =
-      Clustering.ivfMaintCheck(spark, metaRoot("zero", 0L, 0L), 0L)
+    val (zeroFires, w0) = ivfCheck("zero", 0L, 0L)
     assert(!zeroFires, "fa = fb = 0 satisfies fa >= 2*fb — the strict " +
       "guard must keep a converged chain quiet")
     assert(w0, "the meta read must carry the plan witness")
-    assert(Clustering.ivfMaintCheck(spark, metaRoot("hot", 10L, 5L), 0L)._1)
-    assert(!Clustering.ivfMaintCheck(spark, metaRoot("sub2x", 10L, 6L), 0L)._1)
+    assert(ivfCheck("hot", 10L, 5L)._1)
+    assert(!ivfCheck("sub2x", 10L, 6L)._1)
+    // the binary rule (imb_head ≥ 2·imb_refreshed ∧ 4·imb_head ≥ n)
+    // holds at (0, 0, 0) too: an empty binary chain must stay quiet
+    import spark.implicits._
+    val (binZeroFires, wb) = IndexKind.check(spark, metaRoot("bin-zero",
+      Seq((0L, 0L, 0L)).toDF("imb_head", "imb_refreshed", "n_total")), 0L,
+      Clustering.BinIndex)
+    assert(!binZeroFires, "(0, 0, 0) satisfies both binary conditions — " +
+      "the strict guard must keep an empty binary chain quiet")
+    assert(wb, "the binary meta read must carry the plan witness")
   }
 
   test("PlanWitness: scanOnly pins a single-dir scan, rejects a two-dir plan; scanOnlyWithin admits the declared set") {
