@@ -23,8 +23,8 @@ import graft.model.LogEntry
   *    with Go `strconv` semantics: syntax error → 0, range error →
   *    clamped to the type's max/min (parser.go:98-116).
   *
-  * Pure functions — used inside typed `Dataset.map`/`flatMap` stages so
-  * the surrounding pipeline stays a narrow, shuffle-free plan.
+  * Pure functions, called per record by the techlog connector's
+  * partition reader (`sources.TechLogFileReader`).
   */
 object TechLogParser {
 
@@ -126,14 +126,17 @@ object TechLogParser {
   def parseUintClamped(s: String, max: Long): Long = {
     if (s == null || s.isEmpty) return 0L
     var i = 0 // no sign prefix: Go ParseUint rejects '+'/'-'
-    var v = BigInt(0)
+    var v = 0L
+    var overflow = false
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (c < '0' || c > '9') return 0L
-      v = v * 10 + (c - '0')
+      val d = s.charAt(i) - '0'
+      if (d < 0 || d > 9) return 0L
+      // v * 10 + d > max, without overflowing the Long
+      if (overflow || v > (max - d) / 10) overflow = true
+      else v = v * 10 + d
       i += 1
     }
-    if (v > max) max else v.toLong
+    if (overflow) max else v
   }
 
   def parseUint8(s: String): Int = parseUintClamped(s, 255L).toInt
@@ -150,11 +153,12 @@ object TechLogParser {
       case _   =>
     }
     if (i >= s.length) return 0
-    var v = BigInt(0)
+    // the magnitude stops growing past 2^31: beyond it, both signs clamp
+    var v = 0L
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (c < '0' || c > '9') return 0
-      v = v * 10 + (c - '0')
+      val d = s.charAt(i) - '0'
+      if (d < 0 || d > 9) return 0
+      if (v <= 2147483648L) v = v * 10 + d
       i += 1
     }
     val signed = if (neg) -v else v

@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.Transform
 import graft.pipeline.LogPump
 
 /** End-to-end batch pump: synthetic .log files in the 1C format →
@@ -78,6 +79,36 @@ class LogPumpSpec extends AnyFunSuite {
     val out = LogPump.pumpBatch(spark, dir.toString).collect()
     assert(out.length == 1)
     assert(out(0).getAs[String]("User") == "ok")
+  }
+
+  test("ANSI mode: a LogTimestamp without '-' is Duration 0, not a failed job") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    // a valid record boundary: the header's only '-' is in a later field
+    val dir = writeLogs(Map("25052607.log" -> "00:01.123456,CONN,3,Usr=a-b\n"))
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
+    assert(out.map(r => (r.getAs[String]("User"), r.getAs[Long]("Duration"))).toSeq ==
+      Seq(("a-b", 0L)))
+    val dlq = Transform.withReason(spark.read.format("techlog").load(dir.toString)).collect()
+    assert(dlq.map(r => (r.getAs[String]("drop_reason"), r.getAs[Long]("Duration"))).toSeq ==
+      Seq(("ok", 0L)))
+  }
+
+  test("ANSI mode: a duration of more than 38 digits is Duration 0, not a failed job") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val dir = writeLogs(Map("25052607.log" -> s"00:01.123456-${"9" * 40},CONN,3,Usr=big\n"))
+    val out = LogPump.pumpBatch(spark, dir.toString).collect()
+    assert(out.map(r => (r.getAs[String]("User"), r.getAs[Long]("Duration"))).toSeq ==
+      Seq(("big", 0L)))
+  }
+
+  test("ANSI mode: the DLQ view materializes Duration of a leading junk record") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val dir = writeLogs(Map("25052607.log" ->
+      "garbage first line\n00:02.123456-5,CONN,3,Usr=ok\n"))
+    val dlq = Transform.withReason(spark.read.format("techlog").load(dir.toString))
+      .select("drop_reason", "Duration").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    assert(dlq == Seq(("no_time_match", 0L), ("ok", 5L)))
   }
 
   test("BOM before time is stripped (transform.go:29)") {

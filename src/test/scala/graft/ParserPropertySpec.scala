@@ -92,4 +92,20 @@ class ParserPropertySpec extends AnyFunSuite {
       parseInt32(n.toString) == expected
     })
   }
+
+  test("coercion law: digit strings up to 25 digits parse as BigInt arithmetic clamps them") {
+    val digitsGen = Gen.choose(1, 25).flatMap(k => Gen.listOfN(k, Gen.numChar).map(_.mkString))
+    val signed = for {
+      sign <- Gen.oneOf("", "", "+", "-"); ds <- digitsGen
+    } yield sign + ds
+    def clamp(v: BigInt, lo: BigInt, hi: BigInt): BigInt = v.max(lo).min(hi)
+    check(Prop.forAll(signed) { s =>
+      val unsigned = if (s.head == '+' || s.head == '-') None else Some(BigInt(s))
+      unsigned.fold(parseUint64(s) == 0L && parseUint32(s) == 0L && parseUint8(s) == 0) { v =>
+        BigInt(parseUint64(s)) == clamp(v, 0, Long.MaxValue) &&
+          BigInt(parseUint32(s)) == clamp(v, 0, 4294967295L) &&
+          BigInt(parseUint8(s)) == clamp(v, 0, 255)
+      } && BigInt(parseInt32(s)) == clamp(BigInt(s), Int.MinValue, Int.MaxValue)
+    })
+  }
 }

@@ -114,6 +114,29 @@ class TechLogParserSpec extends AnyFunSuite {
     assert(parseUint32("+5") == 0L)
     assert(parseUint32("-5") == 0L)
     assert(parseInt32("+5") == 5)
+    Seq("+0", "-0", "+255", "-1", "+9223372036854775807", "-9223372036854775808").foreach { s =>
+      assert(parseUint8(s) == 0 && parseUint32(s) == 0L && parseUint64(s) == 0L, s)
+    }
+  }
+
+  test("numeric coercions at Long.MaxValue ± 1 and past 20 digits") {
+    assert(parseUint64("9223372036854775806") == Long.MaxValue - 1)
+    assert(parseUint64("9223372036854775807") == Long.MaxValue)
+    assert(parseUint64("9223372036854775808") == Long.MaxValue)
+    assert(parseUint64("18446744073709551616") == Long.MaxValue) // 2^64
+    assert(parseUint64("123456789012345678901234567890") == Long.MaxValue)
+    assert(parseUint32("123456789012345678901234567890") == 4294967295L)
+    assert(parseUint8("123456789012345678901234567890") == 255)
+    assert(parseUint32("00000000000000000000004294967295") == 4294967295L)
+    assert(parseUint32("00000000000000000000000000000007") == 7L)
+    assert(parseInt32("9223372036854775808") == Int.MaxValue)
+    assert(parseInt32("-9223372036854775809") == Int.MinValue)
+    assert(parseInt32("+123456789012345678901234567890") == Int.MaxValue)
+    assert(parseInt32("-123456789012345678901234567890") == Int.MinValue)
+    assert(parseInt32("2147483648") == Int.MaxValue)
+    assert(parseInt32("-2147483648") == Int.MinValue)
+    assert(parseInt32("-2147483649") == Int.MinValue)
+    assert(parseInt32("-00000000000000000000002147483647") == -Int.MaxValue)
   }
 
   test("record boundary regex is unanchored (scan.go:16-21)") {

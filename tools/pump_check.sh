@@ -12,7 +12,8 @@ cd "$(dirname "$0")/.."
 
 sf="${1:-/root/testdata/sf0.01}"
 queries="q40_pump_roundtrip,q91_dsv2_roundtrip,q244_pump_dlq,q245_stream_dlq"
-specs="graft.TechLogSourceSpec graft.RecordAssemblerSpec graft.StreamingPumpSpec
+specs="graft.TechLogSourceSpec graft.RecordAssemblerSpec graft.TechLogParserSpec
+  graft.ParserPropertySpec graft.TransformSpec graft.StreamingPumpSpec
   graft.PumpResumeSpec graft.PumpMainSpec graft.LogPumpSpec graft.ConfigSpec
   graft.ClickHouseSinkSpec graft.LocalFsSpec"
 
