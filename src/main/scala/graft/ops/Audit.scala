@@ -447,24 +447,16 @@ object Audit {
           .agg(count(lit(1)).as("n"), sum(col("price")).as("rev"))
       rollup(o.limit(0)).write.mode("overwrite").parquet(s"$dir/mv_v0")
       val ver = new java.util.concurrent.atomic.AtomicLong(0)
-      val q = s.readStream.schema(srcSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val v = ver.get()
-          val cur = s.read.parquet(s"$dir/mv_v$v")
-          cur.unionByName(rollup(batch))
-            .groupBy(col("month"), col("status"))
-            .agg(sum(col("n")).as("n"), sum(col("rev")).as("rev"))
-            .write.mode("overwrite").parquet(s"$dir/mv_v${v + 1}")
-          ver.incrementAndGet()
-          ()
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(graft.util.OrderedFeed.stream(s, src,
+          srcSchema, chunks = "")) { (batch, _) =>
+        val v = ver.get()
+        val cur = s.read.parquet(s"$dir/mv_v$v")
+        cur.unionByName(rollup(batch))
+          .groupBy(col("month"), col("status"))
+          .agg(sum(col("n")).as("n"), sum(col("rev")).as("rev"))
+          .write.mode("overwrite").parquet(s"$dir/mv_v${v + 1}")
+        ver.incrementAndGet()
+      }
       s.read.parquet(s"$dir/mv_v${ver.get()}")
         .select(col("month"), col("status"), col("n"),
           round(col("rev"), 2).cast("double").as("revenue"))
@@ -521,21 +513,13 @@ object Audit {
         .agg(count(lit(1)).as("n"), sum(col("price")).as("rev"))
         .write.mode("overwrite").parquet(s"$dir/mv_v0")
       val ver = new java.util.concurrent.atomic.AtomicLong(0)
-      val q = s.readStream.schema(s.read.parquet(s"$dir/src/c0").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$dir/src/c*")
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val v = ver.get()
-          mergeFor(s.read.parquet(s"$dir/mv_v$v"), batch, v)
-            .write.mode("overwrite").parquet(s"$dir/mv_v${v + 1}")
-          ver.incrementAndGet()
-          ()
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(
+          graft.util.OrderedFeed.stream(s, s"$dir/src")) { (batch, _) =>
+        val v = ver.get()
+        mergeFor(s.read.parquet(s"$dir/mv_v$v"), batch, v)
+          .write.mode("overwrite").parquet(s"$dir/mv_v${v + 1}")
+        ver.incrementAndGet()
+      }
       ver.get()
     }
 
@@ -780,18 +764,11 @@ object Audit {
       val ver = new java.util.concurrent.atomic.AtomicLong(0)
       val sink = replicaMerge(s, rep)
       graft.util.StreamTuning.withShuffle(s, 8) {
-        val q = s.readStream.schema(s.read.parquet(s"$feed/v1").schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(s"$feed/v*")
-          .writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            sink(batch, id)
-            ver.incrementAndGet()
-            ()
-          }
-          .start()
-        graft.util.StreamTuning.drained(q)
+        graft.util.StreamTuning.drain(graft.util.OrderedFeed.stream(s, feed,
+            s.read.parquet(s"$feed/v1").schema, chunks = "v*")) { (batch, id) =>
+          sink(batch, id)
+          ver.incrementAndGet()
+        }
       }
       require(ver.get() == maxV,
         s"replica must apply all $maxV deltas; applied ${ver.get()}")
@@ -805,10 +782,9 @@ object Audit {
 
   /** q309: checkpoint-restart recovery for the CHANGE-FEED CONSUMER —
     * the q287 injected-crash/replay discipline applied to the q301
-    * replica pipeline: run 1 applies delta 1, dies in delta 2 AFTER
-    * the replica write but BEFORE the checkpoint commit; run 2
-    * restarts from the same checkpoint and replays — the id-keyed
-    * replica layout makes the replay overwrite its own orphaned merge
+    * replica pipeline: run 1 applies delta 1 and dies in delta 2; run
+    * 2 replays it — the id-keyed replica layout makes the replay
+    * overwrite its own orphaned merge
     * (r{id+1} recomputed from the immutable r{id}), so the recovered
     * replica is gate-identical to the clean consumer and the producer
     * chain (the q290 oracle). With q287/q296/q300 this closes
@@ -829,10 +805,10 @@ object Audit {
       s.read.parquet(s"$dir/mv_v0").write.mode("overwrite")
         .parquet(s"$rep/r0")
       val ckpt = graft.util.TmpDirs.scratchFor("mv-cdf-replica-ckpt", d)
-      val src = s.readStream.schema(s.read.parquet(s"$feed/v1").schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$feed/v*")
-      EventAnalytics.crashRestartDrive(s, src, ckpt, crashAt = 1L,
-        width = 8)(replicaMerge(s, rep))
+      val src = graft.util.OrderedFeed.stream(s, feed,
+        s.read.parquet(s"$feed/v1").schema, chunks = "v*")
+      graft.util.StreamTuning.crashRestart(s, src, ckpt, crashAt = 1L,
+        width = 8) { (batch, id, _) => replicaMerge(s, rep)(batch, id) }
       (rep, maxV)
     }
 
@@ -2381,24 +2357,18 @@ object Audit {
       val erased = customer(s, d).filter(col("c_custkey") % 97 === 0)
         .select(col("c_custkey").as("k")).cache()
       erased.count() // materialize once, before the stream starts
-      val q = s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
-        .parquet(s"$d/events.parquet*")
-        .select(col("event_id"), col("user_id"))
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val kept = batch.join(broadcast(erased),
-            batch("user_id") === erased("k"), "left_anti")
-          val nKept = kept.count()
-          val nAll = batch.count()
-          import s.implicits._
-          Seq(("erased", nAll - nKept), ("kept", nKept))
-            .toDF("disposition", "n").write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(
+          s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
+            .parquet(s"$d/events.parquet*")
+            .select(col("event_id"), col("user_id"))) { (batch, _) =>
+        val kept = batch.join(broadcast(erased),
+          batch("user_id") === erased("k"), "left_anti")
+        val nKept = kept.count()
+        val nAll = batch.count()
+        import s.implicits._
+        Seq(("erased", nAll - nKept), ("kept", nKept))
+          .toDF("disposition", "n").write.mode("append").parquet(out)
+      }
       erased.unpersist()
       s.read.parquet(out)
         .groupBy(col("disposition"))

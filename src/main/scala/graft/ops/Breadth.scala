@@ -361,21 +361,16 @@ object Breadth {
     graft.util.StreamTuning.withShuffle(s, 8) {
       val path = s"$d/events.parquet"
       val out = graft.util.TmpDirs.scratch("stream-kll")
-      val q = s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
+      val sketches = s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
         .parquet(s"$d/events.parquet*")
         .groupBy(col("event_type"))
         .agg(kll_sketch_agg_double(col("value")).as("sk"))
         .select(col("event_type"),
           kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("kll_p50"),
           kll_sketch_get_quantile_double(col("sk"), lit(0.9)).as("kll_p90"))
-        .writeStream
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(sketches, "complete") { (batch, _) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
       val est = s.read.parquet(out)
       events(s, d)
         .join(broadcast(est), Seq("event_type"))

@@ -806,16 +806,11 @@ object Clustering {
       val src = s.readStream.schema(schema).parquet(s"$d/embeddings.parquet*")
         .filter(col("vec_id") % 100 === 7)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val q = src.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            ivfProbeOn(batch.sparkSession, d, idx, batch)
-              .write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(src) { (batch, _) =>
+        if (!batch.isEmpty)
+          ivfProbeOn(batch.sparkSession, d, idx, batch)
+            .write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("query_id"), col("rank"))
     }
 
@@ -3148,36 +3143,30 @@ object Clustering {
       }
       val outDir = graft.util.TmpDirs.scratchFor("capserve_out", d)
       graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        val q = src.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              val ss = batch.sparkSession
-              val v = head.get() // resolved ONCE for all four families
-              val snap = Audit.readNSnapshot(ss, root, v)
-              val ids = batch.select(col("query_id"))
-              families.foreach { fam =>
-                serveFamily(ss, fam, snap, ids)
-                  .withColumn("resolved_v", lit(v))
-                  .withColumn("cohort_in_serving_set",
-                    lit(cohortVisible(snap, fam)))
-                  .write.mode("overwrite")
-                  .parquet(s"$outDir/family=$fam/batch_id=$id")
-              }
-              // after batch 0's serves: THE CAPSTONE ATOM — the exact
-              // q344 table list, one rename, all four families flip
-              if (id == 0L) {
-                require(Audit.occCommitNShared(s, root, head, 0L,
-                    capstoneCommitTables(s, d, u0, maxLevel)),
-                  "the capstone atom holds the head under serving")
-              }
+        val src = graft.util.OrderedFeed.stream(s, feed)
+        graft.util.StreamTuning.drain(src) { (batch, id) =>
+          if (!batch.isEmpty) {
+            val ss = batch.sparkSession
+            val v = head.get() // resolved ONCE for all four families
+            val snap = Audit.readNSnapshot(ss, root, v)
+            val ids = batch.select(col("query_id"))
+            families.foreach { fam =>
+              serveFamily(ss, fam, snap, ids)
+                .withColumn("resolved_v", lit(v))
+                .withColumn("cohort_in_serving_set",
+                  lit(cohortVisible(snap, fam)))
+                .write.mode("overwrite")
+                .parquet(s"$outDir/family=$fam/batch_id=$id")
+            }
+            // after batch 0's serves: THE CAPSTONE ATOM — the exact
+            // q344 table list, one rename, all four families flip
+            if (id == 0L) {
+              require(Audit.occCommitNShared(s, root, head, 0L,
+                  capstoneCommitTables(s, d, u0, maxLevel)),
+                "the capstone atom holds the head under serving")
             }
           }
-          .start()
-        graft.util.StreamTuning.drained(q)
+        }
       }
       // post-drive: per (family, batch) equality vs the resolved
       // version's reference + the cohort-free-after-flip audit
@@ -3366,16 +3355,11 @@ object Clustering {
       val src = s.readStream.schema(schema).parquet(s"$d/embeddings.parquet*")
         .filter(col("vec_id") % 100 === 7)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val q = src.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            ivfProbeOn(batch.sparkSession, d, idx, batch)
-              .write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(src) { (batch, _) =>
+        if (!batch.isEmpty)
+          ivfProbeOn(batch.sparkSession, d, idx, batch)
+            .write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("query_id"), col("rank"))
     }
 
@@ -3423,20 +3407,6 @@ object Clustering {
     finally it.close()
   }
 
-  /** Build the base (even half) once, then run the grow stream (odd
-    * half, 4 one-file micro-batches) and the serve stream (probe
-    * queries, 3 one-file micro-batches) CONCURRENTLY. Returns
-    * (index table, mid-growth probe dir).
-    */
-  /** The generic serve-while-grow runner: build the base once
-    * (`baseBuild`, the ONLY build), snapshot its files, then run the
-    * grow stream (the odd half as raw vectors, 4 one-file batches,
-    * each encoded-and-appended by `append`) CONCURRENTLY with the
-    * serve stream (the probe workload, 3 one-file batches, each
-    * answered by `probe`). Returns (index table, mid-growth probe
-    * dir). All three persisted families share this verb — only the
-    * encode and probe seams differ.
-    */
   /** indexBuilds delta measured INSIDE each serve-while-grow run
     * (base build through stream drain) — the order-robust form of the
     * builds-once pin: the runner records its own delta at run time, so
@@ -3447,7 +3417,17 @@ object Clustering {
   private[graft] val swgBuildDelta = graft.util.CacheRegistry.newMap[
     (SparkSession, String, String), Int]()
 
-  private def serveWhileGrowRun(s: SparkSession, d: String, name: String,
+  /** The generic serve-while-grow runner: build the base once
+    * (`baseBuild`, the ONLY build), snapshot its files, then run the
+    * grow stream (the odd half as raw vectors, 4 one-file batches,
+    * each encoded-and-appended by `append`) CONCURRENTLY with the
+    * serve stream (the probe workload, 3 one-file batches, each
+    * answered by `probe`). Returns (index table, mid-growth probe
+    * dir). All three persisted families share this verb — only the
+    * encode and probe seams differ. If growth fails, the serve stream
+    * is stopped before the failure reaches the caller.
+    */
+  private[graft] def serveWhileGrowRun(s: SparkSession, d: String, name: String,
       family: String, baseBuild: () => Unit,
       append: (SparkSession, DataFrame) => Unit,
       probe: (SparkSession, DataFrame) => DataFrame): (String, String) = {
@@ -3467,29 +3447,22 @@ object Clustering {
       .repartition(3).write.mode("overwrite").parquet(qfeed)
     val mid = graft.util.TmpDirs.scratch(tableNameFor(s"swg_mid_${family}_", d))
     graft.util.StreamTuning.withShuffle(s, 8) {
-      val trig = org.apache.spark.sql.streaming.Trigger.AvailableNow()
-      val grow = s.readStream.schema(s.read.parquet(feed).schema)
-        .option("maxFilesPerTrigger", 1).parquet(feed)
-        .writeStream.outputMode("append")
-        .trigger(trig)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // lifecycleGrow's shape, per micro-batch: encode ONLY the
-          // batch under the frozen model, append partition dirs
-          append(batch.sparkSession, batch)
-        }
-        .start()
-      val serve = s.readStream.schema(s.read.parquet(qfeed).schema)
-        .option("maxFilesPerTrigger", 1).parquet(qfeed)
-        .writeStream.outputMode("append")
-        .trigger(trig)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      def stream(dir: String) = graft.util.OrderedFeed.stream(s, dir,
+        s.read.parquet(dir).schema, chunks = "")
+      val grow = graft.util.StreamTuning.start(stream(feed)) { (batch, _) =>
+        // lifecycleGrow's shape, per micro-batch: encode ONLY the
+        // batch under the frozen model, append partition dirs
+        append(batch.sparkSession, batch)
+      }
+      val serve = graft.util.StreamTuning.start(stream(qfeed)) {
+        (batch, id) =>
           if (!batch.isEmpty)
             probe(batch.sparkSession, batch)
               .withColumn("serve_batch", lit(id))
               .write.mode("append").parquet(mid)
-        }
-        .start()
-      grow.awaitTermination()
+      }
+      try grow.awaitTermination()
+      catch { case e: Throwable => serve.stop(); throw e }
       graft.util.StreamTuning.drained(serve)
     }
     swgBuildDelta.put((s, d, family), indexBuilds.get() - buildsAtStart)
@@ -3643,10 +3616,9 @@ object Clustering {
       }
       val ckpt = graft.util.TmpDirs.scratch(
         tableNameFor(s"${prefix}_growrestart_ckpt_", d))
-      val src = s.readStream.schema(s.read.parquet(s"$feed/c0").schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-      EventAnalytics.crashRestartDrive(s, src, ckpt, crashAt = 1L,
-        width = 8) { (batch, id) =>
+      graft.util.StreamTuning.crashRestart(s,
+          graft.util.OrderedFeed.stream(s, feed), ckpt, crashAt = 1L,
+          width = 8) { (batch, id, _) =>
         encode(batch.sparkSession, batch)
           .write.mode("overwrite").partitionBy(partCol)
           .parquet(s"$loc/gb=${id + 1}")
@@ -4163,18 +4135,13 @@ object Clustering {
       val src = s.readStream.schema(schema).parquet(s"$d/embeddings.parquet*")
         .filter(col("vec_id") % 100 === 7)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val q = src.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val ss = batch.sparkSession
-            ivfProbeOnCells(ss, d, dvMergedCells(ss, ivf, dv), batch)
-              .write.mode("append").parquet(out)
-          }
+      graft.util.StreamTuning.drain(src) { (batch, _) =>
+        if (!batch.isEmpty) {
+          val ss = batch.sparkSession
+          ivfProbeOnCells(ss, d, dvMergedCells(ss, ivf, dv), batch)
+            .write.mode("append").parquet(out)
         }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      }
       s.read.parquet(out).orderBy(col("query_id"), col("rank"))
     }
 
@@ -4209,16 +4176,11 @@ object Clustering {
         .filter(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding").as("qe"),
           transform(col("embedding"), _.cast("double")).as("v"))
-      val q = src.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            ivfPqProbeForQueries(batch.sparkSession, d, idx, batch)
-              .write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(src) { (batch, _) =>
+        if (!batch.isEmpty)
+          ivfPqProbeForQueries(batch.sparkSession, d, idx, batch)
+            .write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("query_id"), col("rank"))
     }
 
@@ -4240,23 +4202,18 @@ object Clustering {
       val src = s.readStream.schema(schema).parquet(s"$d/embeddings.parquet*")
         .filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding"))
-      val q = src.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val ss = batch.sparkSession
-            val qv = batch.select(col("vec_id").as("query_id"),
-              col("embedding").as("qe"))
-            val qc = signCodesOf(ss, batch)
-              .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
-                col("hi").as("qhi"))
-            ivfBinProbeForQueries(ss, d, idx, qv, qc)
-              .write.mode("append").parquet(out)
-          }
+      graft.util.StreamTuning.drain(src) { (batch, _) =>
+        if (!batch.isEmpty) {
+          val ss = batch.sparkSession
+          val qv = batch.select(col("vec_id").as("query_id"),
+            col("embedding").as("qe"))
+          val qc = signCodesOf(ss, batch)
+            .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
+              col("hi").as("qhi"))
+          ivfBinProbeForQueries(ss, d, idx, qv, qc)
+            .write.mode("append").parquet(out)
         }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      }
       s.read.parquet(out).orderBy(col("query_id"), col("rank"))
     }
 
@@ -4590,33 +4547,25 @@ object Clustering {
       e.filter(lit(false)).select(col("vec_id").as("k"))
         .coalesce(1).write.mode("overwrite").parquet(tombDir)
       def drain(): Unit = graft.util.StreamTuning.withShuffle(s, 8) {
-        val q = s.readStream.schema(s.read.parquet(s"$live/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$live/c*")
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val ss = batch.sparkSession
-            // the erasure seam: tombstones re-read EVERY batch, the
-            // probe runs through the merge-on-read anti-join — the
-            // table itself is never rewritten
-            val tombs = ss.read.parquet(tombDir)
-            val merged = ss.table(name).join(broadcast(tombs),
-              col("vec_id") === col("k"), "left_anti")
-            binaryTopForQueriesOn(ss, merged,
-                signCodesOf(ss, batch.select(col("vec_id"), col("embedding")))
-                  .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
-                    col("hi").as("qhi")))
-              .write.mode("overwrite").parquet(s"$out/batch_id=$id")
-          }
-          .start()
-        graft.util.StreamTuning.drained(q)
+        graft.util.StreamTuning.drain(graft.util.OrderedFeed.stream(s, live),
+            checkpoint = Some(ckpt)) { (batch, id) =>
+          val ss = batch.sparkSession
+          // the erasure seam: tombstones re-read EVERY batch, the
+          // probe runs through the merge-on-read anti-join — the
+          // table itself is never rewritten
+          val tombs = ss.read.parquet(tombDir)
+          val merged = ss.table(name).join(broadcast(tombs),
+            col("vec_id") === col("k"), "left_anti")
+          binaryTopForQueriesOn(ss, merged,
+              signCodesOf(ss, batch.select(col("vec_id"), col("embedding")))
+                .select(col("vec_id").as("query_id"), col("lo").as("qlo"),
+                  col("hi").as("qhi")))
+            .write.mode("overwrite").parquet(s"$out/batch_id=$id")
+        }
       }
       reveal(0)
       drain() // run 1: chunk 0 served against the FULL table
-      val committed = Option(new java.io.File(s"$ckpt/commits").list())
-        .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit))
-        .map(_.toLong).sorted.toSeq
+      val committed = graft.util.StreamTuning.committedBatches(ckpt)
       require(committed == Seq(0L),
         s"run 1 must drain exactly the first query chunk; got $committed")
       // the deletion cohort lands between triggers

@@ -400,18 +400,13 @@ object Dedup {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val path = s"$d/events.parquet"
       val out = graft.util.TmpDirs.scratch("stream-dedup")
-      val q = s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
-        .parquet(s"$d/events.parquet*")
-        .select(col("user_id"))
-        .dropDuplicates("user_id")
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(
+          s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
+            .parquet(s"$d/events.parquet*")
+            .select(col("user_id"))
+            .dropDuplicates("user_id")) { (batch, _) =>
+        batch.write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("user_id"))
     }
     }
@@ -438,20 +433,15 @@ object Dedup {
     graft.util.StreamTuning.withShuffle(s, 8) {
       val path = s"$d/events.parquet"
       val out = graft.util.TmpDirs.scratch("stream-dedup-wm")
-      val q = graft.util.Tables.normalizeTs(
+      val firsts = graft.util.Tables.normalizeTs(
           s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
             .parquet(s"$d/events.parquet*"))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id")
         .select(col("user_id"))
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(firsts) { (batch, _) =>
+        batch.write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("user_id"))
     }
     }
@@ -484,17 +474,12 @@ object Dedup {
       val src = s.readStream.schema(graft.util.Tables.table(s, d, "documents").schema)
         .parquet(s"$d/documents.parquet*")
         .select(col("doc_id"), col("text"))
-      val q = graft.streaming.DedupStreams.bandFlags(src).toDF()
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.groupBy(col("doc_id"))
-            .agg(max(col("dup")).as("is_near_dup"))
-            .write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(
+          graft.streaming.DedupStreams.bandFlags(src).toDF()) { (batch, _) =>
+        batch.groupBy(col("doc_id"))
+          .agg(max(col("dup")).as("is_near_dup"))
+          .write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("doc_id"))
     }
     }
@@ -527,17 +512,12 @@ object Dedup {
       val src = s.readStream.schema(graft.util.Tables.table(s, d, "documents").schema)
         .parquet(s"$d/documents.parquet*")
         .select(col("doc_id"), col("text"))
-      val q = graft.streaming.DedupStreams.fuzzyFlags(src).toDF()
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.groupBy(col("doc_id"))
-            .agg(max(col("dup")).as("is_fuzzy_dup"))
-            .write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(
+          graft.streaming.DedupStreams.fuzzyFlags(src).toDF()) { (batch, _) =>
+        batch.groupBy(col("doc_id"))
+          .agg(max(col("dup")).as("is_fuzzy_dup"))
+          .write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("doc_id"))
     }
     }
@@ -551,12 +531,8 @@ object Dedup {
     * (q296) proofs do not cover. The document backlog is split into 3
     * doc_id-ordered chunks (the arrival contract the incremental flag
     * semantics require: arrival order respects doc_id order across
-    * batches), streamed one file per trigger; run 1 commits batch 0
-    * and takes the injected crash in batch 1 AFTER the sink write but
-    * BEFORE the checkpoint commit (the worst replay window), run 2
-    * restarts from the same checkpoint against the band state
-    * committed by batch 0 and replays into its own overwrite dir
-    * (exactly-once by layout). Gate: the per-doc rollup of the union
+    * batches), crashing in batch 1; run 2 replays it against the band
+    * state committed by batch 0. Gate: the per-doc rollup of the union
     * of both runs' votes — `is_near_dup` must equal the
     * arrival-order-free batch statistic (the q201 oracle) and
     * `n_votes` must equal the doc's exact band count (8): a
@@ -592,11 +568,10 @@ object Dedup {
         graft.util.OrderedFeed.writeChunk(s"$split/c$k", k,
           docs.filter(lo && hi))
       }
-      val src = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$split/c*")
-      val flags = graft.streaming.DedupStreams.bandFlags(src).toDF()
-      EventAnalytics.crashRestartDrive(s, flags, ckpt, crashAt = 1L,
-        width = 8) { (batch, id) =>
+      val flags = graft.streaming.DedupStreams.bandFlags(
+        graft.util.OrderedFeed.stream(s, split, docs.schema)).toDF()
+      graft.util.StreamTuning.crashRestart(s, flags, ckpt, crashAt = 1L,
+        width = 8) { (batch, id, _) =>
         batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
       }
       out

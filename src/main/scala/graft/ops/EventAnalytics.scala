@@ -83,9 +83,9 @@ object EventAnalytics {
 
   /** q154: the q18 session-window aggregation executed as a REAL
     * Structured Streaming job — `readStream` over the events parquet,
-    * `Trigger.AvailableNow` (drain everything, then stop), session
-    * state in the streaming aggregation operator, result landed by
-    * `foreachBatch` overwrite — and gated by the SAME gaps-and-islands
+    * one `StreamTuning.drain`, session state in the streaming
+    * aggregation operator, result landed by an overwrite per batch —
+    * and gated by the SAME gaps-and-islands
     * DuckDB oracle as the batch form. This is the one place the driver
     * gate exercises the streaming engine end-to-end: state store,
     * trigger lifecycle, and sink commit all sit between the input and
@@ -117,14 +117,9 @@ object EventAnalytics {
         .select(col("user_id"),
           date_format(col("w.start"), TsFmt).as("session_start"),
           col("n_events"))
-      val q = agg.writeStream
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(agg, "complete") { (batch, _) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("user_id"), col("session_start"))
     }
   }
@@ -164,14 +159,9 @@ object EventAnalytics {
         .select(col("user_id"),
           date_format(col("w.start"), TsFmt).as("session_start"),
           col("n_events"))
-      val q = agg.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(agg) { (batch, _) =>
+        batch.write.mode("append").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("user_id"), col("session_start"))
     }
   }
@@ -195,20 +185,15 @@ object EventAnalytics {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val path = s"$d/events.parquet"
       val out = graft.util.TmpDirs.scratch("stream-user-totals")
-      val q = s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
+      val totals = s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
         .parquet(s"$d/events.parquet*")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value").cast(DataTypes.createDecimalType(28, 6))), 2)
             .cast("double").as("sum_value"))
-        .writeStream
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(totals, "complete") { (batch, _) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("user_id"))
     }
   }
@@ -986,20 +971,15 @@ object EventAnalytics {
       .select(col("user_id").as("p_user"),
         col("event_id").as("purchase_id"), col("ts").as("p_ts"))
       .withWatermark("p_ts", "1 hour")
-    val q = purchases.join(clicks,
+    val pairs = purchases.join(clicks,
         col("c_user") === col("p_user") &&
           col("c_ts") <= col("p_ts") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES"))
       .select(col("p_user").as("user_id"), col("purchase_id"),
         col("click_id"))
-      .writeStream
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-      }
-      .start()
-    graft.util.StreamTuning.drained(q)
+    graft.util.StreamTuning.drain(pairs) { (batch, _) =>
+      batch.write.mode("append").parquet(out)
+    }
     s.read.parquet(out)
       .groupBy(col("user_id"))
       .agg(countDistinct(col("purchase_id")).as("n_purchases"),
@@ -1070,17 +1050,9 @@ object EventAnalytics {
       val src = graft.util.Tables.normalizeTs(
         s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
           .parquet(s"$d/events.parquet*"))
-      val q = leftOuterAttribution(src)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // exactly-once by layout: a replayed batch overwrites its own
-          // dir instead of double-appending (the q287/q304/q315 rule)
-          batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(leftOuterAttribution(src)) { (batch, id) =>
+        batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
+      }
     }
     }
     s.read.parquet(out)
@@ -1112,16 +1084,10 @@ object EventAnalytics {
       val src = graft.util.Tables.normalizeTs(
         s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
           .parquet(s"$d/events.parquet*"))
-      val q = outerAttribution(src, "fullOuter")
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // exactly-once by layout (q287/q304/q315 rule)
+      graft.util.StreamTuning.drain(outerAttribution(src, "fullOuter")) {
+        (batch, id) =>
           batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      }
     }
     }
     s.read.parquet(out)
@@ -1185,30 +1151,23 @@ object EventAnalytics {
       } finally ls.close()
     }
     def drain(): Unit = graft.util.StreamTuning.withShuffle(s, 8) {
-      val q = graft.util.Tables.normalizeTs(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(s"$live/c*"))
+      val events = graft.util.Tables.normalizeTs(
+          graft.util.OrderedFeed.stream(s, live, schema))
         .select(col("user_id"), col("event_id"), col("ts"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      graft.util.StreamTuning.drain(events, checkpoint = Some(ckpt)) {
+        (batch, id) =>
           val ss = batch.sparkSession
           // the hot-reload seam: the dim is read fresh EVERY batch
           val dimNow = ss.read.parquet(dimDir)
           batch.join(broadcast(dimNow), Seq("user_id"))
             .select(col("user_id"), col("event_id"), col("segment"))
             .write.mode("overwrite").parquet(s"$out/batch_id=$id")
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      }
     }
     dim(3).coalesce(1).write.mode("overwrite").parquet(dimDir)
     reveal(0)
     drain() // run 1: chunk 0 under dim v1
-    val committed = Option(new java.io.File(s"$ckpt/commits").list())
-      .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit))
-      .map(_.toLong).sorted.toSeq
+    val committed = graft.util.StreamTuning.committedBatches(ckpt)
     require(committed == Seq(0L),
       s"run 1 must drain exactly the first chunk; committed $committed")
     dim(5).coalesce(1).write.mode("overwrite").parquet(dimDir)
@@ -1244,17 +1203,12 @@ object EventAnalytics {
     val (split, schema) = ensureChronoChunks(s, d)
     graft.util.StreamTuning.withShuffle(s, 4) {
       val src = graft.util.Tables.normalizeTs(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(s"$split/c*"))
-      val q = graft.streaming.EventStreams.purchaseAsofClick(src).toDF()
-        .writeStream.outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // exactly-once by layout (q287/q304/q315 rule)
+        graft.util.OrderedFeed.stream(s, split, schema))
+      graft.util.StreamTuning.drain(
+          graft.streaming.EventStreams.purchaseAsofClick(src).toDF()) {
+        (batch, id) =>
           batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      }
     }
     s.read.parquet(out)
       .select(col("user_id"), col("purchase_id"),
@@ -1337,15 +1291,9 @@ object EventAnalytics {
       val src = graft.util.Tables.normalizeTs(
         s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
           .parquet(s"$d/events.parquet*"))
-      val agg = chainedJoinWindowAgg(src)
-      val q = agg.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(chainedJoinWindowAgg(src)) { (batch, _) =>
+        batch.write.mode("append").parquet(out)
+      }
       // make the append fence EXPLICIT in the gate: the oracle's
       // validity rests on "the fence never bites on the fixtures"
       // (every joined window closes before the propagated watermark's
@@ -1380,25 +1328,16 @@ object EventAnalytics {
     *
     * The backlog is split into 3 chronological chunks (exact-percentile
     * ts boundaries, so each micro-batch only ever advances the
-    * watermark — no chunk can late-drop another's rows) and streamed
-    * one file per trigger. Run 1 commits batch 0, then an INJECTED
-    * CRASH fires in batch 1 *after* the sink write but *before* the
-    * checkpoint commit — the worst replay window (sink committed,
-    * checkpoint not; the PumpResumeSpec discipline). Run 2 restarts
-    * from the same checkpoint: Spark replays batch 1 from the offset
-    * log against the state committed by batch 0, and the exactly-once
-    * sink (per-batch `batch_id=N` overwrite dirs) replaces the
-    * orphaned write instead of double-appending. The gate is the
+    * watermark — no chunk can late-drop another's rows) and driven
+    * through `StreamTuning.crashRestart` with the crash in batch 1:
+    * Spark replays batch 1 from the offset log against the state
+    * committed by batch 0, and the `batch_id=N` overwrite dirs replace
+    * the orphaned write instead of double-appending. The gate is the
     * union of both runs' emitted rows, raw (NOT re-aggregated, so any
     * duplicated or lost window row breaks the row-count/hash match),
     * against the same batch rollup + fence-flag oracle as q274:
-    * rows(run1 ∪ run2) == rows(single AvailableNow run) == oracle,
+    * rows(run1 ∪ run2) == rows(single uninterrupted run) == oracle,
     * zero dups.
-    *
-    * Mid-backlog is enforced by construction, not timing: the require
-    * in crashRestartRun pins that run 1 committed exactly batch {0} —
-    * at least one committed trigger, strictly less than the full
-    * backlog — before run 2 starts.
     *
     * Scale shape: identical to q274 (user-sharded join state + one row
     * per open window, both watermark-bounded); recovery cost is
@@ -1450,60 +1389,6 @@ object EventAnalytics {
     s.read.parquet(s"$split/c0").schema
   }
 
-  /** Drive `agg` over the chunked backlog TWICE against one
-    * checkpoint: run 1 takes an injected crash in batch `crashAt`
-    * AFTER the sink write but BEFORE the checkpoint commit (the worst
-    * replay window); run 2 restarts, replays the orphaned batch into
-    * its own overwrite dir (exactly-once by layout) and drains the
-    * rest. Requires — by construction, not timing — that run 1
-    * committed exactly batches 0..crashAt-1.
-    */
-  private def crashRestartRun(s: SparkSession, agg: DataFrame, out: String,
-      ckpt: String, crashAt: Long, width: Int): Unit =
-    crashRestartDrive(s, agg, ckpt, crashAt, width) { (batch, id) =>
-      batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
-    }
-
-  /** The generic crash/replay driver behind q287/q296 — shared with
-    * the q300 dedup-state and q304 index-growth restart proofs, whose
-    * sinks differ (raw batch dirs vs partitioned index appends) but
-    * whose discipline is identical: run 1 dies in batch `crashAt`
-    * after `sink` ran but before the checkpoint committed, run 2
-    * restarts from the same checkpoint and replays. `sink` MUST be
-    * exactly-once by layout (an overwrite dir keyed by the batch id)
-    * for the replay to be result-invisible.
-    */
-  private[graft] def crashRestartDrive(s: SparkSession, agg: DataFrame,
-      ckpt: String, crashAt: Long, width: Int)(
-      sink: (DataFrame, Long) => Unit): Unit = {
-    def writer(crash: Boolean) =
-      agg.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          sink(batch, id)
-          if (crash && id == crashAt) throw new RuntimeException(
-            "injected crash: sink committed, checkpoint not")
-        }
-    graft.util.StreamTuning.withShuffle(s, width) {
-      val q1 = writer(crash = true).start()
-      val crashed =
-        try { q1.awaitTermination(); false }
-        catch {
-          case _: org.apache.spark.sql.streaming.StreamingQueryException => true
-        } finally graft.util.StreamTuning.unloadDeadProviders()
-      require(crashed, "run 1 must die on the injected crash")
-      val committed = Option(new java.io.File(s"$ckpt/commits").list())
-        .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit))
-        .map(_.toLong).sorted.toSeq
-      require(committed == (0L until crashAt),
-        s"run 1 must stop mid-backlog with exactly batches 0..${crashAt - 1} committed; got $committed")
-      val q2 = writer(crash = false).start()
-      graft.util.StreamTuning.drained(q2)
-    }
-  }
-
   /** The q287 crash/replay drive, ONCE per (session, sf) — the
     * deterministic restart fixture is built state, not per-probe work
     * (the q304/q318/q319 restart-family discipline): gates re-read
@@ -1518,10 +1403,11 @@ object EventAnalytics {
       val ckpt = graft.util.TmpDirs.scratchFor("restart-ckpt", d)
       val (split, schema) = ensureChronoChunks(s, d)
       val src = graft.util.Tables.normalizeTs(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-          .parquet(s"$split/c*"))
-      crashRestartRun(s, chainedJoinWindowAgg(src), out, ckpt,
-        crashAt = 1L, width = 4)
+        graft.util.OrderedFeed.stream(s, split, schema))
+      graft.util.StreamTuning.crashRestart(s, chainedJoinWindowAgg(src),
+          ckpt, crashAt = 1L, width = 4) { (batch, id, _) =>
+        batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
+      }
       out
     }
 
@@ -1563,8 +1449,7 @@ object EventAnalytics {
       val ckpt = graft.util.TmpDirs.scratchFor("sess-restart-ckpt", d)
       val (split, schema) = ensureChronoChunks(s, d)
       val agg = graft.util.Tables.normalizeTs(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(s"$split/c*"))
+          graft.util.OrderedFeed.stream(s, split, schema))
         .withWatermark("ts", "1 hour")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"),
           col("user_id"))
@@ -1572,7 +1457,10 @@ object EventAnalytics {
         .select(col("user_id"),
           date_format(col("w.start"), TsFmt).as("session_start"),
           col("n_events"))
-      crashRestartRun(s, agg, out, ckpt, crashAt = 1L, width = 8)
+      graft.util.StreamTuning.crashRestart(s, agg, ckpt, crashAt = 1L,
+          width = 8) { (batch, id, _) =>
+        batch.write.mode("overwrite").parquet(s"$out/batch_id=$id")
+      }
       out
     }
 
@@ -1790,16 +1678,10 @@ object EventAnalytics {
       val src = graft.util.Tables.normalizeTs(
         s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
           .parquet(s"$d/events.parquet*"))
-      val q = graft.streaming.EventStreams.userStats(src)
-        .toDF()
-        .writeStream
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(
+          graft.streaming.EventStreams.userStats(src).toDF(), "update") {
+        (batch, _) => batch.write.mode("append").parquet(out)
+      }
       // AvailableNow drains the finite backlog; update-mode emits each
       // user once per batch, so the LAST emission per user is the total
       val w = Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)
@@ -1847,7 +1729,7 @@ object EventAnalytics {
     graft.util.StreamTuning.withShuffle(s, 8) {
       val path = s"$d/events.parquet"
       val out = graft.util.TmpDirs.scratch("stream-hourly")
-      val q = graft.util.Tables.normalizeTs(
+      val hourly = graft.util.Tables.normalizeTs(
           s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
             .parquet(s"$d/events.parquet*"))
         .withWatermark("ts", "2 hours")
@@ -1857,14 +1739,9 @@ object EventAnalytics {
             .cast("double").as("sum_value"))
         .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm").as("hour_start"),
           col("event_type"), col("n"), col("sum_value"))
-        .writeStream
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(hourly, "complete") { (batch, _) =>
+        batch.write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("hour_start"), col("event_type"))
     }
 
@@ -1886,7 +1763,7 @@ object EventAnalytics {
     graft.util.StreamTuning.withShuffle(s, 8) {
       val path = s"$d/events.parquet"
       val out = graft.util.TmpDirs.scratch("stream-leaderboard")
-      val q = graft.util.Tables.normalizeTs(
+      val hourly = graft.util.Tables.normalizeTs(
           s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
             .parquet(s"$d/events.parquet*"))
         .withWatermark("ts", "2 hours")
@@ -1894,18 +1771,13 @@ object EventAnalytics {
         .agg(count(lit(1)).as("n"))
         .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm").as("hour_start"),
           col("event_type"), col("n"))
-        .writeStream
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val wR = Window.partitionBy(col("hour_start"))
-            .orderBy(col("n").desc, col("event_type"))
-          batch.withColumn("rnk", row_number().over(wR).cast("long"))
-            .filter(col("rnk") <= 3)
-            .write.mode("overwrite").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(hourly, "complete") { (batch, _) =>
+        val wR = Window.partitionBy(col("hour_start"))
+          .orderBy(col("n").desc, col("event_type"))
+        batch.withColumn("rnk", row_number().over(wR).cast("long"))
+          .filter(col("rnk") <= 3)
+          .write.mode("overwrite").parquet(out)
+      }
       s.read.parquet(out).orderBy(col("hour_start"), col("rnk"))
     }
     }
@@ -1936,15 +1808,10 @@ object EventAnalytics {
       val src = s.readStream.schema(graft.util.Tables.table(s, d, "events").schema)
         .parquet(s"$d/events.parquet*")
         .select(col("event_id"), col("user_id"), col("value"))
-      val q = graft.streaming.EventStreams.enrichWithDim(src, dim)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(
+          graft.streaming.EventStreams.enrichWithDim(src, dim)) { (batch, _) =>
+        batch.write.mode("append").parquet(out)
+      }
       dim.unpersist()
       s.read.parquet(out).orderBy(col("event_id"))
     }

@@ -779,18 +779,13 @@ object GraphAnn {
       val src = s.readStream.schema(schema).parquet(s"$d/embeddings.parquet*")
         .filter(col("vec_id") % 100 === 7)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val q = src.writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (!batch.isEmpty) {
-            val ss = batch.sparkSession
-            beamTop5(beamSweepOn(ss, d, loc, maxLevel, entry, batch, Seq(8)))
-              .write.mode("overwrite").parquet(s"$out/batch_id=$id")
-          }
+      graft.util.StreamTuning.drain(src) { (batch, id) =>
+        if (!batch.isEmpty) {
+          val ss = batch.sparkSession
+          beamTop5(beamSweepOn(ss, d, loc, maxLevel, entry, batch, Seq(8)))
+            .write.mode("overwrite").parquet(s"$out/batch_id=$id")
         }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      }
     }
     val served = s.read.parquet(out)
       .select(col("query_id"), col("vec_id"))
@@ -839,10 +834,9 @@ object GraphAnn {
           e.filter(pmod(col("vec_id"), lit(8)) === r))
       }
       val ckpt = graft.util.TmpDirs.scratchFor("hnsw_gr_ckpt", d)
-      val src = s.readStream.schema(s.read.parquet(s"$feed/c0").schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-      EventAnalytics.crashRestartDrive(s, src, ckpt, crashAt = 1L,
-        width = 8) { (batch, id) =>
+      graft.util.StreamTuning.crashRestart(s,
+          graft.util.OrderedFeed.stream(s, feed), ckpt, crashAt = 1L,
+          width = 8) { (batch, id, _) =>
         val ss = batch.sparkSession
         val qs = batch.select(col("vec_id").as("query_id"),
           col("embedding").as("qe"))
@@ -2039,32 +2033,26 @@ object GraphAnn {
           .select(col("query_id"), col("vec_id"))
       val outDir = graft.util.TmpDirs.scratchFor("hnsw_sfold_out", d)
       graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        val q = src.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              val ss = batch.sparkSession
-              val v = maxVersion // resolve the head at batch start
-              val pred = resolveAt(ss, v)
-              if (id == 1L) publishV2() // the fold lands MID-BATCH
-              val foldOnDisk = java.nio.file.Files.isDirectory(
-                java.nio.file.Paths.get(s"$root/smanifest/v2"))
-              // the plan witness rides THIS batch's resolved predicate
-              val shuffleFree = hopPlanShuffleFree(ss, d, bname, pred)
-              serveTop5(beamSweepOn(ss, d, root, maxLevel, entry,
-                  batch, Seq(8), edgeFilter = pred,
-                  bucketedTable = Some(bname)))
-                .withColumn("resolved_v", lit(v))
-                .withColumn("fold_on_disk", lit(foldOnDisk))
-                .withColumn("plan_shuffle_free", lit(shuffleFree))
-                .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-            }
+        val src = graft.util.OrderedFeed.stream(s, feed)
+        graft.util.StreamTuning.drain(src) { (batch, id) =>
+          if (!batch.isEmpty) {
+            val ss = batch.sparkSession
+            val v = maxVersion // resolve the head at batch start
+            val pred = resolveAt(ss, v)
+            if (id == 1L) publishV2() // the fold lands MID-BATCH
+            val foldOnDisk = java.nio.file.Files.isDirectory(
+              java.nio.file.Paths.get(s"$root/smanifest/v2"))
+            // the plan witness rides THIS batch's resolved predicate
+            val shuffleFree = hopPlanShuffleFree(ss, d, bname, pred)
+            serveTop5(beamSweepOn(ss, d, root, maxLevel, entry,
+                batch, Seq(8), edgeFilter = pred,
+                bucketedTable = Some(bname)))
+              .withColumn("resolved_v", lit(v))
+              .withColumn("fold_on_disk", lit(foldOnDisk))
+              .withColumn("plan_shuffle_free", lit(shuffleFree))
+              .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
           }
-          .start()
-        graft.util.StreamTuning.drained(q)
+        }
       }
       // references: SLICED from the shared q338 chain descents — the
       // smanifest versions resolve to exactly the chain's v0/v2 edge
@@ -2225,37 +2213,13 @@ object GraphAnn {
           .withColumn("plan_shuffle_free", lit(shuffleFree))
           .write.mode("overwrite").parquet(outP)
       }
-      graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        def writer(crash: Boolean) = src.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            body(batch, id)
-            if (crash && id == 1L) throw new RuntimeException(
-              "injected crash: sink committed, checkpoint not")
-          }
-        val q1 = writer(crash = true).start()
-        val crashed =
-          try { q1.awaitTermination(); false }
-          catch {
-            case _: org.apache.spark.sql.streaming.StreamingQueryException =>
-              true
-          } finally graft.util.StreamTuning.unloadDeadProviders()
-        require(crashed, "run 1 must die on the injected crash")
-        val committed = Option(new java.io.File(s"$ckpt/commits").list())
-          .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit))
-          .map(_.toLong).sorted.toSeq
-        require(committed == Seq(0L),
-          s"run 1 must commit exactly batch 0; got $committed")
-        // capture the committed-but-uncheckpointed attempt for the
-        // replay-identity witness
-        s.read.parquet(s"$outDir/batch_id=1")
-          .write.mode("overwrite").parquet(firstTry)
-        val q2 = writer(crash = false).start()
-        graft.util.StreamTuning.drained(q2)
+      // between the runs, capture the committed-but-uncheckpointed
+      // attempt for the replay-identity witness
+      graft.util.StreamTuning.crashRestart(s,
+          graft.util.OrderedFeed.stream(s, feed), ckpt, crashAt = 1L,
+          width = 8, between = () => s.read.parquet(s"$outDir/batch_id=1")
+            .write.mode("overwrite").parquet(firstTry)) {
+        (batch, id, _) => body(batch, id)
       }
       val (beamPre, beamPost) = gdprBeams.get((s, d))
       val refs = Map(1L -> serveTop5(beamPre), 2L -> serveTop5(beamPost))
@@ -3051,56 +3015,50 @@ object GraphAnn {
           .select(col("query_id"), col("vec_id"))
       val outDir = graft.util.TmpDirs.scratchFor("hnsw_maint_out", d)
       graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        val q = src.writeStream.outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            if (!batch.isEmpty) {
-              val ss = batch.sparkSession
-              chains.foreach { case (c, tname) =>
-                val v = maxVersion(c) // resolve the head at batch start
-                // THE MAINTENANCE CHECK — every trigger, both chains:
-                // ≤ maxLevel+1 manifest rows carrying the commit-time
-                // ghost-debt stats; no edge-table scan outside the
-                // serve descent, witnessed off the check's own plan
-                val (mrows, manifestOnly) =
-                  readMaintManifest(ss, s"$root/m${c}manifest/v$v")
-                val pred = everPredOf(mrows)
-                val flagged = flaggedFromStats(mrows)
-                val fires = flagged.nonEmpty
-                // the threshold INITIATES: fold + publish, hot only by
-                // MEASUREMENT (the ctl branch runs the same code)
-                val committedNow = fires && v == 1L
-                if (committedNow) {
-                  require(flagged == flaggedM,
-                    s"stamped flags $flagged != manifest-derived $flaggedM")
-                  appendFoldPartitions(ss, root, chainU2, tname, flagged)
-                  v2Rows
-                    .toDF("layer", "ever", "n_edges", "ghost_edges")
-                    .coalesce(1).write.mode("overwrite")
-                    .parquet(s"$root/m${c}manifest_stage")
-                  java.nio.file.Files.move(
-                    java.nio.file.Paths.get(s"$root/m${c}manifest_stage"),
-                    java.nio.file.Paths.get(s"$root/m${c}manifest/v2"),
-                    java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                }
-                // serve THIS batch over the version resolved at start
-                serveTop5(beamSweepOn(ss, d, root, maxLevel, entry,
-                    batch, Seq(8), edgeFilter = pred,
-                    bucketedTable = Some(tname)))
-                  .withColumn("resolved_v", lit(v))
-                  .withColumn("trigger_fired", lit(fires))
-                  .withColumn("fold_committed", lit(committedNow))
-                  .withColumn("check_manifest_only", lit(manifestOnly))
-                  .write.mode("overwrite")
-                  .parquet(s"$outDir/chain=$c/batch_id=$id")
+        val src = graft.util.OrderedFeed.stream(s, feed)
+        graft.util.StreamTuning.drain(src) { (batch, id) =>
+          if (!batch.isEmpty) {
+            val ss = batch.sparkSession
+            chains.foreach { case (c, tname) =>
+              val v = maxVersion(c) // resolve the head at batch start
+              // THE MAINTENANCE CHECK — every trigger, both chains:
+              // ≤ maxLevel+1 manifest rows carrying the commit-time
+              // ghost-debt stats; no edge-table scan outside the
+              // serve descent, witnessed off the check's own plan
+              val (mrows, manifestOnly) =
+                readMaintManifest(ss, s"$root/m${c}manifest/v$v")
+              val pred = everPredOf(mrows)
+              val flagged = flaggedFromStats(mrows)
+              val fires = flagged.nonEmpty
+              // the threshold INITIATES: fold + publish, hot only by
+              // MEASUREMENT (the ctl branch runs the same code)
+              val committedNow = fires && v == 1L
+              if (committedNow) {
+                require(flagged == flaggedM,
+                  s"stamped flags $flagged != manifest-derived $flaggedM")
+                appendFoldPartitions(ss, root, chainU2, tname, flagged)
+                v2Rows
+                  .toDF("layer", "ever", "n_edges", "ghost_edges")
+                  .coalesce(1).write.mode("overwrite")
+                  .parquet(s"$root/m${c}manifest_stage")
+                java.nio.file.Files.move(
+                  java.nio.file.Paths.get(s"$root/m${c}manifest_stage"),
+                  java.nio.file.Paths.get(s"$root/m${c}manifest/v2"),
+                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
               }
+              // serve THIS batch over the version resolved at start
+              serveTop5(beamSweepOn(ss, d, root, maxLevel, entry,
+                  batch, Seq(8), edgeFilter = pred,
+                  bucketedTable = Some(tname)))
+                .withColumn("resolved_v", lit(v))
+                .withColumn("trigger_fired", lit(fires))
+                .withColumn("fold_committed", lit(committedNow))
+                .withColumn("check_manifest_only", lit(manifestOnly))
+                .write.mode("overwrite")
+                .parquet(s"$outDir/chain=$c/batch_id=$id")
             }
           }
-          .start()
-        graft.util.StreamTuning.drained(q)
+        }
       }
       val ctlPinned = {
         val after = Clustering.listDataFiles(
@@ -3300,36 +3258,17 @@ object GraphAnn {
             .withColumn("check_manifest_only", lit(manifestOnly))
             .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         }
-      graft.util.StreamTuning.withShuffle(s, 8) {
-        val src = s.readStream
-          .schema(s.read.parquet(s"$feed/c0").schema)
-          .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        def writer(crash: Boolean) = src.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch((batch: DataFrame, id: Long) =>
-            body(batch, id, crash && id == 0L))
-        val q1 = writer(crash = true).start()
-        val crashed =
-          try { q1.awaitTermination(); false }
-          catch {
-            case _: org.apache.spark.sql.streaming.StreamingQueryException =>
-              true
-          } finally graft.util.StreamTuning.unloadDeadProviders()
-        require(crashed, "run 1 must die on the injected crash")
-        // the worst-window state: fold appended, manifest unpublished
-        require(maxVersion == 1L,
-          "crash must land before the publish (head still v1)")
-        require(flaggedM.forall(l => java.nio.file.Files.isDirectory(
-            loc.resolve("ever=2").resolve(s"layer=$l"))),
-          "crash must land after the append (staged fold on disk)")
-        val committed = Option(new java.io.File(s"$ckpt/commits").list())
-          .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit))
-        require(committed.isEmpty,
-          s"run 1 must commit no batch; got ${committed.toSeq}")
-        val q2 = writer(crash = false).start()
-        graft.util.StreamTuning.drained(q2)
-      }
+      // run 1 dies inside batch 0's body, between the fold append and
+      // the manifest publish; between the runs, pin that torn state
+      graft.util.StreamTuning.crashRestart(s,
+          graft.util.OrderedFeed.stream(s, feed), ckpt, crashAt = 0L,
+          width = 8, between = () => {
+            require(maxVersion == 1L,
+              "crash must land before the publish (head still v1)")
+            require(flaggedM.forall(l => java.nio.file.Files.isDirectory(
+                loc.resolve("ever=2").resolve(s"layer=$l"))),
+              "crash must land after the append (staged fold on disk)")
+          })(body)
       val exactlyOnce =
         s.table(name).filter(col("ever") === 2).count() == foldRows
       // post-drive audit: stamped stats ≡ recomputed, every version

@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.util.{Memo, OrderedFeed, PlanWitness, StreamTuning, TmpDirs}
@@ -237,24 +236,6 @@ object IndexKind {
         qs.select(col("query_id")).filter(chunk === c))
     }
 
-  /** Drain the feed one chunk per micro-batch (AvailableNow), running
-    * `body` on every non-empty batch.
-    */
-  private def drive(s: SparkSession, feed: String)
-      (body: (DataFrame, Long) => Unit): Unit =
-    StreamTuning.withShuffle(s, 8) {
-      val q = s.readStream
-        .schema(s.read.parquet(s"$feed/c0").schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$feed/c*")
-        .writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (!batch.isEmpty) body(batch, id)
-        }
-        .start()
-      StreamTuning.drained(q)
-    }
-
   /** Serve `batch`'s queries at version v and record the answers
     * under the batch's decision header.
     */
@@ -322,26 +303,30 @@ object IndexKind {
       val feed = TmpDirs.scratchFor(s"${k.name}_maint_feed", d)
       writeFeed(feed, qVecs("drift"), pmod(col("query_id"), lit(3)), 3)
       val outDir = TmpDirs.scratchFor(s"${k.name}_maint_out", d)
-      drive(s, feed) { (batch, id) =>
-        val ss = batch.sparkSession
-        chains.foreach { c =>
-          val (root, v) = (roots(c), heads(c).get())
-          val (fires, metaOnly) = check(ss, root, v, k)
-          val refreshNow = fires && v == 1L
-          if (refreshNow) commit(s, root, heads(c), 1L,
-            refreshUnits(s, k, corpora(c), stamps(c)),
-            s"the maintenance refresh ($c)")
-          serveBatch(ss, k, root, v, batch, qVecs(c),
-            (fires, metaOnly, refreshNow), s"$outDir/chain=$c/batch_id=$id")
-          if (id == 0L) {
-            val arriving =
-              if (c == "drift") Seq(
-                "corpus_delta" -> corpora(c).filter(odd),
-                s"${k.codes}_delta" -> k.encode(corpora(c), odd, k.frozen(base)))
-              else Nil
-            commit(s, root, heads(c), 0L,
-              arriving :+ ("meta" -> stampDf(s, k, stamps(c))),
-              s"the ingest commit ($c)")
+      StreamTuning.withShuffle(s, 8) {
+        StreamTuning.drain(OrderedFeed.stream(s, feed)) { (batch, id) =>
+          if (!batch.isEmpty) {
+            val ss = batch.sparkSession
+            chains.foreach { c =>
+              val (root, v) = (roots(c), heads(c).get())
+              val (fires, metaOnly) = check(ss, root, v, k)
+              val refreshNow = fires && v == 1L
+              if (refreshNow) commit(s, root, heads(c), 1L,
+                refreshUnits(s, k, corpora(c), stamps(c)),
+                s"the maintenance refresh ($c)")
+              serveBatch(ss, k, root, v, batch, qVecs(c),
+                (fires, metaOnly, refreshNow), s"$outDir/chain=$c/batch_id=$id")
+              if (id == 0L) {
+                val arriving =
+                  if (c == "drift") Seq(
+                    "corpus_delta" -> corpora(c).filter(odd),
+                    s"${k.codes}_delta" -> k.encode(corpora(c), odd, k.frozen(base)))
+                  else Nil
+                commit(s, root, heads(c), 0L,
+                  arriving :+ ("meta" -> stampDf(s, k, stamps(c))),
+                  s"the ingest commit ($c)")
+              }
+            }
           }
         }
       }
@@ -408,14 +393,18 @@ object IndexKind {
         pmod(((col("query_id") - 51) / 100).cast("long"), lit(2)), 2)
       val outDir = TmpDirs.scratchFor("sched_out", d)
       val ticks = new AtomicLong(0)
-      drive(s, feed) { (batch, id) =>
-        val ss = batch.sparkSession
-        val vs = kinds.map(k => k -> heads(k).get()).toMap
-        val dec = maintSchedulerTick(ss, kinds.map(k => k -> roots(k)), vs,
-          actions)
-        ticks.incrementAndGet()
-        kinds.foreach(k => serveBatch(ss, k, roots(k), vs(k), batch,
-          qVecs(k), dec(k), s"$outDir/family=${k.family}/batch_id=$id"))
+      StreamTuning.withShuffle(s, 8) {
+        StreamTuning.drain(OrderedFeed.stream(s, feed)) { (batch, id) =>
+          if (!batch.isEmpty) {
+            val ss = batch.sparkSession
+            val vs = kinds.map(k => k -> heads(k).get()).toMap
+            val dec = maintSchedulerTick(ss, kinds.map(k => k -> roots(k)), vs,
+              actions)
+            ticks.incrementAndGet()
+            kinds.foreach(k => serveBatch(ss, k, roots(k), vs(k), batch,
+              qVecs(k), dec(k), s"$outDir/family=${k.family}/batch_id=$id"))
+          }
+        }
       }
       val singlePass = ticks.get() == 2L
       kinds.flatMap { k =>

@@ -230,20 +230,13 @@ object PumpOps {
     graft.util.StreamTuning.withShuffle(s, 8) {
       val dir = corruptFixtureDir(s, d)
       val out = graft.util.TmpDirs.scratch("stream-dlq-out")
-      val q = s.readStream.format("techlog")
-        .option("idleAdmitMs", "0").load(dir)
-        .writeStream
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.etl.Transform.withReason(batch)
-            .groupBy(col("drop_reason"))
-            .agg(count(lit(1)).as("n"))
-            .write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      graft.util.StreamTuning.drained(q)
+      graft.util.StreamTuning.drain(s.readStream.format("techlog")
+          .option("idleAdmitMs", "0").load(dir)) { (batch, _) =>
+        graft.etl.Transform.withReason(batch)
+          .groupBy(col("drop_reason"))
+          .agg(count(lit(1)).as("n"))
+          .write.mode("append").parquet(out)
+      }
       s.read.parquet(out)
         .groupBy(col("drop_reason"))
         .agg(sum(col("n")).as("n_records"))

@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The arrival-determinism contract every chunked-backlog fixture
   * relies on, in ONE place: `FileStreamSource` admits files in
@@ -9,7 +10,9 @@ import org.apache.spark.sql.DataFrame
   * by the crash/restart splits (events by ts percentile, documents by
   * doc_id), the versioned-view chains (one shard per commit), the CDF
   * feeds (one delta per version), and the streamed index growth (one
-  * residue class per batch).
+  * residue class per batch). [[stream]] reads a feed back one file
+  * per trigger, so micro-batch k of a [[StreamTuning.drain]] is chunk
+  * k — the writer and the reader of the feed format live here.
   */
 object OrderedFeed {
 
@@ -35,4 +38,19 @@ object OrderedFeed {
       s"setLastModified failed for ${files.head} — mtime pin (arrival " +
         "order) would be nondeterministic")
   }
+
+  /** Read the feed at `dir` as a stream, one file per trigger.
+    * `chunks` is the glob of its chunk files under `dir`: `c*` for the
+    * [[writeChunk]] chunks c0, c1, …, `v*` for a versioned CDF feed,
+    * and empty when the chunks are the part files of one plain parquet
+    * write at `dir`.
+    */
+  def stream(s: SparkSession, dir: String, schema: StructType,
+      chunks: String = "c*"): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(if (chunks.isEmpty) dir else s"$dir/$chunks")
+
+  /** [[stream]] over a [[writeChunk]] feed, typed by its chunk c0. */
+  def stream(s: SparkSession, dir: String): DataFrame =
+    stream(s, dir, s.read.parquet(s"$dir/c0").schema)
 }

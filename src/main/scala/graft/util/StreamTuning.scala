@@ -1,17 +1,33 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
-/** Scoped shuffle-width override for the streaming gate queries.
+/** The finite stream drive, and the scoped session settings around it.
   *
-  * Stateful streaming operators materialize state stores PER SHUFFLE
-  * PARTITION (a stream-stream join opens four per partition), and at
-  * gate scale the per-partition store open/commit dominates wall clock
-  * (q173: 6.2 s at 32 partitions → 3.1 s at 8). Batch queries want
-  * shuffle width = cores; streaming state wants it sized to key
-  * cardinality — so the override lives only around the one streaming
-  * query and is always restored, keeping the session's batch setting
-  * untouched for every other query in a Verify/Bench sweep.
+  * The drive contract, stated once: every finite stream in `graft.ops`
+  * runs through [[drain]] (or [[start]] + [[drained]] for concurrent
+  * streams) — ONE `Trigger.AvailableNow` query whose micro-batches go
+  * to a `foreachBatch` sink, awaited to termination, after which the
+  * session's dead state-store providers are unloaded whether the query
+  * finished or failed. A chunked backlog arrives one file per trigger
+  * ([[OrderedFeed.stream]]), so batch k is chunk k. The drive adds no
+  * `batch.isEmpty` guard of its own (`isEmpty` runs a job): a sink that
+  * must skip empty batches says so itself. Crash/replay proofs use
+  * [[crashRestart]]: run 1 dies in batch `crashAt` after its sink ran
+  * but before the checkpoint committed, run 2 restarts from the same
+  * checkpoint and replays that batch; the sink is exactly-once by
+  * layout (an overwrite dir keyed by the batch id).
+  *
+  * Scoped shuffle width: stateful streaming operators materialize
+  * state stores PER SHUFFLE PARTITION (a stream-stream join opens four
+  * per partition), and at gate scale the per-partition store
+  * open/commit dominates wall clock (q173: 6.2 s at 32 partitions →
+  * 3.1 s at 8). Batch queries want shuffle width = cores; streaming
+  * state wants it sized to key cardinality — so the override lives
+  * only around the one streaming query and is always restored, keeping
+  * the session's batch setting untouched for every other query in a
+  * Verify/Bench sweep.
   */
 object StreamTuning {
   def withShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
@@ -39,8 +55,9 @@ object StreamTuning {
     try body finally s.conf.set(key, prev)
   }
 
-  /** Await a finite gate drive, then unload the session's dead
-    * state-store providers. Provider-cache keys include the query RUN
+  /** Await a finite gate drive to its end or its failure, then unload
+    * the session's dead state-store providers (in a `finally`, so a
+    * failed drive does not leave them loaded). Provider-cache keys include the query RUN
     * id (StateStoreProviderId), so a terminated drive's providers can
     * never be reused — not even by a checkpoint resume, which gets a
     * fresh run id and re-reads the delta/snapshot files regardless.
@@ -56,15 +73,65 @@ object StreamTuning {
     * unload only reloads its state from the checkpoint — correctness
     * never depends on the provider cache.
     */
-  def drained(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
-    unloadDeadProviders()
+  def drained(q: StreamingQuery): Unit =
+    try q.awaitTermination()
+    finally org.apache.spark.sql.graftext.StateStoreBridge.unloadAll()
+
+  /** Drain `df` to its end: [[start]], then [[drained]]. */
+  def drain(df: DataFrame, outputMode: String = "append",
+      checkpoint: Option[String] = None)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    drained(start(df, outputMode, checkpoint)(sink))
+
+  /** Start `df` as an AvailableNow query that hands every micro-batch
+    * and its id to `sink`; the caller awaits it with [[drained]].
+    */
+  def start(df: DataFrame, outputMode: String = "append",
+      checkpoint: Option[String] = None)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = df.writeStream.outputMode(outputMode)
+      .trigger(Trigger.AvailableNow())
+    checkpoint.foreach(w.option("checkpointLocation", _))
+    w.foreachBatch(sink).start()
   }
 
-  /** See [[drained]] — for call sites that manage their own awaits
-    * (concurrent grow/serve pairs, expected-failure restart drives). */
-  def unloadDeadProviders(): Unit =
-    org.apache.spark.sql.graftext.StateStoreBridge.unloadAll()
+  /** Drain `df` TWICE against one checkpoint, at shuffle width
+    * `width`: run 1 dies in batch `crashAt` right after `sink` returned
+    * but before the checkpoint committed (the worst replay window);
+    * `between` runs once run 1 is down; run 2 restarts from the same
+    * checkpoint, replays the orphaned batch and drains the rest.
+    * Requires — by construction, not timing — that run 1 died and
+    * committed exactly batches 0..crashAt-1. The sink's third argument
+    * is true for the one attempt that dies, so a sink that must die
+    * mid-body (after one side effect, before the next) throws itself.
+    */
+  def crashRestart(s: SparkSession, df: DataFrame, ckpt: String,
+      crashAt: Long, width: Int, between: () => Unit = () => ())(
+      sink: (DataFrame, Long, Boolean) => Unit): Unit =
+    withShuffle(s, width) {
+      def run(crash: Boolean): Unit =
+        drain(df, checkpoint = Some(ckpt)) { (batch, id) =>
+          val dies = crash && id == crashAt
+          sink(batch, id, dies)
+          if (dies) throw new RuntimeException(
+            "injected crash: sink committed, checkpoint not")
+        }
+      val crashed =
+        try { run(crash = true); false }
+        catch { case _: StreamingQueryException => true }
+      require(crashed, "run 1 must die on the injected crash")
+      val committed = committedBatches(ckpt)
+      require(committed == (0L until crashAt),
+        s"run 1 must stop mid-backlog with exactly batches 0..${crashAt - 1} committed; got $committed")
+      between()
+      run(crash = false)
+    }
+
+  /** The batch ids committed in the checkpoint at `ckpt`, ascending. */
+  def committedBatches(ckpt: String): Seq[Long] =
+    Option(new java.io.File(s"$ckpt/commits").list())
+      .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit))
+      .map(_.toLong).sorted.toSeq
 
   /** Scoped `spark.sql.streaming.stateStore.unloadOnCommit=true` — for
     * FINITE AvailableNow drives with ≤ 2 micro-batches and heavy join

@@ -38,19 +38,29 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
-  test("ops memos use graft.util.Memo, never a hand-rolled registered map") {
+  /** Every line under `src/main/scala/graft/ops` containing one of `banned`. */
+  private def opsLinesWith(banned: Seq[String]): Seq[String] = {
     val ops = java.nio.file.Paths.get("src/main/scala/graft/ops")
     assert(java.nio.file.Files.isDirectory(ops), s"${ops.toAbsolutePath} missing")
-    val banned = Seq("registerMemo(", "new java.util.concurrent.ConcurrentHashMap")
     val stream = java.nio.file.Files.walk(ops)
-    val hits = try stream.iterator().asScala
+    try stream.iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
       .flatMap { f =>
         java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
           case (line, i) if banned.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
         }
       }
-      finally stream.close()
+    finally stream.close()
+  }
+
+  test("ops memos use graft.util.Memo, never a hand-rolled registered map") {
+    val hits = opsLinesWith(Seq("registerMemo(", "new java.util.concurrent.ConcurrentHashMap"))
     if (hits.nonEmpty) fail(hits.mkString("hand-rolled memo maps:\n", "\n", ""))
+  }
+
+  test("ops streams drive through StreamTuning and OrderedFeed, never hand-rolled") {
+    val hits = opsLinesWith(Seq(".writeStream", "Trigger.AvailableNow",
+      "\"maxFilesPerTrigger\", 1", "/commits\").list()"))
+    if (hits.nonEmpty) fail(hits.mkString("hand-rolled stream drives:\n", "\n", ""))
   }
 }
